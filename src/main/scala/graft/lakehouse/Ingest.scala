@@ -341,7 +341,7 @@ object Ingest {
       Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
         expectedBase = Some(v),
         meta = (m.meta -- keys) + (KeyPrefix + cid -> merged.size.toString),
-        op = "INGEST_COMPACT") { _ => () }
+        op = "INGEST_COMPACT")
       ()
     } catch { case _: Versioned.ConcurrentWriteException => () }
   }

@@ -1032,7 +1032,7 @@ object TableIO {
   /** Shared stats-JSON renderer: one staged file's raw numbers → the
     * single-line manifest stats doc. Used by BOTH the read-back
     * aggregation ([[collectFileStats]]) and the write-task tracker
-    * ([[writeStagedWithStats]]) so the two paths render byte-identically.
+    * ([[writeTracked]]) so the two paths render byte-identically.
     * Partition-column stats come from the file's OWN path segments:
     * min = max = the segment value (one value per file by construction),
     * __HIVE_DEFAULT_PARTITION__ = the all-null file shape. Long-string
@@ -1110,41 +1110,42 @@ object TableIO {
     }
   }
 
-  /** Session conf: target STAGED-COMMIT file size in bytes (0 = off, the
-    * default). At production scale every commit otherwise inherits the
-    * upstream partitioning — e.g. 2000 shuffle partitions → 2000 small
-    * files PER COMMIT (guide §6's small-file problem, unbounded at
-    * 100 TB). When set, staged writes coalesce to
-    * ceil(estimatedBytes / target) output partitions (sized from the
-    * optimizer's estimate — no extra job). OFF by default because file
-    * counts are OBSERVABLE through declared queries (manifest stats,
-    * DESCRIBE DETAIL, row-id spans): enabling it is a deliberate
-    * deployment choice, never a silent local-bench delta. */
-  private[lakehouse] val TargetStagedFileBytesKey =
-    "spark.graft.write.targetStagedFileBytes"
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Staged parquet write WITH write-task-side per-file stats (guide §1.2:
-    * don't pay a second Spark job to recompute what the write tasks already
-    * saw). Same writer machinery as `df.write.parquet`, plus a
-    * [[WriteStats.Tracker]]. Returns the rendered stats map, or null when
-    * the tracker poisoned or missed a staged file — callers then fall back
-    * to [[collectFileStats]], so results can never change. */
-  private[lakehouse] def writeStagedWithStats(df0: DataFrame, target: String,
+  /** Staged parquet write that returns the per-file stats of what it
+    * staged — the staging step every data-writing commit hands
+    * [[Versioned.commitFiles]]. The stats come from the write tasks
+    * themselves ([[writeTracked]]; guide §1.2: don't pay a second Spark job
+    * to recompute what the write tasks already saw). When the tracker
+    * cannot serve them, this is the one place that re-reads the staged
+    * files with [[collectFileStats]] instead — the two render identical
+    * stats, and every fallback logs a WARN so it cannot hide a defect. */
+  private[lakehouse] def writeStagedWithStats(df: DataFrame, target: String,
       partitionBy: Seq[String] = Seq.empty,
       bloomStatCols: Seq[String] = Seq.empty,
-      parquetBloomCols: Seq[String] = Seq.empty): Map[String, String] = {
+      parquetBloomCols: Seq[String] = Seq.empty): Map[String, String] =
+    writeTracked(df, target, partitionBy, bloomStatCols,
+        parquetBloomCols) match {
+      case Right(stats) => stats
+      case Left(reason) =>
+        log.warn(s"staged write $target: $reason; re-reading the staged " +
+          "files for stats")
+        try collectFileStats(df.sparkSession, bloomStatCols)(target)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            log.warn(s"staged write $target: stats read-back failed; its " +
+              "files commit without stats", e)
+            Map.empty
+        }
+    }
+
+  /** The write-task half of [[writeStagedWithStats]]: the same writer
+    * machinery as `df.write.parquet`, plus a [[WriteStats.Tracker]].
+    * Returns the rendered stats map, or why the tracker cannot serve it. */
+  private[lakehouse] def writeTracked(df: DataFrame, target: String,
+      partitionBy: Seq[String], bloomStatCols: Seq[String],
+      parquetBloomCols: Seq[String]): Either[String, Map[String, String]] = {
     import org.apache.spark.sql.graftbridge.StatsWriteBridge
-    val tgtBytes = java.lang.Long.parseLong(
-      df0.sparkSession.conf.get(TargetStagedFileBytesKey, "0"))
-    val df =
-      if (tgtBytes <= 0L) df0
-      else {
-        val est = df0.queryExecution.optimizedPlan.stats.sizeInBytes
-        val n = (est / BigInt(tgtBytes)).min(BigInt(Int.MaxValue - 1)).toInt + 1
-        // coalesce never increases partition count — this only merges
-        // small outputs toward the target, it cannot split large ones
-        df0.coalesce(math.max(1, n))
-      }
     val cols = statsColumns(df.schema, exclude = partitionBy.toSet)
     val blooms = bloomStatCols.filter(df.columns.contains)
     val sumCols = sumStatsCols(cols)
@@ -1156,43 +1157,27 @@ object TableIO {
     val dataSchema = StructType(
       df.schema.fields.filterNot(f => partitionBy.contains(f.name)))
     // a bloom column that is also a partition column can't be tracked from
-    // the data row — write untracked and let the caller fall back
+    // the data row — write untracked
     val trackable = blooms.forall(c => dataSchema.fieldNames.contains(c))
     val tracker =
-      if (!trackable) null
-      else new WriteStats.Tracker(dataSchema, cols.map(_.name), blooms,
+      if (!trackable) None
+      else Some(new WriteStats.Tracker(dataSchema, cols.map(_.name), blooms,
         StatsWriteBridge.sessionZoneId(df),
         new WriteStats.SerializableConf(
-          StatsWriteBridge.hadoopConfWithOptions(df, options)))
+          StatsWriteBridge.hadoopConfWithOptions(df, options))))
     StatsWriteBridge.writeParquet(df, target, partitionBy, options,
-      Option(tracker).toSeq)
-    if (tracker == null) return null
-    tracker.result match {
-      case Some(raw) if listStagedParquetRel(target).toSet == raw.keySet =>
-        raw.map { case (rel, r) =>
+      tracker.toSeq)
+    tracker.map(_.result) match {
+      case None => Left("a Bloom column is also a partition column, so the " +
+        "write tasks cannot track it")
+      case Some(None) => Left("the stats tracker poisoned")
+      case Some(Some(raw)) =>
+        val staged = listStagedParquetRel(target).toSet
+        if (staged != raw.keySet) Left(s"the tracker saw ${raw.size} " +
+          s"file(s) but ${staged.size} were staged")
+        else Right(raw.map { case (rel, r) =>
           rel -> renderFileStats(rel, cols, blooms, sumCols, r)
-        }
-      case _ => null
-    }
-  }
-
-  /** Pairs one staged write with its commit's collectStats hook: the write
-    * computes per-file stats inside its own tasks; [[collect]] serves them
-    * and falls back to the read-back stats job when the write didn't run
-    * (e.g. a zero-file maintenance commit) or the tracker poisoned. One
-    * instance per commit call; retried commit attempts overwrite. */
-  private[lakehouse] final class StagedWrite(spark: SparkSession,
-      bloomStatCols: Seq[String] = Seq.empty) {
-    @volatile private var captured: Map[String, String] = null
-    def write(df: DataFrame, target: String,
-        partitionBy: Seq[String] = Seq.empty,
-        parquetBloomCols: Seq[String] = Seq.empty): Unit =
-      captured = writeStagedWithStats(df, target, partitionBy, bloomStatCols,
-        parquetBloomCols)
-    def collect(stagingDir: String): Map[String, String] = {
-      val got = captured
-      if (got != null) got
-      else collectFileStats(spark, bloomStatCols)(stagingDir)
+        })
     }
   }
 
@@ -2061,55 +2046,38 @@ object TableIO {
     * Feature-gated: a down-level writer that ignored the declaration
     * would silently append nulls where the table contract says default. */
   def setColumnDefault(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, colName: String, sqlExpr: String): Unit = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(colName),
-      s"default column '$colName' must exist in the schema " +
-        s"(add it with a write first): ${schema.fieldNames.mkString(", ")}")
-    require(!m.meta.contains(GeneratedPrefix + colName) &&
-      !m.meta.contains(IdentityPrefix + colName),
-      s"$tableName.$colName is generated/identity — those already define " +
-        "the omitted-column value")
-    val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-      .parseExpression(sqlExpr)
-    require(parsed.collectFirst {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a
-    }.isEmpty, s"DEFAULT for '$colName' must be a constant expression " +
-      s"(got '$sqlExpr' — row-dependent defaults are generated columns)")
-    // pre-cast to the column's declared type so ingest-time evaluation is
-    // type-exact regardless of the literal's natural type
-    val stored = s"CAST(($sqlExpr) AS ${schema(colName).dataType.sql})"
-    // the expression must actually evaluate (typos fail HERE, not at the
-    // next append): one constant-folded local projection proves it
-    spark.range(1).select(org.apache.spark.sql.functions.expr(stored)).head()
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = Versioned.withFeature(
-        m.meta + (DefaultPrefix + colName -> stored), "defaultColumns"),
-      op = "SET DEFAULT") { _ => () }
-    ()
-  }
+      tableName: String, colName: String, sqlExpr: String): Unit =
+    commitMeta(lh, tableName, "SET DEFAULT") { m =>
+      val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+      require(schema.fieldNames.contains(colName),
+        s"default column '$colName' must exist in the schema " +
+          s"(add it with a write first): ${schema.fieldNames.mkString(", ")}")
+      require(!m.meta.contains(GeneratedPrefix + colName) &&
+        !m.meta.contains(IdentityPrefix + colName),
+        s"$tableName.$colName is generated/identity — those already define " +
+          "the omitted-column value")
+      val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+        .parseExpression(sqlExpr)
+      require(parsed.collectFirst {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a
+      }.isEmpty, s"DEFAULT for '$colName' must be a constant expression " +
+        s"(got '$sqlExpr' — row-dependent defaults are generated columns)")
+      // pre-cast to the column's declared type so ingest-time evaluation is
+      // type-exact regardless of the literal's natural type
+      val stored = s"CAST(($sqlExpr) AS ${schema(colName).dataType.sql})"
+      // the expression must actually evaluate (typos fail HERE, not at the
+      // next append): one constant-folded local projection proves it
+      spark.range(1).select(org.apache.spark.sql.functions.expr(stored)).head()
+      Versioned.withFeature(
+        m.meta + (DefaultPrefix + colName -> stored), "defaultColumns")
+    }
 
   /** Remove a column DEFAULT declaration: later omitting batches go back
     * to null-filling. Metadata-only. */
   def dropColumnDefault(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, colName: String): Unit = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = m.meta - (DefaultPrefix + colName),
-      op = "DROP DEFAULT") { _ => () }
-    ()
-  }
+      tableName: String, colName: String): Unit =
+    commitMeta(lh, tableName, "DROP DEFAULT")(
+      _.meta - (DefaultPrefix + colName))
 
   /** Declare `colName` GENERATED ALWAYS AS (`sqlExpr`) — Delta generated
     * columns: ingest paths (append, overwrite) COMPUTE the column when a
@@ -2120,55 +2088,38 @@ object TableIO {
     * already satisfy the expression (one scan, checked here). One
     * metadata-only commit records expression + constraint atomically. */
   def setGeneratedColumn(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, colName: String, sqlExpr: String): Unit = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(colName),
-      s"generated column '$colName' must exist in the schema " +
-        s"(add it with a write first): ${schema.fieldNames.mkString(", ")}")
-    require(!m.meta.contains(GeneratedPrefix + colName),
-      s"$tableName.$colName is already generated — drop it first")
-    // self-reference would make compute-if-absent circular
-    val refs = scala.util.Try(
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(sqlExpr)).toOption.toSeq
-      .flatMap(_.collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.name
-      })
-    require(!refs.contains(colName),
-      s"generated column '$colName' cannot reference itself")
-    val check = s"`$colName` <=> ($sqlExpr)"
-    enforceChecks(scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries)),
-      Map(s"__gen_$colName" -> check), s"$tableName: existing data")
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = Versioned.withFeature(
+      tableName: String, colName: String, sqlExpr: String): Unit =
+    commitMeta(lh, tableName, "SET GENERATED") { m =>
+      val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+      require(schema.fieldNames.contains(colName),
+        s"generated column '$colName' must exist in the schema " +
+          s"(add it with a write first): ${schema.fieldNames.mkString(", ")}")
+      require(!m.meta.contains(GeneratedPrefix + colName),
+        s"$tableName.$colName is already generated — drop it first")
+      // self-reference would make compute-if-absent circular
+      val refs = scala.util.Try(
+        org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+          .parseExpression(sqlExpr)).toOption.toSeq
+        .flatMap(_.collect {
+          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+            a.name
+        })
+      require(!refs.contains(colName),
+        s"generated column '$colName' cannot reference itself")
+      val check = s"`$colName` <=> ($sqlExpr)"
+      enforceChecks(scanSpec(spark, Versioned.scanOf(
+          Catalog.tablePath(lh, tableName), m, m.entries)),
+        Map(s"__gen_$colName" -> check), s"$tableName: existing data")
+      Versioned.withFeature(
         m.meta + (GeneratedPrefix + colName -> sqlExpr) +
-          (CheckPrefix + s"__gen_$colName" -> check), "generatedColumns"),
-      op = "SET GENERATED") { _ => () }
-    ()
-  }
+          (CheckPrefix + s"__gen_$colName" -> check), "generatedColumns")
+    }
 
   /** Remove a generated-column declaration and its paired constraint. */
   def dropGeneratedColumn(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, colName: String): Unit = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = m.meta - (GeneratedPrefix + colName) -
-        (CheckPrefix + s"__gen_$colName"),
-      op = "DROP GENERATED") { _ => () }
-    ()
-  }
+      tableName: String, colName: String): Unit =
+    commitMeta(lh, tableName, "DROP GENERATED")(
+      _.meta - (GeneratedPrefix + colName) - (CheckPrefix + s"__gen_$colName"))
 
   /** Manifest meta keys for identity columns: declaration + the
     * high-watermark of assigned values (advanced ATOMICALLY with each
@@ -2224,36 +2175,29 @@ object TableIO {
     * the first identity append via schema evolution (historical rows read
     * null). */
   def setIdentityColumn(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, colName: String, startWith: Long = 1): Unit = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
-    require(!m.meta.contains(IdentityPrefix + colName),
-      s"$tableName.$colName is already an identity column")
-    require(!m.meta.contains(GeneratedPrefix + colName),
-      s"$tableName.$colName is already a generated column")
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    val wm0 =
-      if (!schema.fieldNames.contains(colName)) startWith - 1
-      else {
-        require(schema(colName).dataType == org.apache.spark.sql.types.LongType,
-          s"identity column '$colName' must be LONG, is ${schema(colName).dataType}")
-        val mx = scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries))
-          .agg(org.apache.spark.sql.functions.max(
-            org.apache.spark.sql.functions.col(colName))).head()
-        math.max(if (mx.isNullAt(0)) startWith - 1 else mx.getLong(0),
-          startWith - 1)
-      }
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = Versioned.withFeature(
+      tableName: String, colName: String, startWith: Long = 1): Unit =
+    commitMeta(lh, tableName, "SET IDENTITY") { m =>
+      require(!m.meta.contains(IdentityPrefix + colName),
+        s"$tableName.$colName is already an identity column")
+      require(!m.meta.contains(GeneratedPrefix + colName),
+        s"$tableName.$colName is already a generated column")
+      val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+      val wm0 =
+        if (!schema.fieldNames.contains(colName)) startWith - 1
+        else {
+          require(schema(colName).dataType == org.apache.spark.sql.types.LongType,
+            s"identity column '$colName' must be LONG, is ${schema(colName).dataType}")
+          val mx = scanSpec(spark, Versioned.scanOf(
+              Catalog.tablePath(lh, tableName), m, m.entries))
+            .agg(org.apache.spark.sql.functions.max(
+              org.apache.spark.sql.functions.col(colName))).head()
+          math.max(if (mx.isNullAt(0)) startWith - 1 else mx.getLong(0),
+            startWith - 1)
+        }
+      Versioned.withFeature(
         m.meta + (IdentityPrefix + colName -> "1") +
-          (IdentityMaxPrefix + colName -> wm0.toString), "identityColumns"),
-      op = "SET IDENTITY") { _ => () }
-    ()
-  }
+          (IdentityMaxPrefix + colName -> wm0.toString), "identityColumns")
+    }
 
   // ---- row tracking (Delta row IDs: stable identity across OPTIMIZE) ----
 
@@ -2297,7 +2241,7 @@ object TableIO {
       meta = Versioned.withFeature(
         m.meta + (Versioned.RowTrackingKey -> "1") +
           (Versioned.RowIdMaxKey -> wm.toString), "rowTracking"),
-      op = "SET ROWTRACKING") { _ => () }
+      op = "SET ROWTRACKING")
     ()
   }
 
@@ -2351,39 +2295,23 @@ object TableIO {
       tableName: String, name: String, sqlExpr: String): Unit = {
     require(name.nonEmpty && !name.contains("=") && !name.contains("\n"),
       "constraint names must be single-line and '='-free")
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry constraints"))
-    require(!m.meta.contains(CheckPrefix + name),
-      s"$tableName already has a CHECK constraint named '$name' — drop it " +
-        "first (silent replacement would change enforcement unnoticed)")
-    enforceChecks(scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries)),
-      Map(name -> sqlExpr), s"$tableName: existing data")
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = Versioned.withFeature(
-        m.meta + (CheckPrefix + name -> sqlExpr), "checkConstraints"),
-      op = "ADD CONSTRAINT") {
-      _ => ()
+    commitMeta(lh, tableName, "ADD CONSTRAINT") { m =>
+      require(!m.meta.contains(CheckPrefix + name),
+        s"$tableName already has a CHECK constraint named '$name' — drop it " +
+          "first (silent replacement would change enforcement unnoticed)")
+      enforceChecks(scanSpec(spark, Versioned.scanOf(
+          Catalog.tablePath(lh, tableName), m, m.entries)),
+        Map(name -> sqlExpr), s"$tableName: existing data")
+      Versioned.withFeature(
+        m.meta + (CheckPrefix + name -> sqlExpr), "checkConstraints")
     }
-    ()
   }
 
   /** ALTER TABLE DROP CONSTRAINT (metadata-only commit; missing names are
     * a no-op commit). */
   def dropCheckConstraint(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, name: String): Unit = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(s"$tableName has no versions"))
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = m.meta - (CheckPrefix + name),
-      op = "DROP CONSTRAINT") { _ => () }
-    ()
-  }
+      tableName: String, name: String): Unit =
+    commitMeta(lh, tableName, "DROP CONSTRAINT")(_.meta - (CheckPrefix + name))
 
   // ---- UNIQUE constraints -------------------------------------------------
 
@@ -2473,42 +2401,28 @@ object TableIO {
       "constraint names must be single-line and '='-free")
     require(cols.nonEmpty && cols.forall(c => !c.contains(",")),
       "UNIQUE needs at least one comma-free column name")
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry constraints"))
-    require(!m.meta.contains(UniquePrefix + name),
-      s"$tableName already has a UNIQUE constraint named '$name' — drop " +
-        "it first (silent replacement would change enforcement unnoticed)")
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    cols.foreach(c => require(schema.fieldNames.contains(c),
-      s"$tableName has no column '$c'"))
-    enforceUniqueWithin(
-      scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries))
-        .select(cols.map(org.apache.spark.sql.functions.col): _*),
-      Map(name -> cols), s"$tableName: existing data")
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = Versioned.withFeature(
+    commitMeta(lh, tableName, "ADD CONSTRAINT") { m =>
+      require(!m.meta.contains(UniquePrefix + name),
+        s"$tableName already has a UNIQUE constraint named '$name' — drop " +
+          "it first (silent replacement would change enforcement unnoticed)")
+      val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+      cols.foreach(c => require(schema.fieldNames.contains(c),
+        s"$tableName has no column '$c'"))
+      enforceUniqueWithin(
+        scanSpec(spark, Versioned.scanOf(
+            Catalog.tablePath(lh, tableName), m, m.entries))
+          .select(cols.map(org.apache.spark.sql.functions.col): _*),
+        Map(name -> cols), s"$tableName: existing data")
+      Versioned.withFeature(
         m.meta + (UniquePrefix + name -> cols.mkString(",")),
-        "uniqueConstraints"),
-      op = "ADD CONSTRAINT") { _ => () }
-    ()
+        "uniqueConstraints")
+    }
   }
 
   /** ALTER TABLE DROP CONSTRAINT for UNIQUE (metadata-only commit). */
   def dropUniqueConstraint(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, name: String): Unit = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(s"$tableName has no versions"))
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = m.meta - (UniquePrefix + name),
-      op = "DROP CONSTRAINT") { _ => () }
-    ()
-  }
+      tableName: String, name: String): Unit =
+    commitMeta(lh, tableName, "DROP CONSTRAINT")(_.meta - (UniquePrefix + name))
 
   // ---- FOREIGN KEY constraints (informational + on-demand validation) -----
 
@@ -2544,40 +2458,25 @@ object TableIO {
     require((childCols ++ parentCols :+ parentTable)
       .forall(v => !v.contains(",") && !v.contains(";")),
       "FK identifiers must be ','/';'-free")
-    val tableDir = Catalog.tablePath(lh, childTable)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$childTable needs a manifest-based version to carry constraints"))
-    require(!m.meta.contains(FkPrefix + name),
-      s"$childTable already has a FOREIGN KEY named '$name'")
-    if (validate) {
-      val bad = validateForeignKey(spark, lh, childTable, childCols,
-        parentTable, parentCols).limit(1).collect()
-      require(bad.isEmpty,
-        s"$childTable: existing data violates FOREIGN KEY '$name'; " +
-          s"orphan: ${bad.headOption}")
+    commitMeta(lh, childTable, "ADD CONSTRAINT") { m =>
+      require(!m.meta.contains(FkPrefix + name),
+        s"$childTable already has a FOREIGN KEY named '$name'")
+      if (validate) {
+        val bad = validateForeignKey(spark, lh, childTable, childCols,
+          parentTable, parentCols).limit(1).collect()
+        require(bad.isEmpty,
+          s"$childTable: existing data violates FOREIGN KEY '$name'; " +
+            s"orphan: ${bad.headOption}")
+      }
+      m.meta + (FkPrefix + name ->
+        s"${childCols.mkString(",")};$parentTable;${parentCols.mkString(",")}")
     }
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
-      meta = m.meta + (FkPrefix + name ->
-        s"${childCols.mkString(",")};$parentTable;${parentCols.mkString(",")}"),
-      op = "ADD CONSTRAINT") { _ => () }
-    ()
   }
 
   /** ALTER TABLE DROP CONSTRAINT for FOREIGN KEY (metadata-only). */
   def dropForeignKey(spark: SparkSession, lh: LakehouseProps,
-      childTable: String, name: String): Unit = {
-    val tableDir = Catalog.tablePath(lh, childTable)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(s"$childTable has no versions"))
-    Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = m.meta - (FkPrefix + name),
-      op = "DROP CONSTRAINT") { _ => () }
-    ()
-  }
+      childTable: String, name: String): Unit =
+    commitMeta(lh, childTable, "DROP CONSTRAINT")(_.meta - (FkPrefix + name))
 
   /** On-demand referential audit: DISTINCT child keys with no parent —
     * SQL FK semantics (a child row with a NULL in any key column
@@ -2692,7 +2591,6 @@ object TableIO {
       else if (sortBy.isEmpty) df
       else df.repartitionByRange(sortBy.map(org.apache.spark.sql.functions.col): _*)
         .sortWithinPartitions(sortBy.map(org.apache.spark.sql.functions.col): _*)
-    val sw = new StagedWrite(spark, bloomFilterFor)
     val commit = Versioned.commitFiles(tableDir, df.schema.json,
       // the CDF preimage is pinned to prevVersion (committing without
       // pinning that base would let a concurrent commit slip between the
@@ -2702,25 +2600,21 @@ object TableIO {
       // pins the identity-watermark read the same way
       expectedBase = pinBase.orElse(
         if (prevScanForCdf.isDefined) prevVersion else None),
-      collectStats = sw.collect,
       meta = carried ++ extraMeta +
         (PartitionByKey -> partitionBy.mkString(",")),
       op = "WRITE",
-      beforeMarker = (v, staged, cid) => prevScanForCdf.foreach { old =>
+      beforeMarker = cdfSidecar(tableDir)(staged => prevScanForCdf.map { old =>
         import org.apache.spark.sql.functions.lit
         val inserts = scanSpec(spark, Versioned.ScanFiles(tableDir,
           df.schema.json, staged.map(_.path)))
           .withColumn("_change_type", lit("insert"))
         old.withColumn("_change_type", lit("delete"))
           .unionByName(inserts, allowMissingColumns = true)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(cdfDir(tableDir, v, cid).toString)
-      }) { target =>
+      }),
       // manifest blooms skip whole FILES; parquet-native blooms on the same
       // columns skip row groups WITHIN the files that survive
-      sw.write(clustered, target, partitionBy = partitionBy,
-        parquetBloomCols = bloomFilterFor)
-    }
+      stage = t => writeStagedWithStats(clustered, t, partitionBy,
+        bloomFilterFor, parquetBloomCols = bloomFilterFor))
     finishCommit(spark, lh, tableName, tableDir, commit, df.columns.toSeq, partitionBy)
   }
 
@@ -2758,13 +2652,9 @@ object TableIO {
           // (an unpinned overwrite here would silently drop the winner's
           // rows instead)
           try {
-            val sw = new StagedWrite(spark)
             val commit = Versioned.commitFiles(tableDir, df.schema.json,
-              expectedBase = Some(0L),
-              collectStats = sw.collect,
-              meta = extraMeta, op = "APPEND") { target =>
-              sw.write(df, target)
-            }
+              expectedBase = Some(0L), meta = extraMeta, op = "APPEND",
+              stage = writeStagedWithStats(df, _))
             return finishCommit(spark, lh, tableName, tableDir, commit,
               df.columns.toSeq, Seq.empty)
           } catch {
@@ -2802,14 +2692,11 @@ object TableIO {
                 val parts = currentPartitioning(lh, tableName)
                 try {
                   val evolvedM = alignMapping(evolved, oldSchema, m.meta, base)
-                  val sw = new StagedWrite(spark, bloomColsOf(m))
                   val commit = Versioned.commitFiles(tableDir, evolvedM.json,
                     inherit = m.entries, expectedBase = Some(base),
-                    collectStats = sw.collect,
-                    meta = m.meta ++ extraMeta ++ idMeta, op = "APPEND") { target =>
-                    sw.write(toPhysical(aligned, evolvedM), target,
-                      partitionBy = parts)
-                  }
+                    meta = m.meta ++ extraMeta ++ idMeta, op = "APPEND",
+                    stage = t => writeStagedWithStats(
+                      toPhysical(aligned, evolvedM), t, parts, bloomColsOf(m)))
                   return finishCommit(spark, lh, tableName, tableDir, commit,
                     evolvedM.fieldNames.toSeq, parts)
                 } catch {
@@ -3059,9 +2946,9 @@ object TableIO {
           // a re-evaluation of the caller's `updates` plan — staged rows
           // whose key is in updKeys are exactly the update rows as written
           // (kept rows were anti-joined out)
-          val writeCdf: (Long, Seq[Versioned.FileEntry], String) => Unit =
-            if (!cdfEnabled(m.meta)) (_, _, _) => ()
-            else (v, staged, cid) => {
+          val writeCdf = cdfSidecar(tableDir) { staged =>
+            if (!cdfEnabled(m.meta)) None
+            else {
               import org.apache.spark.sql.functions.{lit, when}
               val oldKeys = affectedDf.select(keyColumns: _*).distinct()
               val newRows = scanSpec(spark, Versioned.ScanFiles(tableDir,
@@ -3079,23 +2966,19 @@ object TableIO {
                   when(col("__graft_hit").isNotNull, lit("update_postimage"))
                     .otherwise(lit("insert")))
                 .drop("__graft_hit")
-              pre.unionByName(postIns, allowMissingColumns = true)
-                .write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)
+              Some(pre.unionByName(postIns, allowMissingColumns = true))
             }
+          }
           try {
             val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
-            val sw = new StagedWrite(spark, bloomColsOf(m))
             val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
               inherit = untouched, expectedBase = Some(b),
-              collectStats = sw.collect,
               // extraMeta rides the SAME manifest (streaming upsert txn
               // watermarks need batch-id-and-data atomicity)
               meta = m.meta ++ extraMeta,
-              beforeMarker = writeCdf, op = "MERGE") { target =>
-              sw.write(toPhysical(rewritten, rewrittenM), target,
-                partitionBy = parts)
-            }
+              beforeMarker = writeCdf, op = "MERGE",
+              stage = t => writeStagedWithStats(
+                toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
             finishCommit(spark, lh, tableName, tableDir, commit,
               rewritten.columns.toSeq, parts)
           } finally affectedDf.unpersist()
@@ -3435,20 +3318,17 @@ object TableIO {
             _ unionByName _))
         }
       val parts = currentPartitioning(lh, tableName)
-      val sw = new StagedWrite(spark, bloomColsOf(m))
       val commit = Versioned.commitFiles(tableDir, m.schemaJson,
         inherit = untouched, expectedBase = Some(b),
-        collectStats = sw.collect,
         meta = m.meta ++ insIdMeta,
-        beforeMarker = (v, _, cid) => changes.foreach(
-          _.write.mode(SaveMode.Overwrite)
-            .parquet(cdfDir(tableDir, v, cid).toString)),
-        op = "MERGE") { target =>
+        beforeMarker = cdfSidecar(tableDir)(_ => changes),
+        op = "MERGE",
         // empty payloads still commit (a version whose only effect is
         // inherited entries) — but Spark won't write an empty dir plan
-        if (affected.nonEmpty || inserts.isDefined)
-          sw.write(toPhysical(payload, schema), target, partitionBy = parts)
-      }
+        stage = t =>
+          if (affected.isEmpty && inserts.isEmpty) Map.empty
+          else writeStagedWithStats(toPhysical(payload, schema), t, parts,
+            bloomColsOf(m)))
       finishCommit(spark, lh, tableName, tableDir, commit,
         schema.fieldNames.toSeq, parts)
       } finally {
@@ -3547,10 +3427,9 @@ object TableIO {
           // delete + insert rather than an update pair (null never equals
           // null in the pairing join); consumers folding by key net the
           // same state.
-          val writeCdf: (Long, Seq[Versioned.FileEntry], String) => Unit =
-            if (!cdfEnabled(m.meta)) (_, _, _) => ()
-            else (v, staged, cid) => {
-              import org.apache.spark.sql.functions.lit
+          val writeCdf = cdfSidecar(tableDir) { staged =>
+            if (!cdfEnabled(m.meta)) None
+            else {
               val escaped = newRows.select(keyColumns: _*).distinct()
                 .join(remA, keyCols.map(c =>
                   newRows(c) <=> col(s"__rk.$c")).reduce(_ && _), "left_anti")
@@ -3583,20 +3462,15 @@ object TableIO {
                   when(col("__graft_hit").isNotNull, lit("update_postimage"))
                     .otherwise(lit("insert")))
                 .drop("__graft_hit")
-              preDel.unionByName(postIns, allowMissingColumns = true)
-                .write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)
+              Some(preDel.unionByName(postIns, allowMissingColumns = true))
             }
+          }
           try {
-            val sw = new StagedWrite(spark, bloomColsOf(m))
             val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
               inherit = untouched, expectedBase = Some(b),
-              collectStats = sw.collect,
-              meta = m.meta ++ extraMeta, beforeMarker = writeCdf, op = op) {
-              target =>
-                sw.write(toPhysical(rewritten, rewrittenM), target,
-                  partitionBy = parts)
-            }
+              meta = m.meta ++ extraMeta, beforeMarker = writeCdf, op = op,
+              stage = t => writeStagedWithStats(
+                toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
             finishCommit(spark, lh, tableName, tableDir, commit,
               rewritten.columns.toSeq, parts)
           } finally affectedDf.unpersist()
@@ -3774,7 +3648,7 @@ object TableIO {
     }
     val commit = Versioned.commitFiles(tableDir, m.schemaJson,
       inherit = m.entries, expectedBase = base, meta = restoredMeta,
-      op = "RESTORE") { _ => () }
+      op = "RESTORE")
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     finishCommit(spark, lh, tableName, tableDir, commit,
       schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
@@ -3870,34 +3744,37 @@ object TableIO {
     val commit = Versioned.commitFiles(dstDir, m.schemaJson,
       inherit = refs,
       expectedBase = Some(Versioned.latestVersion(dstDir).getOrElse(0L)),
-      // constraints, CDF flag, the declared partition spec, and drop
-      // tombstones all describe the DATA and must survive the clone —
-      // without the tombstones a column re-added on the clone would
-      // resurrect dropped bytes; without the spec, appends would revert
-      // to the file-derived layout. txn watermarks stay behind.
-      meta = m.meta.filter { case (k, _) =>
-        k.startsWith(CheckPrefix) || k.startsWith(UniquePrefix) ||
-          k == CdfKey ||
-          k == PartitionByKey || k.startsWith(TombstonePrefix) ||
-          // declared-schema properties describe the DATA and clone with
-          // it: generated/identity declarations (+ the identity
-          // watermark — a clone must not reuse ids either) and the
-          // recorded cluster spec
-          k.startsWith(GeneratedPrefix) || k.startsWith(IdentityPrefix) ||
-          k.startsWith(IdentityMaxPrefix) || k == ClusterByKey ||
-          k == ClusterCurveKey ||
-          // row tracking clones with its watermark: clone ids must stay
-          // stable AND fresh clone-side appends must not reuse spans
-          k == Versioned.RowTrackingKey || k == Versioned.RowIdMaxKey ||
-          // feature requirements are sticky: the clone carries the same
-          // DV refs / declarations a down-level reader must not ignore
-          k == Versioned.FeaturesKey } +
-        ("cloneOf" -> s"$sourceName@v$srcVersion"),
-      op = "CLONE") { _ => () }
+      meta = cloneMeta(m, sourceName, srcVersion), op = "CLONE")
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     finishCommit(spark, lh, cloneName, dstDir, commit,
       schema.fieldNames.toSeq, partitioningOfFiles(m.files))
   }
+
+  /** A clone's commit meta. Constraints, CDF flag, the declared partition
+    * spec, and drop tombstones all describe the DATA and must survive the
+    * clone — without the tombstones a column re-added on the clone would
+    * resurrect dropped bytes; without the spec, appends would revert to
+    * the file-derived layout. txn watermarks stay behind. */
+  private def cloneMeta(m: Versioned.Manifest, sourceName: String,
+      srcVersion: Long): Map[String, String] =
+    m.meta.filter { case (k, _) =>
+      k.startsWith(CheckPrefix) || k.startsWith(UniquePrefix) ||
+        k == CdfKey ||
+        k == PartitionByKey || k.startsWith(TombstonePrefix) ||
+        // declared-schema properties describe the DATA and clone with
+        // it: generated/identity declarations (+ the identity
+        // watermark — a clone must not reuse ids either) and the
+        // recorded cluster spec
+        k.startsWith(GeneratedPrefix) || k.startsWith(IdentityPrefix) ||
+        k.startsWith(IdentityMaxPrefix) || k == ClusterByKey ||
+        k == ClusterCurveKey ||
+        // row tracking clones with its watermark: clone ids must stay
+        // stable AND fresh clone-side appends must not reuse spans
+        k == Versioned.RowTrackingKey || k == Versioned.RowIdMaxKey ||
+        // feature requirements are sticky: the clone carries the same
+        // DV refs / declarations a down-level reader must not ignore
+        k == Versioned.FeaturesKey } +
+      ("cloneOf" -> s"$sourceName@v$srcVersion")
 
   /** DEEP clone (Delta CLONE without SHALLOW): byte-for-byte file copies
     * into the clone's own pool — O(data) I/O but ZERO compute: no decode,
@@ -3947,33 +3824,16 @@ object TableIO {
     }.toMap
     val commit = Versioned.commitFiles(dstDir, m.schemaJson,
       expectedBase = Some(Versioned.latestVersion(dstDir).getOrElse(0L)),
-      collectStats = _ => statsByRel,
-      meta = m.meta.filter { case (k, _) =>
-        k.startsWith(CheckPrefix) || k.startsWith(UniquePrefix) ||
-          k == CdfKey ||
-          k == PartitionByKey || k.startsWith(TombstonePrefix) ||
-          // declared-schema properties describe the DATA and clone with
-          // it: generated/identity declarations (+ the identity
-          // watermark — a clone must not reuse ids either) and the
-          // recorded cluster spec
-          k.startsWith(GeneratedPrefix) || k.startsWith(IdentityPrefix) ||
-          k.startsWith(IdentityMaxPrefix) || k == ClusterByKey ||
-          k == ClusterCurveKey ||
-          // row tracking clones with its watermark: clone ids must stay
-          // stable AND fresh clone-side appends must not reuse spans
-          k == Versioned.RowTrackingKey || k == Versioned.RowIdMaxKey ||
-          // feature requirements are sticky: the clone carries the same
-          // DV refs / declarations a down-level reader must not ignore
-          k == Versioned.FeaturesKey } +
-        ("cloneOf" -> s"$sourceName@v$srcVersion"),
-      op = "CLONE") { target =>
-      val tBase = Paths.get(target)
-      m.entries.foreach { e =>
-        val out = tBase.resolve(relOut(e.path))
-        Files.createDirectories(out.getParent)
-        Files.copy(resolveSrc(e.path), out)
-      }
-    }
+      meta = cloneMeta(m, sourceName, srcVersion), op = "CLONE",
+      stage = { target =>
+        val tBase = Paths.get(target)
+        m.entries.foreach { e =>
+          val out = tBase.resolve(relOut(e.path))
+          Files.createDirectories(out.getParent)
+          Files.copy(resolveSrc(e.path), out)
+        }
+        statsByRel
+      })
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     finishCommit(spark, lh, cloneName, dstDir, commit,
       schema.fieldNames.toSeq, partitioningOfFiles(m.files))
@@ -4009,7 +3869,7 @@ object TableIO {
       meta = Versioned.withFeature(
         m.meta + (PartitionByKey -> partitionBy.mkString(",")),
         "partitionEvolution"),
-      op = "SET PARTITIONING") { _ => () }
+      op = "SET PARTITIONING")
     finishCommit(spark, lh, tableName, tableDir, commit,
       schema.fieldNames.toSeq, partitionBy)
   }
@@ -4090,7 +3950,7 @@ object TableIO {
     val commit = Versioned.commitFiles(tableDir, newSchema.json,
       inherit = entries, expectedBase = base,
       meta = Versioned.withFeature(m.meta, "typeWidening"),
-      op = "WIDEN") { _ => () }
+      op = "WIDEN")
     finishCommit(spark, lh, tableName, tableDir, commit,
       newSchema.fieldNames.toSeq, currentPartitioning(lh, tableName))
   }
@@ -4136,7 +3996,7 @@ object TableIO {
     val commit = Versioned.commitFiles(tableDir, renamed.json,
       inherit = m.entries, expectedBase = base,
       meta = Versioned.withFeature(reKeyed, "columnMapping"),
-      op = "RENAME COLUMN") { _ => () }
+      op = "RENAME COLUMN")
     finishCommit(spark, lh, tableName, tableDir, commit,
       renamed.fieldNames.toSeq, partitioningOfFiles(m.files))
   }
@@ -4180,7 +4040,7 @@ object TableIO {
       inherit = m.entries, expectedBase = base,
       meta = Versioned.withFeature(
         m.meta + (TombstonePrefix + dropped -> "1"), "columnMapping"),
-      op = "DROP COLUMN") { _ => () }
+      op = "DROP COLUMN")
     finishCommit(spark, lh, tableName, tableDir, commit,
       narrowed.fieldNames.toSeq, partitioningOfFiles(m.files))
   }
@@ -4389,16 +4249,25 @@ object TableIO {
 
   private def setTableFlag(lh: LakehouseProps, tableName: String,
       key: String, value: Option[String],
-      feature: Option[String] = None): Unit = {
+      feature: Option[String] = None): Unit =
+    commitMeta(lh, tableName, "SET PROPERTY") { m =>
+      val newMeta = value.fold(m.meta - key)(v => m.meta + (key -> v))
+      feature.fold(newMeta)(Versioned.withFeature(newMeta, _))
+    }
+
+  /** Metadata-only commit onto `tableName`'s latest version: every file is
+    * inherited and nothing is staged. `edit` maps the current manifest to
+    * the new meta; it runs before the commit, so its checks can refuse the
+    * change. */
+  private def commitMeta(lh: LakehouseProps, tableName: String, op: String)(
+      edit: Versioned.Manifest => Map[String, String]): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
     val base = Versioned.latestVersion(tableDir)
     val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
       throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
-    val newMeta0 = value.fold(m.meta - key)(v => m.meta + (key -> v))
-    val newMeta = feature.fold(newMeta0)(Versioned.withFeature(newMeta0, _))
+        s"$tableName needs a manifest-based version to carry metadata"))
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = newMeta, op = "SET PROPERTY") { _ => () }
+      expectedBase = base, meta = edit(m), op = op)
     ()
   }
 
@@ -4412,6 +4281,15 @@ object TableIO {
     * out. */
   private def cdfDir(tableDir: String, v: Long, commitId: String): Path =
     Paths.get(tableDir).resolve(s"_cdf_${v}_$commitId")
+
+  /** The `beforeMarker` hook writing a commit's change-feed sidecar:
+    * `changes` builds the change frame from the staged entries (None = no
+    * sidecar for this commit). */
+  private def cdfSidecar(tableDir: String)(
+      changes: Seq[Versioned.FileEntry] => Option[DataFrame])
+      : (Long, Seq[Versioned.FileEntry], String) => Unit =
+    (v, staged, cid) => changes(staged).foreach(
+      _.write.mode(SaveMode.Overwrite).parquet(cdfDir(tableDir, v, cid).toString))
 
   /** Reader-side resolution: a manifest that names a commit id resolves
     * ONLY to its own suffixed sidecar — a legacy `_cdf_<v>` present beside
@@ -4616,21 +4494,15 @@ object TableIO {
           if (zorderBy.isEmpty) mm
           else mm + (ClusterByKey -> zorderBy.mkString(",")) +
             (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder"))
-        val sw = new StagedWrite(spark, blooms)
         val commit = commitMaintenance(tableDir, b, m, affected,
           metaOf = metaOut,
-          collectStats = sw.collect,
-          beforeMarker = (v, _, cid) => emptyCdf.foreach(
-            _.write.mode(SaveMode.Overwrite)
-              .parquet(cdfDir(tableDir, v, cid).toString)),
-          op = "OPTIMIZE") { target =>
-          if (affected.nonEmpty) {
-            val physical = toPhysical(arranged,
-              DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-            sw.write(physical, target, partitionBy = parts,
-              parquetBloomCols = blooms)
-          }
-        }
+          beforeMarker = cdfSidecar(tableDir)(_ => emptyCdf),
+          op = "OPTIMIZE",
+          stage = t =>
+            if (affected.isEmpty) Map.empty
+            else writeStagedWithStats(toPhysical(arranged,
+                DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
+              t, parts, blooms, parquetBloomCols = blooms))
         finishCommit(spark, lh, tableName, tableDir, commit,
           df.columns.toSeq, parts)
       case _ => // legacy snapshot table: one full rewrite converts it to
@@ -4646,13 +4518,9 @@ object TableIO {
             Zorder.cluster(df, zorderBy, Some(nFiles), hilbert)
           else if (parts.isEmpty) df.coalesce(nFiles)
           else df.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
-        val sw = new StagedWrite(spark)
         val commit = Versioned.commitFiles(tableDir, df.schema.json,
-          expectedBase = base,
-          collectStats = sw.collect,
-          op = "OPTIMIZE") { target =>
-          sw.write(arranged, target, partitionBy = parts)
-        }
+          expectedBase = base, op = "OPTIMIZE",
+          stage = writeStagedWithStats(arranged, _, parts))
         finishCommit(spark, lh, tableName, tableDir, commit,
           df.columns.toSeq, parts)
     }
@@ -4680,20 +4548,23 @@ object TableIO {
     * `affected`: the input entries the op consumed (conflict-checked per
     * retry). `replaced`: entries the op contributes directly into the
     * inherit list (ANALYZE's re-statted entries; empty when the payload is
-    * staged by `write`). `metaOf` recomputes commit meta from the CURRENT
+    * staged by `stage`). `metaOf` recomputes commit meta from the CURRENT
     * base's meta so concurrently-advanced identity/txn watermarks are
-    * never regressed. The `write` callback re-executes per retry: it scans
+    * never regressed. `stage` ([[Versioned.commitFiles]]'s staging step)
+    * re-executes per retry: it scans
     * a PINNED file list (the affected entries, protected from vacuum by
     * the very manifests being raced), so the rewrite re-derives
     * deterministically. */
   private[lakehouse] def commitMaintenance(tableDir: String, firstBase: Long,
       firstM: Versioned.Manifest, affected: Seq[Versioned.FileEntry],
       metaOf: Map[String, String] => Map[String, String],
-      collectStats: String => Map[String, String],
-      beforeMarker: (Long, Seq[Versioned.FileEntry], String) => Unit,
-      op: String, replaced: Seq[Versioned.FileEntry] = Seq.empty,
-      maxRetries: Int = 5)(
-      write: String => Unit): Versioned.Commit = {
+      op: String,
+      beforeMarker: (Long, Seq[Versioned.FileEntry], String) => Unit =
+        (_, _, _) => (),
+      replaced: Seq[Versioned.FileEntry] = Seq.empty,
+      maxRetries: Int = 5,
+      stage: String => Map[String, String] = _ => Map.empty)
+      : Versioned.Commit = {
     val affectedSer = affected.map(_.serialized).toSet
     val affectedPaths = affected.map(_.path).toSet
     var b = firstBase
@@ -4704,9 +4575,8 @@ object TableIO {
         m.entries.filterNot(e => affectedPaths(e.path)) ++ replaced
       try {
         return Versioned.commitFiles(tableDir, m.schemaJson,
-          inherit = inherit, expectedBase = Some(b),
-          collectStats = collectStats, meta = metaOf(m.meta),
-          beforeMarker = beforeMarker, op = op)(write)
+          inherit = inherit, expectedBase = Some(b), meta = metaOf(m.meta),
+          beforeMarker = beforeMarker, op = op, stage = stage)
       } catch {
         case e: Versioned.ConcurrentWriteException =>
           attempt += 1
@@ -4839,22 +4709,16 @@ object TableIO {
       if (!cdfEnabled(m.meta)) None
       else Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         df.schema.add("_change_type", StringType)))
-    val sw = new StagedWrite(spark, blooms)
     val commit = commitMaintenance(tableDir, b, m, affected,
       metaOf = mm => mm + (ClusterByKey -> zorderBy.mkString(",")) +
         (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder")),
-      collectStats = sw.collect,
-      beforeMarker = (v, _, cid) => emptyCdf.foreach(
-        _.write.mode(SaveMode.Overwrite)
-          .parquet(cdfDir(tableDir, v, cid).toString)),
-      op = "OPTIMIZE") { target =>
-      if (affected.nonEmpty) {
-        val physical = toPhysical(arranged,
-          DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-        sw.write(physical, target, partitionBy = parts,
-          parquetBloomCols = blooms)
-      }
-    }
+      beforeMarker = cdfSidecar(tableDir)(_ => emptyCdf),
+      op = "OPTIMIZE",
+      stage = t =>
+        if (affected.isEmpty) Map.empty
+        else writeStagedWithStats(toPhysical(arranged,
+            DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
+          t, parts, blooms, parquetBloomCols = blooms))
     finishCommit(spark, lh, tableName, tableDir, commit,
       df.columns.toSeq, parts)
   }
@@ -4927,10 +4791,7 @@ object TableIO {
           val commit = Versioned.commitFiles(tableDir, m.schemaJson,
             inherit = entries2, expectedBase = Some(b),
             meta = Versioned.withFeature(m.meta, "deletionVectors"),
-            beforeMarker = (v, _, cid) => changes.foreach(
-              _.write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)),
-            op = "DELETE") { _ => () }
+            beforeMarker = cdfSidecar(tableDir)(_ => changes), op = "DELETE")
           val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
           finishCommit(spark, lh, tableName, tableDir, commit,
             schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
@@ -4968,29 +4829,27 @@ object TableIO {
             else affectedShared.map(_.filter(cond)
               .withColumn("_change_type",
                 org.apache.spark.sql.functions.lit("delete")))
-          val sw = new StagedWrite(spark, bloomColsOf(m))
           val commit = Versioned.commitFiles(tableDir, m.schemaJson,
             inherit = untouched, expectedBase = Some(b),
-            collectStats = sw.collect,
             meta = m.meta,
-            beforeMarker = (v, _, cid) => changes.foreach(
-              _.write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)),
-            op = "DELETE") { target =>
-            if (affected.nonEmpty) {
-              // row-tracked tables: survivors carry their materialized ids
-              // through the rewrite — DELETE never changes a row's identity
-              val survivors =
-                (if (!m.meta.contains(Versioned.RowTrackingKey))
-                  affectedShared.get
-                else withRowIds(spark, tableDir, m, affected)
-                  .withColumnRenamed(RowIdColName, PhysRowIdCol))
-                .filter(not(cond))
-              sw.write(toPhysical(survivors,
-                  DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
-                target, partitionBy = parts)
-            }
-          }
+            beforeMarker = cdfSidecar(tableDir)(_ => changes),
+            op = "DELETE",
+            stage = t =>
+              if (affected.isEmpty) Map.empty
+              else {
+                // row-tracked tables: survivors carry their materialized
+                // ids through the rewrite — DELETE never changes a row's
+                // identity
+                val survivors =
+                  (if (!m.meta.contains(Versioned.RowTrackingKey))
+                    affectedShared.get
+                  else withRowIds(spark, tableDir, m, affected)
+                    .withColumnRenamed(RowIdColName, PhysRowIdCol))
+                  .filter(not(cond))
+                writeStagedWithStats(toPhysical(survivors,
+                    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
+                  t, parts, bloomColsOf(m))
+              })
           val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
           finishCommit(spark, lh, tableName, tableDir, commit,
             schema.fieldNames.toSeq, parts)
@@ -5059,9 +4918,8 @@ object TableIO {
     // own commit) inherit as-is. Any concurrent touch to a re-statted file
     // is a real conflict — our stale stats must not overwrite its state.
     val commit = commitMaintenance(tableDir, base.getOrElse(0L), m,
-      affected = m.entries, metaOf = identity,
-      collectStats = _ => Map.empty, beforeMarker = (_, _, _) => (),
-      op = "ANALYZE", replaced = entries) { _ => () }
+      affected = m.entries, metaOf = identity, op = "ANALYZE",
+      replaced = entries)
     finishCommit(spark, lh, tableName, tableDir, commit,
       schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
   }
@@ -5159,7 +5017,7 @@ object TableIO {
     val entries = files.map(f => Versioned.FileEntry(f, stats.get(f)))
     val commit = Versioned.commitFiles(tableDir, df.schema.json,
       inherit = entries, expectedBase = Some(0L),
-      op = "CONVERT") { _ => () }
+      op = "CONVERT")
     finishCommit(spark, lh, tableName, tableDir, commit,
       df.columns.toSeq, partitioningOfFiles(files))
   }
@@ -5347,19 +5205,14 @@ object TableIO {
                 .unionByName(applied(matched)
                   .withColumn("_change_type", lit("update_postimage")))
             }
-          val sw = new StagedWrite(spark, bloomColsOf(m))
           Versioned.commitFiles(tableDir, m.schemaJson,
             inherit = untouched, expectedBase = Some(b),
-            collectStats = sw.collect,
             meta = m.meta,
-            beforeMarker = (v, _, cid) => changes.foreach(
-              _.write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)),
-            op = "UPDATE") { target =>
-            rewritten.foreach { r =>
-              sw.write(toPhysical(r, schema), target, partitionBy = parts)
-            }
-          }
+            beforeMarker = cdfSidecar(tableDir)(_ => changes),
+            op = "UPDATE",
+            stage = t => rewritten.fold(Map.empty[String, String])(r =>
+              writeStagedWithStats(toPhysical(r, schema), t, parts,
+                bloomColsOf(m))))
         } finally { if (shareScan) affectedScan.foreach(_.unpersist()) }
         finishCommit(spark, lh, tableName, tableDir, commit,
           schema.fieldNames.toSeq, parts)
@@ -5386,9 +5239,10 @@ object TableIO {
   def writeView(spark: SparkSession, lh: LakehouseProps, viewName: String,
       df: DataFrame): Unit = {
     Versioned.commitFiles(Catalog.viewPath(lh, viewName), df.schema.json,
-      op = "WRITE") {
-      target => df.write.mode(SaveMode.Append).parquet(target)
-    }
+      op = "WRITE", stage = { target =>
+        df.write.mode(SaveMode.Append).parquet(target)
+        Map.empty
+      })
     ()
   }
 

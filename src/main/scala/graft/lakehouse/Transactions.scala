@@ -87,7 +87,7 @@ object Txn {
       tableName: String, df: DataFrame): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
     requireWritable(h, tableDir, tableName)
-    h.writes += tableDir -> stageOne(h, spark, lh, tableName, tableDir, df)
+    h.writes += tableDir -> stageOne(h, tableName, tableDir, df)
     // liveness: the grace clock is the ref mtime — re-touch every ref so
     // a long later write cannot age the earlier tables into a steal
     heartbeat(h)
@@ -120,7 +120,7 @@ object Txn {
     val results =
       try {
         val futs = writes.zip(dirs).map { case ((t, df), d) =>
-          Future((d, stageOne(h, spark, lh, t, d, df)))
+          Future((d, stageOne(h, t, d, df)))
         }
         futs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       } finally pool.shutdown()
@@ -148,24 +148,21 @@ object Txn {
 
   /** Stage one table's append and return its pending version (does not
     * touch the handle's registration state — callers do). */
-  private def stageOne(h: Handle, spark: SparkSession, lh: LakehouseProps,
-      tableName: String, tableDir: String, df: DataFrame): Long = {
+  private def stageOne(h: Handle, tableName: String, tableDir: String,
+      df: DataFrame): Long = {
     val base = Versioned.latestVersion(tableDir)
     val ref: (Long, Seq[Versioned.FileEntry], String) => Unit =
       (v, _, cid) => writeRef(tableDir, v, cid, h.outcome)
     val commit = base match {
       case None =>
-        val sw = new TableIO.StagedWrite(spark)
         Versioned.commitFiles(tableDir, df.schema.json,
           expectedBase = Some(0L),
-          collectStats = sw.collect,
           // a reader that does not understand txn refs would see PENDING
           // versions as committed — gate it through the features protocol
           meta = Versioned.withFeature(
             Map.empty[String, String], "multiTableTxn"),
-          beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id)) { target =>
-          sw.write(df, target)
-        }
+          beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id),
+          stage = TableIO.writeStagedWithStats(df, _))
       case Some(b) =>
         val m = Versioned.readManifest(tableDir, b).getOrElse(
           throw new IllegalArgumentException(
@@ -197,15 +194,13 @@ object Txn {
           TableIO.enforceChecks(aligned, TableIO.checkConstraintsOf(m.meta),
             s"$tableName: txn append")
           val parts = TableIO.partitioningOfFiles(m.files)
-          val sw = new TableIO.StagedWrite(spark, TableIO.bloomColsOf(m))
           Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
             expectedBase = Some(b),
-            collectStats = sw.collect,
             meta = Versioned.withFeature(m.meta ++ idMeta, "multiTableTxn"),
-            beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id)) { target =>
-            sw.write(TableIO.toPhysical(aligned, schema), target,
-              partitionBy = parts)
-          }
+            beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id),
+            stage = t => TableIO.writeStagedWithStats(
+              TableIO.toPhysical(aligned, schema), t, parts,
+              TableIO.bloomColsOf(m)))
         } finally pin.foreach(_.unpersist())
     }
     commit.version

@@ -550,11 +550,14 @@ object Versioned {
     finally s.close()
   }
 
-  /** Stage new files via `write` (handed a fresh hidden `.staging-<uuid>`
-    * scratch dir inside the table dir), then atomically commit a manifest
-    * of `inherit ++ staged` and move the staged files to their final root
-    * locations. Inheriting callers MUST pin `expectedBase` — the version
-    * their `inherit` list was read from — and get
+  /** Stage new files via `stage` (handed a fresh hidden `.staging-<uuid>`
+    * scratch dir inside the table dir; it returns the per-file stats of
+    * what it staged, keyed by staging-relative path), then atomically
+    * commit a manifest of `inherit ++ staged` and move the staged files to
+    * their final root locations. The default stages nothing: a
+    * metadata-only commit. A throwing `stage` aborts the commit.
+    * Inheriting callers MUST pin `expectedBase` — the version their
+    * `inherit` list was read from — and get
     * [[ConcurrentWriteException]] if another writer committed in between
     * (their inherit list would silently drop that writer's changes
     * otherwise). Plain overwrites (inherit = Nil) never conflict; they
@@ -626,11 +629,10 @@ object Versioned {
   def commitFiles(tableDir: String, schemaJson: String,
       inherit: Seq[FileEntry] = Seq.empty,
       expectedBase: Option[Long] = None,
-      collectStats: String => Map[String, String] = _ => Map.empty,
       meta: Map[String, String] = Map.empty,
       beforeMarker: (Long, Seq[FileEntry], String) => Unit = (_, _, _) => (),
-      op: String = "", txn: Option[String] = None)
-      (write: String => Unit): Commit = {
+      op: String = "", txn: Option[String] = None,
+      stage: String => Map[String, String] = _ => Map.empty): Commit = {
     require(inherit.isEmpty || expectedBase.isDefined,
       "a commit inheriting files must pin the base version they came from")
     require(!schemaJson.contains("\n") && !schemaJson.contains("\r"),
@@ -679,11 +681,7 @@ object Versioned {
     val staging = dir.resolve(StagingPrefix + java.util.UUID.randomUUID().toString)
     Files.createDirectory(staging)
     try {
-      write(staging.toString)
-      // per-file stats over the STAGED files only (O(batch)): the caller's
-      // collector maps staging-relative paths to single-line stats JSON
-      val stats = try collectStats(staging.toString)
-      catch { case _: Exception => Map.empty[String, String] }
+      val stats = stage(staging.toString)
       // relative destinations: a staged `col=value/part-x.parquet` lands at
       // the same relative path under the table root (Spark's part-file
       // names carry the write-job uuid, so cross-commit names never clash)

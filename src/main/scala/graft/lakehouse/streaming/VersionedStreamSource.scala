@@ -154,14 +154,11 @@ class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
           case None =>
             // pinned to base 0: a concurrent creator forces a retry as a
             // normal append instead of silently superseding its commit
-            val sw = new TableIO.StagedWrite(spark)
             Versioned.commitFiles(tableDir, batch.schema.json,
               expectedBase = Some(0L),
-              collectStats = sw.collect,
               meta = Map(txnKey -> batchId.toString),
-              op = "STREAM APPEND") { target =>
-              sw.write(batch, target)
-            }
+              op = "STREAM APPEND",
+              stage = TableIO.writeStagedWithStats(batch, _))
           case Some(man) =>
             TableIO.enforceChecks(batch,
               TableIO.checkConstraintsOf(man.meta), s"$tableDir: sink batch")
@@ -184,15 +181,13 @@ class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
             val parts =
               if (partitionColumns.nonEmpty) partitionColumns
               else TableIO.partitionSpecOf(man.meta, man.files)
-            val sw = new TableIO.StagedWrite(spark, TableIO.bloomColsOf(man))
             Versioned.commitFiles(tableDir, evolvedM.json,
               inherit = man.entries, expectedBase = base,
-              collectStats = sw.collect,
               meta = man.meta + (txnKey -> batchId.toString),
-              op = "STREAM APPEND") { target =>
-              sw.write(TableIO.toPhysical(aligned, evolvedM), target,
-                partitionBy = parts)
-            }
+              op = "STREAM APPEND",
+              stage = t => TableIO.writeStagedWithStats(
+                TableIO.toPhysical(aligned, evolvedM), t, parts,
+                TableIO.bloomColsOf(man)))
         }
         return
       } catch {

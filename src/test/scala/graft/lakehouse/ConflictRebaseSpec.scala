@@ -30,11 +30,11 @@ class ConflictRebaseSpec extends SparkSuite {
     val affected = m1.entries
     val scan = Versioned.scanOf(dir, m1, affected)
     val commit = TableIO.commitMaintenance(dir, 1L, m1, affected,
-      metaOf = identity, collectStats = _ => Map.empty,
-      beforeMarker = (_, _, _) => (), op = "OPTIMIZE") { target =>
-      TableIO.scanSpec(spark, scan).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(target)
-    }
+      metaOf = identity, op = "OPTIMIZE", stage = { target =>
+        TableIO.scanSpec(spark, scan).coalesce(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(target)
+        Map.empty
+      })
     // rebased onto v2 and committed as v3
     assert(commit.version == 3L)
     val m3 = Versioned.readManifest(dir, 3).get
@@ -64,11 +64,11 @@ class ConflictRebaseSpec extends SparkSuite {
     val scan = Versioned.scanOf(dir, m1, affected)
     intercept[Versioned.ConcurrentWriteException] {
       TableIO.commitMaintenance(dir, 1L, m1, affected,
-        metaOf = identity, collectStats = _ => Map.empty,
-        beforeMarker = (_, _, _) => (), op = "OPTIMIZE") { target =>
-        TableIO.scanSpec(spark, scan).coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(target)
-      }
+        metaOf = identity, op = "OPTIMIZE", stage = { target =>
+          TableIO.scanSpec(spark, scan).coalesce(1)
+            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(target)
+          Map.empty
+        })
     }
     // the delete's result is intact
     assert(TableIO.selectTable(spark, lh, "rb2").count() == 25)

@@ -109,7 +109,7 @@ class ConvertCdcSpec extends SparkSuite {
     Versioned.commitFiles(dir, m0.schemaJson,
       inherit = m0.entries.map(_.copy(stats = None)),
       expectedBase = Versioned.latestVersion(dir), meta = m0.meta,
-      op = "STRIP") { _ => () }
+      op = "STRIP")
     val total = Versioned.readManifest(dir,
       Versioned.latestVersion(dir).get).get.entries.size
     // without stats no range prune is possible (all files survive)

@@ -295,9 +295,10 @@ class FileLevelCommitSpec extends SparkSuite {
     TableIO.writeTable(spark, lh, "c1", Seq((9, "z")).toDF("k", "s"))
     intercept[Versioned.ConcurrentWriteException] {
       Versioned.commitFiles(tdir, Seq((0, "")).toDF("k", "s").schema.json,
-        inherit = Seq.empty, expectedBase = Some(base)) { target =>
-        Seq((1, "A")).toDF("k", "s").write.mode("append").parquet(target)
-      }
+        inherit = Seq.empty, expectedBase = Some(base), stage = { target =>
+          Seq((1, "A")).toDF("k", "s").write.mode("append").parquet(target)
+          Map.empty
+        })
     }
     // the interleaved writer's data is intact
     assert(TableIO.selectTable(spark, lh, "c1").collect()

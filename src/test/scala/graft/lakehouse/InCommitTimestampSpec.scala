@@ -80,7 +80,7 @@ class InCommitTimestampSpec extends SparkSuite {
     // maintenance-style commit that naively forwards the full old meta
     Versioned.commitFiles(tdir, m1.schemaJson, inherit = m1.entries,
       expectedBase = Versioned.latestVersion(tdir),
-      meta = m1.meta, op = "TOUCH") { _ => () }
+      meta = m1.meta, op = "TOUCH")
     val v2 = Versioned.latestVersion(tdir).get
     val m2 = Versioned.readManifest(tdir, v2).get
     assert(m2.meta(Versioned.CommitTsKey).toLong >

@@ -188,7 +188,7 @@ class MergeIntoSpec extends SparkSuite {
       Versioned.latestVersion(dir).get).get
     // simulate the race: commit an independent version first
     Versioned.commitFiles(dir, m.schemaJson, inherit = m.entries,
-      expectedBase = Versioned.latestVersion(dir), op = "WRITE") { _ => () }
+      expectedBase = Versioned.latestVersion(dir), op = "WRITE")
     // merge still works (it reads the NEW latest) — sanity, not a failure
     TableIO.mergeInto(spark, lh, "mi8", Seq((1, 9.0)).toDF("k", "nv"),
       Seq("k"), Seq(MatchedUpdate(Map("v" -> "s.nv"))))

@@ -125,12 +125,14 @@ class TableIOSpec extends SparkSuite {
     // blind-overwrite semantics) — B takes v2, A retries onto v3.
     val schema = Seq((0, "")).toDF("k", "s").schema.json
     var inner: Long = -1
-    val outer = Versioned.commitFiles(tdir, schema) { target =>
-      inner = Versioned.commitFiles(tdir, schema) { t2 =>
+    val outer = Versioned.commitFiles(tdir, schema, stage = { target =>
+      inner = Versioned.commitFiles(tdir, schema, stage = { t2 =>
         Seq((3, "c")).toDF("k", "s").write.mode("append").parquet(t2)
-      }.version
+        Map.empty
+      }).version
       Seq((2, "b")).toDF("k", "s").write.mode("append").parquet(target)
-    }
+      Map.empty
+    })
     assert(inner == 2L && outer.version == 3L, s"$inner / ${outer.version}")
     assert(Versioned.latestVersion(tdir).contains(3L))
     assert(Versioned.isCommitted(tdir, 2L)) // superseded but committed
@@ -138,12 +140,15 @@ class TableIOSpec extends SparkSuite {
     // a conflict-CHECKED commit (read-modify-write) in the same race must
     // throw instead of silently superseding the interleaved writer
     intercept[Versioned.ConcurrentWriteException] {
-      Versioned.commitFiles(tdir, schema, expectedBase = Some(3L)) { target =>
-        Versioned.commitFiles(tdir, schema) { t2 =>
+      Versioned.commitFiles(tdir, schema, expectedBase = Some(3L),
+          stage = { target =>
+        Versioned.commitFiles(tdir, schema, stage = { t2 =>
           Seq((9, "z")).toDF("k", "s").write.mode("append").parquet(t2)
-        }
+          Map.empty
+        })
         Seq((8, "y")).toDF("k", "s").write.mode("append").parquet(target)
-      }
+        Map.empty
+      })
     }
     TableIO.dropTable(spark, lh, "trace2")
   }
@@ -311,7 +316,7 @@ class TableIOSpec extends SparkSuite {
     Versioned.commitFiles(dir, m0.schemaJson,
       inherit = m0.entries.map(_.copy(stats = None)),
       expectedBase = Versioned.latestVersion(dir), meta = m0.meta,
-      op = "STRIP") { _ => () }
+      op = "STRIP")
     assert(acts("mt2").contains("analyze"))
     Seq("mt1", "mt2").foreach(TableIO.dropTable(spark, lh, _))
   }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** Write-task-side stats tracker vs the read-back aggregation: the two
   * paths must render BYTE-IDENTICAL stats JSON for every file of every
   * staged write (stats are correctness-bearing — manifest-answerable
-  * queries hash their values). Each case writes through
-  * [[TableIO.writeStagedWithStats]] and re-derives the stats from the
+  * queries hash their values). Each case writes through the tracker half
+  * of [[TableIO.writeStagedWithStats]] and re-derives the stats from the
   * written files with [[TableIO.collectFileStats]]. */
 class WriteStatsSpec extends SparkSuite {
   import spark.implicits._
@@ -19,9 +19,9 @@ class WriteStatsSpec extends SparkSuite {
       parquetBlooms: Seq[String] = Seq.empty): Map[String, String] = {
     val dir = Files.createTempDirectory("write_stats")
       .resolve("stage").toString
-    val got = TableIO.writeStagedWithStats(df, dir, partitionBy, blooms,
-      parquetBlooms)
-    assert(got != null, "tracker poisoned — fallback would re-read")
+    val got = TableIO.writeTracked(df, dir, partitionBy, blooms,
+      parquetBlooms).fold(why => fail(s"tracker cannot serve stats: $why"),
+      identity)
     val expected = TableIO.collectFileStats(spark, blooms)(dir)
     assert(got.keySet == expected.keySet)
     for (k <- expected.keySet)
@@ -105,24 +105,18 @@ class WriteStatsSpec extends SparkSuite {
     check(df.coalesce(1))
   }
 
-  test("targetStagedFileBytes coalesces staged files; default off keeps " +
-      "upstream partitioning; stats stay identical") {
-    val df = spark.range(0, 10000, 1, 8)
-      .select(col("id"), concat(lit("v"), col("id")).as("s"))
-    def stagedCount(conf: Option[String]): Int = {
-      conf.foreach(v => spark.conf.set(TableIO.TargetStagedFileBytesKey, v))
-      try {
-        val dir = Files.createTempDirectory("ws_size")
-          .resolve("stage").toString
-        val got = TableIO.writeStagedWithStats(df, dir)
-        assert(got != null)
-        assert(got == TableIO.collectFileStats(spark)(dir))
-        got.size
-      } finally conf.foreach(_ =>
-        spark.conf.unset(TableIO.TargetStagedFileBytesKey))
-    }
-    assert(stagedCount(None) == 8, "default off: upstream partitioning")
-    assert(stagedCount(Some((64L * 1024 * 1024).toString)) == 1,
-      "a tiny frame under a 64 MB target coalesces to one file")
+  test("an untrackable write falls back to read-back stats, identically") {
+    // a Bloom column that is also a partition column never reaches the
+    // write tasks' data row, so only the read-back can serve its stats
+    val df = spark.range(40).select(col("id"), (col("id") % 2).as("p"))
+    val dir = Files.createTempDirectory("write_stats")
+      .resolve("stage").toString
+    assert(TableIO.writeTracked(df, dir, Seq("p"), Seq("p"), Seq.empty)
+      .isLeft)
+    val dir2 = Files.createTempDirectory("write_stats")
+      .resolve("stage").toString
+    val got = TableIO.writeStagedWithStats(df, dir2, Seq("p"), Seq("p"))
+    assert(got.nonEmpty)
+    assert(got == TableIO.collectFileStats(spark, Seq("p"))(dir2))
   }
 }
