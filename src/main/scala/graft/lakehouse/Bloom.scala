@@ -40,35 +40,32 @@ object Bloom {
   /** Manifest stats-JSON key prefix marking a bloom entry. */
   val StatsPrefix = "__bloom_"
 
-  /** K bit positions for one 64-bit hash (double hashing; h2 forced odd so
-    * probes cycle the whole table for power-of-two sizes). */
-  private[lakehouse] def positions(hash: Long, bits: Int): Array[Int] = {
-    val out = new Array[Int](K)
-    val h1 = hash
-    val h2 = (hash >>> 32) | 1L
+  /** The `i`-th of K bit positions for one 64-bit hash (double hashing;
+    * h2 forced odd so probes cycle the whole table for power-of-two
+    * sizes). Computed in place: no per-value position array. */
+  private def position(hash: Long, i: Int, bits: Int): Int =
+    (((hash + i * ((hash >>> 32) | 1L)) & Long.MaxValue) % bits).toInt
+
+  /** Set the K bits of `hash` in a bitset of `words.length * 64` bits. */
+  private[lakehouse] def add(words: Array[Long], hash: Long): Unit = {
+    val bits = words.length << 6
     var i = 0
     while (i < K) {
-      out(i) = (((h1 + i * h2) & Long.MaxValue) % bits).toInt
+      val pos = position(hash, i, bits)
+      words(pos >>> 6) |= (1L << (pos & 63))
       i += 1
     }
-    out
   }
-
-  private[lakehouse] def set(words: Array[Long], pos: Int): Unit =
-    words(pos >>> 6) |= (1L << (pos & 63))
-
-  private def get(words: Array[Long], pos: Int): Boolean =
-    (words(pos >>> 6) & (1L << (pos & 63))) != 0L
 
   /** Definitely-absent test: false means no row of the file has a value
     * whose xxhash64 is `hash`; true means "maybe present" (scan the file). */
   def mayContain(words: Array[Long], hash: Long): Boolean = {
     val bits = words.length << 6
     if (bits == 0) return true
-    val ps = positions(hash, bits)
     var i = 0
     while (i < K) {
-      if (!get(words, ps(i))) return false
+      val pos = position(hash, i, bits)
+      if ((words(pos >>> 6) & (1L << (pos & 63))) == 0L) return false
       i += 1
     }
     true
@@ -92,12 +89,7 @@ object Bloom {
     require(bits >= 64 && (bits & (bits - 1)) == 0,
       "bits must be a power of two >= 64 (one long word)")
     def zero: Array[Long] = new Array[Long](bits >>> 6)
-    def reduce(b: Array[Long], hash: Long): Array[Long] = {
-      val ps = positions(hash, bits)
-      var i = 0
-      while (i < K) { set(b, ps(i)); i += 1 }
-      b
-    }
+    def reduce(b: Array[Long], hash: Long): Array[Long] = { add(b, hash); b }
     def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
       var i = 0
       while (i < a.length) { a(i) |= b(i); i += 1 }

@@ -2926,17 +2926,10 @@ object TableIO {
           val (affected, untouched) = m.entries.partition(e =>
             affectedPaths.contains(baseP.resolve(e.path).toString))
           // 2. rewrite ONLY the affected files; inherit the rest
-          val affectedRaw =
+          val affectedDf =
             if (affected.isEmpty)
               spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
             else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-          // with CDF the affected files feed THREE plans (rewrite, preimage,
-          // key set) — persist for the commit instead of re-scanning
-          val affectedDf =
-            if (cdfEnabled(m.meta) && affected.nonEmpty)
-              affectedRaw.persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            else affectedRaw
           val kept = affectedDf.join(updKeys, keyCols, "left_anti")
           val rewritten = kept.unionByName(updates, allowMissingColumns = true)
           val parts = currentPartitioning(lh, tableName)
@@ -2949,39 +2942,39 @@ object TableIO {
           val writeCdf = cdfSidecar(tableDir) { staged =>
             if (!cdfEnabled(m.meta)) None
             else {
-              import org.apache.spark.sql.functions.{lit, when}
-              val oldKeys = affectedDf.select(keyColumns: _*).distinct()
+              import org.apache.spark.sql.expressions.Window
+              import org.apache.spark.sql.functions.{coalesce, lit, max, when}
+              // pre-images: the affected files read again, filtered to the
+              // updated keys — nothing cached, O(updated rows) kept
+              val pre = affectedDf.join(updKeys, keyCols, "left_semi")
+                .withColumn("_change_type", lit("update_preimage"))
               val newRows = scanSpec(spark, Versioned.ScanFiles(tableDir,
                 alignMapping(rewritten.schema, oldSchema, m.meta, b).json,
                 staged.map(_.path)))
                 .join(updKeys, keyCols, "left_semi")
-              val pre = affectedDf.join(updKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-              // post-image vs insert classified in ONE left join against
-              // the old key set (was a semi + an anti — two scans of the
-              // staged files); same rows, same change types
-              val postIns = newRows.join(
-                  oldKeys.withColumn("__graft_hit", lit(1)), keyCols, "left")
-                .withColumn("_change_type",
-                  when(col("__graft_hit").isNotNull, lit("update_postimage"))
-                    .otherwise(lit("insert")))
-                .drop("__graft_hit")
-              Some(pre.unionByName(postIns, allowMissingColumns = true))
+                .withColumn("_change_type", lit(null).cast(StringType))
+              // a staged update row is a post-image iff its key has a
+              // pre-image, else an insert: one window over the key on the
+              // union classifies it, so the pre-images are read once
+              val hasPre = max(col("_change_type").isNotNull)
+                .over(Window.partitionBy(keyColumns: _*))
+              Some(pre.unionByName(newRows, allowMissingColumns = true)
+                .withColumn("_change_type", coalesce(col("_change_type"),
+                  when(hasPre, lit("update_postimage"))
+                    .otherwise(lit("insert")))))
             }
           }
-          try {
-            val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
-            val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
-              inherit = untouched, expectedBase = Some(b),
-              // extraMeta rides the SAME manifest (streaming upsert txn
-              // watermarks need batch-id-and-data atomicity)
-              meta = m.meta ++ extraMeta,
-              beforeMarker = writeCdf, op = "MERGE",
-              stage = t => writeStagedWithStats(
-                toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
-            finishCommit(spark, lh, tableName, tableDir, commit,
-              rewritten.columns.toSeq, parts)
-          } finally affectedDf.unpersist()
+          val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
+          val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
+            inherit = untouched, expectedBase = Some(b),
+            // extraMeta rides the SAME manifest (streaming upsert txn
+            // watermarks need batch-id-and-data atomicity)
+            meta = m.meta ++ extraMeta,
+            beforeMarker = writeCdf, op = "MERGE",
+            stage = t => writeStagedWithStats(
+              toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
+          finishCommit(spark, lh, tableName, tableDir, commit,
+            rewritten.columns.toSeq, parts)
         } finally updKeys.unpersist()
       case _ =>
         // legacy snapshot version: one full rewrite converts the table to
@@ -3399,17 +3392,10 @@ object TableIO {
           val baseP = Paths.get(tableDir)
           val (affected, untouched) = m.entries.partition(e =>
             affectedPaths.contains(baseP.resolve(e.path).toString))
-          val affectedRaw =
+          val affectedDf =
             if (affected.isEmpty)
               spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
             else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-          // with CDF the affected rows feed the rewrite AND the pre-image/
-          // delete classification — persist instead of re-scanning
-          val affectedDf =
-            if (cdfEnabled(m.meta) && affected.nonEmpty)
-              affectedRaw.persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            else affectedRaw
           val kept = affectedDf.join(remA,
             nullSafeOnRemoval(affectedDf), "left_anti")
           val rewritten = kept.unionByName(newRows, allowMissingColumns = true)
@@ -3439,41 +3425,46 @@ object TableIO {
                   "replacement key to appear in the removal set (otherwise " +
                   "new rows are indistinguishable from kept rows in the " +
                   s"staged files); offending key: ${escaped.headOption}")
-              import org.apache.spark.sql.functions.{lit, when}
-              val oldMatched = affectedDf.join(remA,
-                nullSafeOnRemoval(affectedDf), "left_semi")
+              import org.apache.spark.sql.expressions.Window
+              import org.apache.spark.sql.functions.{lit, max, when}
+              // removed rows: the affected files read again, filtered to
+              // the removal keys — nothing cached, O(removed rows) kept
+              val removed = affectedDf.join(remA,
+                  nullSafeOnRemoval(affectedDf), "left_semi")
+                .withColumn("_change_type", lit("delete"))
               val stagedNew = scanSpec(spark, Versioned.ScanFiles(tableDir,
                 rewrittenM.json, staged.map(_.path)))
                 .join(remKeys, keyCols, "left_semi")
-              val newKeys = stagedNew.select(keyColumns: _*).distinct()
-              val oldKeys = oldMatched.select(keyColumns: _*).distinct()
-              // each side classified in ONE left join against the other
-              // side's key set (was a semi + an anti per side — four
-              // scans of the two frames); same rows, same change types
-              val preDel = oldMatched.join(
-                  newKeys.withColumn("__graft_hit", lit(1)), keyCols, "left")
+                .withColumn("_change_type", lit("insert"))
+              // both sides paired in ONE window over the key on their
+              // union: a removed row whose key was staged again is an
+              // update pre-image, else a delete; a staged row whose key
+              // was removed an update post-image, else an insert. Null
+              // keys never pair (null never equals null)
+              val paired = keyColumns.map(_.isNotNull).reduce(_ && _)
+              def keyHas(t: String): Column = paired &&
+                max(col("_change_type") === t)
+                  .over(Window.partitionBy(keyColumns: _*))
+              val events = removed.unionByName(stagedNew,
+                  allowMissingColumns = true)
                 .withColumn("_change_type",
-                  when(col("__graft_hit").isNotNull, lit("update_preimage"))
-                    .otherwise(lit("delete")))
-                .drop("__graft_hit")
-              val postIns = stagedNew.join(
-                  oldKeys.withColumn("__graft_hit", lit(1)), keyCols, "left")
-                .withColumn("_change_type",
-                  when(col("__graft_hit").isNotNull, lit("update_postimage"))
-                    .otherwise(lit("insert")))
-                .drop("__graft_hit")
-              Some(preDel.unionByName(postIns, allowMissingColumns = true))
+                  when(col("_change_type") === "delete",
+                    when(keyHas("insert"), lit("update_preimage"))
+                      .otherwise(lit("delete")))
+                    .otherwise(when(keyHas("delete"),
+                      lit("update_postimage")).otherwise(lit("insert"))))
+              // key columns lead (the sidecar's column order)
+              Some(events.select((keyCols ++
+                events.columns.filterNot(keyCols.contains)).map(col): _*))
             }
           }
-          try {
-            val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
-              inherit = untouched, expectedBase = Some(b),
-              meta = m.meta ++ extraMeta, beforeMarker = writeCdf, op = op,
-              stage = t => writeStagedWithStats(
-                toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
-            finishCommit(spark, lh, tableName, tableDir, commit,
-              rewritten.columns.toSeq, parts)
-          } finally affectedDf.unpersist()
+          val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
+            inherit = untouched, expectedBase = Some(b),
+            meta = m.meta ++ extraMeta, beforeMarker = writeCdf, op = op,
+            stage = t => writeStagedWithStats(
+              toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
+          finishCommit(spark, lh, tableName, tableDir, commit,
+            rewritten.columns.toSeq, parts)
         } finally remKeys.unpersist()
       case _ => throw new IllegalStateException(
         s"$tableName: replaceKeyedRows requires a manifest-based table " +
@@ -4811,49 +4802,41 @@ object TableIO {
         // scanOf, NOT a raw file list: an affected file may carry a
         // deletion vector from an earlier DV delete, and scanning it raw
         // would re-emit delete events for (and below, RESURRECT) rows that
-        // are already logically gone. With CDF on a non-row-tracked table
-        // the same scan feeds BOTH the survivor rewrite and the delete
-        // events — persist it so the affected files read once, not twice.
+        // are already logically gone. The survivor rewrite and the delete
+        // events each read the affected files themselves, filtered — the
+        // events are O(deleted rows), so nothing is cached for them.
         val affectedScan: Option[DataFrame] =
           if (affected.isEmpty) None
           else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
-        val shareScan = cdfEnabled(m.meta) &&
-          !m.meta.contains(Versioned.RowTrackingKey)
-        val affectedShared = affectedScan.map(df =>
-          if (shareScan) df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else df)
-        try {
-          val changes: Option[DataFrame] =
-            if (!cdfEnabled(m.meta)) None
-            else affectedShared.map(_.filter(cond)
-              .withColumn("_change_type",
-                org.apache.spark.sql.functions.lit("delete")))
-          val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-            inherit = untouched, expectedBase = Some(b),
-            meta = m.meta,
-            beforeMarker = cdfSidecar(tableDir)(_ => changes),
-            op = "DELETE",
-            stage = t =>
-              if (affected.isEmpty) Map.empty
-              else {
-                // row-tracked tables: survivors carry their materialized
-                // ids through the rewrite — DELETE never changes a row's
-                // identity
-                val survivors =
-                  (if (!m.meta.contains(Versioned.RowTrackingKey))
-                    affectedShared.get
-                  else withRowIds(spark, tableDir, m, affected)
-                    .withColumnRenamed(RowIdColName, PhysRowIdCol))
-                  .filter(not(cond))
-                writeStagedWithStats(toPhysical(survivors,
-                    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
-                  t, parts, bloomColsOf(m))
-              })
-          val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-          finishCommit(spark, lh, tableName, tableDir, commit,
-            schema.fieldNames.toSeq, parts)
-        } finally if (shareScan) affectedShared.foreach(_.unpersist())
+        val changes: Option[DataFrame] =
+          if (!cdfEnabled(m.meta)) None
+          else affectedScan.map(_.filter(cond)
+            .withColumn("_change_type",
+              org.apache.spark.sql.functions.lit("delete")))
+        val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+          inherit = untouched, expectedBase = Some(b),
+          meta = m.meta,
+          beforeMarker = cdfSidecar(tableDir)(_ => changes),
+          op = "DELETE",
+          stage = t =>
+            if (affected.isEmpty) Map.empty
+            else {
+              // row-tracked tables: survivors carry their materialized
+              // ids through the rewrite — DELETE never changes a row's
+              // identity
+              val survivors =
+                (if (!m.meta.contains(Versioned.RowTrackingKey))
+                  affectedScan.get
+                else withRowIds(spark, tableDir, m, affected)
+                  .withColumnRenamed(RowIdColName, PhysRowIdCol))
+                .filter(not(cond))
+              writeStagedWithStats(toPhysical(survivors,
+                  DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
+                t, parts, bloomColsOf(m))
+            })
+        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        finishCommit(spark, lh, tableName, tableDir, commit,
+          schema.fieldNames.toSeq, parts)
       case _ =>
         // legacy layout: one full filtered rewrite adopts the protocol
         val current = selectTable(spark, lh, tableName)
@@ -5134,7 +5117,8 @@ object TableIO {
     * Concurrent writers fail loudly via the optimistic base check. */
   def updateTable(spark: SparkSession, lh: LakehouseProps, tableName: String,
       condition: String, set: Map[String, String]): TableInfo = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
+    import org.apache.spark.sql.functions.{array, coalesce, col, explode, expr,
+      lit, when}
     require(set.nonEmpty, "updateTable needs at least one SET column")
     val cond = coalesce(expr(condition), lit(false))
     val tableDir = Catalog.tablePath(lh, tableName)
@@ -5179,41 +5163,42 @@ object TableIO {
             }
           }.toSeq ++ keep: _*)
         }
-        // with CDF the affected scan feeds THREE plans (the rewrite, the
-        // pre-image filter, and the post-image projection of the same
-        // matched rows) — persist it so the affected files read once
-        val shareScan = cdfEnabled(m.meta) && affected.nonEmpty
         val affectedScan: Option[DataFrame] =
-          (if (affected.isEmpty) None
+          if (affected.isEmpty) None
           else if (m.meta.contains(Versioned.RowTrackingKey))
             Some(withRowIds(spark, tableDir, m, affected)
               .withColumnRenamed(RowIdColName, PhysRowIdCol))
-          else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected))))
-            .map(df => if (shareScan) df.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df)
-        // everything after the persist — including the CHECK-constraint
-        // validation, which can throw — sits inside the unpersist guard
-        val commit = try {
-          val rewritten = affectedScan.map(applied)
-          rewritten.foreach(r =>
-            enforceChecks(r, checkConstraintsOf(m.meta), s"$tableName: update"))
-          val changes: Option[DataFrame] =
-            if (!cdfEnabled(m.meta) || affected.isEmpty) None
-            else affectedScan.map { sc =>
-              val matched = sc.filter(cond).drop(PhysRowIdCol)
-              matched.withColumn("_change_type", lit("update_preimage"))
-                .unionByName(applied(matched)
-                  .withColumn("_change_type", lit("update_postimage")))
-            }
-          Versioned.commitFiles(tableDir, m.schemaJson,
-            inherit = untouched, expectedBase = Some(b),
-            meta = m.meta,
-            beforeMarker = cdfSidecar(tableDir)(_ => changes),
-            op = "UPDATE",
-            stage = t => rewritten.fold(Map.empty[String, String])(r =>
-              writeStagedWithStats(toPhysical(r, schema), t, parts,
-                bloomColsOf(m))))
-        } finally { if (shareScan) affectedScan.foreach(_.unpersist()) }
+          else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
+        val rewritten = affectedScan.map(applied)
+        rewritten.foreach(r =>
+          enforceChecks(r, checkConstraintsOf(m.meta), s"$tableName: update"))
+        // change feed: both images of each matched row from ONE filtered
+        // read of the affected files — every matched row is exploded into
+        // its pre- and post-image, so nothing is cached and the sidecar
+        // costs O(updated rows) beyond that read
+        val changes: Option[DataFrame] =
+          if (!cdfEnabled(m.meta)) None
+          else affectedScan.map { sc =>
+            val post = col("__graft_post")
+            sc.filter(cond).drop(PhysRowIdCol)
+              .withColumn("__graft_post", explode(array(lit(false), lit(true))))
+              .select(sc.columns.filterNot(_ == PhysRowIdCol).map { c =>
+                set.get(c) match {
+                  case Some(e) => when(post, expr(e).cast(schema(c).dataType))
+                    .otherwise(col(c)).as(c)
+                  case None => col(c)
+                }
+              }.toSeq :+ when(post, lit("update_postimage"))
+                .otherwise(lit("update_preimage")).as("_change_type"): _*)
+          }
+        val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+          inherit = untouched, expectedBase = Some(b),
+          meta = m.meta,
+          beforeMarker = cdfSidecar(tableDir)(_ => changes),
+          op = "UPDATE",
+          stage = t => rewritten.fold(Map.empty[String, String])(r =>
+            writeStagedWithStats(toPhysical(r, schema), t, parts,
+              bloomColsOf(m))))
         finishCommit(spark, lh, tableName, tableDir, commit,
           schema.fieldNames.toSeq, parts)
       case _ =>

@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Literal, UnsafeProjection, XxHash64}
 import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,8 +30,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     bit-identical to `min(col).cast("string")`;
   *   - integral sums accumulate exactly (long with overflow escalation to
   *     BigInteger — the same values DECIMAL(38,0) summation yields);
-  *   - Bloom bits hash `xxhash64(col)` by evaluating the XxHash64
-  *     expression itself (a null value hashes to the seed, as in the agg).
+  *   - Bloom bits hash `xxhash64(col)` with the XxHash64 expression
+  *     itself, all Bloom columns in one generated projection (a null value
+  *     hashes to the seed, as in the agg).
+  *
+  * Each stats column gets a per-file accumulator specialised to its
+  * internal type (primitive long min, max and sum for the integral, date
+  * and timestamp types, double and UTF8String min/max); Float, Boolean and
+  * Decimal compare boxed values.
   *
   * Any per-row/per-file failure POISONS the tracker instead of failing the
   * write: the caller then falls back to the read-back job, so this path can
@@ -68,42 +74,149 @@ private[lakehouse] object WriteStats {
   private final case class TaskStats(files: Seq[(String, FileStatsRaw)],
       poisoned: Boolean) extends WriteTaskStats
 
-  /** SQL comparison semantics for min/max accumulation: NaN greater than
-    * everything, -0.0 == 0.0 (so equal values keep the incumbent — the
-    * `least`/`greatest` rule). */
-  private def comparatorFor(dt: DataType): (Any, Any) => Int = dt match {
-    case BooleanType => (a, b) =>
-      java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-    case ByteType => (a, b) =>
-      java.lang.Byte.compare(a.asInstanceOf[Byte], b.asInstanceOf[Byte])
-    case ShortType => (a, b) =>
-      java.lang.Short.compare(a.asInstanceOf[Short], b.asInstanceOf[Short])
-    case IntegerType | DateType => (a, b) =>
-      java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-    case LongType | TimestampType => (a, b) =>
-      java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    case FloatType => (a, b) => {
-      val x = a.asInstanceOf[Float]; val y = b.asInstanceOf[Float]
-      if (x == y) 0 else java.lang.Float.compare(x, y)
-    }
-    case DoubleType => (a, b) => {
-      val x = a.asInstanceOf[Double]; val y = b.asInstanceOf[Double]
-      if (x == y) 0 else java.lang.Double.compare(x, y)
-    }
-    case StringType => (a, b) =>
-      a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-    case _: DecimalType => (a, b) =>
-      a.asInstanceOf[org.apache.spark.sql.types.Decimal]
-        .compareTo(b.asInstanceOf[org.apache.spark.sql.types.Decimal])
-    case other => throw new IllegalArgumentException(
-      s"no stats comparator for $other")
+  /** One stats column's per-file accumulator: null count and min/max in
+    * SQL comparison semantics (NaN greater than everything, -0.0 == 0.0,
+    * so equal values keep the incumbent — the `least`/`greatest` rule). */
+  private abstract class ColAcc {
+    var nulls = 0L
+
+    /** Fold in the non-null value at `ord`. */
+    def add(row: InternalRow, ord: Int): Unit
+
+    /** The internal min/max values (boxed; null = no non-null value seen). */
+    def min: Any
+    def max: Any
+
+    /** The exact sum's rendering (null = not summed, or all-null file). */
+    def sum: String = null
   }
 
-  /** Copy a value out of a (possibly buffer-backed, reused) InternalRow
-    * before retaining it across rows. */
-  private def retained(v: Any): Any = v match {
-    case s: UTF8String => s.clone()
-    case other => other
+  /** Byte, Short, Int, Long, Date and Timestamp, all held as a long; the
+    * integral types also sum exactly (long with overflow escalation to
+    * BigInteger — the same values DECIMAL(38,0) summation yields). */
+  private final class IntegralAcc(dt: DataType) extends ColAcc {
+    private val width = dt match {
+      case ByteType => 1
+      case ShortType => 2
+      case IntegerType | DateType => 4
+      case _ => 8
+    }
+    private val summed = dt match {
+      case DateType | TimestampType => false
+      case _ => true
+    }
+    private var seen = false
+    private var lo = 0L
+    private var hi = 0L
+    private var sumLong = 0L
+    private var sumBig: java.math.BigInteger = null
+
+    def add(row: InternalRow, ord: Int): Unit = {
+      val v = width match {
+        case 1 => row.getByte(ord).toLong
+        case 2 => row.getShort(ord).toLong
+        case 4 => row.getInt(ord).toLong
+        case _ => row.getLong(ord)
+      }
+      if (!seen) { seen = true; lo = v; hi = v }
+      else if (v < lo) lo = v
+      else if (v > hi) hi = v
+      if (summed) {
+        if (sumBig == null) {
+          val next = sumLong + v
+          // overflow check (Math.addExact semantics without throw)
+          if (((sumLong ^ next) & (v ^ next)) < 0)
+            sumBig = java.math.BigInteger.valueOf(sumLong)
+              .add(java.math.BigInteger.valueOf(v))
+          else sumLong = next
+        } else sumBig = sumBig.add(java.math.BigInteger.valueOf(v))
+      }
+    }
+
+    /** Back to the type's own internal value, for rendering. */
+    private def internal(x: Long): Any = width match {
+      case 1 => x.toByte
+      case 2 => x.toShort
+      case 4 => x.toInt
+      case _ => x
+    }
+    def min: Any = if (seen) internal(lo) else null
+    def max: Any = if (seen) internal(hi) else null
+    override def sum: String =
+      if (!summed || !seen) null
+      else if (sumBig != null) sumBig.toString
+      else sumLong.toString
+  }
+
+  private final class DoubleAcc extends ColAcc {
+    private var seen = false
+    private var lo = 0.0
+    private var hi = 0.0
+    // `==` first: -0.0 == 0.0 keeps the incumbent; Double.compare then
+    // orders NaN above everything
+    def add(row: InternalRow, ord: Int): Unit = {
+      val v = row.getDouble(ord)
+      if (!seen) { seen = true; lo = v; hi = v }
+      else {
+        if (v != lo && java.lang.Double.compare(v, lo) < 0) lo = v
+        if (v != hi && java.lang.Double.compare(v, hi) > 0) hi = v
+      }
+    }
+    def min: Any = if (seen) lo else null
+    def max: Any = if (seen) hi else null
+  }
+
+  private final class StringAcc extends ColAcc {
+    private var lo: UTF8String = null
+    private var hi: UTF8String = null
+    // the row's string may point into a reused buffer: copy what is kept.
+    // binaryCompare is the UTF-8 byte order compareTo delegates to, without
+    // compareTo's per-call environment lookup
+    def add(row: InternalRow, ord: Int): Unit = {
+      val v = row.getUTF8String(ord)
+      if (lo == null) { lo = v.clone(); hi = lo }
+      else if (v.binaryCompare(lo) < 0) lo = v.clone()
+      else if (v.binaryCompare(hi) > 0) hi = v.clone()
+    }
+    def min: Any = lo
+    def max: Any = hi
+  }
+
+  /** Float, Boolean and Decimal: boxed values through a comparator. */
+  private final class BoxedAcc(dt: DataType) extends ColAcc {
+    private val cmp: (Any, Any) => Int = dt match {
+      case BooleanType => (a, b) =>
+        java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
+      case FloatType => (a, b) => {
+        val x = a.asInstanceOf[Float]; val y = b.asInstanceOf[Float]
+        if (x == y) 0 else java.lang.Float.compare(x, y)
+      }
+      case _: DecimalType => (a, b) =>
+        a.asInstanceOf[Decimal].compareTo(b.asInstanceOf[Decimal])
+      case other => throw new IllegalArgumentException(
+        s"no stats comparator for $other")
+    }
+    private var lo: Any = null
+    private var hi: Any = null
+    def add(row: InternalRow, ord: Int): Unit = {
+      val v = row.get(ord, dt)
+      if (lo == null) { lo = v; hi = v }
+      else {
+        if (cmp(v, lo) < 0) lo = v
+        if (cmp(v, hi) > 0) hi = v
+      }
+    }
+    def min: Any = lo
+    def max: Any = hi
+  }
+
+  /** A fresh per-file accumulator for a stats column of type `dt`. */
+  private def newColAcc(dt: DataType): ColAcc = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType
+        | TimestampType => new IntegralAcc(dt)
+    case DoubleType => new DoubleAcc
+    case StringType => new StringAcc
+    case other => new BoxedAcc(other)
   }
 
   /** The staged file's path relative to the staging root: everything after
@@ -155,43 +268,33 @@ private[lakehouse] object WriteStats {
       conf: SerializableConf) extends WriteTaskStatsTracker {
 
     private val n = statsColNames.length
-    private val ords = new Array[Int](n)
-    private val dts = new Array[DataType](n)
-    private val cmps = new Array[(Any, Any) => Int](n)
-    // sumIdx(i) >= 0 marks an integral stats column with its slot in the
-    // sum arrays (same order [[TableIO.collectFileStats]] emits __sum_)
-    private val sumIdx = new Array[Int](n)
-    private var nSums = 0
-    statsColNames.zipWithIndex.foreach { case (name, i) =>
-      val ord = schema.fieldIndex(name)
-      ords(i) = ord
-      dts(i) = schema(ord).dataType
-      cmps(i) = comparatorFor(dts(i))
-      sumIdx(i) = dts(i) match {
-        case ByteType | ShortType | IntegerType | LongType =>
-          val s = nSums; nSums += 1; s
-        case _ => -1
-      }
-    }
-    private val bloomHashers: Array[XxHash64] = bloomColNames.map { name =>
-      val ord = schema.fieldIndex(name)
-      // seed 42 = the xxhash64() SQL function's seed (what the read-back
-      // aggregation hashes with)
-      XxHash64(Seq(BoundReference(ord, schema(ord).dataType,
-        nullable = schema(ord).nullable)), 42L)
-    }.toArray
+    private val ords = statsColNames.map(schema.fieldIndex).toArray
+    private val dts = ords.map(schema(_).dataType)
+    // the integral stats columns' sums, in the order
+    // [[TableIO.collectFileStats]] emits __sum_
+    private val summed = dts.indices.filter(i => dts(i) match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    // every Bloom column's xxhash64 in one generated projection; seed 42 =
+    // the xxhash64() SQL function's seed (what the read-back aggregation
+    // hashes with). Built by the first newFile, so a failure poisons the
+    // tracker instead of failing the task
+    private val nBlooms = bloomColNames.length
+    private var bloomHashes: UnsafeProjection = null
+    private def newBloomHashes(): UnsafeProjection =
+      UnsafeProjection.create(bloomColNames.map { name =>
+        val ord = schema.fieldIndex(name)
+        XxHash64(Seq(BoundReference(ord, schema(ord).dataType,
+          nullable = schema(ord).nullable)), 42L)
+      })
     private val bloomWordsLen = Bloom.DefaultBits >>> 6
 
     private final class FileAcc {
       var rows = 0L
-      val mins = new Array[Any](n)
-      val maxs = new Array[Any](n)
-      val nulls = new Array[Long](n)
-      val sumLong = new Array[Long](nSums)
-      val sumBig = new Array[java.math.BigInteger](nSums)
-      val sumSeen = new Array[Boolean](nSums)
+      val cols: Array[ColAcc] = dts.map(newColAcc)
       val bloomWords: Array[Array[Long]] =
-        Array.fill(bloomHashers.length)(new Array[Long](bloomWordsLen))
+        Array.fill(nBlooms)(new Array[Long](bloomWordsLen))
       var bytes = 0L
     }
 
@@ -205,6 +308,7 @@ private[lakehouse] object WriteStats {
     override def newFile(filePath: String): Unit = {
       if (poisoned) return
       try {
+        if (bloomHashes == null && nBlooms > 0) bloomHashes = newBloomHashes()
         current = new FileAcc
         currentPath = filePath
         files.put(filePath, current)
@@ -233,50 +337,17 @@ private[lakehouse] object WriteStats {
         var i = 0
         while (i < n) {
           val ord = ords(i)
-          if (row.isNullAt(ord)) acc.nulls(i) += 1
-          else {
-            val v = row.get(ord, dts(i))
-            val cmp = cmps(i)
-            if (acc.mins(i) == null) {
-              val kept = retained(v)
-              acc.mins(i) = kept
-              acc.maxs(i) = kept
-            } else {
-              if (cmp(v, acc.mins(i)) < 0) acc.mins(i) = retained(v)
-              if (cmp(v, acc.maxs(i)) > 0) acc.maxs(i) = retained(v)
-            }
-            val s = sumIdx(i)
-            if (s >= 0) {
-              val x: Long = dts(i) match {
-                case ByteType => row.getByte(ord).toLong
-                case ShortType => row.getShort(ord).toLong
-                case IntegerType => row.getInt(ord).toLong
-                case _ => row.getLong(ord)
-              }
-              acc.sumSeen(s) = true
-              if (acc.sumBig(s) == null) {
-                val prev = acc.sumLong(s)
-                val next = prev + x
-                // overflow check (Math.addExact semantics without throw)
-                if (((prev ^ next) & (x ^ next)) < 0)
-                  acc.sumBig(s) = java.math.BigInteger.valueOf(prev)
-                    .add(java.math.BigInteger.valueOf(x))
-                else acc.sumLong(s) = next
-              } else acc.sumBig(s) =
-                acc.sumBig(s).add(java.math.BigInteger.valueOf(x))
-            }
-          }
+          val c = acc.cols(i)
+          if (row.isNullAt(ord)) c.nulls += 1 else c.add(row, ord)
           i += 1
         }
-        var b = 0
-        while (b < bloomHashers.length) {
-          val h = bloomHashers(b).eval(row).asInstanceOf[Long]
-          val ps = Bloom.positions(h, Bloom.DefaultBits)
-          var k = 0
-          while (k < ps.length) {
-            Bloom.set(acc.bloomWords(b), ps(k)); k += 1
+        if (nBlooms > 0) {
+          val hashes = bloomHashes(row)
+          var b = 0
+          while (b < nBlooms) {
+            Bloom.add(acc.bloomWords(b), hashes.getLong(b))
+            b += 1
           }
-          b += 1
         }
       } catch { case NonFatal(_) => poisoned = true }
     }
@@ -298,29 +369,16 @@ private[lakehouse] object WriteStats {
           return TaskStats(Nil, poisoned = true)
         val out = entries.map { case (relOpt, acc) =>
           val rel = relOpt.get
-          val mins = new Array[String](n)
-          val maxs = new Array[String](n)
-          var i = 0
-          while (i < n) {
-            mins(i) = renderString(acc.mins(i), dts(i))
-            maxs(i) = renderString(acc.maxs(i), dts(i))
-            i += 1
-          }
-          val sums = new Array[String](nSums)
-          var s = 0
-          while (s < nSums) {
-            sums(s) =
-              if (!acc.sumSeen(s)) null
-              else if (acc.sumBig(s) != null) acc.sumBig(s).toString
-              else acc.sumLong(s).toString
-            s += 1
-          }
+          val mins = Array.tabulate(n)(i => renderString(acc.cols(i).min, dts(i)))
+          val maxs = Array.tabulate(n)(i => renderString(acc.cols(i).max, dts(i)))
+          val nulls = acc.cols.map(_.nulls)
+          val sums = summed.map(acc.cols(_).sum).toArray
           val blooms: Array[Array[Byte]] = acc.bloomWords.map { words =>
             val bb = java.nio.ByteBuffer.allocate(words.length * 8)
             words.foreach(bb.putLong)
             bb.array()
           }
-          rel -> FileStatsRaw(acc.rows, mins, maxs, acc.nulls, blooms,
+          rel -> FileStatsRaw(acc.rows, mins, maxs, nulls, blooms,
             acc.bytes, sums)
         }
         TaskStats(out, poisoned = false)

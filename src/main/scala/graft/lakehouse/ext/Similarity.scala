@@ -108,22 +108,32 @@ object Similarity {
     * (the faiss-style train-on-sample pattern), so this is a bounded
     * ~O(rows × k × dim × iters) flop loop; doing it in MLlib instead costs
     * a distributed job per iteration for the same arithmetic. */
-  /** Run `n` independent, separately-seeded driver-side fits on a fixed
-    * thread pool and return the results BY INDEX — bit-identical to the
+  /** Run `n` independent, separately-seeded driver-side fits on `pool`
+    * and return the results BY INDEX — bit-identical to the
     * sequential `Array.tabulate` (no shared state, no fold-order effects;
-    * each slot's computation is a pure function of its own index/seed). */
-  private def parTabulate[A: scala.reflect.ClassTag](n: Int)(
-      f: Int => A): Array[A] = {
+    * each slot's computation is a pure function of its own index/seed).
+    * A failing slot surfaces as the sequential loop would surface it: the
+    * lowest failing index's own exception, not an `ExecutionException`. */
+  private def parTabulate[A: scala.reflect.ClassTag](n: Int,
+      pool: java.util.concurrent.ExecutorService)(f: Int => A): Array[A] = {
     if (n <= 1) return Array.tabulate(n)(f)
+    val futs = Array.tabulate(n)(i =>
+      pool.submit(new java.util.concurrent.Callable[A] {
+        def call(): A = f(i)
+      }))
+    try futs.map(_.get())
+    catch {
+      case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+        throw e.getCause
+    }
+  }
+
+  /** A fixed pool sized for `n` concurrent fits, shut down after `body`. */
+  private def withFitPool[T](n: Int)(
+      body: java.util.concurrent.ExecutorService => T): T = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(n, Runtime.getRuntime.availableProcessors))
-    try {
-      val futs = Array.tabulate(n)(i =>
-        pool.submit(new java.util.concurrent.Callable[A] {
-          def call(): A = f(i)
-        }))
-      futs.map(_.get())
-    } finally pool.shutdown()
+      math.max(1, math.min(n, Runtime.getRuntime.availableProcessors)))
+    try body(pool) finally pool.shutdown()
   }
 
   private[ext] def lloydKMeans(points: Array[Array[Double]], k: Int,
@@ -376,10 +386,11 @@ object Similarity {
     // driver thread pool; results land by index, bit-identical to the
     // sequential loop.
     val ks = math.min(codebookSize, sample.length)
-    val books: Array[Array[Array[Double]]] = parTabulate(m) { s =>
-      lloydKMeans(sample.map(v => v.slice(s * sub, (s + 1) * sub)),
-        ks, iters = 10, seed = 42L + s)
-    }
+    val books: Array[Array[Array[Double]]] = withFitPool(m)(pool =>
+      parTabulate(m, pool) { s =>
+        lloydKMeans(sample.map(v => v.slice(s * sub, (s + 1) * sub)),
+          ks, iters = 10, seed = 42L + s)
+      })
     val bcBooks = c.sparkSession.sparkContext.broadcast(books)
     val encodeUdf = udf((v: Seq[Double]) => {
       val b = bcBooks.value
@@ -879,35 +890,38 @@ object Similarity {
     }
     var r = DenseMatrix.eye[Double](d)
     var it = 0
-    while (it < opqIters) {
-      val xr = x * r
-      val y = DenseMatrix.zeros[Double](n, d)
-      // per-subspace fits + reconstruction fills are independent (separate
-      // seeds, disjoint column ranges of y) — thread-pooled, bit-identical
-      parTabulate(m) { s =>
-        val pts = Array.tabulate(n)(i =>
-          Array.tabulate(sub)(j => xr(i, s * sub + j)))
-        val cents = lloydKMeans(pts, math.min(codebookSize, n),
-          kmeansIters, seed + s)
-        var i = 0
-        while (i < n) {
-          var best = 0; var bd = Double.MaxValue; var ci = 0
-          while (ci < cents.length) {
-            var dd = 0.0; var j = 0
-            while (j < sub) {
-              val df = cents(ci)(j) - pts(i)(j); dd += df * df; j += 1
+    // one pool for every iteration's fits
+    withFitPool(m) { pool =>
+      while (it < opqIters) {
+        val xr = x * r
+        val y = DenseMatrix.zeros[Double](n, d)
+        // per-subspace fits + reconstruction fills are independent (separate
+        // seeds, disjoint column ranges of y) — thread-pooled, bit-identical
+        parTabulate(m, pool) { s =>
+          val pts = Array.tabulate(n)(i =>
+            Array.tabulate(sub)(j => xr(i, s * sub + j)))
+          val cents = lloydKMeans(pts, math.min(codebookSize, n),
+            kmeansIters, seed + s)
+          var i = 0
+          while (i < n) {
+            var best = 0; var bd = Double.MaxValue; var ci = 0
+            while (ci < cents.length) {
+              var dd = 0.0; var j = 0
+              while (j < sub) {
+                val df = cents(ci)(j) - pts(i)(j); dd += df * df; j += 1
+              }
+              if (dd < bd) { bd = dd; best = ci }
+              ci += 1
             }
-            if (dd < bd) { bd = dd; best = ci }
-            ci += 1
+            var j = 0
+            while (j < sub) { y(i, s * sub + j) = cents(best)(j); j += 1 }
+            i += 1
           }
-          var j = 0
-          while (j < sub) { y(i, s * sub + j) = cents(best)(j); j += 1 }
-          i += 1
         }
+        val svd.SVD(u, _, vt) = svd(x.t * y)
+        r = u * vt
+        it += 1
       }
-      val svd.SVD(u, _, vt) = svd(x.t * y)
-      r = u * vt
-      it += 1
     }
     Array.tabulate(d)(i => Array.tabulate(d)(j => r(i, j)))
   }

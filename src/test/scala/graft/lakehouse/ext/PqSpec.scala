@@ -99,4 +99,24 @@ class PqSpec extends SparkSuite {
     }
     assert(e.getMessage.contains("maxQueries"), e.getMessage)
   }
+
+  test("a failing parallel fit surfaces the sequential fit's exception") {
+    // a ragged fit sample breaks every subspace's k-means; m = 1 fits on
+    // the calling thread, m = 2 on the fit pool — same exception type
+    import spark.implicits._
+    val corpus = Seq((1L, Seq(1.0, 2.0, 3.0, 4.0))).toDF("vec_id", "embedding")
+    val ragged = Array(Array(1.0, 2.0, 3.0, 4.0), Array(1.0))
+    def pqFit(m: Int): Unit =
+      Similarity.pqTopK(corpus, corpus, "vec_id", "embedding", k = 1, m = m,
+        corpusRows = Some(1L), fitSample = Some(ragged))
+    val sequential = intercept[Throwable](pqFit(1))
+    assert(sequential.isInstanceOf[ArrayIndexOutOfBoundsException], sequential)
+    assert(intercept[Throwable](pqFit(2)).getClass == sequential.getClass)
+    // OPQ: a zero-cell codebook fails inside each subspace fit
+    def opqFit(m: Int): Unit = Similarity.trainOpqRotation(
+      Array.fill(4)(Array(1.0, 2.0, 3.0, 4.0)), m, codebookSize = 0,
+      opqIters = 2, kmeansIters = 1, seed = 7L)
+    assert(intercept[Throwable](opqFit(2)).getClass ==
+      intercept[Throwable](opqFit(1)).getClass)
+  }
 }
