@@ -106,8 +106,7 @@ object Ingest {
     val listed = listSource(spark, source)
     var attempt = 0
     while (true) {
-      val base = Versioned.latestVersion(tableDir)
-      val manifest = base.flatMap(Versioned.readManifest(tableDir, _))
+      val (base, manifest) = TableIO.adopted(spark, tableDir).unzip
       val meta = manifest.map(_.meta).getOrElse(Map.empty[String, String])
       val loaded: Set[String] =
         if (force) Set.empty

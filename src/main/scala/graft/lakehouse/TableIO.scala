@@ -2047,7 +2047,7 @@ object TableIO {
     * would silently append nulls where the table contract says default. */
   def setColumnDefault(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, sqlExpr: String): Unit =
-    commitMeta(lh, tableName, "SET DEFAULT") { m =>
+    commitMeta(spark, lh, tableName, "SET DEFAULT") { m =>
       val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
       require(schema.fieldNames.contains(colName),
         s"default column '$colName' must exist in the schema " +
@@ -2076,7 +2076,7 @@ object TableIO {
     * to null-filling. Metadata-only. */
   def dropColumnDefault(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String): Unit =
-    commitMeta(lh, tableName, "DROP DEFAULT")(
+    commitMeta(spark, lh, tableName, "DROP DEFAULT")(
       _.meta - (DefaultPrefix + colName))
 
   /** Declare `colName` GENERATED ALWAYS AS (`sqlExpr`) — Delta generated
@@ -2089,7 +2089,7 @@ object TableIO {
     * metadata-only commit records expression + constraint atomically. */
   def setGeneratedColumn(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, sqlExpr: String): Unit =
-    commitMeta(lh, tableName, "SET GENERATED") { m =>
+    commitMeta(spark, lh, tableName, "SET GENERATED") { m =>
       val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
       require(schema.fieldNames.contains(colName),
         s"generated column '$colName' must exist in the schema " +
@@ -2118,7 +2118,7 @@ object TableIO {
   /** Remove a generated-column declaration and its paired constraint. */
   def dropGeneratedColumn(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String): Unit =
-    commitMeta(lh, tableName, "DROP GENERATED")(
+    commitMeta(spark, lh, tableName, "DROP GENERATED")(
       _.meta - (GeneratedPrefix + colName) - (CheckPrefix + s"__gen_$colName"))
 
   /** Manifest meta keys for identity columns: declaration + the
@@ -2176,7 +2176,7 @@ object TableIO {
     * null). */
   def setIdentityColumn(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, startWith: Long = 1): Unit =
-    commitMeta(lh, tableName, "SET IDENTITY") { m =>
+    commitMeta(spark, lh, tableName, "SET IDENTITY") { m =>
       require(!m.meta.contains(IdentityPrefix + colName),
         s"$tableName.$colName is already an identity column")
       require(!m.meta.contains(GeneratedPrefix + colName),
@@ -2220,10 +2220,7 @@ object TableIO {
   def enableRowTracking(spark: SparkSession, lh: LakehouseProps,
       tableName: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (base, m) = existing(spark, lh, tableName)
     require(!m.meta.contains(Versioned.RowTrackingKey),
       s"$tableName already has row tracking enabled")
     var wm = 0L
@@ -2237,7 +2234,7 @@ object TableIO {
       e2
     }
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = backfilled,
-      expectedBase = base,
+      expectedBase = Some(base),
       meta = Versioned.withFeature(
         m.meta + (Versioned.RowTrackingKey -> "1") +
           (Versioned.RowIdMaxKey -> wm.toString), "rowTracking"),
@@ -2295,7 +2292,7 @@ object TableIO {
       tableName: String, name: String, sqlExpr: String): Unit = {
     require(name.nonEmpty && !name.contains("=") && !name.contains("\n"),
       "constraint names must be single-line and '='-free")
-    commitMeta(lh, tableName, "ADD CONSTRAINT") { m =>
+    commitMeta(spark, lh, tableName, "ADD CONSTRAINT") { m =>
       require(!m.meta.contains(CheckPrefix + name),
         s"$tableName already has a CHECK constraint named '$name' — drop it " +
           "first (silent replacement would change enforcement unnoticed)")
@@ -2311,7 +2308,7 @@ object TableIO {
     * a no-op commit). */
   def dropCheckConstraint(spark: SparkSession, lh: LakehouseProps,
       tableName: String, name: String): Unit =
-    commitMeta(lh, tableName, "DROP CONSTRAINT")(_.meta - (CheckPrefix + name))
+    commitMeta(spark, lh, tableName, "DROP CONSTRAINT")(_.meta - (CheckPrefix + name))
 
   // ---- UNIQUE constraints -------------------------------------------------
 
@@ -2401,7 +2398,7 @@ object TableIO {
       "constraint names must be single-line and '='-free")
     require(cols.nonEmpty && cols.forall(c => !c.contains(",")),
       "UNIQUE needs at least one comma-free column name")
-    commitMeta(lh, tableName, "ADD CONSTRAINT") { m =>
+    commitMeta(spark, lh, tableName, "ADD CONSTRAINT") { m =>
       require(!m.meta.contains(UniquePrefix + name),
         s"$tableName already has a UNIQUE constraint named '$name' — drop " +
           "it first (silent replacement would change enforcement unnoticed)")
@@ -2422,7 +2419,7 @@ object TableIO {
   /** ALTER TABLE DROP CONSTRAINT for UNIQUE (metadata-only commit). */
   def dropUniqueConstraint(spark: SparkSession, lh: LakehouseProps,
       tableName: String, name: String): Unit =
-    commitMeta(lh, tableName, "DROP CONSTRAINT")(_.meta - (UniquePrefix + name))
+    commitMeta(spark, lh, tableName, "DROP CONSTRAINT")(_.meta - (UniquePrefix + name))
 
   // ---- FOREIGN KEY constraints (informational + on-demand validation) -----
 
@@ -2458,7 +2455,7 @@ object TableIO {
     require((childCols ++ parentCols :+ parentTable)
       .forall(v => !v.contains(",") && !v.contains(";")),
       "FK identifiers must be ','/';'-free")
-    commitMeta(lh, childTable, "ADD CONSTRAINT") { m =>
+    commitMeta(spark, lh, childTable, "ADD CONSTRAINT") { m =>
       require(!m.meta.contains(FkPrefix + name),
         s"$childTable already has a FOREIGN KEY named '$name'")
       if (validate) {
@@ -2476,7 +2473,7 @@ object TableIO {
   /** ALTER TABLE DROP CONSTRAINT for FOREIGN KEY (metadata-only). */
   def dropForeignKey(spark: SparkSession, lh: LakehouseProps,
       childTable: String, name: String): Unit =
-    commitMeta(lh, childTable, "DROP CONSTRAINT")(_.meta - (FkPrefix + name))
+    commitMeta(spark, lh, childTable, "DROP CONSTRAINT")(_.meta - (FkPrefix + name))
 
   /** On-demand referential audit: DISTINCT child keys with no parent —
     * SQL FK semantics (a child row with a NULL in any key column
@@ -2642,8 +2639,8 @@ object TableIO {
     while (true) {
       (pinBase match {
         case Some(0L) => None
-        case Some(v) => Some(v)
-        case None => Versioned.latestVersion(tableDir)
+        case Some(v) => Some(v -> Versioned.manifestOf(tableDir, v))
+        case None => adopted(spark, tableDir)
       }) match {
         case None =>
           // table creation pinned to base 0: two concurrent first appends
@@ -2662,58 +2659,47 @@ object TableIO {
               attempt += 1
               if (pinBase.isDefined || attempt > maxRetries) throw e
           }
-        case Some(base) =>
-          Versioned.readManifest(tableDir, base) match {
-            case Some(m) =>
-              // generated columns (Delta generated-column semantics):
-              // absent in the batch -> computed here; present -> the
-              // paired CHECK constraint validates it below. Identity
-              // columns assign above the recorded watermark, which
-              // advances IN this commit (a lost race retries the whole
-              // block against the fresh manifest, re-reading both).
-              val dfg = withGeneratedColumns(
-                withDefaultColumns(df, m.meta), m.meta)
-              val (dfi, idMeta, pin) =
-                withIdentityAssigned(dfg, m.meta, s"$tableName: append")
-              try {
-                enforceChecks(dfi, checkConstraintsOf(m.meta), s"$tableName: append")
-                val uniques = uniqueConstraintsOf(m.meta)
-                enforceUniqueWithin(dfi, uniques, s"$tableName: append")
-                enforceUniqueAgainst(spark, tableDir, m, dfi, uniques,
-                  s"$tableName: append")
-                val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-                val oldEmpty = spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[Row], oldSchema)
-                // evolved schema = old ∪ new (by name); old columns keep
-                // their positions, brand-new ones append as nullable
-                val evolved = oldEmpty
-                  .unionByName(dfi.limit(0), allowMissingColumns = true).schema
-                val aligned = oldEmpty.unionByName(dfi, allowMissingColumns = true)
-                val parts = currentPartitioning(lh, tableName)
-                try {
-                  val evolvedM = alignMapping(evolved, oldSchema, m.meta, base)
-                  val commit = Versioned.commitFiles(tableDir, evolvedM.json,
-                    inherit = m.entries, expectedBase = Some(base),
-                    meta = m.meta ++ extraMeta ++ idMeta, op = "APPEND",
-                    stage = t => writeStagedWithStats(
-                      toPhysical(aligned, evolvedM), t, parts, bloomColsOf(m)))
-                  return finishCommit(spark, lh, tableName, tableDir, commit,
-                    evolvedM.fieldNames.toSeq, parts)
-                } catch {
-                  case e: Versioned.ConcurrentWriteException =>
-                    attempt += 1
-                    if (pinBase.isDefined || attempt > maxRetries) throw e
-                }
-              } finally pin.foreach(_.unpersist())
-            case None =>
-              // legacy snapshot version: append = full rewrite once; the
-              // table is manifest-based from then on
-              val current = selectTable(spark, lh, tableName)
-              return writeTable(spark, lh, tableName,
-                current.unionByName(df, allowMissingColumns = true),
-                partitionBy = currentPartitioning(lh, tableName),
-                extraMeta = extraMeta)
-          }
+        case Some((base, m)) =>
+          // generated columns (Delta generated-column semantics): absent
+          // in the batch -> computed here; present -> the paired CHECK
+          // constraint validates it below. Identity columns assign above
+          // the recorded watermark, which advances IN this commit (a lost
+          // race retries the whole block against the fresh manifest,
+          // re-reading both).
+          val dfg = withGeneratedColumns(
+            withDefaultColumns(df, m.meta), m.meta)
+          val (dfi, idMeta, pin) =
+            withIdentityAssigned(dfg, m.meta, s"$tableName: append")
+          try {
+            enforceChecks(dfi, checkConstraintsOf(m.meta), s"$tableName: append")
+            val uniques = uniqueConstraintsOf(m.meta)
+            enforceUniqueWithin(dfi, uniques, s"$tableName: append")
+            enforceUniqueAgainst(spark, tableDir, m, dfi, uniques,
+              s"$tableName: append")
+            val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+            val oldEmpty = spark.createDataFrame(
+              spark.sparkContext.emptyRDD[Row], oldSchema)
+            // evolved schema = old ∪ new (by name); old columns keep their
+            // positions, brand-new ones append as nullable
+            val evolved = oldEmpty
+              .unionByName(dfi.limit(0), allowMissingColumns = true).schema
+            val aligned = oldEmpty.unionByName(dfi, allowMissingColumns = true)
+            val parts = partitionSpecOf(m.meta, m.files)
+            try {
+              val evolvedM = alignMapping(evolved, oldSchema, m.meta, base)
+              val commit = Versioned.commitFiles(tableDir, evolvedM.json,
+                inherit = m.entries, expectedBase = Some(base),
+                meta = m.meta ++ extraMeta ++ idMeta, op = "APPEND",
+                stage = t => writeStagedWithStats(
+                  toPhysical(aligned, evolvedM), t, parts, bloomColsOf(m)))
+              return finishCommit(spark, lh, tableName, tableDir, commit,
+                evolvedM.fieldNames.toSeq, parts)
+            } catch {
+              case e: Versioned.ConcurrentWriteException =>
+                attempt += 1
+                if (pinBase.isDefined || attempt > maxRetries) throw e
+            }
+          } finally pin.foreach(_.unpersist())
       }
     }
     throw new IllegalStateException("unreachable")
@@ -2735,12 +2721,6 @@ object TableIO {
     info
   }
 
-  /** The Hive partitioning of `tableName`'s current version. Manifest
-    * versions derive it from their file paths (`col=value` segments);
-    * legacy/pre-protocol layouts fall back to a directory walk. The on-disk
-    * layout is the source of truth — a session registry keyed by bare table
-    * name would be blind in a fresh JVM and collide across lakehouses.
-    * Maintenance rewrites (compact, merge, append) must preserve this. */
   /** col1=v/col2=v/part-*.parquet -> Seq(col1, col2). A shallow clone's
     * absolute entries carry a foreign pool prefix before the partition
     * segments — skipped, not matched. */
@@ -2754,6 +2734,11 @@ object TableIO {
     * (layout then derives from the files, as before). */
   private val PartitionByKey = "graft.partitionBy"
 
+  /** The Hive partitioning of a manifest: its recorded spec, else derived
+    * from its file paths (`col=value` segments). The manifest is the
+    * source of truth — a session registry keyed by bare table name would
+    * be blind in a fresh JVM and collide across lakehouses. Rewrites
+    * (compact, merge, append) preserve it. */
   private[lakehouse] def partitionSpecOf(meta: Map[String, String],
       files: Seq[String]): Seq[String] =
     meta.get(PartitionByKey) match {
@@ -2762,37 +2747,9 @@ object TableIO {
       case None => partitioningOfFiles(files)
     }
 
-  private def currentPartitioning(lh: LakehouseProps, tableName: String): Seq[String] = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    Versioned.latestVersion(tableDir)
-      .flatMap(v => Versioned.readManifest(tableDir, v))
-      .foreach(m => return partitionSpecOf(m.meta, m.files))
-    Versioned.readSpec(tableDir) match {
-      case Versioned.ScanFiles(_, _, files, _) => partitioningOfFiles(files)
-      case Versioned.ScanDir(dataDir) =>
-        val out = Seq.newBuilder[String]
-        var dir = Paths.get(dataDir)
-        var descend = true
-        while (descend && Files.isDirectory(dir)) {
-          val s = Files.list(dir)
-          val level =
-            try s.iterator().asScala.toSeq
-              .filter(p => Files.isDirectory(p) &&
-                p.getFileName.toString.matches("[^=]+=.*"))
-            finally s.close()
-          level.headOption match {
-            case Some(d) =>
-              out += d.getFileName.toString.split("=", 2)(0)
-              dir = d
-            case None => descend = false
-          }
-        }
-        out.result()
-    }
-  }
-
   /** Absolute paths of the data files backing `tableName`'s current
-    * version (manifest file list, or a recursive walk for legacy layouts). */
+    * version (manifest file list, or a recursive walk of a pre-protocol
+    * directory). */
   def currentFiles(lh: LakehouseProps, tableName: String): Seq[Path] =
     Versioned.readSpec(Catalog.tablePath(lh, tableName)) match {
       case Versioned.ScanFiles(base, _, files, _) =>
@@ -2842,11 +2799,9 @@ object TableIO {
     // O(updates) validation jobs below: mergeInto preserves target ids on
     // update and engine-assigns them on insert.
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val baseManifest = base.flatMap(Versioned.readManifest(tableDir, _))
+    val (b, m) = existing(spark, lh, tableName)
     locally {
-      val idDecl = baseManifest.map(m => identityColsOf(m.meta))
-        .getOrElse(Seq.empty)
+      val idDecl = identityColsOf(m.meta)
       require(idDecl.isEmpty,
         s"$tableName has GENERATED ALWAYS AS IDENTITY column(s) " +
           s"${idDecl.mkString(", ")} — whole-row mergeTable would take ids " +
@@ -2891,8 +2846,8 @@ object TableIO {
         None
       }
     }
-    try (base, baseManifest) match {
-      case (Some(_), Some(m)) if !cdfEnabled(m.meta) =>
+    try {
+      if (!cdfEnabled(m.meta))
         // without a change feed to stage, MERGE is exactly the generalized
         // replace primitive with removal keys = update keys
         // removal keys from the validated key frame when available: the
@@ -2901,7 +2856,7 @@ object TableIO {
         replaceKeyedRows(spark, lh, tableName,
           groupedShared.map(_.select(keyColumns: _*)).getOrElse(updates),
           updates, keyCols, extraMeta = extraMeta, op = "MERGE")
-      case (Some(b), Some(m)) =>
+      else {
         enforceChecks(updates, checkConstraintsOf(m.meta), s"$tableName: merge")
         val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
         // the validation aggregation above already materialized the
@@ -2932,7 +2887,7 @@ object TableIO {
             else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
           val kept = affectedDf.join(updKeys, keyCols, "left_anti")
           val rewritten = kept.unionByName(updates, allowMissingColumns = true)
-          val parts = currentPartitioning(lh, tableName)
+          val parts = partitionSpecOf(m.meta, m.files)
           // change data feed: matched rows emit pre+post images, new keys
           // emit inserts; staged atomically with the commit (beforeMarker).
           // Post/insert rows come from the STAGED (committed) files, never
@@ -2940,29 +2895,26 @@ object TableIO {
           // whose key is in updKeys are exactly the update rows as written
           // (kept rows were anti-joined out)
           val writeCdf = cdfSidecar(tableDir) { staged =>
-            if (!cdfEnabled(m.meta)) None
-            else {
-              import org.apache.spark.sql.expressions.Window
-              import org.apache.spark.sql.functions.{coalesce, lit, max, when}
-              // pre-images: the affected files read again, filtered to the
-              // updated keys — nothing cached, O(updated rows) kept
-              val pre = affectedDf.join(updKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-              val newRows = scanSpec(spark, Versioned.ScanFiles(tableDir,
-                alignMapping(rewritten.schema, oldSchema, m.meta, b).json,
-                staged.map(_.path)))
-                .join(updKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit(null).cast(StringType))
-              // a staged update row is a post-image iff its key has a
-              // pre-image, else an insert: one window over the key on the
-              // union classifies it, so the pre-images are read once
-              val hasPre = max(col("_change_type").isNotNull)
-                .over(Window.partitionBy(keyColumns: _*))
-              Some(pre.unionByName(newRows, allowMissingColumns = true)
-                .withColumn("_change_type", coalesce(col("_change_type"),
-                  when(hasPre, lit("update_postimage"))
-                    .otherwise(lit("insert")))))
-            }
+            import org.apache.spark.sql.expressions.Window
+            import org.apache.spark.sql.functions.{coalesce, lit, max, when}
+            // pre-images: the affected files read again, filtered to the
+            // updated keys — nothing cached, O(updated rows) kept
+            val pre = affectedDf.join(updKeys, keyCols, "left_semi")
+              .withColumn("_change_type", lit("update_preimage"))
+            val newRows = scanSpec(spark, Versioned.ScanFiles(tableDir,
+              alignMapping(rewritten.schema, oldSchema, m.meta, b).json,
+              staged.map(_.path)))
+              .join(updKeys, keyCols, "left_semi")
+              .withColumn("_change_type", lit(null).cast(StringType))
+            // a staged update row is a post-image iff its key has a
+            // pre-image, else an insert: one window over the key on the
+            // union classifies it, so the pre-images are read once
+            val hasPre = max(col("_change_type").isNotNull)
+              .over(Window.partitionBy(keyColumns: _*))
+            Some(pre.unionByName(newRows, allowMissingColumns = true)
+              .withColumn("_change_type", coalesce(col("_change_type"),
+                when(hasPre, lit("update_postimage"))
+                  .otherwise(lit("insert")))))
           }
           val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
           val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
@@ -2976,16 +2928,7 @@ object TableIO {
           finishCommit(spark, lh, tableName, tableDir, commit,
             rewritten.columns.toSeq, parts)
         } finally updKeys.unpersist()
-      case _ =>
-        // legacy snapshot version: one full rewrite converts the table to
-        // manifest-based commits
-        val current = selectTable(spark, lh, tableName)
-        val kept = current.join(updates.select(keyColumns: _*).distinct(),
-          keyCols, "left_anti")
-        writeTable(spark, lh, tableName,
-          kept.unionByName(updates, allowMissingColumns = true),
-          partitionBy = currentPartitioning(lh, tableName),
-          extraMeta = extraMeta)
+      }
     } finally groupedShared.foreach(_.unpersist())
   }
 
@@ -3069,12 +3012,7 @@ object TableIO {
         s"mergeInto: source has multiple rows for key ${dups.headOption.getOrElse("")}")
     }
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs manifest-based versions for conditional merge " +
-          "(legacy snapshot layouts: writeTable once to convert)"))
-    val b = base.get
+    val (b, m) = existing(spark, lh, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(allSets.forall(_.keySet.subsetOf(schema.fieldNames.toSet)),
       "UPDATE SET names a column the target does not have")
@@ -3310,7 +3248,7 @@ object TableIO {
           Some(ins.foldLeft(pre.unionByName(post).unionByName(del))(
             _ unionByName _))
         }
-      val parts = currentPartitioning(lh, tableName)
+      val parts = partitionSpecOf(m.meta, m.files)
       val commit = Versioned.commitFiles(tableDir, m.schemaJson,
         inherit = untouched, expectedBase = Some(b),
         meta = m.meta ++ insIdMeta,
@@ -3362,114 +3300,108 @@ object TableIO {
     require(keyCols.nonEmpty, "replaceKeyedRows needs at least one key column")
     val keyColumns = keyCols.map(org.apache.spark.sql.functions.col)
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    (base, base.flatMap(Versioned.readManifest(tableDir, _))) match {
-      case (Some(b), Some(m)) =>
-        // same hazard as mergeTable: replacement rows carry caller-chosen
-        // values for EVERY column — on an identity table that forges ids
-        require(identityColsOf(m.meta).isEmpty,
-          s"$tableName has GENERATED ALWAYS AS IDENTITY column(s) — keyed " +
-            "replacement would take ids from the caller; use mergeInto")
-        enforceChecks(newRows, checkConstraintsOf(m.meta), s"$tableName: replace")
-        val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        val remKeys = removalKeys.select(keyColumns: _*).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          import org.apache.spark.sql.functions.col
-          val remA = remKeys.alias("__rk")
-          def nullSafeOnRemoval(left: DataFrame): Column =
-            keyCols.map(c => left(c) <=> col(s"__rk.$c")).reduce(_ && _)
-          val affectedPaths =
-            if (m.entries.isEmpty) Set.empty[String]
-            else {
-              val keyScan = scanFiles(spark,
-                Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
-                .select(keyColumns :+ col(FpCol).as("__fp"): _*)
-              keyScan.join(remA, nullSafeOnRemoval(keyScan), "left_semi")
-                .select("__fp").distinct()
-                .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-            }
-          val baseP = Paths.get(tableDir)
-          val (affected, untouched) = m.entries.partition(e =>
-            affectedPaths.contains(baseP.resolve(e.path).toString))
-          val affectedDf =
-            if (affected.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
-            else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-          val kept = affectedDf.join(remA,
-            nullSafeOnRemoval(affectedDf), "left_anti")
-          val rewritten = kept.unionByName(newRows, allowMissingColumns = true)
-          val parts = currentPartitioning(lh, tableName)
-          val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
-          // CDF chaining: a keyed replace stages row-level change events
-          // like MERGE does, so replicas maintained by applyChanges are
-          // themselves change-feed SOURCES (multi-hop medallion
-          // pipelines). Staged rows whose key is in the removal set are
-          // exactly the replacement rows as written (kept rows were
-          // anti-joined out), so post-images never re-evaluate the
-          // caller's plan. Requires replacement keys ⊆ removal keys — the
-          // contract applyChanges and the MV refresh both satisfy; checked
-          // below only when the feed is on. Null-keyed replacements emit
-          // delete + insert rather than an update pair (null never equals
-          // null in the pairing join); consumers folding by key net the
-          // same state.
-          val writeCdf = cdfSidecar(tableDir) { staged =>
-            if (!cdfEnabled(m.meta)) None
-            else {
-              val escaped = newRows.select(keyColumns: _*).distinct()
-                .join(remA, keyCols.map(c =>
-                  newRows(c) <=> col(s"__rk.$c")).reduce(_ && _), "left_anti")
-                .limit(1).collect()
-              require(escaped.isEmpty,
-                s"$tableName: CDF-enabled keyed replace requires every " +
-                  "replacement key to appear in the removal set (otherwise " +
-                  "new rows are indistinguishable from kept rows in the " +
-                  s"staged files); offending key: ${escaped.headOption}")
-              import org.apache.spark.sql.expressions.Window
-              import org.apache.spark.sql.functions.{lit, max, when}
-              // removed rows: the affected files read again, filtered to
-              // the removal keys — nothing cached, O(removed rows) kept
-              val removed = affectedDf.join(remA,
-                  nullSafeOnRemoval(affectedDf), "left_semi")
-                .withColumn("_change_type", lit("delete"))
-              val stagedNew = scanSpec(spark, Versioned.ScanFiles(tableDir,
-                rewrittenM.json, staged.map(_.path)))
-                .join(remKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("insert"))
-              // both sides paired in ONE window over the key on their
-              // union: a removed row whose key was staged again is an
-              // update pre-image, else a delete; a staged row whose key
-              // was removed an update post-image, else an insert. Null
-              // keys never pair (null never equals null)
-              val paired = keyColumns.map(_.isNotNull).reduce(_ && _)
-              def keyHas(t: String): Column = paired &&
-                max(col("_change_type") === t)
-                  .over(Window.partitionBy(keyColumns: _*))
-              val events = removed.unionByName(stagedNew,
-                  allowMissingColumns = true)
-                .withColumn("_change_type",
-                  when(col("_change_type") === "delete",
-                    when(keyHas("insert"), lit("update_preimage"))
-                      .otherwise(lit("delete")))
-                    .otherwise(when(keyHas("delete"),
-                      lit("update_postimage")).otherwise(lit("insert"))))
-              // key columns lead (the sidecar's column order)
-              Some(events.select((keyCols ++
-                events.columns.filterNot(keyCols.contains)).map(col): _*))
-            }
-          }
-          val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
-            inherit = untouched, expectedBase = Some(b),
-            meta = m.meta ++ extraMeta, beforeMarker = writeCdf, op = op,
-            stage = t => writeStagedWithStats(
-              toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
-          finishCommit(spark, lh, tableName, tableDir, commit,
-            rewritten.columns.toSeq, parts)
-        } finally remKeys.unpersist()
-      case _ => throw new IllegalStateException(
-        s"$tableName: replaceKeyedRows requires a manifest-based table " +
-          "(write it with writeTable first)")
-    }
+    val (b, m) = existing(spark, lh, tableName)
+    // same hazard as mergeTable: replacement rows carry caller-chosen
+    // values for EVERY column — on an identity table that forges ids
+    require(identityColsOf(m.meta).isEmpty,
+      s"$tableName has GENERATED ALWAYS AS IDENTITY column(s) — keyed " +
+        "replacement would take ids from the caller; use mergeInto")
+    enforceChecks(newRows, checkConstraintsOf(m.meta), s"$tableName: replace")
+    val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val remKeys = removalKeys.select(keyColumns: _*).distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      import org.apache.spark.sql.functions.col
+      val remA = remKeys.alias("__rk")
+      def nullSafeOnRemoval(left: DataFrame): Column =
+        keyCols.map(c => left(c) <=> col(s"__rk.$c")).reduce(_ && _)
+      val affectedPaths =
+        if (m.entries.isEmpty) Set.empty[String]
+        else {
+          val keyScan = scanFiles(spark,
+            Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
+            .select(keyColumns :+ col(FpCol).as("__fp"): _*)
+          keyScan.join(remA, nullSafeOnRemoval(keyScan), "left_semi")
+            .select("__fp").distinct()
+            .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+        }
+      val baseP = Paths.get(tableDir)
+      val (affected, untouched) = m.entries.partition(e =>
+        affectedPaths.contains(baseP.resolve(e.path).toString))
+      val affectedDf =
+        if (affected.isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
+        else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
+      val kept = affectedDf.join(remA,
+        nullSafeOnRemoval(affectedDf), "left_anti")
+      val rewritten = kept.unionByName(newRows, allowMissingColumns = true)
+      val parts = partitionSpecOf(m.meta, m.files)
+      val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
+      // CDF chaining: a keyed replace stages row-level change events
+      // like MERGE does, so replicas maintained by applyChanges are
+      // themselves change-feed SOURCES (multi-hop medallion
+      // pipelines). Staged rows whose key is in the removal set are
+      // exactly the replacement rows as written (kept rows were
+      // anti-joined out), so post-images never re-evaluate the
+      // caller's plan. Requires replacement keys ⊆ removal keys — the
+      // contract applyChanges and the MV refresh both satisfy; checked
+      // below only when the feed is on. Null-keyed replacements emit
+      // delete + insert rather than an update pair (null never equals
+      // null in the pairing join); consumers folding by key net the
+      // same state.
+      val writeCdf = cdfSidecar(tableDir) { staged =>
+        if (!cdfEnabled(m.meta)) None
+        else {
+          val escaped = newRows.select(keyColumns: _*).distinct()
+            .join(remA, keyCols.map(c =>
+              newRows(c) <=> col(s"__rk.$c")).reduce(_ && _), "left_anti")
+            .limit(1).collect()
+          require(escaped.isEmpty,
+            s"$tableName: CDF-enabled keyed replace requires every " +
+              "replacement key to appear in the removal set (otherwise " +
+              "new rows are indistinguishable from kept rows in the " +
+              s"staged files); offending key: ${escaped.headOption}")
+          import org.apache.spark.sql.expressions.Window
+          import org.apache.spark.sql.functions.{lit, max, when}
+          // removed rows: the affected files read again, filtered to
+          // the removal keys — nothing cached, O(removed rows) kept
+          val removed = affectedDf.join(remA,
+              nullSafeOnRemoval(affectedDf), "left_semi")
+            .withColumn("_change_type", lit("delete"))
+          val stagedNew = scanSpec(spark, Versioned.ScanFiles(tableDir,
+            rewrittenM.json, staged.map(_.path)))
+            .join(remKeys, keyCols, "left_semi")
+            .withColumn("_change_type", lit("insert"))
+          // both sides paired in ONE window over the key on their
+          // union: a removed row whose key was staged again is an
+          // update pre-image, else a delete; a staged row whose key
+          // was removed an update post-image, else an insert. Null
+          // keys never pair (null never equals null)
+          val paired = keyColumns.map(_.isNotNull).reduce(_ && _)
+          def keyHas(t: String): Column = paired &&
+            max(col("_change_type") === t)
+              .over(Window.partitionBy(keyColumns: _*))
+          val events = removed.unionByName(stagedNew,
+              allowMissingColumns = true)
+            .withColumn("_change_type",
+              when(col("_change_type") === "delete",
+                when(keyHas("insert"), lit("update_preimage"))
+                  .otherwise(lit("delete")))
+                .otherwise(when(keyHas("delete"),
+                  lit("update_postimage")).otherwise(lit("insert"))))
+          // key columns lead (the sidecar's column order)
+          Some(events.select((keyCols ++
+            events.columns.filterNot(keyCols.contains)).map(col): _*))
+        }
+      }
+      val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
+        inherit = untouched, expectedBase = Some(b),
+        meta = m.meta ++ extraMeta, beforeMarker = writeCdf, op = op,
+        stage = t => writeStagedWithStats(
+          toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
+      finishCommit(spark, lh, tableName, tableDir, commit,
+        rewritten.columns.toSeq, parts)
+    } finally remKeys.unpersist()
   }
 
   /** Export the table's current snapshot as line-delimited JSON under the
@@ -3504,14 +3436,9 @@ object TableIO {
   def selectTableVersion(spark: SparkSession, lh: LakehouseProps,
       tableName: String, version: Long): DataFrame = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val spec = Versioned.specFor(tableDir, version)
-    val present = spec match {
-      case _: Versioned.ScanFiles => true
-      case Versioned.ScanDir(p) => Files.isDirectory(Paths.get(p))
-    }
     // the marker check rejects orphaned/in-flight claims (a crashed
     // writer's partial files are NOT a committed snapshot)
-    require(Versioned.isCommitted(tableDir, version) && present,
+    require(Versioned.isCommitted(tableDir, version),
       s"version $version of $tableName was never committed or has been " +
         s"swept (retention: newest ${Versioned.Retain} versions + " +
         s"${Versioned.RetainAgeMs} ms age window)")
@@ -3521,7 +3448,7 @@ object TableIO {
     require(Versioned.txnVisible(tableDir, version),
       s"version $version of $tableName belongs to an uncommitted or " +
         "aborted transaction and was never visible")
-    scanSpec(spark, spec)
+    scanSpec(spark, Versioned.specFor(tableDir, version))
   }
 
   /** Incremental consumption (the batch form of a Delta streaming source):
@@ -3547,37 +3474,31 @@ object TableIO {
       throw new IllegalArgumentException(s"$tableName has no committed version"))
     require(Versioned.isCommitted(tableDir, sinceVersion),
       s"version $sinceVersion of $tableName was never committed or has been swept")
-    val curM = Versioned.readManifest(tableDir, cur)
-    val sinceM = Versioned.readManifest(tableDir, sinceVersion)
-    (curM, sinceM) match {
-      case (Some(c), Some(s)) =>
-        val sincePaths = s.files.toSet
-        val removed = sincePaths -- c.files.toSet
-        // a deletion-vector delete removes NO files — detect it by a
-        // changed DV ref on a carried-over file, or additivity silently
-        // misses the deleted rows
-        val dvChanged = {
-          val sinceDv = s.entries.map(e =>
-            e.path -> Versioned.dvRefOf(e)).toMap
-          c.entries.exists(e => sincePaths.contains(e.path) &&
-            sinceDv.get(e.path).exists(_ != Versioned.dvRefOf(e)))
-        }
-        if ((removed.nonEmpty || dvChanged) && !ignoreRewrites)
-          throw new IllegalStateException(
-            s"$tableName: files were rewritten/removed or gained deletion " +
-              s"vectors between versions $sinceVersion and $cur (merge/" +
-              "delete/compaction) — changes-by-file is not purely " +
-              "additive; pass ignoreRewrites = true to read added files " +
-              "(re-delivers surviving rows of rewritten files)")
-        val added = c.entries.filterNot(e => sincePaths.contains(e.path))
-        // added files were created by the commits in (since, cur] and can
-        // still have gained a vector from a LATER DV delete in the range —
-        // scanOf keeps their read honest
-        scanSpec(spark, Versioned.scanOf(tableDir, c, added))
-      case _ => throw new IllegalStateException(
-        s"$tableName: file-level change reads need manifest-based versions " +
-          "on both ends (legacy snapshot layouts have no file history)")
+    val c = Versioned.manifestOf(tableDir, cur)
+    val s = Versioned.manifestOf(tableDir, sinceVersion)
+    val sincePaths = s.files.toSet
+    val removed = sincePaths -- c.files.toSet
+    // a deletion-vector delete removes NO files — detect it by a
+    // changed DV ref on a carried-over file, or additivity silently
+    // misses the deleted rows
+    val dvChanged = {
+      val sinceDv = s.entries.map(e =>
+        e.path -> Versioned.dvRefOf(e)).toMap
+      c.entries.exists(e => sincePaths.contains(e.path) &&
+        sinceDv.get(e.path).exists(_ != Versioned.dvRefOf(e)))
     }
+    if ((removed.nonEmpty || dvChanged) && !ignoreRewrites)
+      throw new IllegalStateException(
+        s"$tableName: files were rewritten/removed or gained deletion " +
+          s"vectors between versions $sinceVersion and $cur (merge/" +
+          "delete/compaction) — changes-by-file is not purely " +
+          "additive; pass ignoreRewrites = true to read added files " +
+          "(re-delivers surviving rows of rewritten files)")
+    val added = c.entries.filterNot(e => sincePaths.contains(e.path))
+    // added files were created by the commits in (since, cur] and can
+    // still have gained a vector from a LATER DV delete in the range —
+    // scanOf keeps their read honest
+    scanSpec(spark, Versioned.scanOf(tableDir, c, added))
   }
 
   /** TIMESTAMP AS OF time travel: scan the newest version committed at or
@@ -3608,11 +3529,9 @@ object TableIO {
   def restoreTable(spark: SparkSession, lh: LakehouseProps, tableName: String,
       version: Long): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val target = Versioned.readManifest(tableDir, version)
-    require(Versioned.isCommitted(tableDir, version) && target.nonEmpty,
-      s"version $version of $tableName was never committed, has been " +
-        "swept, or is a legacy snapshot (not restorable by reference)")
-    val m = target.get
+    require(Versioned.isCommitted(tableDir, version),
+      s"version $version of $tableName was never committed or has been swept")
+    val m = Versioned.manifestOf(tableDir, version)
     require(Versioned.txnVisible(tableDir, version),
       s"version $version of $tableName belongs to an uncommitted or " +
         "aborted transaction — its data was never visible and cannot be " +
@@ -3628,8 +3547,8 @@ object TableIO {
     // then and now). Reverting a watermark would hand out ids that rows
     // committed after the target version already used, and those rows
     // may live on in clones, exports, or downstream joins.
-    val curMeta = base.flatMap(Versioned.readManifest(tableDir, _))
-      .map(_.meta).getOrElse(Map.empty[String, String])
+    val curMeta = base.map(Versioned.manifestOf(tableDir, _).meta)
+      .getOrElse(Map.empty[String, String])
     val restoredMeta = m.meta ++ curMeta.collect {
       case (k, v) if k.startsWith(IdentityMaxPrefix) =>
         val thenWm = m.meta.get(k)
@@ -3642,7 +3561,7 @@ object TableIO {
       op = "RESTORE")
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
+      schema.fieldNames.toSeq, partitionSpecOf(restoredMeta, m.files))
   }
 
   /** Serializable DML retry — the client-side loop every Delta writer
@@ -3711,10 +3630,7 @@ object TableIO {
     val srcDir = Catalog.tablePath(lh, sourceName)
     val srcVersion = Versioned.latestVersion(srcDir).getOrElse(
       throw new IllegalArgumentException(s"$sourceName has no versions"))
-    val m = Versioned.readManifest(srcDir, srcVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"$sourceName@v$srcVersion is a legacy snapshot layout — shallow " +
-          "clone references manifest entries"))
+    val m = Versioned.manifestOf(srcDir, srcVersion)
     val srcBase = Paths.get(srcDir)
     if (deep) return deepClone(spark, lh, sourceName, cloneName, srcVersion,
       m, srcBase)
@@ -3844,10 +3760,7 @@ object TableIO {
   def evolvePartitioning(spark: SparkSession, lh: LakehouseProps,
       tableName: String, partitionBy: Seq[String]): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName has no manifest versions (legacy layouts need a rewrite)"))
+    val (base, m) = existing(spark, lh, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(partitionBy.forall(schema.fieldNames.contains),
       s"partition columns must exist: ${partitionBy.mkString(", ")}")
@@ -3856,7 +3769,7 @@ object TableIO {
     require(partitionBy.forall(c => !c.contains(",") && !c.contains("\n")),
       "partition column names must not contain ',' or newlines")
     val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-      inherit = m.entries, expectedBase = base,
+      inherit = m.entries, expectedBase = Some(base),
       meta = Versioned.withFeature(
         m.meta + (PartitionByKey -> partitionBy.mkString(",")),
         "partitionEvolution"),
@@ -3912,10 +3825,7 @@ object TableIO {
   def widenColumnType(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, to: DataType): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs manifest-based versions for metadata-only DDL"))
+    val (base, m) = existing(spark, lh, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(colName),
       s"$tableName has no column $colName")
@@ -3939,20 +3849,17 @@ object TableIO {
     val entries = m.entries.map(e =>
       e.copy(stats = e.stats.map(removeStatField(_, bloomKey))))
     val commit = Versioned.commitFiles(tableDir, newSchema.json,
-      inherit = entries, expectedBase = base,
+      inherit = entries, expectedBase = Some(base),
       meta = Versioned.withFeature(m.meta, "typeWidening"),
       op = "WIDEN")
     finishCommit(spark, lh, tableName, tableDir, commit,
-      newSchema.fieldNames.toSeq, currentPartitioning(lh, tableName))
+      newSchema.fieldNames.toSeq, partitionSpecOf(m.meta, m.files))
   }
 
   def renameColumn(spark: SparkSession, lh: LakehouseProps, tableName: String,
       oldName: String, newName: String): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName has no manifest versions (legacy layouts need a rewrite)"))
+    val (base, m) = existing(spark, lh, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(oldName),
       s"$tableName has no column $oldName")
@@ -3985,7 +3892,7 @@ object TableIO {
         (IdentityMaxPrefix + newName ->
           m.meta.getOrElse(IdentityMaxPrefix + oldName, "0"))
     val commit = Versioned.commitFiles(tableDir, renamed.json,
-      inherit = m.entries, expectedBase = base,
+      inherit = m.entries, expectedBase = Some(base),
       meta = Versioned.withFeature(reKeyed, "columnMapping"),
       op = "RENAME COLUMN")
     finishCommit(spark, lh, tableName, tableDir, commit,
@@ -4000,10 +3907,7 @@ object TableIO {
   def dropColumn(spark: SparkSession, lh: LakehouseProps, tableName: String,
       colName: String): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName has no manifest versions (legacy layouts need a rewrite)"))
+    val (base, m) = existing(spark, lh, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(colName),
       s"$tableName has no column $colName")
@@ -4028,7 +3932,7 @@ object TableIO {
       if (f.metadata.contains(PhysicalKey)) f.metadata.getString(PhysicalKey)
       else f.name).get
     val commit = Versioned.commitFiles(tableDir, narrowed.json,
-      inherit = m.entries, expectedBase = base,
+      inherit = m.entries, expectedBase = Some(base),
       meta = Versioned.withFeature(
         m.meta + (TombstonePrefix + dropped -> "1"), "columnMapping"),
       op = "DROP COLUMN")
@@ -4063,9 +3967,7 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     val v = Versioned.latestVersion(tableDir).getOrElse(
       throw new IllegalArgumentException(s"$tableName has no versions"))
-    val m = Versioned.readManifest(tableDir, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName@v$v is a legacy snapshot layout"))
+    val m = Versioned.manifestOf(tableDir, v)
     val baseP = Paths.get(tableDir)
     // manifest-recorded sizes when present (no stat() storm at 1M files);
     // stat() only for entries from before sizes were collected
@@ -4101,9 +4003,7 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     val v = Versioned.latestVersion(tableDir).getOrElse(
       throw new IllegalArgumentException(s"$tableName has no versions"))
-    val m = Versioned.readManifest(tableDir, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName@v$v is a legacy snapshot layout"))
+    val m = Versioned.manifestOf(tableDir, v)
     val baseP = Paths.get(tableDir)
     m.entries.map { e =>
       val phys = entryRows(e)
@@ -4143,8 +4043,8 @@ object TableIO {
       case Some(v) =>
         Versioned.readManifest(tableDir, v) match {
           case None =>
-            findings += (("legacy_layout", tableDir,
-              s"version $v has no manifest (pre-protocol snapshot)"))
+            findings += (("missing_manifest", tableDir,
+              s"committed version $v has no manifest"))
           case Some(m) =>
             m.entries.foreach { e =>
               val p = baseP.resolve(e.path)
@@ -4228,20 +4128,22 @@ object TableIO {
 
   /** Enable the change data feed (Delta `enableChangeDataFeed`): from this
     * version on, merge and delete commits record their row-level changes
-    * in a `_cdf_<version>` sidecar staged atomically with the commit, and
+    * in a `_cdf_<version>_<commitId>` sidecar staged atomically with the
+    * commit, and
     * [[readChangeFeed]] can reconstruct every row-level event. */
   def enableChangeFeed(spark: SparkSession, lh: LakehouseProps,
       tableName: String): Unit =
-    setTableFlag(lh, tableName, CdfKey, Some("true"),
+    setTableFlag(spark, lh, tableName, CdfKey, Some("true"),
       feature = Some("changeDataFeed"))
 
   def disableChangeFeed(spark: SparkSession, lh: LakehouseProps,
-      tableName: String): Unit = setTableFlag(lh, tableName, CdfKey, None)
+      tableName: String): Unit = setTableFlag(spark, lh, tableName, CdfKey, None)
 
-  private def setTableFlag(lh: LakehouseProps, tableName: String,
+  private def setTableFlag(spark: SparkSession, lh: LakehouseProps,
+      tableName: String,
       key: String, value: Option[String],
       feature: Option[String] = None): Unit =
-    commitMeta(lh, tableName, "SET PROPERTY") { m =>
+    commitMeta(spark, lh, tableName, "SET PROPERTY") { m =>
       val newMeta = value.fold(m.meta - key)(v => m.meta + (key -> v))
       feature.fold(newMeta)(Versioned.withFeature(newMeta, _))
     }
@@ -4250,50 +4152,40 @@ object TableIO {
     * inherited and nothing is staged. `edit` maps the current manifest to
     * the new meta; it runs before the commit, so its checks can refuse the
     * change. */
-  private def commitMeta(lh: LakehouseProps, tableName: String, op: String)(
+  private def commitMeta(spark: SparkSession, lh: LakehouseProps,
+      tableName: String, op: String)(
       edit: Versioned.Manifest => Map[String, String]): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry metadata"))
+    val (base, m) = existing(spark, lh, tableName)
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = edit(m), op = op)
+      expectedBase = Some(base), meta = edit(m), op = op)
     ()
   }
 
   private[lakehouse] def cdfEnabled(meta: Map[String, String]): Boolean =
     meta.get(CdfKey).contains("true")
 
-  /** Writer-side change-feed sidecar path: COMMIT-OWNED (suffixed with
-    * the commit's id from [[Versioned.CommitIdKey]]) so a reclaimed
-    * writer's still-running sidecar job can never clobber the winning
-    * commit's feed — the loser's directory is simply an orphan that ages
-    * out. */
-  private def cdfDir(tableDir: String, v: Long, commitId: String): Path =
-    Paths.get(tableDir).resolve(s"_cdf_${v}_$commitId")
-
-  /** The `beforeMarker` hook writing a commit's change-feed sidecar:
-    * `changes` builds the change frame from the staged entries (None = no
-    * sidecar for this commit). */
+  /** The `beforeMarker` hook writing a commit's change-feed sidecar into
+    * its commit-owned [[Versioned.sidecarDir]] (a reclaimed writer's
+    * still-running sidecar job can never clobber the winning commit's
+    * feed): `changes` builds the change frame from the staged entries
+    * (None = no sidecar for this commit). */
   private def cdfSidecar(tableDir: String)(
       changes: Seq[Versioned.FileEntry] => Option[DataFrame])
       : (Long, Seq[Versioned.FileEntry], String) => Unit =
     (v, staged, cid) => changes(staged).foreach(
-      _.write.mode(SaveMode.Overwrite).parquet(cdfDir(tableDir, v, cid).toString))
+      _.write.mode(SaveMode.Overwrite).parquet(
+        Versioned.sidecarDir(Paths.get(tableDir), v, cid).toString))
 
-  /** Reader-side resolution: a manifest that names a commit id resolves
-    * ONLY to its own suffixed sidecar — a legacy `_cdf_<v>` present beside
-    * it could only have been written by some OTHER (evicted/old-binary)
-    * writer, and silently serving it would re-open the clobber the
-    * suffix exists to prevent. Pre-commitId manifests use the legacy
-    * path. Missing directories surface as the caller's loud error. */
+  /** Reader-side resolution: a manifest resolves ONLY to the sidecar of
+    * its own commit id — a sidecar of any other id at the same version was
+    * written by an evicted writer. Missing directories surface as the
+    * caller's loud error. */
   private def cdfDirOf(tableDir: String, v: Long,
       meta: Map[String, String]): Path =
-    meta.get(Versioned.CommitIdKey) match {
-      case Some(id) => Paths.get(tableDir).resolve(s"_cdf_${v}_$id")
-      case None => Paths.get(tableDir).resolve(s"_cdf_$v")
-    }
+    Versioned.sidecarDir(Paths.get(tableDir), v,
+      meta.getOrElse(Versioned.CommitIdKey, throw new IllegalStateException(
+        s"$tableDir: manifest $v has no commit id — the table is corrupt")))
 
   /** Row-level changes since `sinceVersion` (Delta `table_changes`): for
     * each later commit — appends yield their added files' rows as
@@ -4418,8 +4310,7 @@ object TableIO {
       predicate: Option[String] = None,
       hilbert: Boolean = false): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val baseM = base.flatMap(Versioned.readManifest(tableDir, _))
+    val (b, m) = existing(spark, lh, tableName)
     // predicate = Delta's `OPTIMIZE ... WHERE`: only files that MAY hold
     // matching rows (partition values / stat ranges, same mining as
     // readTable's skipping) are rewritten; the rest inherit BY REFERENCE —
@@ -4427,94 +4318,73 @@ object TableIO {
     // being written, and a whole-table rewrite per OPTIMIZE is not operable.
     // An unscoped (or unminable, or matches-every-file) compaction is the
     // SAME flow with affected = every current file.
-    (base, baseM) match {
-      case (Some(b), Some(m)) =>
-        val mined = (for {
-          p <- predicate
-          aff <- minedSurvivors(spark, m, p) if aff.size < m.entries.size
-        } yield aff).getOrElse(m.entries)
-        val parts = currentPartitioning(lh, tableName)
-        val baseP = Paths.get(tableDir)
-        def sizeOf(e: Versioned.FileEntry): Long = entryBytes(e).getOrElse(
-          scala.util.Try(Files.size(baseP.resolve(e.path))).getOrElse(0L))
-        // Within the mined scope, rewrite only files that NEED it: smaller
-        // than target (the small-file problem OPTIMIZE exists for) or
-        // carrying a deletion vector (the rewrite purges it). Right-sized
-        // DV-free files inherit by reference — Delta OPTIMIZE's bin-packing
-        // selection; rewriting an already-compact 1 GB file on a 100 TB
-        // table is pure churn. ZORDER BY is a re-clustering pass instead:
-        // every mined file rewrites regardless of size.
-        val affected =
-          if (zorderBy.nonEmpty) mined
-          else mined.filter(e =>
-            Versioned.dvRefOf(e).isDefined || sizeOf(e) < targetFileBytes)
-        val bytes = affected.map(sizeOf).sum
-        val nFiles =
-          math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val df = scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-        // Row tracking: the rewrite MATERIALIZES each surviving row's id
-        // as the physical __row_id column (Delta's materialized row ids) —
-        // reads of rewritten files take the physical value over the
-        // base+index computation, so compaction never changes a row's
-        // identity. DV'd rows are already subtracted from the scan; their
-        // ids retire with them.
-        val rowTracked = m.meta.contains(Versioned.RowTrackingKey)
-        val dfW =
-          if (!rowTracked) df
-          else withRowIds(spark, tableDir, m, affected)
-            .withColumnRenamed(RowIdColName, PhysRowIdCol)
-        // zorderBy = OPTIMIZE ZORDER BY: the rewrite this compaction
-        // already pays doubles as the re-clustering pass
-        val arranged =
-          if (zorderBy.nonEmpty)
-            Zorder.cluster(dfW, zorderBy, Some(nFiles), hilbert)
-          else if (parts.isEmpty) dfW.coalesce(nFiles)
-          else dfW.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
-        val blooms = bloomColsOf(m)
-        // compaction is invisible to the change feed: same rows, new files —
-        // an EMPTY sidecar tells readChangeFeed "rewrite, zero logical
-        // changes"
-        val emptyCdf: Option[DataFrame] =
-          if (!cdfEnabled(m.meta)) None
-          else Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            df.schema.add("_change_type", StringType)))
-        // a ZORDER compaction records its cluster spec so later
-        // maintenance ticks (maintainTable / clusterIncremental) know the
-        // table's clustering without being retold — liquid's CLUSTER BY
-        def metaOut(mm: Map[String, String]): Map[String, String] =
-          if (zorderBy.isEmpty) mm
-          else mm + (ClusterByKey -> zorderBy.mkString(",")) +
-            (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder"))
-        val commit = commitMaintenance(tableDir, b, m, affected,
-          metaOf = metaOut,
-          beforeMarker = cdfSidecar(tableDir)(_ => emptyCdf),
-          op = "OPTIMIZE",
-          stage = t =>
-            if (affected.isEmpty) Map.empty
-            else writeStagedWithStats(toPhysical(arranged,
-                DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
-              t, parts, blooms, parquetBloomCols = blooms))
-        finishCommit(spark, lh, tableName, tableDir, commit,
-          df.columns.toSeq, parts)
-      case _ => // legacy snapshot table: one full rewrite converts it to
-        // manifest-based commits (no manifest, so no stats/blooms/CDF yet)
-        val bytes = currentFiles(lh, tableName)
-          .filter(Files.isRegularFile(_)).map(Files.size).sum
-        val nFiles =
-          math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val df = selectTable(spark, lh, tableName)
-        val parts = currentPartitioning(lh, tableName)
-        val arranged =
-          if (zorderBy.nonEmpty)
-            Zorder.cluster(df, zorderBy, Some(nFiles), hilbert)
-          else if (parts.isEmpty) df.coalesce(nFiles)
-          else df.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
-        val commit = Versioned.commitFiles(tableDir, df.schema.json,
-          expectedBase = base, op = "OPTIMIZE",
-          stage = writeStagedWithStats(arranged, _, parts))
-        finishCommit(spark, lh, tableName, tableDir, commit,
-          df.columns.toSeq, parts)
-    }
+    val mined = (for {
+      p <- predicate
+      aff <- minedSurvivors(spark, m, p) if aff.size < m.entries.size
+    } yield aff).getOrElse(m.entries)
+    val parts = partitionSpecOf(m.meta, m.files)
+    val baseP = Paths.get(tableDir)
+    def sizeOf(e: Versioned.FileEntry): Long = entryBytes(e).getOrElse(
+      scala.util.Try(Files.size(baseP.resolve(e.path))).getOrElse(0L))
+    // Within the mined scope, rewrite only files that NEED it: smaller
+    // than target (the small-file problem OPTIMIZE exists for) or
+    // carrying a deletion vector (the rewrite purges it). Right-sized
+    // DV-free files inherit by reference — Delta OPTIMIZE's bin-packing
+    // selection; rewriting an already-compact 1 GB file on a 100 TB
+    // table is pure churn. ZORDER BY is a re-clustering pass instead:
+    // every mined file rewrites regardless of size.
+    val affected =
+      if (zorderBy.nonEmpty) mined
+      else mined.filter(e =>
+        Versioned.dvRefOf(e).isDefined || sizeOf(e) < targetFileBytes)
+    val bytes = affected.map(sizeOf).sum
+    val nFiles =
+      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    val df = scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
+    // Row tracking: the rewrite MATERIALIZES each surviving row's id
+    // as the physical __row_id column (Delta's materialized row ids) —
+    // reads of rewritten files take the physical value over the
+    // base+index computation, so compaction never changes a row's
+    // identity. DV'd rows are already subtracted from the scan; their
+    // ids retire with them.
+    val rowTracked = m.meta.contains(Versioned.RowTrackingKey)
+    val dfW =
+      if (!rowTracked) df
+      else withRowIds(spark, tableDir, m, affected)
+        .withColumnRenamed(RowIdColName, PhysRowIdCol)
+    // zorderBy = OPTIMIZE ZORDER BY: the rewrite this compaction
+    // already pays doubles as the re-clustering pass
+    val arranged =
+      if (zorderBy.nonEmpty)
+        Zorder.cluster(dfW, zorderBy, Some(nFiles), hilbert)
+      else if (parts.isEmpty) dfW.coalesce(nFiles)
+      else dfW.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
+    val blooms = bloomColsOf(m)
+    // compaction is invisible to the change feed: same rows, new files —
+    // an EMPTY sidecar tells readChangeFeed "rewrite, zero logical
+    // changes"
+    val emptyCdf: Option[DataFrame] =
+      if (!cdfEnabled(m.meta)) None
+      else Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        df.schema.add("_change_type", StringType)))
+    // a ZORDER compaction records its cluster spec so later
+    // maintenance ticks (maintainTable / clusterIncremental) know the
+    // table's clustering without being retold — liquid's CLUSTER BY
+    def metaOut(mm: Map[String, String]): Map[String, String] =
+      if (zorderBy.isEmpty) mm
+      else mm + (ClusterByKey -> zorderBy.mkString(",")) +
+        (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder"))
+    val commit = commitMaintenance(tableDir, b, m, affected,
+      metaOf = metaOut,
+      beforeMarker = cdfSidecar(tableDir)(_ => emptyCdf),
+      op = "OPTIMIZE",
+      stage = t =>
+        if (affected.isEmpty) Map.empty
+        else writeStagedWithStats(toPhysical(arranged,
+            DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
+          t, parts, blooms, parquetBloomCols = blooms))
+    finishCommit(spark, lh, tableName, tableDir, commit,
+      df.columns.toSeq, parts)
   }
 
   /** Manifest meta keys remembering the table's declared clustering —
@@ -4667,11 +4537,7 @@ object TableIO {
       hilbert: Boolean = false): TableInfo = {
     require(zorderBy.nonEmpty, "clusterIncremental needs cluster columns")
     val tableDir = Catalog.tablePath(lh, tableName)
-    val b = Versioned.latestVersion(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"$tableName has no versions"))
-    val m = Versioned.readManifest(tableDir, b).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName: incremental clustering needs manifest-based commits"))
+    val (b, m) = existing(spark, lh, tableName)
     // baseline = the file set of the newest OPTIMIZE commit: everything in
     // it was clustered (or deliberately left) by that run
     val baseline: Set[String] = Versioned.committedVersions(tableDir)
@@ -4681,7 +4547,7 @@ object TableIO {
       .flatMap(v => Versioned.readManifest(tableDir, v))
       .map(_.files.toSet).getOrElse(Set.empty)
     val affected = m.entries.filterNot(e => baseline(e.path))
-    val parts = currentPartitioning(lh, tableName)
+    val parts = partitionSpecOf(m.meta, m.files)
     val baseP = Paths.get(tableDir)
     val bytes = affected.map(e => entryBytes(e).getOrElse(
       scala.util.Try(Files.size(baseP.resolve(e.path))).getOrElse(0L))).sum
@@ -4735,113 +4601,105 @@ object TableIO {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
     val cond = coalesce(expr(condition), lit(false))
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    (base, base.flatMap(Versioned.readManifest(tableDir, _))) match {
-      case (Some(b), Some(m)) if deletionVectors =>
-        import org.apache.spark.sql.functions.{collect_list, sort_array}
-        // matched LOGICAL rows (already-vectored rows can't re-match, so
-        // CDF preimages and counts stay exact on repeated DV deletes)
-        val matched = scanFiles(spark,
-          Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
-          .filter(cond)
-        val withCdf = cdfEnabled(m.meta)
-        if (withCdf) matched.persist()
-        // per-file sorted new-deletion positions; driver memory is
-        // O(matched rows) longs — the shape DV mode exists for is sparse,
-        // and a dense delete should use rewrite mode anyway
-        val perFile = matched
-          .groupBy(col(FpCol).as("__fp"))
-          .agg(sort_array(collect_list(col(RiCol))).as("__ris"))
-          .collect()
-        val baseP = Paths.get(tableDir)
-        val newDeletes: Map[String, Array[Long]] = perFile.map { r =>
-          new java.net.URI(r.getString(0)).getPath ->
-            r.getSeq[Long](1).toArray
-        }.toMap
-        val entries2 = m.entries.map { e =>
-          newDeletes.get(baseP.resolve(e.path).toString) match {
-            case None => e
-            case Some(add) =>
-              val existing = Versioned.dvRefOf(e) match {
-                case Some((p, _)) => DeletionVectors.read(
-                  if (Paths.get(p).isAbsolute) Paths.get(p)
-                  else baseP.resolve(p))
-                case None => Array.empty[Long]
-              }
-              val all = DeletionVectors.merged(existing, add)
-              val sidecar = DeletionVectors.write(tableDir, all)
-              e.copy(stats = Some(
-                withDvStat(e.stats, sidecar, all.length.toLong)))
-          }
+    val (b, m) = existing(spark, lh, tableName)
+    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val parts = partitionSpecOf(m.meta, m.files)
+    if (deletionVectors) {
+      import org.apache.spark.sql.functions.{collect_list, sort_array}
+      // matched LOGICAL rows (already-vectored rows can't re-match, so
+      // CDF preimages and counts stay exact on repeated DV deletes)
+      val matched = scanFiles(spark,
+        Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
+        .filter(cond)
+      val withCdf = cdfEnabled(m.meta)
+      if (withCdf) matched.persist()
+      // per-file sorted new-deletion positions; driver memory is
+      // O(matched rows) longs — the shape DV mode exists for is sparse,
+      // and a dense delete should use rewrite mode anyway
+      val perFile = matched
+        .groupBy(col(FpCol).as("__fp"))
+        .agg(sort_array(collect_list(col(RiCol))).as("__ris"))
+        .collect()
+      val baseP = Paths.get(tableDir)
+      val newDeletes: Map[String, Array[Long]] = perFile.map { r =>
+        new java.net.URI(r.getString(0)).getPath ->
+          r.getSeq[Long](1).toArray
+      }.toMap
+      val entries2 = m.entries.map { e =>
+        newDeletes.get(baseP.resolve(e.path).toString) match {
+          case None => e
+          case Some(add) =>
+            val prior = Versioned.dvRefOf(e) match {
+              case Some((p, _)) => DeletionVectors.read(
+                if (Paths.get(p).isAbsolute) Paths.get(p)
+                else baseP.resolve(p))
+              case None => Array.empty[Long]
+            }
+            val all = DeletionVectors.merged(prior, add)
+            val sidecar = DeletionVectors.write(tableDir, all)
+            e.copy(stats = Some(
+              withDvStat(e.stats, sidecar, all.length.toLong)))
         }
-        val changes: Option[DataFrame] =
-          if (!withCdf || perFile.isEmpty) None
-          else Some(matched.drop(FpCol, RiCol)
-            .withColumn("_change_type", lit("delete")))
-        try {
-          val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-            inherit = entries2, expectedBase = Some(b),
-            meta = Versioned.withFeature(m.meta, "deletionVectors"),
-            beforeMarker = cdfSidecar(tableDir)(_ => changes), op = "DELETE")
-          val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-          finishCommit(spark, lh, tableName, tableDir, commit,
-            schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
-        } finally if (withCdf) matched.unpersist()
-      case (Some(b), Some(m)) =>
-        val affectedPaths =
-          if (m.entries.isEmpty) Set.empty[String]
-          else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
-            keepMeta = true)
-            .filter(cond)
-            .select(col(FpCol).as("__fp")).distinct()
-            .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-        val baseP = Paths.get(tableDir)
-        val (affected, untouched) = m.entries.partition(e =>
-          affectedPaths.contains(baseP.resolve(e.path).toString))
-        val parts = currentPartitioning(lh, tableName)
-        // scanOf, NOT a raw file list: an affected file may carry a
-        // deletion vector from an earlier DV delete, and scanning it raw
-        // would re-emit delete events for (and below, RESURRECT) rows that
-        // are already logically gone. The survivor rewrite and the delete
-        // events each read the affected files themselves, filtered — the
-        // events are O(deleted rows), so nothing is cached for them.
-        val affectedScan: Option[DataFrame] =
-          if (affected.isEmpty) None
-          else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
-        val changes: Option[DataFrame] =
-          if (!cdfEnabled(m.meta)) None
-          else affectedScan.map(_.filter(cond)
-            .withColumn("_change_type",
-              org.apache.spark.sql.functions.lit("delete")))
+      }
+      val changes: Option[DataFrame] =
+        if (!withCdf || perFile.isEmpty) None
+        else Some(matched.drop(FpCol, RiCol)
+          .withColumn("_change_type", lit("delete")))
+      try {
         val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-          inherit = untouched, expectedBase = Some(b),
-          meta = m.meta,
-          beforeMarker = cdfSidecar(tableDir)(_ => changes),
-          op = "DELETE",
-          stage = t =>
-            if (affected.isEmpty) Map.empty
-            else {
-              // row-tracked tables: survivors carry their materialized
-              // ids through the rewrite — DELETE never changes a row's
-              // identity
-              val survivors =
-                (if (!m.meta.contains(Versioned.RowTrackingKey))
-                  affectedScan.get
-                else withRowIds(spark, tableDir, m, affected)
-                  .withColumnRenamed(RowIdColName, PhysRowIdCol))
-                .filter(not(cond))
-              writeStagedWithStats(toPhysical(survivors,
-                  DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
-                t, parts, bloomColsOf(m))
-            })
-        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+          inherit = entries2, expectedBase = Some(b),
+          meta = Versioned.withFeature(m.meta, "deletionVectors"),
+          beforeMarker = cdfSidecar(tableDir)(_ => changes), op = "DELETE")
         finishCommit(spark, lh, tableName, tableDir, commit,
           schema.fieldNames.toSeq, parts)
-      case _ =>
-        // legacy layout: one full filtered rewrite adopts the protocol
-        val current = selectTable(spark, lh, tableName)
-        writeTable(spark, lh, tableName, current.filter(not(cond)),
-          partitionBy = currentPartitioning(lh, tableName))
+      } finally if (withCdf) matched.unpersist()
+    } else {
+      val affectedPaths =
+        if (m.entries.isEmpty) Set.empty[String]
+        else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
+          keepMeta = true)
+          .filter(cond)
+          .select(col(FpCol).as("__fp")).distinct()
+          .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+      val baseP = Paths.get(tableDir)
+      val (affected, untouched) = m.entries.partition(e =>
+        affectedPaths.contains(baseP.resolve(e.path).toString))
+      // scanOf, NOT a raw file list: an affected file may carry a
+      // deletion vector from an earlier DV delete, and scanning it raw
+      // would re-emit delete events for (and below, RESURRECT) rows that
+      // are already logically gone. The survivor rewrite and the delete
+      // events each read the affected files themselves, filtered — the
+      // events are O(deleted rows), so nothing is cached for them.
+      val affectedScan: Option[DataFrame] =
+        if (affected.isEmpty) None
+        else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
+      val changes: Option[DataFrame] =
+        if (!cdfEnabled(m.meta)) None
+        else affectedScan.map(_.filter(cond)
+          .withColumn("_change_type",
+            org.apache.spark.sql.functions.lit("delete")))
+      val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+        inherit = untouched, expectedBase = Some(b),
+        meta = m.meta,
+        beforeMarker = cdfSidecar(tableDir)(_ => changes),
+        op = "DELETE",
+        stage = t =>
+          if (affected.isEmpty) Map.empty
+          else {
+            // row-tracked tables: survivors carry their materialized
+            // ids through the rewrite — DELETE never changes a row's
+            // identity
+            val survivors =
+              (if (!m.meta.contains(Versioned.RowTrackingKey))
+                affectedScan.get
+              else withRowIds(spark, tableDir, m, affected)
+                .withColumnRenamed(RowIdColName, PhysRowIdCol))
+              .filter(not(cond))
+            writeStagedWithStats(toPhysical(survivors, schema),
+              t, parts, bloomColsOf(m))
+          })
+      finishCommit(spark, lh, tableName, tableDir, commit,
+        schema.fieldNames.toSeq, parts)
     }
   }
 
@@ -4857,10 +4715,7 @@ object TableIO {
       tableName: String, bloomFilterFor: Seq[String] = Seq.empty): TableInfo = {
     import org.apache.spark.sql.functions.col
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs manifest-based versions (convert or rewrite first)"))
+    val (base, m) = existing(spark, lh, tableName)
     // collectFileStats over the table dir would also sweep files of OTHER
     // retained versions — aggregate over exactly the manifest's file list
     // instead, keyed by provenance. Metadata cols ride the raw physical
@@ -4900,11 +4755,11 @@ object TableIO {
     // paths; newcomers (whose stats the concurrent writer collected at its
     // own commit) inherit as-is. Any concurrent touch to a re-statted file
     // is a real conflict — our stale stats must not overwrite its state.
-    val commit = commitMaintenance(tableDir, base.getOrElse(0L), m,
+    val commit = commitMaintenance(tableDir, base, m,
       affected = m.entries, metaOf = identity, op = "ANALYZE",
       replaced = entries)
     finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
+      schema.fieldNames.toSeq, partitionSpecOf(m.meta, m.files))
   }
 
   /** Per-file stats JSON over an arbitrary keepMeta scan, keyed by the
@@ -4971,26 +4826,26 @@ object TableIO {
     * (the previous conversion path was a full `writeTable`/compaction).
     * From the commit on, appends/merges/deletes are file-level and the
     * files gain data-skipping stats. Already-versioned tables are
-    * rejected loudly. */
+    * rejected loudly. Every write to an existing table adopts through
+    * [[adopted]] on its own; this is the explicit form. */
   def convertToVersioned(spark: SparkSession, lh: LakehouseProps,
       tableName: String): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    require(Versioned.latestVersion(tableDir).isEmpty,
-      s"$tableName already has committed versions — nothing to convert")
-    val dirP = Paths.get(tableDir)
-    require(Files.isDirectory(dirP), s"$tableName: no such directory")
-    val files: Seq[String] = {
-      val s = Files.walk(dirP)
-      try s.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet") &&
-          // protocol/scratch names can't be adopted as data
-          !dirP.relativize(p).toString.split('/').exists(seg =>
-            seg.startsWith("_") || seg.startsWith(".")))
-        .map(p => dirP.relativize(p).toString).toSeq.sorted
-      finally s.close()
-    }
-    require(files.nonEmpty, s"$tableName: no parquet files to convert")
+    val (commit, columns) = convertDir(spark, tableDir)
+    finishCommit(spark, lh, tableName, tableDir, commit, columns,
+      partitioningOfFiles(commit.files))
+  }
+
+  /** The CONVERT commit of [[convertToVersioned]], by path; returns the
+    * commit and the adopted table's columns. */
+  private def convertDir(spark: SparkSession,
+      tableDir: String): (Versioned.Commit, Seq[String]) = {
+    require(Versioned.isPreProtocol(tableDir),
+      s"$tableDir already has committed versions — nothing to convert")
+    require(Files.isDirectory(Paths.get(tableDir)),
+      s"$tableDir: no such directory")
+    val files = preProtocolFiles(tableDir)
+    require(files.nonEmpty, s"$tableDir: no parquet files to convert")
     val df = spark.read.parquet(tableDir)
     // one stats pass over the directory in place — collectFileStats keys
     // by path relative to the dir it reads, which IS the manifest domain
@@ -4998,12 +4853,53 @@ object TableIO {
     // like a staged write)
     val stats = collectFileStats(spark)(tableDir)
     val entries = files.map(f => Versioned.FileEntry(f, stats.get(f)))
-    val commit = Versioned.commitFiles(tableDir, df.schema.json,
-      inherit = entries, expectedBase = Some(0L),
-      op = "CONVERT")
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      df.columns.toSeq, partitioningOfFiles(files))
+    (Versioned.commitFiles(tableDir, df.schema.json,
+      inherit = entries, expectedBase = Some(0L), op = "CONVERT"),
+      df.columns.toSeq)
   }
+
+  /** The parquet data files under a pre-protocol directory, relative to it
+    * (hive `col=value` layouts included) — protocol and scratch names are
+    * never data. */
+  private def preProtocolFiles(tableDir: String): Seq[String] = {
+    val dirP = Paths.get(tableDir)
+    if (!Files.isDirectory(dirP)) return Seq.empty
+    val s = Files.walk(dirP)
+    try s.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.endsWith(".parquet") &&
+        !dirP.relativize(p).toString.split('/').exists(seg =>
+          seg.startsWith("_") || seg.startsWith(".")))
+      .map(p => dirP.relativize(p).toString).toSeq.sorted
+    finally s.close()
+  }
+
+  /** The entry step of every write to an existing table: its current
+    * version and manifest, None when there is no table yet. A pre-protocol
+    * directory (parquet files, no protocol files) is first adopted in
+    * place by [[convertToVersioned]], so a write only ever runs over a
+    * manifest. [[writeTable]] skips this step: an overwrite replaces the
+    * contents, so a stats scan of the files it drops would be wasted. */
+  private[lakehouse] def adopted(spark: SparkSession,
+      tableDir: String): Option[(Long, Versioned.Manifest)] =
+    Versioned.latestVersion(tableDir) match {
+      case Some(v) => Some(v -> Versioned.manifestOf(tableDir, v))
+      case None if Versioned.isPreProtocol(tableDir) &&
+          preProtocolFiles(tableDir).nonEmpty =>
+        // losing the CONVERT race to a concurrent writer is fine: it
+        // adopted the same files
+        try convertDir(spark, tableDir)
+        catch { case _: Versioned.ConcurrentWriteException => () }
+        adopted(spark, tableDir)
+      case None => None
+    }
+
+  /** [[adopted]] for the writes that need the table to exist. */
+  private def existing(spark: SparkSession, lh: LakehouseProps,
+      tableName: String): (Long, Versioned.Manifest) =
+    adopted(spark, Catalog.tablePath(lh, tableName)).getOrElse(
+      throw new IllegalArgumentException(
+        s"$tableName has no committed version"))
 
   /** Apply another table's change feed to a replica (CDC apply — the
     * consumer side of [[readChangeFeed]]): per key, the LATEST event wins
@@ -5122,98 +5018,83 @@ object TableIO {
     require(set.nonEmpty, "updateTable needs at least one SET column")
     val cond = coalesce(expr(condition), lit(false))
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    (base, base.flatMap(Versioned.readManifest(tableDir, _))) match {
-      case (Some(b), Some(m)) =>
-        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        require(set.keySet.subsetOf(schema.fieldNames.toSet),
-          s"UPDATE SET names missing columns: " +
-            s"${set.keySet -- schema.fieldNames}")
-        // GENERATED ALWAYS AS IDENTITY: ids are engine-assigned, never
-        // user-writable — a SET here would silently break uniqueness.
-        // (Generated columns need no guard: their paired CHECK rejects an
-        // inconsistent post-image at enforceChecks below.)
-        identityColsOf(m.meta).filter(set.contains).foreach(c =>
-          throw new IllegalArgumentException(
-            s"$tableName.$c is GENERATED ALWAYS AS IDENTITY — UPDATE SET " +
-              "cannot modify it"))
-        val affectedPaths =
-          if (m.entries.isEmpty) Set.empty[String]
-          else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
-            keepMeta = true)
-            .filter(cond)
-            .select(col(FpCol).as("__fp")).distinct()
-            .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-        val baseP = Paths.get(tableDir)
-        val (affected, untouched) = m.entries.partition(e =>
-          affectedPaths.contains(baseP.resolve(e.path).toString))
-        val parts = currentPartitioning(lh, tableName)
-        def applied(df: DataFrame): DataFrame = {
-          // row-tracked rewrites carry the materialized id through the SET
-          // projection — UPDATE changes a row's content, not its identity
-          val keep =
-            if (df.columns.contains(PhysRowIdCol)) Seq(col(PhysRowIdCol))
-            else Seq.empty
-          df.select(schema.fields.map { f =>
-            set.get(f.name) match {
-              case Some(e) =>
-                when(cond, expr(e).cast(f.dataType))
-                  .otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }.toSeq ++ keep: _*)
-        }
-        val affectedScan: Option[DataFrame] =
-          if (affected.isEmpty) None
-          else if (m.meta.contains(Versioned.RowTrackingKey))
-            Some(withRowIds(spark, tableDir, m, affected)
-              .withColumnRenamed(RowIdColName, PhysRowIdCol))
-          else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
-        val rewritten = affectedScan.map(applied)
-        rewritten.foreach(r =>
-          enforceChecks(r, checkConstraintsOf(m.meta), s"$tableName: update"))
-        // change feed: both images of each matched row from ONE filtered
-        // read of the affected files — every matched row is exploded into
-        // its pre- and post-image, so nothing is cached and the sidecar
-        // costs O(updated rows) beyond that read
-        val changes: Option[DataFrame] =
-          if (!cdfEnabled(m.meta)) None
-          else affectedScan.map { sc =>
-            val post = col("__graft_post")
-            sc.filter(cond).drop(PhysRowIdCol)
-              .withColumn("__graft_post", explode(array(lit(false), lit(true))))
-              .select(sc.columns.filterNot(_ == PhysRowIdCol).map { c =>
-                set.get(c) match {
-                  case Some(e) => when(post, expr(e).cast(schema(c).dataType))
-                    .otherwise(col(c)).as(c)
-                  case None => col(c)
-                }
-              }.toSeq :+ when(post, lit("update_postimage"))
-                .otherwise(lit("update_preimage")).as("_change_type"): _*)
-          }
-        val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-          inherit = untouched, expectedBase = Some(b),
-          meta = m.meta,
-          beforeMarker = cdfSidecar(tableDir)(_ => changes),
-          op = "UPDATE",
-          stage = t => rewritten.fold(Map.empty[String, String])(r =>
-            writeStagedWithStats(toPhysical(r, schema), t, parts,
-              bloomColsOf(m))))
-        finishCommit(spark, lh, tableName, tableDir, commit,
-          schema.fieldNames.toSeq, parts)
-      case _ =>
-        // legacy layout: one full rewritten snapshot adopts the protocol
-        val current = selectTable(spark, lh, tableName)
-        val out = current.select(current.schema.fields.map { f =>
-          set.get(f.name) match {
-            case Some(e) => when(cond, expr(e).cast(f.dataType))
+    val (b, m) = existing(spark, lh, tableName)
+    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    require(set.keySet.subsetOf(schema.fieldNames.toSet),
+      s"UPDATE SET names missing columns: " +
+        s"${set.keySet -- schema.fieldNames}")
+    // GENERATED ALWAYS AS IDENTITY: ids are engine-assigned, never
+    // user-writable — a SET here would silently break uniqueness.
+    // (Generated columns need no guard: their paired CHECK rejects an
+    // inconsistent post-image at enforceChecks below.)
+    identityColsOf(m.meta).filter(set.contains).foreach(c =>
+      throw new IllegalArgumentException(
+        s"$tableName.$c is GENERATED ALWAYS AS IDENTITY — UPDATE SET " +
+          "cannot modify it"))
+    val affectedPaths =
+      if (m.entries.isEmpty) Set.empty[String]
+      else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
+        keepMeta = true)
+        .filter(cond)
+        .select(col(FpCol).as("__fp")).distinct()
+        .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val baseP = Paths.get(tableDir)
+    val (affected, untouched) = m.entries.partition(e =>
+      affectedPaths.contains(baseP.resolve(e.path).toString))
+    val parts = partitionSpecOf(m.meta, m.files)
+    def applied(df: DataFrame): DataFrame = {
+      // row-tracked rewrites carry the materialized id through the SET
+      // projection — UPDATE changes a row's content, not its identity
+      val keep =
+        if (df.columns.contains(PhysRowIdCol)) Seq(col(PhysRowIdCol))
+        else Seq.empty
+      df.select(schema.fields.map { f =>
+        set.get(f.name) match {
+          case Some(e) =>
+            when(cond, expr(e).cast(f.dataType))
               .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)
-        writeTable(spark, lh, tableName, out,
-          partitionBy = currentPartitioning(lh, tableName))
+          case None => col(f.name)
+        }
+      }.toSeq ++ keep: _*)
     }
+    val affectedScan: Option[DataFrame] =
+      if (affected.isEmpty) None
+      else if (m.meta.contains(Versioned.RowTrackingKey))
+        Some(withRowIds(spark, tableDir, m, affected)
+          .withColumnRenamed(RowIdColName, PhysRowIdCol))
+      else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
+    val rewritten = affectedScan.map(applied)
+    rewritten.foreach(r =>
+      enforceChecks(r, checkConstraintsOf(m.meta), s"$tableName: update"))
+    // change feed: both images of each matched row from ONE filtered
+    // read of the affected files — every matched row is exploded into
+    // its pre- and post-image, so nothing is cached and the sidecar
+    // costs O(updated rows) beyond that read
+    val changes: Option[DataFrame] =
+      if (!cdfEnabled(m.meta)) None
+      else affectedScan.map { sc =>
+        val post = col("__graft_post")
+        sc.filter(cond).drop(PhysRowIdCol)
+          .withColumn("__graft_post", explode(array(lit(false), lit(true))))
+          .select(sc.columns.filterNot(_ == PhysRowIdCol).map { c =>
+            set.get(c) match {
+              case Some(e) => when(post, expr(e).cast(schema(c).dataType))
+                .otherwise(col(c)).as(c)
+              case None => col(c)
+            }
+          }.toSeq :+ when(post, lit("update_postimage"))
+            .otherwise(lit("update_preimage")).as("_change_type"): _*)
+      }
+    val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+      inherit = untouched, expectedBase = Some(b),
+      meta = m.meta,
+      beforeMarker = cdfSidecar(tableDir)(_ => changes),
+      op = "UPDATE",
+      stage = t => rewritten.fold(Map.empty[String, String])(r =>
+        writeStagedWithStats(toPhysical(r, schema), t, parts,
+          bloomColsOf(m))))
+    finishCommit(spark, lh, tableName, tableDir, commit,
+      schema.fieldNames.toSeq, parts)
   }
 
   /** Views write path — the reference defines `viewPath` (common.py:392) and

@@ -87,7 +87,7 @@ object Txn {
       tableName: String, df: DataFrame): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
     requireWritable(h, tableDir, tableName)
-    h.writes += tableDir -> stageOne(h, tableName, tableDir, df)
+    h.writes += tableDir -> stageOne(h, spark, tableName, tableDir, df)
     // liveness: the grace clock is the ref mtime — re-touch every ref so
     // a long later write cannot age the earlier tables into a steal
     heartbeat(h)
@@ -120,7 +120,7 @@ object Txn {
     val results =
       try {
         val futs = writes.zip(dirs).map { case ((t, df), d) =>
-          Future((d, stageOne(h, t, d, df)))
+          Future((d, stageOne(h, spark, t, d, df)))
         }
         futs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       } finally pool.shutdown()
@@ -148,12 +148,11 @@ object Txn {
 
   /** Stage one table's append and return its pending version (does not
     * touch the handle's registration state — callers do). */
-  private def stageOne(h: Handle, tableName: String, tableDir: String,
-      df: DataFrame): Long = {
-    val base = Versioned.latestVersion(tableDir)
+  private def stageOne(h: Handle, spark: SparkSession, tableName: String,
+      tableDir: String, df: DataFrame): Long = {
     val ref: (Long, Seq[Versioned.FileEntry], String) => Unit =
       (v, _, cid) => writeRef(tableDir, v, cid, h.outcome)
-    val commit = base match {
+    val commit = TableIO.adopted(spark, tableDir) match {
       case None =>
         Versioned.commitFiles(tableDir, df.schema.json,
           expectedBase = Some(0L),
@@ -163,11 +162,7 @@ object Txn {
             Map.empty[String, String], "multiTableTxn"),
           beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id),
           stage = TableIO.writeStagedWithStats(df, _))
-      case Some(b) =>
-        val m = Versioned.readManifest(tableDir, b).getOrElse(
-          throw new IllegalArgumentException(
-            s"$tableName: transactions need a manifest-based table " +
-              "(legacy snapshot layouts upgrade on first ordinary write)"))
+      case Some((b, m)) =>
         require(!TableIO.cdfEnabled(m.meta),
           s"$tableName has the change feed enabled — feed consumers read " +
             "version-contiguous sidecars; not supported inside transactions")

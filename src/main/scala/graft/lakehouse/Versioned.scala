@@ -32,9 +32,8 @@ import scala.jdk.CollectionConverters._
   *                               marker does; latest = max marker
   *   T/.staging-<uuid>/          in-flight writers' scratch (hidden from
   *                               readers); files move to the root pre-commit
-  *   T/_v1/ ...                  legacy whole-snapshot versions (round-2
-  *                               layout) — still readable, never written
-  *   T/_LATEST                   legacy/debug pointer cache (markers win)
+  *   T/_cdf_N_<commitId>/        version N's change-feed sidecar, owned by
+  *                               the commit that wrote it ([[sidecarDir]])
   * }}}
   *
   * Guarantees:
@@ -70,12 +69,13 @@ import scala.jdk.CollectionConverters._
   * cleanup. A 100 TB table at 128 MB files has a ~1M-line manifest (tens of
   * MB) — same order as a Delta checkpoint file.
   *
-  * Pre-protocol directories (parquet files directly under `T/`) stay
-  * readable: resolution falls back to `T/` itself.
+  * Pre-protocol directories (parquet files directly under `T/`, no
+  * protocol files) stay readable: resolution falls back to `T/` itself.
+  * The first write adopts such a directory in place (a CONVERT commit
+  * referencing its files), so every write runs over a manifest.
   */
 object Versioned {
 
-  val PointerName = "_LATEST"
   val MarkerPrefix = "_commit_"
   val ManifestPrefix = "_manifest_"
   val StagingPrefix = ".staging-"
@@ -135,7 +135,7 @@ object Versioned {
 
   /** What a reader should scan. */
   sealed trait ReadSpec
-  /** Legacy whole-snapshot version dir, or a pre-protocol table dir. */
+  /** A pre-protocol table dir, read as a plain parquet directory. */
   final case class ScanDir(path: String) extends ReadSpec
   /** Manifest-based version: explicit file list under `base`. `dv` maps a
     * data-file path to its deletion-vector sidecar (same path convention as
@@ -190,9 +190,6 @@ object Versioned {
     * of the table is stale. Re-read and retry (Delta MERGE semantics). */
   final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
 
-  private def pointer(tableDir: Path): Path = tableDir.resolve(PointerName)
-  private def versionDir(tableDir: Path, v: Long): Path =
-    tableDir.resolve(s"_v$v")
   private def marker(tableDir: Path, v: Long): Path =
     tableDir.resolve(s"$MarkerPrefix$v")
   private def manifestPath(tableDir: Path, v: Long): Path =
@@ -217,28 +214,27 @@ object Versioned {
     else None
   }
 
-  /** Current committed version: the max commit marker; legacy pointer-file
-    * tables (pre-marker layout) fall back to the pointer value. */
+  /** Current committed version: the max visible commit marker. */
   def latestVersion(tableDir: String): Option[Long] = {
-    val dir = Paths.get(tableDir)
-    val names = listNames(dir)
+    val names = listNames(Paths.get(tableDir))
     val markers = names.flatMap(numericSuffix(_, MarkerPrefix))
-    if (markers.nonEmpty) {
-      // transaction-pending versions are not visible until their outcome
-      // decides; the common case (no refs) costs nothing beyond the name
-      // scan already done
-      if (!names.exists(_.startsWith(TxnRefPrefix))) Some(markers.max)
-      else markers.sorted(Ordering[Long].reverse)
-        .find(v => txnVisible(tableDir, v))
-    }
-    else {
-      val p = pointer(dir)
-      if (!Files.isRegularFile(p)) None
-      else scala.util.Try(
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
-      ).toOption
-    }
+    // transaction-pending versions are not visible until their outcome
+    // decides; the common case (no refs) costs nothing beyond the name
+    // scan already done
+    if (markers.isEmpty) None
+    else if (!names.exists(_.startsWith(TxnRefPrefix))) Some(markers.max)
+    else markers.sorted(Ordering[Long].reverse)
+      .find(v => txnVisible(tableDir, v))
   }
+
+  /** True iff the directory holds no protocol file at all — no commit
+    * marker and no manifest claim: a pre-protocol directory (or none). A
+    * crashed first commit's unmarked claim is protocol state, not a
+    * pre-protocol table. */
+  def isPreProtocol(tableDir: String): Boolean =
+    listNames(Paths.get(tableDir)).forall(n =>
+      numericSuffix(n, MarkerPrefix).isEmpty &&
+        numericSuffix(n, ManifestPrefix).isEmpty)
 
   /** All committed (retained) versions, ascending. */
   def committedVersions(tableDir: String): Seq[Long] =
@@ -251,8 +247,10 @@ object Versioned {
     * complete in every manifest (only CONTENT is delta-encoded), so no
     * chain resolution happens here. */
   private[lakehouse] def manifestMetaOnly(tableDir: String,
-      v: Long): Option[Map[String, String]] = {
-    val p = manifestPath(Paths.get(tableDir), v)
+      v: Long): Option[Map[String, String]] =
+    metaHeader(manifestPath(Paths.get(tableDir), v))
+
+  private def metaHeader(p: Path): Option[Map[String, String]] = {
     if (!Files.isRegularFile(p)) return None
     val r = Files.newBufferedReader(p, StandardCharsets.UTF_8)
     try {
@@ -285,15 +283,10 @@ object Versioned {
         Files.getLastModifiedTime(marker(Paths.get(tableDir), v)).toMillis
       ).toOption)
 
-  /** True iff `version` was actually committed (its marker exists, or a
-    * legacy pointer names it) — an orphaned/in-flight manifest or `_vN`
-    * directory is NOT a committed snapshot. */
-  def isCommitted(tableDir: String, version: Long): Boolean = {
-    val dir = Paths.get(tableDir)
-    Files.exists(marker(dir, version)) ||
-      (listNames(dir).forall(!_.startsWith(MarkerPrefix)) &&
-        latestVersion(tableDir).contains(version))
-  }
+  /** True iff `version` was actually committed (its marker exists) — an
+    * orphaned/in-flight manifest is NOT a committed snapshot. */
+  def isCommitted(tableDir: String, version: Long): Boolean =
+    Files.exists(marker(Paths.get(tableDir), version))
 
   /** Meta key marking a DELTA manifest: the version whose (resolved) file
     * list this manifest's removals/additions apply to. A 100 TB table's
@@ -526,12 +519,19 @@ object Versioned {
       }
     }
 
+  /** Committed version `v`'s manifest. Every commit writes one, so a
+    * missing manifest means the table is corrupt: fails with
+    * IllegalStateException. */
+  def manifestOf(tableDir: String, v: Long): Manifest =
+    readManifest(tableDir, v).getOrElse(throw new IllegalStateException(
+      s"$tableDir: committed version $v has no manifest — the table is " +
+        "corrupt"))
+
   /** The scan spec for a SPECIFIC committed version. */
-  def specFor(tableDir: String, v: Long): ReadSpec =
-    readManifest(tableDir, v) match {
-      case Some(m) => scanOf(tableDir, m, m.entries)
-      case None => ScanDir(versionDir(Paths.get(tableDir), v).toString)
-    }
+  def specFor(tableDir: String, v: Long): ScanFiles = {
+    val m = manifestOf(tableDir, v)
+    scanOf(tableDir, m, m.entries)
+  }
 
   /** The scan spec for the latest committed version (or the directory
     * itself for pre-protocol layouts). */
@@ -578,6 +578,23 @@ object Versioned {
     * its change-feed sidecar directory (`_cdf_<version>_<id>`); always
     * overwritten per commit, never carried forward. */
   val CommitIdKey = "graft.commitId"
+
+  private val SidecarPrefix = "_cdf_"
+
+  /** Change-feed sidecar directory of the commit `commitId` at version
+    * `v` — commit-owned, so an evicted writer's sidecar never clobbers the
+    * winning commit's. */
+  def sidecarDir(tableDir: Path, v: Long, commitId: String): Path =
+    tableDir.resolve(s"$SidecarPrefix${v}_$commitId")
+
+  /** (version, commit id) of a [[sidecarDir]] name. */
+  private def sidecarOf(name: String): Option[(Long, String)] =
+    if (!name.startsWith(SidecarPrefix)) None
+    else name.drop(SidecarPrefix.length).split("_", 2) match {
+      case Array(vs, id) if id.nonEmpty =>
+        numericSuffix(SidecarPrefix + vs, SidecarPrefix).map(_ -> id)
+      case _ => None
+    }
 
   /** In-commit timestamps (Delta's ICT feature): the commit wall-clock is
     * recorded IN the manifest meta, not inferred from file mtimes — so
@@ -661,8 +678,8 @@ object Versioned {
     // value would date every later version at its ancestor's commit),
     // clamped monotonic against the current base's recorded stamp.
     val baseTs = latestVersion(tableDir)
-      .flatMap(v => readManifest(tableDir, v))
-      .flatMap(_.meta.get(CommitTsKey))
+      .flatMap(v => manifestMetaOnly(tableDir, v))
+      .flatMap(_.get(CommitTsKey))
       .flatMap(s => scala.util.Try(s.toLong).toOption)
     val commitTs = math.max(System.currentTimeMillis(), baseTs.getOrElse(0L) + 1)
     val metaWithOp = (((if (op.isEmpty) meta - OpKey
@@ -766,11 +783,11 @@ object Versioned {
         ((schemaJson +: metaLines) ++ contentLines).mkString("\n")
           .getBytes(StandardCharsets.UTF_8))
       try {
-        // allocate past every existing version number — committed, legacy,
-        // or orphaned from a crashed writer — so an orphan never wedges us
+        // allocate past every existing version number — committed or
+        // orphaned from a crashed writer — so an orphan never wedges us
         def allocated: Long = (0L +: listNames(dir).flatMap(n =>
-          numericSuffix(n, MarkerPrefix) orElse numericSuffix(n, ManifestPrefix)
-            orElse numericSuffix(n, "_v"))).max
+          numericSuffix(n, MarkerPrefix) orElse
+            numericSuffix(n, ManifestPrefix))).max
         var v = expectedBase match {
           case Some(base) =>
             val latest = latestVersion(tableDir).getOrElse(0L)
@@ -805,11 +822,9 @@ object Versioned {
                 def mt(p: Path): Long =
                   scala.util.Try(Files.getLastModifiedTime(p).toMillis)
                     .getOrElse(Long.MaxValue)
-                // every sidecar belonging to v — the legacy `_cdf_v`
-                // form and commit-owned `_cdf_v_<id>` dirs — counts as a
-                // sign of life
+                // every commit-owned sidecar of v counts as a sign of life
                 val cdfNewest = listNames(dir)
-                  .filter(n => n == s"_cdf_$v" || n.startsWith(s"_cdf_${v}_"))
+                  .filter(n => sidecarOf(n).exists(_._1 == v))
                   .map { n =>
                     val c = dir.resolve(n)
                     scala.util.Try {
@@ -842,11 +857,13 @@ object Versioned {
                     case None => v += 1
                   }
                 } else {
-                  if (movedAside) reclaimBackup = Some(v -> backup)
-                  // the crashed writer's sidecar would block the reclaimed
-                  // number's beforeMarker write
-                  try deleteRecursively(dir.resolve(s"_cdf_$v"))
-                  catch { case _: Exception => () }
+                  if (movedAside) {
+                    reclaimBackup = Some(v -> backup)
+                    // the crashed writer's sidecar is dead weight now
+                    metaHeader(backup).flatMap(_.get(CommitIdKey)).foreach(id =>
+                      try deleteRecursively(sidecarDir(dir, v, id))
+                      catch { case _: Exception => () })
+                  }
                 }
               } else if (Files.exists(marker(dir, v)) && txnAborted(dir, v)) {
                 // a decided-aborted transaction occupies this number: it is
@@ -903,17 +920,14 @@ object Versioned {
         } catch {
           case e: Exception =>
             // abort cleanly: un-claim (no marker yet -> never committed)
-            // and clear any partially-written version sidecar, or the
-            // reclaimed number would wedge the next writer's sidecar write.
-            // Only if the claim is still OURS — deleting a reclaimer's
-            // fresh manifest would repeat the very race being aborted.
+            // and clear this commit's partially-written sidecar. Only if
+            // the claim is still OURS — deleting a reclaimer's fresh
+            // manifest would repeat the very race being aborted.
             val stillOurs = scala.util.Try(
               Files.isSameFile(manifestPath(dir, v), tmp)).getOrElse(false)
-            if (stillOurs) {
-              Files.deleteIfExists(manifestPath(dir, v))
-              try deleteRecursively(dir.resolve(s"_cdf_$v"))
-              catch { case _: Exception => () }
-            }
+            if (stillOurs) Files.deleteIfExists(manifestPath(dir, v))
+            try deleteRecursively(sidecarDir(dir, v, commitId))
+            catch { case _: Exception => () }
             throw e
         }
         // commit point: atomic marker creation; monotonic by construction.
@@ -949,13 +963,6 @@ object Versioned {
         // content is now provably dead weight
         reclaimBackup.foreach { case (_, b) =>
           scala.util.Try(Files.deleteIfExists(b)) }
-        // legacy/debug pointer cache — markers are authoritative
-        try {
-          val ptmp = dir.resolve(s".${PointerName}.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(ptmp, v.toString.getBytes(StandardCharsets.UTF_8))
-          Files.move(ptmp, pointer(dir), StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        } catch { case _: Exception => () }
         try deleteRecursively(staging) catch { case _: Exception => () }
         // the full sweep re-parses kept manifests and walks the data tree
         // — O(table) metadata work a small append should not pay on every
@@ -998,7 +1005,7 @@ object Versioned {
     * decision code as the real sweep (the deletions are routed through
     * one recorder), so the report cannot drift from the behavior: at
     * 100 TB nobody should run an irreversible sweep blind. Categories:
-    * `marker`/`manifest`/`snapshot`/`cdf`/`txnref` (dropped or orphaned
+    * `marker`/`manifest`/`cdf`/`txnref` (dropped or orphaned
     * protocol metadata), `scratch` (crashed writers' staging), `data`
     * (files no retained manifest references). One pass's prediction —
     * the real sweep converges over successive runs as delta-manifest
@@ -1062,8 +1069,7 @@ object Versioned {
     dropped.foreach { v =>
       zapFile(marker(dir, v), "marker")
       if (!chainDeps(v)) zapFile(manifestPath(dir, v), "manifest")
-      zapTree(versionDir(dir, v), "snapshot") // legacy snapshot dir
-      names.filter(n => n == s"_cdf_$v" || n.startsWith(s"_cdf_${v}_"))
+      names.filter(n => sidecarOf(n).exists(_._1 == v))
         .foreach(n => zapTree(dir.resolve(n), "cdf")) // change sidecars
       names.filter(_.startsWith(s"$TxnRefPrefix${v}_"))
         .foreach(n => zapFile(dir.resolve(n), "txnref")) // txn refs
@@ -1084,30 +1090,20 @@ object Versioned {
     }
     // change-data sidecars of versions that never committed (crash between
     // sidecar write and marker) age out like any orphan
-    names.filter(_.startsWith("_cdf_"))
-      .flatMap { n =>
-        // `_cdf_<v>` (legacy) or `_cdf_<v>_<commitId>` (commit-owned)
-        val suffix = n.drop("_cdf_".length)
-        val vPart = suffix.takeWhile(c => c >= '0' && c <= '9')
-        val idPart = suffix.drop(vPart.length) // "" or "_<id>"
-        numericSuffix("_cdf_" + vPart, "_cdf_")
-          .filter(_ => idPart.isEmpty || idPart.startsWith("_"))
-          .map(v => (n, v, idPart.drop(1)))
-      }
+    names.flatMap(n => sidecarOf(n).map { case (v, id) => (n, v, id) })
       .filter { case (_, v, id) =>
-        // commit-owned sidecars orphan unless the COMMITTED version's
-        // manifest names their id; legacy ones orphan when no marker exists
-        if (!Files.exists(marker(dir, v))) true
-        else if (id.isEmpty) false
-        else !readManifest(dir.toString, v)
-          .exists(_.meta.get(CommitIdKey).contains(id))
+        // a sidecar orphans unless the COMMITTED version's manifest names
+        // its id
+        !Files.exists(marker(dir, v)) ||
+          !manifestMetaOnly(dir.toString, v)
+            .exists(_.get(CommitIdKey).contains(id))
       }
       .foreach { case (n, _, _) =>
         val p = dir.resolve(n)
         if (!young(p)) zapTree(p, "cdf")
       }
-    // orphaned claims from crashed writers: manifest with no marker, or a
-    // legacy _vN dir with no marker — sweep once they cannot be in-flight.
+    // orphaned claims from crashed writers: manifest with no marker —
+    // sweep once they cannot be in-flight.
     // Chain deps are markerless by design once their version dropped: skip
     // them here until the survivors' chains move past them.
     names.flatMap(numericSuffix(_, ManifestPrefix))
@@ -1115,12 +1111,6 @@ object Versioned {
       .foreach { v =>
         val p = manifestPath(dir, v)
         if (!young(p)) zapFile(p, "manifest")
-      }
-    names.flatMap(numericSuffix(_, "_v"))
-      .filter(v => !Files.exists(marker(dir, v)))
-      .foreach { v =>
-        val p = versionDir(dir, v)
-        if (Files.isDirectory(p) && !young(p)) zapTree(p, "snapshot")
       }
     // data files — ONE rule for everything that is not protocol metadata:
     // a file referenced by a retained manifest stays; anything else (files
@@ -1159,8 +1149,7 @@ object Versioned {
       .toSet
     names.foreach { n =>
       val p = dir.resolve(n)
-      if (n.startsWith(StagingPrefix) || n.startsWith(".manifest.") ||
-          n.startsWith(s".$PointerName.tmp")) {
+      if (n.startsWith(StagingPrefix) || n.startsWith(".manifest.")) {
         // crashed writers' scratch — never referenced once orphaned. Age
         // by the NEWEST mtime in the subtree: a long-running write keeps
         // touching deep task files while the staging ROOT's mtime stays at

@@ -140,12 +140,7 @@ class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
     val batch = StreamBridge.asBatch(spark, data)
     var attempt = 0
     while (true) {
-      val base = Versioned.latestVersion(tableDir)
-      val m = base.flatMap(Versioned.readManifest(tableDir, _))
-      if (base.nonEmpty && m.isEmpty)
-        throw new IllegalStateException(
-          s"$tableDir: the streaming sink needs a manifest-based table " +
-            "(legacy snapshot layouts carry no txn metadata)")
+      val (base, m) = TableIO.adopted(spark, tableDir).unzip
       // exactly-once: a replayed (crash-recovered) batch is already in the
       // committed watermark — skip it
       if (m.exists(_.meta.get(txnKey).exists(_.toLong >= batchId))) return
@@ -216,9 +211,9 @@ class VersionedTableSource(spark: org.apache.spark.sql.SparkSession,
   private def manifestOf(v: Long): Versioned.Manifest =
     Versioned.readManifest(tableDir, v).getOrElse(
       throw new IllegalStateException(
-        s"$tableDir: manifest for version $v is unavailable (legacy " +
-          "snapshot layout, or swept by retention — raise " +
-          "Versioned.RetainAgeMs for slow/paused streams)"))
+        s"$tableDir: manifest for version $v is unavailable (swept by " +
+          "retention — raise Versioned.RetainAgeMs for slow/paused " +
+          "streams)"))
 
   /** The newest version this source has handed the engine (offered via
     * [[getOffset]] or processed via [[getBatch]]) — the base the trigger

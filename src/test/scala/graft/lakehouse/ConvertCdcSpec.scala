@@ -1,6 +1,7 @@
 package graft.lakehouse
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** CONVERT-in-place adoption of raw parquet directories, and CDC apply
   * (replica maintenance from another table's change feed). */
@@ -64,6 +65,85 @@ class ConvertCdcSpec extends SparkSuite {
     TableIO.writeTable(spark, lh, "conv3", Seq((1, "x")).toDF("k", "s"))
     intercept[IllegalArgumentException] {
       TableIO.convertToVersioned(spark, lh, "conv3")
+    }
+  }
+
+  test("every write adopts a raw parquet directory in place first: no rows " +
+      "lost, CONVERT then the operation in history") {
+    import TableIO.MergeClause.NotMatchedInsert
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base: Seq[(Int, String, Double)] =
+      (1 to 10).map(k => (k, if (k % 2 == 0) "a" else "b", k * 1.0))
+    val extra = (11, "b", 11.0)
+    def frame(rows: (Int, String, Double)*) = rows.toDF("k", "g", "v")
+    val copySrc = Files.createTempDirectory("cc_adopt_src")
+    frame(extra).write.parquet(copySrc.resolve("batch").toString)
+    // (name, write, expected rows, original files still referenced at their
+    // original paths, operation recorded after CONVERT)
+    val cases: Seq[(String, String => Unit, Seq[(Int, String, Double)], Boolean,
+      String)] = Seq(
+      ("append", t => TableIO.appendTable(spark, lh, t, frame(extra)),
+        base :+ extra, true, "APPEND"),
+      ("merge", t => TableIO.mergeTable(spark, lh, t,
+          frame((2, "a", 20.0), extra), Seq("k")),
+        base.map { case (2, g, _) => (2, g, 20.0); case r => r } :+ extra,
+        false, "MERGE"),
+      ("mergeInto", t => TableIO.mergeInto(spark, lh, t, frame(extra),
+          Seq("k"), Seq(NotMatchedInsert())),
+        base :+ extra, true, "MERGE"),
+      ("delete", t => TableIO.deleteFromTable(spark, lh, t, "k <= 3"),
+        base.filter(_._1 > 3), false, "DELETE"),
+      ("update", t => TableIO.updateTable(spark, lh, t, "k = 5",
+          Map("v" -> "v + 100")),
+        base.map { case (5, g, v) => (5, g, v + 100); case r => r },
+        false, "UPDATE"),
+      ("compact", t => TableIO.compactTable(spark, lh, t),
+        base, false, "OPTIMIZE"),
+      ("rename", t => TableIO.renameColumn(spark, lh, t, "v", "w"),
+        base, true, "RENAME COLUMN"),
+      ("txn", { t =>
+          val h = Txn.begin(lh)
+          Txn.writeAll(h, spark, lh, Seq(t -> frame(extra)))
+          Txn.commit(h)
+        }, base :+ extra, true, "TXN APPEND"),
+      ("copyInto", t => Ingest.copyInto(spark, lh, t, copySrc.toString,
+          format = "parquet"),
+        base :+ extra, true, "APPEND"),
+      ("streamSink", { t =>
+          val mem = MemoryStream[(Int, String, Double)]
+          mem.addData(extra)
+          val q = mem.toDF().toDF("k", "g", "v").writeStream
+            .format("graft-table").option("path", Catalog.tablePath(lh, t))
+            .option("checkpointLocation",
+              Files.createTempDirectory("cc_adopt_ck").toString)
+            .outputMode("append").start()
+          try q.processAllAvailable() finally q.stop()
+        }, base :+ extra, true, "STREAM APPEND"))
+    for (hive <- Seq(false, true); (name, write, want, adoptsFiles, op) <- cases) {
+      val t = s"adopt_${name}_${if (hive) "hive" else "plain"}"
+      val dir = Catalog.tablePath(lh, t)
+      val w = frame(base: _*).write
+      (if (hive) w.partitionBy("g") else w).parquet(dir)
+      val original = {
+        val s = Files.walk(Paths.get(dir))
+        try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(_.toAbsolutePath.normalize.toString).toSet
+        finally s.close()
+      }
+      write(t)
+      val valueCol = if (name == "rename") "w" else "v"
+      val got = TableIO.selectTable(spark, lh, t)
+        .select("k", "g", valueCol).as[(Int, String, Double)].collect().toSeq.sorted
+      assert(got == want.sorted, s"$t rows")
+      val ops = TableIO.describeHistory(spark, lh, t).orderBy("version")
+        .select("operation").as[String].collect().toSeq
+      assert(ops == Seq("CONVERT", op), s"$t history")
+      if (adoptsFiles) {
+        val live = TableIO.currentFiles(lh, t)
+          .map(_.toAbsolutePath.normalize.toString).toSet
+        assert(original.subsetOf(live), s"$t rewrote adopted files")
+      }
     }
   }
 

@@ -94,26 +94,52 @@ class TableIOSpec extends SparkSuite {
     val v1 = Seq((1, "a")).toDF("k", "s")
     TableIO.writeTable(spark, lh, "trace", v1)
     val tdir = Catalog.tablePath(lh, "trace")
-    // simulate writers that died mid-commit: a legacy partial _v2 AND an
-    // orphaned manifest claim at 3 with no marker
-    val orphan = java.nio.file.Paths.get(tdir, "_v2")
-    java.nio.file.Files.createDirectories(orphan)
-    java.nio.file.Files.write(orphan.resolve("part-junk.parquet"),
-      Array[Byte](1, 2, 3))
+    // simulate a writer that died mid-commit: an orphaned manifest claim
+    // at 3 with no marker
     java.nio.file.Files.write(java.nio.file.Paths.get(tdir, "_manifest_3"),
       "{}\n".getBytes)
-    // the next commit allocates PAST both orphans instead of colliding
+    // the next commit allocates PAST the orphan instead of colliding
     TableIO.writeTable(spark, lh, "trace", Seq((2, "b"), (3, "c")).toDF("k", "s"))
     assert(Versioned.latestVersion(tdir).contains(4L))
     assert(TableIO.selectTable(spark, lh, "trace").count() == 2)
-    // neither orphan is a committed version
-    assert(!Versioned.isCommitted(tdir, 2L) && !Versioned.isCommitted(tdir, 3L))
-    // and both are swept once they cannot be in-flight any more
+    // the orphan is not a committed version
+    assert(!Versioned.isCommitted(tdir, 3L))
+    // and it is swept once it cannot be in-flight any more
     Versioned.vacuum(tdir, retainAgeMs = 0L)
-    assert(!java.nio.file.Files.exists(orphan))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tdir, "_manifest_3")))
     assert(TableIO.selectTable(spark, lh, "trace").count() == 2)
     TableIO.dropTable(spark, lh, "trace")
+  }
+
+  test("an aborted commit leaves neither its change-feed sidecar nor its claim") {
+    TableIO.writeTable(spark, lh, "tabort", Seq((1, "a")).toDF("k", "s"))
+    val tdir = Catalog.tablePath(lh, "tabort")
+    val base = Versioned.latestVersion(tdir).get
+    val m = Versioned.readManifest(tdir, base).get
+    var claimed = -1L
+    // the hook writes this commit's own sidecar, then fails before the
+    // marker: the commit must take both the sidecar and the claim with it
+    val e = intercept[IllegalStateException] {
+      Versioned.commitFiles(tdir, m.schemaJson, inherit = m.entries,
+        expectedBase = Some(base), meta = m.meta, op = "ABORTED",
+        beforeMarker = { (v, _, cid) =>
+          claimed = v
+          Seq((2, "b")).toDF("k", "s").write
+            .parquet(java.nio.file.Paths.get(tdir, s"_cdf_${v}_$cid").toString)
+          throw new IllegalStateException("hook failed")
+        })
+    }
+    assert(e.getMessage == "hook failed")
+    assert(claimed == base + 1)
+    val names = new java.io.File(tdir).list().toSeq
+    assert(!names.exists(_.startsWith("_cdf_")), names)
+    assert(!names.contains(s"_manifest_$claimed"), names)
+    assert(Versioned.latestVersion(tdir).contains(base))
+    // the number is free again: the next commit takes it
+    TableIO.appendTable(spark, lh, "tabort", Seq((3, "c")).toDF("k", "s"))
+    assert(Versioned.latestVersion(tdir).contains(claimed))
+    assert(TableIO.selectTable(spark, lh, "tabort").count() == 2)
+    TableIO.dropTable(spark, lh, "tabort")
   }
 
   test("interleaved commits stay monotonic; conflict-checked commits fail loudly") {
