@@ -323,7 +323,8 @@ object TableIO {
     * the scan); divergence documented in SURVEY §7.
     *
     * The condition is additionally mined for manifest-level DATA SKIPPING:
-    * recognizable top-level conjuncts (range/equality comparisons and null
+    * recognizable top-level conjuncts (range/equality comparisons,
+    * `BETWEEN` with two literal bounds, IN-lists, LIKE prefixes and null
     * checks against literals) prune whole files via their min/max, null-
     * count, and bloom stats before Spark ever lists them — automatically,
     * the way Delta's scan taps its log stats. Unrecognized conjuncts
@@ -492,19 +493,20 @@ object TableIO {
   }
 
   /** Evaluate a generated expression at a BATCH of literal points via
-    * Spark itself — one local frame carrying the literals under the base
-    * column's name — so the derivation can never disagree with the
+    * Spark itself — one [[localFrame]] carrying the literals under the
+    * base column's name — so the derivation can never disagree with the
     * engine's own coercion/arithmetic semantics (no hand-rolled f to
-    * drift), and an IN-list derives in ONE job. The literals are CAST
-    * into the base column's declared type (`baseDt`) before f evaluates:
-    * stored g values were computed from base-typed operands, and e.g.
-    * decimal-vs-double division can round differently across a floor
-    * band boundary — a bound derived in the literal's own type could be
-    * too tight and prune files whose rows match (round-10 advice). The
-    * cast lands on the nearest representable base value, which for a
-    * monotone f yields the exact bound (cast toward the range) or a
-    * strictly LOOSER one (cast away from it) — never a tighter one; an
-    * ANSI cast overflow throws and the derivation is dropped whole.
+    * drift), and it runs on the driver with no Spark job. The literals
+    * are CAST into the base column's declared type (`baseDt`) before f
+    * evaluates: stored g values were computed from base-typed operands,
+    * and e.g. decimal-vs-double division can round differently across a
+    * floor band boundary — a bound derived in the literal's own type
+    * could be too tight and prune files whose rows match (round-10
+    * advice). The cast lands on the nearest representable base value,
+    * which for a monotone f yields the exact bound (cast toward the
+    * range) or a strictly LOOSER one (cast away from it) — never a
+    * tighter one; an ANSI cast overflow throws and the derivation is
+    * dropped whole.
     * Returns per-point the Catalyst-internal value and its type (None
     * where the point doesn't evaluate), or None outright on failure. */
   private def evalGeneratedBatch(spark: SparkSession, exprSql: String,
@@ -513,12 +515,8 @@ object TableIO {
     try {
       import org.apache.spark.sql.catalyst.CatalystTypeConverters
       val conv = CatalystTypeConverters.createToScalaConverter(litDt)
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      internals.foreach(v =>
-        rows.add(org.apache.spark.sql.Row(conv(v))))
-      val df = spark.createDataFrame(rows,
-        StructType(Seq(StructField(base, litDt))))
-        .coalesce(1)
+      val df = localFrame(spark, StructType(Seq(StructField(base, litDt))),
+        internals.map(v => Row(conv(v))))
         .select(org.apache.spark.sql.functions.col(base)
           .cast(baseDt).as(base))
         .selectExpr(s"($exprSql) AS __g")
@@ -530,11 +528,26 @@ object TableIO {
         else Some((CatalystTypeConverters.convertToCatalyst(r.get(0)), gdt))))
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** A local frame over `rows` (by default one row of no columns) whose
+    * projections are evaluated on the DRIVER: the optimizer's
+    * ConvertToLocalRelation folds a projection of a LocalRelation into a
+    * new LocalRelation, so collecting it runs no Spark job. The
+    * expressions, their casts and the session settings are the engine's
+    * own, so a value computed here equals the one a job would compute
+    * (the Bloom probe hashes equal the hashes the writer stored), and an
+    * expression that fails throws at the same collect. */
+  private[lakehouse] def localFrame(spark: SparkSession,
+      schema: StructType = StructType(Nil),
+      rows: Seq[Row] = Seq(Row.empty)): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
   /** The may-match file set mined from `condition` against one manifest
     * snapshot: Some(files that may hold matching rows) when at least one
     * top-level conjunct is recognizable, None when nothing is (caller
     * treats every file as matching). Shared by [[readTable]]'s automatic
-    * skipping and [[compactTable]]'s predicate scoping. */
+    * skipping, [[compactTable]]'s predicate scoping and the file discovery
+    * of [[deleteFromTable]] and [[updateTable]]. Runs on the driver: no
+    * Spark job. */
   private[lakehouse] def minedSurvivors(spark: SparkSession,
       m: Versioned.Manifest,
       condition: String): Option[Seq[Versioned.FileEntry]] = {
@@ -607,6 +620,18 @@ object TableIO {
         Seq(Range(name(a).get, Some(plit(l)), None))
       case LessThan(l: Literal, a) if name(a).isDefined =>
         Seq(Range(name(a).get, Some(plit(l)), None))
+      // `a BETWEEN lo AND hi` parses as the unresolved function `between`
+      // (analysis rewrites it to `a >= lo AND a <= hi`, each side coerced
+      // on its own): two literal bounds prune as that inclusive range.
+      // NOT BETWEEN and non-literal bounds stay residual-only.
+      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+          if f.nameParts.map(_.toLowerCase) == Seq("between") &&
+            !f.isDistinct && f.filter.isEmpty =>
+        f.arguments match {
+          case Seq(a, lo: Literal, hi: Literal) if name(a).isDefined =>
+            Seq(Range(name(a).get, Some(plit(lo)), Some(plit(hi))))
+          case _ => Seq.empty
+        }
       case EqualTo(a, l: Literal) if name(a).isDefined =>
         Seq(Eq(name(a).get, plit(l)))
       case EqualTo(l: Literal, a) if name(a).isDefined =>
@@ -655,10 +680,10 @@ object TableIO {
     // shape lets every mined range/equality hint on base imply one on g
     // — and g is typically the partition/cluster column whose per-file
     // stats actually separate files. Spark itself evaluates f at each
-    // bound (one-row frame), the literal/column domain pairing is gated
-    // per shape, and every derived hint is purely additive: the full
-    // residual condition still applies, so a dropped derivation costs
-    // correctness nothing.
+    // bound (a driver-side local frame), the literal/column domain
+    // pairing is gated per shape, and every derived hint is purely
+    // additive: the full residual condition still applies, so a dropped
+    // derivation costs correctness nothing.
     val genHints: Seq[Hint] = generatedColsOf(m.meta).toSeq.flatMap {
       case (gcol, exprSql) =>
         monotoneGeneratedShape(exprSql).toSeq.flatMap { case (base, shape) =>
@@ -673,8 +698,8 @@ object TableIO {
               l.dt == TimestampType || l.dt == DateType
             case _ => false
           }
-          // batch-evaluate every distinct gated literal in one job per
-          // literal type, then look results up per hint
+          // batch-evaluate every distinct gated literal in one local
+          // projection per literal type, then look results up per hint
           val pts: Seq[PLit] = rawHints.flatMap {
             case Range(c, lo, hi) if c == base => lo.toSeq ++ hi.toSeq
             case Eq(c, l) if c == base => Seq(l)
@@ -787,10 +812,11 @@ object TableIO {
       case NullIs(c, isNull) => Seq(NNull(c, isNull))
     }
     // engine-computed bloom probe hashes for every Eq/IN literal over a
-    // bloom-indexed column — ONE job for all probes, so build and probe
-    // hashing can never disagree (same xxhash64-over-cast the writer
-    // used). Ts/date probes are excluded (blooms target high-cardinality
-    // point-lookup keys; ranges handle time).
+    // bloom-indexed column — ONE driver-side projection for all probes,
+    // so build and probe hashing can never disagree (same
+    // xxhash64-over-cast the writer used). Ts/date probes are excluded
+    // (blooms target high-cardinality point-lookup keys; ranges handle
+    // time).
     // bloomColsOf parses EVERY entry's stats JSON on the driver — only
     // worth it when an equality/IN hint could actually probe a bloom
     val bloomIndexed =
@@ -808,7 +834,7 @@ object TableIO {
         import org.apache.spark.sql.functions.{lit, xxhash64}
         val exprs = bloomProbes.map { case (c, v) =>
           xxhash64(lit(v).cast(dtOf(c).getOrElse(StringType))) }
-        val row = spark.range(1).select(exprs: _*).head()
+        val row = localFrame(spark).select(exprs: _*).head()
         bloomProbes.zipWithIndex.map { case (p, i) =>
           p -> row.getLong(i) }.toMap
       }
@@ -1940,7 +1966,7 @@ object TableIO {
       val physCol = physicalMapping(schema).getOrElse(statCol, statCol)
       val dt = schema.fields.find(_.name == statCol).map(_.dataType)
         .getOrElse(StringType)
-      lazy val probeHash: Long = spark.range(1)
+      lazy val probeHash: Long = localFrame(spark)
         .select(xxhash64(lit(value).cast(dt))).head.getLong(0)
       val kept = m.entries.filter { e =>
         val rangeOk = statsRange(e, physCol) match {
@@ -2066,8 +2092,9 @@ object TableIO {
       // type-exact regardless of the literal's natural type
       val stored = s"CAST(($sqlExpr) AS ${schema(colName).dataType.sql})"
       // the expression must actually evaluate (typos fail HERE, not at the
-      // next append): one constant-folded local projection proves it
-      spark.range(1).select(org.apache.spark.sql.functions.expr(stored)).head()
+      // next append): one driver-side projection proves it
+      localFrame(spark).select(org.apache.spark.sql.functions.expr(stored))
+        .head()
       Versioned.withFeature(
         m.meta + (DefaultPrefix + colName -> stored), "defaultColumns")
     }
@@ -4604,12 +4631,15 @@ object TableIO {
     val (b, m) = existing(spark, lh, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     val parts = partitionSpecOf(m.meta, m.files)
+    // discovery scans only the files the condition may match (readTable's
+    // skipping): a pruned file holds no matching row, so it is untouched
+    val candidates = minedSurvivors(spark, m, condition).getOrElse(m.entries)
     if (deletionVectors) {
       import org.apache.spark.sql.functions.{collect_list, sort_array}
       // matched LOGICAL rows (already-vectored rows can't re-match, so
       // CDF preimages and counts stay exact on repeated DV deletes)
       val matched = scanFiles(spark,
-        Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
+        Versioned.scanOf(tableDir, m, candidates), keepMeta = true)
         .filter(cond)
       val withCdf = cdfEnabled(m.meta)
       if (withCdf) matched.persist()
@@ -4655,8 +4685,8 @@ object TableIO {
       } finally if (withCdf) matched.unpersist()
     } else {
       val affectedPaths =
-        if (m.entries.isEmpty) Set.empty[String]
-        else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
+        if (candidates.isEmpty) Set.empty[String]
+        else scanFiles(spark, Versioned.scanOf(tableDir, m, candidates),
           keepMeta = true)
           .filter(cond)
           .select(col(FpCol).as("__fp")).distinct()
@@ -5031,9 +5061,12 @@ object TableIO {
       throw new IllegalArgumentException(
         s"$tableName.$c is GENERATED ALWAYS AS IDENTITY — UPDATE SET " +
           "cannot modify it"))
+    // discovery scans only the files the condition may match (see
+    // deleteFromTable)
+    val candidates = minedSurvivors(spark, m, condition).getOrElse(m.entries)
     val affectedPaths =
-      if (m.entries.isEmpty) Set.empty[String]
-      else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
+      if (candidates.isEmpty) Set.empty[String]
+      else scanFiles(spark, Versioned.scanOf(tableDir, m, candidates),
         keepMeta = true)
         .filter(cond)
         .select(col(FpCol).as("__fp")).distinct()

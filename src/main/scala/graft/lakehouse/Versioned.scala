@@ -697,6 +697,10 @@ object Versioned {
     }
     val staging = dir.resolve(StagingPrefix + java.util.UUID.randomUUID().toString)
     Files.createDirectory(staging)
+    // staged files already moved to the table root, and whether our marker
+    // landed: until it does, nothing references them
+    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
+    var markerLanded = false
     try {
       val stats = stage(staging.toString)
       // relative destinations: a staged `col=value/part-x.parquet` lands at
@@ -908,6 +912,7 @@ object Versioned {
             val dest = dir.resolve(staging.relativize(p).toString)
             if (dest.getParent != dir) Files.createDirectories(dest.getParent)
             Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
+            moved += dest
           }
           beforeMarker(v, staged, commitId)
           // ownership re-check: if a conflicting claimer mistook this
@@ -935,7 +940,7 @@ object Versioned {
         // committed first: un-link our manifest and put ITS manifest back
         // under its marker before failing loudly — its acknowledged data
         // must be what the committed version serves.
-        try Files.createFile(marker(dir, v))
+        try { Files.createFile(marker(dir, v)); markerLanded = true }
         catch {
           case _: FileAlreadyExistsException =>
             Files.deleteIfExists(manifestPath(dir, v))
@@ -982,9 +987,13 @@ object Versioned {
       } finally Files.deleteIfExists(tmp)
     } catch {
       case e: Throwable =>
-        // failed commits leave no litter; crashed ones are swept by age
-        try if (e.isInstanceOf[ConcurrentWriteException]) deleteRecursively(staging)
-        catch { case _: Exception => () }
+        // failed commits leave no litter; crashed ones are swept by age.
+        // Before the marker the moved data files are unreferenced (they
+        // carry this commit's own write-job names); after it they may be
+        // live, so only the staging directory goes.
+        if (!markerLanded) moved.foreach(p =>
+          try Files.deleteIfExists(p) catch { case _: Exception => () })
+        try deleteRecursively(staging) catch { case _: Exception => () }
         throw e
     }
   }

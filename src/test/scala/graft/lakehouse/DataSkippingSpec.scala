@@ -676,4 +676,131 @@ class DataSkippingSpec extends SparkSuite {
     assert(got.count() == 720L) // 12h of minutely rows
     TableIO.dropTable(spark, lh, "gend")
   }
+
+  /** Run `f` and return the jobs it started, as (job id, tasks of the
+    * job's stages), in start order. */
+  private def jobsDuring(f: => Unit): Seq[(Int, Int)] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(j.jobId -> j.stageInfos.map(_.numTasks).sum)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      Thread.sleep(200) // let the job-start events land
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq.sortBy(_._1)
+  }
+
+  test("BETWEEN with two literal bounds keeps exactly the files of its " +
+      ">= / <= spelling and prunes; NOT BETWEEN and column bounds don't") {
+    val df = spark.range(0, 40000).selectExpr("id AS k", "id % 97 AS payload")
+      .repartition(8)
+    withFixedPartitions {
+      TableIO.writeTable(spark, lh, "btw", df, sortBy = Seq("k"))
+    }
+    val tdir = Catalog.tablePath(lh, "btw")
+    val m = Versioned.readManifest(tdir, Versioned.latestVersion(tdir).get).get
+    assert(m.entries.size > 2, "fixture should span several files")
+    def kept(c: String): Option[Set[String]] =
+      TableIO.minedSurvivors(spark, m, c).map(_.map(_.path).toSet)
+    // inside, on the edges, straddling the ends, reversed, out of range
+    for ((a, b) <- Seq((100, 200), (0, 0), (39999, 39999), (-5, 4999),
+        (39000, 50000), (20000, 10000), (50000, 60000))) {
+      val between = kept(s"k BETWEEN $a AND $b")
+      assert(between.isDefined, s"k BETWEEN $a AND $b should mine")
+      assert(between == kept(s"k >= $a AND k <= $b"),
+        s"k BETWEEN $a AND $b kept ${between.map(_.size)} files")
+    }
+    assert(kept("k BETWEEN 100 AND 200").get.size < m.entries.size)
+    assert(kept("k BETWEEN 100 AND 200 AND payload = 3") ==
+      kept("k BETWEEN 100 AND 200"))
+    assert(kept("k NOT BETWEEN 100 AND 200").isEmpty)
+    assert(kept("k BETWEEN payload AND 200").isEmpty)
+    assert(kept("k BETWEEN 100 AND k + 1").isEmpty)
+    val full = TableIO.selectTable(spark, lh, "btw")
+    for (c <- Seq("k BETWEEN 100 AND 200", "k BETWEEN 200 AND 100",
+        "k NOT BETWEEN 100 AND 39000")) {
+      val got = TableIO.readTable(spark, lh, "btw", condition = c)
+      assert(got.orderBy("k").collect().sameElements(
+        full.filter(c).orderBy("k").collect()), c)
+    }
+    val ranged = TableIO.readTable(spark, lh, "btw",
+      condition = "k BETWEEN 100 AND 200")
+    assert(ranged.inputFiles.length < full.inputFiles.length)
+    assert(ranged.count() == 101L)
+    TableIO.dropTable(spark, lh, "btw")
+  }
+
+  test("zero Spark jobs: Bloom point pruning, a Bloom-column readTable " +
+      "condition and generated-column pruning answer on the driver") {
+    // h is unclustered (every file spans its whole range): only the
+    // Bloom filters can prune it
+    val blooms = spark.range(0, 4000)
+      .selectExpr("id AS k", "id * 7919 % 4000 AS h").repartition(4)
+    withFixedPartitions {
+      TableIO.writeTable(spark, lh, "zjb", blooms, bloomFilterFor = Seq("h"))
+    }
+    val gen = spark.range(0, 16000).selectExpr("id AS v",
+      "CAST(floor(id / 1000.0) AS LONG) AS band")
+      .repartition(8, col("band"))
+    withFixedPartitions {
+      TableIO.writeTable(spark, lh, "zjg", gen, sortBy = Seq("band"))
+    }
+    TableIO.setGeneratedColumn(spark, lh, "zjg", "band",
+      "CAST(floor(v / 1000.0) AS LONG)")
+    val key = 7919L * 17 % 4000
+    var eq: Option[(Versioned.ScanFiles, Int)] = None
+    var bloomRead, genRead: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring {
+      eq = TableIO.pruneFilesEq(spark, lh, "zjb", "h", key)
+      bloomRead = TableIO.readTable(spark, lh, "zjb",
+        condition = s"h = $key OR h = ${key + 1}")
+      genRead = TableIO.readTable(spark, lh, "zjg",
+        condition = "v BETWEEN 2100 AND 3900")
+    }
+    assert(jobs.isEmpty, s"pruning ran ${jobs.size} Spark job(s)")
+    val (spec, total) = eq.get
+    assert(spec.relFiles.size < total,
+      s"the Bloom probe should prune (${spec.relFiles.size}/$total)")
+    assert(bloomRead.inputFiles.length < total)
+    assert(bloomRead.collect().map(_.getLong(1)).toSet == Set(key, key + 1))
+    assert(genRead.inputFiles.length <
+      TableIO.selectTable(spark, lh, "zjg").inputFiles.length)
+    assert(genRead.count() == 1801L)
+    TableIO.dropTable(spark, lh, "zjb")
+    TableIO.dropTable(spark, lh, "zjg")
+  }
+
+  test("deleteFromTable and updateTable discover affected rows in the " +
+      "condition's may-match files only") {
+    val df = spark.range(0, 40000).selectExpr("id AS k", "id % 97 AS payload")
+      .repartition(8)
+    withFixedPartitions {
+      TableIO.writeTable(spark, lh, "dmlp", df, sortBy = Seq("k"))
+    }
+    val total = TableIO.currentFiles(lh, "dmlp").size
+    val fullTasks = jobsDuring(
+      TableIO.selectTable(spark, lh, "dmlp").foreach(_ => ())).head._2
+    assert(total > 2 && fullTasks > 1,
+      s"fixture should scan as several tasks ($total files, $fullTasks tasks)")
+    // the first job an operation starts is its discovery scan: a range
+    // inside one file must scan that file alone
+    def discoveryTasks(op: => Unit): Int = jobsDuring(op).head._2
+    assert(discoveryTasks(TableIO.deleteFromTable(spark, lh, "dmlp",
+      "k BETWEEN 100 AND 199")) == 1)
+    assert(discoveryTasks(TableIO.deleteFromTable(spark, lh, "dmlp",
+      "k >= 300 AND k < 400", deletionVectors = true)) == 1)
+    assert(discoveryTasks(TableIO.updateTable(spark, lh, "dmlp",
+      "k BETWEEN 500 AND 599", Map("payload" -> "-1"))) == 1)
+    val rows = TableIO.selectTable(spark, lh, "dmlp")
+    assert(rows.count() == 40000L - 200)
+    assert(rows.filter("payload = -1").count() == 100L)
+    assert(rows.filter("k BETWEEN 100 AND 199 OR k BETWEEN 300 AND 399")
+      .count() == 0L)
+    TableIO.dropTable(spark, lh, "dmlp")
+  }
 }

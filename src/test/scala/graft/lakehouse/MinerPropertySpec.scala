@@ -98,6 +98,61 @@ class MinerPropertySpec extends SparkSuite {
     }
   }
 
+  test("fuzz: BETWEEN and NOT BETWEEN conditions (reversed, boundary " +
+      "and out-of-range bounds) read exactly the full-scan filter") {
+    val seed = 20261019L
+    val rnd = new scala.util.Random(seed)
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+    // bounds per column: stored values (boundaries), values between
+    // them, and values outside the column's range
+    def bounds(): (String, String, String) = rnd.nextInt(5) match {
+      case 0 =>
+        def k = pick(7 * (1 + rnd.nextInt(240)), 7 * rnd.nextInt(260) + 3,
+          -70, 0, 7, 1680, 5000)
+        ("k", k.toString, k.toString)
+      case 1 =>
+        def p = pick("999.99", "1000.0", (1000 + rnd.nextInt(1000)).toString
+          + ".5", "1500", "2001.0", "99999.0")
+        ("price", p, p)
+      case 2 =>
+        def d = pick(
+          f"TIMESTAMP '199${rnd.nextInt(7)}-${rnd.nextInt(12) + 1}%02d-" +
+            f"${rnd.nextInt(28) + 1}%02d 00:00:00'",
+          f"'199${rnd.nextInt(5)}-0${rnd.nextInt(9) + 1}-01'",
+          "TIMESTAMP '1980-01-01 00:00:00'")
+        ("d", d, d)
+      case 3 =>
+        def t = pick(f"'ID#${rnd.nextInt(50)}%03d'", "'ID#'", "'ID#999'",
+          "'A'", "'Z'")
+        ("tag", t, t)
+      case _ =>
+        def s = pick("'F'", "'O'", "'P'", "'Z'", "'A'")
+        ("status", s, s)
+    }
+    def atom(): String = {
+      val (c, lo, hi) = bounds()
+      val not = if (rnd.nextInt(4) == 0) "NOT " else ""
+      s"$c ${not}BETWEEN $lo AND $hi" // reversed half the time by chance
+    }
+    var pruned = 0
+    tables.foreach { tname =>
+      val full = TableIO.selectTable(spark, lh, tname)
+      val allFiles = full.inputFiles.length
+      for (i <- 1 to 30) {
+        val cond = (1 to rnd.nextInt(2) + 1).map(_ => s"(${atom()})")
+          .mkString(" AND ")
+        val read = TableIO.readTable(spark, lh, tname, condition = cond)
+        if (read.inputFiles.length < allFiles) pruned += 1
+        val got = read.orderBy("k").collect().toSeq
+        val want = full.where(cond).orderBy("k").collect().toSeq
+        assert(got == want,
+          s"seed=$seed iter=$i table=$tname condition `$cond`: " +
+            s"pruned read returned ${got.size} rows, truth ${want.size}")
+      }
+    }
+    assert(pruned > 0, s"seed=$seed: no BETWEEN condition pruned a file")
+  }
+
   test("the miner actually prunes: a selective range on the sorted " +
       "layout reads fewer files than the full scan") {
     tables // force fixture

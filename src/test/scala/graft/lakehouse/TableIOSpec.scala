@@ -142,6 +142,55 @@ class TableIOSpec extends SparkSuite {
     TableIO.dropTable(spark, lh, "tabort")
   }
 
+  test("an aborted commit removes its staging directory and the data " +
+      "files it already moved to the table root") {
+    TableIO.writeTable(spark, lh, "tlitter", Seq((1, "a")).toDF("k", "s"))
+    val tdir = Catalog.tablePath(lh, "tlitter")
+    val root = java.nio.file.Paths.get(tdir)
+    def parquetOnDisk: Set[String] = {
+      val w = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        w.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(p => root.relativize(p).toString).toSet
+      } finally w.close()
+    }
+    def live: Set[String] = Versioned.readManifest(tdir,
+      Versioned.latestVersion(tdir).get).get.entries.map(_.path).toSet
+    val base = Versioned.latestVersion(tdir).get
+    val m = Versioned.readManifest(tdir, base).get
+    def stageRow(t: String): Map[String, String] = {
+      Seq((2, "b")).toDF("k", "s").write.mode("append").parquet(t)
+      Map.empty
+    }
+    var moved = Seq.empty[Versioned.FileEntry]
+    // fails after the staged file moved to the root, before the marker
+    val e = intercept[IllegalStateException] {
+      Versioned.commitFiles(tdir, m.schemaJson, inherit = m.entries,
+        expectedBase = Some(base), meta = m.meta, op = "ABORTED",
+        stage = stageRow,
+        beforeMarker = { (_, staged, _) =>
+          moved = staged
+          throw new IllegalStateException("hook failed")
+        })
+    }
+    assert(e.getMessage == "hook failed")
+    assert(moved.nonEmpty, "the hook should have seen the staged file")
+    // fails inside the stage itself, after writing a file
+    intercept[IllegalStateException] {
+      Versioned.commitFiles(tdir, m.schemaJson, inherit = m.entries,
+        expectedBase = Some(base), meta = m.meta, op = "ABORTED",
+        stage = { t => stageRow(t); throw new IllegalStateException("x") })
+    }
+    val names = new java.io.File(tdir).list().toSeq
+    assert(!names.exists(_.startsWith(Versioned.StagingPrefix)), names)
+    assert(parquetOnDisk == live,
+      s"unreferenced parquet: ${parquetOnDisk -- live}")
+    assert(Versioned.latestVersion(tdir).contains(base))
+    assert(TableIO.selectTable(spark, lh, "tlitter").count() == 1)
+    TableIO.dropTable(spark, lh, "tlitter")
+  }
+
   test("interleaved commits stay monotonic; conflict-checked commits fail loudly") {
     val tdir = Catalog.tablePath(lh, "trace2")
     TableIO.writeTable(spark, lh, "trace2", Seq((1, "a")).toDF("k", "s")) // v1
