@@ -104,8 +104,9 @@ object Ingest {
         "(csv, json, parquet, orc, text, binaryfile)")
     val tableDir = Catalog.tablePath(lh, tableName)
     val listed = listSource(spark, source)
-    var attempt = 0
-    while (true) {
+    // a lost race means a concurrent commit (possibly another loader of
+    // the SAME files) advanced the table: re-diff against its ledger
+    Versioned.retryOnConflict(maxRetries + 1) {
       val (base, manifest) = TableIO.adopted(spark, tableDir).unzip
       val meta = manifest.map(_.meta).getOrElse(Map.empty[String, String])
       val loaded: Set[String] =
@@ -117,16 +118,14 @@ object Ingest {
         require(manifest.isDefined,
           s"copyInto: $source has no loadable files and table $tableName " +
             "does not exist")
-        return CopyResult(currentInfo(lh, tableName, manifest.get),
+        CopyResult(currentInfo(lh, tableName, manifest.get),
           base.get, 0L, skipped.toLong, 0L)
-      }
-      val aligned = readAligned(spark, fresh, format, schema, options,
-        manifest, tableName)
-      val cid = cidOf(fresh, force)
-      writeLedger(tableDir, cid, fresh)
-      try {
+      } else {
+        val aligned = readAligned(spark, fresh, format, schema, options,
+          manifest, tableName)
+        val cid = cidOf(fresh, force)
+        writeLedger(tableDir, cid, fresh)
         val info = TableIO.appendTable(spark, lh, tableName, aligned,
-          maxRetries = 0,
           extraMeta = Map(KeyPrefix + cid -> fresh.size.toString),
           pinBase = Some(base.getOrElse(0L)))
         // our commit is the first version ABOVE the pinned base carrying
@@ -148,16 +147,9 @@ object Ingest {
           if (counts.forall(_.isDefined)) counts.flatten.sum else -1L
         }.getOrElse(-1L)
         mNew.foreach(consolidate(tableDir, v, _))
-        return CopyResult(info, v, fresh.size.toLong, skipped.toLong, rows)
-      } catch {
-        case e: Versioned.ConcurrentWriteException =>
-          // a concurrent commit (possibly another loader of the SAME
-          // files) advanced the table: re-diff against its ledger
-          attempt += 1
-          if (attempt > maxRetries) throw e
+        CopyResult(info, v, fresh.size.toLong, skipped.toLong, rows)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The loaded-file ledger of the CURRENT version as a DataFrame

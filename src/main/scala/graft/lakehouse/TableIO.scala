@@ -2536,34 +2536,6 @@ object TableIO {
       zorderBy: Seq[String] = Seq.empty,
       bloomFilterFor: Seq[String] = Seq.empty,
       extraMeta: Map[String, String] = Map.empty): TableInfo = {
-    // generated columns absent from the replacement data are computed
-    // before the overwrite proper (present ones validate via their
-    // CHECK); identity columns assign above the watermark, which never
-    // resets — values are not reused across overwrites (Delta semantics)
-    val dirG = Catalog.tablePath(lh, tableName)
-    val baseG = Versioned.latestVersion(dirG)
-    val metaG = baseG
-      .flatMap(Versioned.readManifest(dirG, _)).map(_.meta)
-      .getOrElse(Map.empty[String, String])
-    val (dfi, idMeta, pin) = withIdentityAssigned(
-      withGeneratedColumns(withDefaultColumns(df, metaG), metaG), metaG,
-      s"$tableName: overwrite")
-    // ids were assigned above baseG's watermark: the commit must pin that
-    // base, or a concurrent append could advance the watermark first and
-    // this overwrite would commit a REGRESSED one — the next batch would
-    // hand out ids the table's history already used
-    try writeTableImpl(spark, lh, tableName, dfi,
-      partitionBy, sortBy, zorderBy, bloomFilterFor, extraMeta ++ idMeta,
-      pinBase = if (idMeta.nonEmpty) baseG else None)
-    finally pin.foreach(_.unpersist())
-  }
-
-  private def writeTableImpl(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, df: DataFrame, partitionBy: Seq[String],
-      sortBy: Seq[String], zorderBy: Seq[String],
-      bloomFilterFor: Seq[String],
-      extraMeta: Map[String, String],
-      pinBase: Option[Long] = None): TableInfo = {
     require(sortBy.isEmpty || zorderBy.isEmpty,
       "sortBy (1-D clustering) and zorderBy (Z-curve) are exclusive")
     require(bloomFilterFor.intersect(partitionBy).isEmpty,
@@ -2578,77 +2550,89 @@ object TableIO {
     val prevManifest = prevVersion.flatMap(Versioned.readManifest(tableDir, _))
     val prevMeta = prevManifest.map(_.meta)
       .getOrElse(Map.empty[String, String])
-    val carried = prevMeta.filter { case (k, _) =>
-      k.startsWith(CheckPrefix) || k.startsWith(UniquePrefix) ||
-        k == CdfKey ||
-        k.startsWith(GeneratedPrefix) || k.startsWith(IdentityPrefix) ||
-        k.startsWith(IdentityMaxPrefix) || k.startsWith(DefaultPrefix) ||
-        // feature requirements are STICKY (Delta semantics): dropping them
-        // on overwrite would let a down-level writer ignore the carried
-        // identity/CDF/constraint declarations it cannot honor
-        k == Versioned.FeaturesKey }
-    val checks = checkConstraintsOf(prevMeta)
-    enforceChecks(df, checks, s"$tableName: overwrite")
-    // overwrite replaces the table wholesale, so uniqueness is a batch-
-    // internal property only
-    enforceUniqueWithin(df, uniqueConstraintsOf(prevMeta),
-      s"$tableName: overwrite")
-    // with the feed enabled, an overwrite is a modeled event: every current
-    // row streams as a delete, every replacement row as an insert (Delta
-    // CDF for INSERT OVERWRITE) — O(table), like the overwrite itself.
-    // The old side pins the pre-commit committed files NOW; the insert
-    // side reads the STAGED files at sidecar time — never a re-evaluation
-    // of the caller's plan, which could be nondeterministic and record
-    // rows that were never committed
-    val prevScanForCdf: Option[DataFrame] =
-      if (!cdfEnabled(prevMeta)) None
-      else prevManifest.map(m => scanSpec(spark,
-        Versioned.scanOf(tableDir, m, m.entries)))
-    // sortBy = 1-D data clustering: range-partition then sort within
-    // partitions so each parquet file covers a narrow key range — file- and
-    // row-group-level min/max statistics then let later scans with
-    // predicates on those columns skip most of a 100 TB table.
-    // zorderBy = multi-D clustering on the Z-curve: every listed dimension
-    // gets locality, so stats prune on any of them (see [[Zorder]]).
-    val clustered =
-      if (zorderBy.nonEmpty) Zorder.cluster(df, zorderBy)
-      else if (sortBy.isEmpty) df
-      else df.repartitionByRange(sortBy.map(org.apache.spark.sql.functions.col): _*)
-        .sortWithinPartitions(sortBy.map(org.apache.spark.sql.functions.col): _*)
-    val commit = Versioned.commitFiles(tableDir, df.schema.json,
-      // the CDF preimage is pinned to prevVersion (committing without
-      // pinning that base would let a concurrent commit slip between the
-      // pin and the claim, making the recorded feed diverge from the
-      // version this overwrite actually replaced — rows committed in the
-      // window would get neither a delete event nor survive); pinBase
-      // pins the identity-watermark read the same way
-      expectedBase = pinBase.orElse(
-        if (prevScanForCdf.isDefined) prevVersion else None),
-      meta = carried ++ extraMeta +
-        (PartitionByKey -> partitionBy.mkString(",")),
-      op = "WRITE",
-      beforeMarker = cdfSidecar(tableDir)(staged => prevScanForCdf.map { old =>
-        import org.apache.spark.sql.functions.lit
-        val inserts = scanSpec(spark, Versioned.ScanFiles(tableDir,
-          df.schema.json, staged.map(_.path)))
-          .withColumn("_change_type", lit("insert"))
-        old.withColumn("_change_type", lit("delete"))
-          .unionByName(inserts, allowMissingColumns = true)
-      }),
-      // manifest blooms skip whole FILES; parquet-native blooms on the same
-      // columns skip row groups WITHIN the files that survive
-      stage = t => writeStagedWithStats(clustered, t, partitionBy,
-        bloomFilterFor, parquetBloomCols = bloomFilterFor))
-    finishCommit(spark, lh, tableName, tableDir, commit, df.columns.toSeq, partitionBy)
+    // generated columns absent from the replacement data are computed
+    // before the overwrite proper (present ones validate via their
+    // CHECK); identity columns assign above the watermark, which never
+    // resets — values are not reused across overwrites (Delta semantics)
+    val (rows, idMeta, pin) = withIdentityAssigned(
+      withGeneratedColumns(withDefaultColumns(df, prevMeta), prevMeta),
+      prevMeta, s"$tableName: overwrite")
+    try {
+      val carried = prevMeta.filter { case (k, _) =>
+        k.startsWith(CheckPrefix) || k.startsWith(UniquePrefix) ||
+          k == CdfKey ||
+          k.startsWith(GeneratedPrefix) || k.startsWith(IdentityPrefix) ||
+          k.startsWith(IdentityMaxPrefix) || k.startsWith(DefaultPrefix) ||
+          // feature requirements are STICKY (Delta semantics): dropping
+          // them on overwrite would let a down-level writer ignore the
+          // carried identity/CDF/constraint declarations it cannot honor
+          k == Versioned.FeaturesKey }
+      enforceChecks(rows, checkConstraintsOf(prevMeta), s"$tableName: overwrite")
+      // overwrite replaces the table wholesale, so uniqueness is a batch-
+      // internal property only
+      enforceUniqueWithin(rows, uniqueConstraintsOf(prevMeta),
+        s"$tableName: overwrite")
+      // with the feed enabled, an overwrite is a modeled event: every
+      // current row streams as a delete, every replacement row as an insert
+      // (Delta CDF for INSERT OVERWRITE) — O(table), like the overwrite
+      // itself. The old side pins the pre-commit committed files NOW; the
+      // insert side reads the STAGED files at sidecar time — never a
+      // re-evaluation of the caller's plan, which could be nondeterministic
+      // and record rows that were never committed
+      val prevScanForCdf: Option[DataFrame] =
+        if (!cdfEnabled(prevMeta)) None
+        else prevManifest.map(m => scanSpec(spark,
+          Versioned.scanOf(tableDir, m, m.entries)))
+      // sortBy = 1-D data clustering: range-partition then sort within
+      // partitions so each parquet file covers a narrow key range — file-
+      // and row-group-level min/max statistics then let later scans with
+      // predicates on those columns skip most of a 100 TB table.
+      // zorderBy = multi-D clustering on the Z-curve: every listed
+      // dimension gets locality, so stats prune on any of them ([[Zorder]]).
+      val clustered =
+        if (zorderBy.nonEmpty) Zorder.cluster(rows, zorderBy)
+        else if (sortBy.isEmpty) rows
+        else rows.repartitionByRange(sortBy.map(org.apache.spark.sql.functions.col): _*)
+          .sortWithinPartitions(sortBy.map(org.apache.spark.sql.functions.col): _*)
+      val commit = Versioned.commitFiles(tableDir, rows.schema.json,
+        // the CDF preimage is pinned to prevVersion (committing without
+        // pinning that base would let a concurrent commit slip between the
+        // pin and the claim, making the recorded feed diverge from the
+        // version this overwrite actually replaced — rows committed in the
+        // window would get neither a delete event nor survive); ids were
+        // assigned above prevVersion's watermark, so an identity overwrite
+        // pins it too, or a concurrent append could advance the watermark
+        // first and this overwrite would commit a REGRESSED one
+        expectedBase =
+          if (idMeta.nonEmpty || prevScanForCdf.isDefined) prevVersion
+          else None,
+        meta = carried ++ extraMeta ++ idMeta +
+          (PartitionByKey -> partitionBy.mkString(",")),
+        op = "WRITE",
+        beforeMarker = cdfSidecar(tableDir)(staged => prevScanForCdf.map { old =>
+          import org.apache.spark.sql.functions.lit
+          val inserts = scanSpec(spark, Versioned.ScanFiles(tableDir,
+            rows.schema.json, staged.map(_.path)))
+            .withColumn("_change_type", lit("insert"))
+          old.withColumn("_change_type", lit("delete"))
+            .unionByName(inserts, allowMissingColumns = true)
+        }),
+        // manifest blooms skip whole FILES; parquet-native blooms on the
+        // same columns skip row groups WITHIN the files that survive
+        stage = t => writeStagedWithStats(clustered, t, partitionBy,
+          bloomFilterFor, parquetBloomCols = bloomFilterFor))
+      finishCommit(spark, lh, tableName, tableDir, commit,
+        rows.columns.toSeq, partitionBy)
+    } finally pin.foreach(_.unpersist())
   }
 
   /** APPEND-ONLY commit (Delta blind append): new rows land as new files;
     * every existing data file is inherited by reference — bytes written per
-    * call is O(batch), never O(table). A new nullable column in `df` is a
-    * schema evolution: the committed schema is the unionByName of old and
-    * new, and pre-evolution files read the new column as null. Concurrent
-    * commits are detected and the append retried against the new base
-    * (appends never semantically conflict).
+    * call is O(batch), never O(table). Staged by [[stageAppend]], so a new
+    * nullable column in `df` is a schema evolution and pre-evolution files
+    * read it as null. Concurrent commits are detected and the append
+    * retried against the new base (appends never semantically conflict) —
+    * up to `maxRetries` times under [[Versioned.retryOnConflict]].
     *
     * `pinBase` pins the commit CAS to the version the CALLER observed
     * instead of re-reading it here: `Some(v)` = caller saw version v,
@@ -2656,80 +2640,103 @@ object TableIO {
     * ALWAYS surfaces ConcurrentWriteException (never the internal retry):
     * the caller pinned precisely because its payload was derived from that
     * version's state — [[Ingest.copyInto]]'s loaded-file diff — and
-    * re-appending the same payload on a newer base could double-apply it. */
+    * re-appending the same payload on a newer base could double-apply it.
+    * Table creation is pinned to base 0 either way: two concurrent first
+    * appends race the claim of v1, and the loser retries as a NORMAL
+    * append against the winner's version (an unpinned overwrite would
+    * silently drop the winner's rows). */
   def appendTable(spark: SparkSession, lh: LakehouseProps, tableName: String,
       df: DataFrame, maxRetries: Int = 5,
       extraMeta: Map[String, String] = Map.empty,
       pinBase: Option[Long] = None): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    var attempt = 0
-    while (true) {
-      (pinBase match {
+    Versioned.retryOnConflict(if (pinBase.isDefined) 1 else maxRetries + 1) {
+      val base = pinBase match {
         case Some(0L) => None
         case Some(v) => Some(v -> Versioned.manifestOf(tableDir, v))
         case None => adopted(spark, tableDir)
-      }) match {
-        case None =>
-          // table creation pinned to base 0: two concurrent first appends
-          // race the claim of v1 — the loser gets ConcurrentWriteException
-          // and retries as a NORMAL append against the winner's version
-          // (an unpinned overwrite here would silently drop the winner's
-          // rows instead)
-          try {
-            val commit = Versioned.commitFiles(tableDir, df.schema.json,
-              expectedBase = Some(0L), meta = extraMeta, op = "APPEND",
-              stage = writeStagedWithStats(df, _))
-            return finishCommit(spark, lh, tableName, tableDir, commit,
-              df.columns.toSeq, Seq.empty)
-          } catch {
-            case e: Versioned.ConcurrentWriteException =>
-              attempt += 1
-              if (pinBase.isDefined || attempt > maxRetries) throw e
-          }
-        case Some((base, m)) =>
-          // generated columns (Delta generated-column semantics): absent
-          // in the batch -> computed here; present -> the paired CHECK
-          // constraint validates it below. Identity columns assign above
-          // the recorded watermark, which advances IN this commit (a lost
-          // race retries the whole block against the fresh manifest,
-          // re-reading both).
-          val dfg = withGeneratedColumns(
-            withDefaultColumns(df, m.meta), m.meta)
-          val (dfi, idMeta, pin) =
-            withIdentityAssigned(dfg, m.meta, s"$tableName: append")
-          try {
-            enforceChecks(dfi, checkConstraintsOf(m.meta), s"$tableName: append")
-            val uniques = uniqueConstraintsOf(m.meta)
-            enforceUniqueWithin(dfi, uniques, s"$tableName: append")
-            enforceUniqueAgainst(spark, tableDir, m, dfi, uniques,
-              s"$tableName: append")
-            val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-            val oldEmpty = spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], oldSchema)
-            // evolved schema = old ∪ new (by name); old columns keep their
-            // positions, brand-new ones append as nullable
-            val evolved = oldEmpty
-              .unionByName(dfi.limit(0), allowMissingColumns = true).schema
-            val aligned = oldEmpty.unionByName(dfi, allowMissingColumns = true)
-            val parts = partitionSpecOf(m.meta, m.files)
-            try {
-              val evolvedM = alignMapping(evolved, oldSchema, m.meta, base)
-              val commit = Versioned.commitFiles(tableDir, evolvedM.json,
-                inherit = m.entries, expectedBase = Some(base),
-                meta = m.meta ++ extraMeta ++ idMeta, op = "APPEND",
-                stage = t => writeStagedWithStats(
-                  toPhysical(aligned, evolvedM), t, parts, bloomColsOf(m)))
-              return finishCommit(spark, lh, tableName, tableDir, commit,
-                evolvedM.fieldNames.toSeq, parts)
-            } catch {
-              case e: Versioned.ConcurrentWriteException =>
-                attempt += 1
-                if (pinBase.isDefined || attempt > maxRetries) throw e
-            }
-          } finally pin.foreach(_.unpersist())
+      }
+      stageAppend(spark, tableDir, s"$tableName: append", df, base,
+          extraMeta) { a =>
+        val commit = Versioned.commitFiles(tableDir, a.schemaJson,
+          inherit = a.inherit, expectedBase = Some(a.base), meta = a.meta,
+          op = "APPEND", stage = a.stage)
+        finishCommit(spark, lh, tableName, tableDir, commit, a.columns,
+          a.partitionBy)
       }
     }
-    throw new IllegalStateException("unreachable")
+  }
+
+  /** One staged append, ready for [[Versioned.commitFiles]]: the schema
+    * to commit, the inherited entries, the base to pin (0 = new table),
+    * the commit meta and the staging step — plus the columns and the
+    * partition spec the catalog records. */
+  private[lakehouse] final case class AppendPlan(schemaJson: String,
+      inherit: Seq[Versioned.FileEntry], base: Long,
+      meta: Map[String, String], stage: String => Map[String, String],
+      columns: Seq[String], partitionBy: Seq[String])
+
+  /** The one append path: [[appendTable]], [[Txn.write]] and the streaming
+    * sink stage every batch here against `base` — the table's current
+    * version and manifest, None for a new table — and commit the plan in
+    * `commit`. In order:
+    *  1. fill omitted DEFAULT, then GENERATED columns, then assign
+    *     IDENTITY values above the base's watermark (the advanced
+    *     watermark rides the plan's meta, so a lost race re-reads it);
+    *  2. `conform` the filled batch (a caller's own shape rule);
+    *  3. enforce CHECK, then UNIQUE within the batch, then UNIQUE against
+    *     the table;
+    *  4. evolve the schema by name: old columns keep their positions and
+    *     physical names, new ones append nullable;
+    *  5. stage under the table's declared partition spec with its Bloom
+    *     columns. `partitionBy` lays out a new table and is recorded as
+    *     its spec; on an existing table a non-empty one must equal the
+    *     declared spec.
+    * The identity pin is released once `commit` returns or throws. */
+  private[lakehouse] def stageAppend[T](spark: SparkSession, tableDir: String,
+      ctx: String, df: DataFrame, base: Option[(Long, Versioned.Manifest)],
+      extraMeta: Map[String, String] = Map.empty,
+      partitionBy: Seq[String] = Seq.empty,
+      conform: DataFrame => DataFrame = identity)(
+      commit: AppendPlan => T): T = {
+    val meta = base.fold(Map.empty[String, String])(_._2.meta)
+    val parts = base.fold(partitionBy) { case (_, m) =>
+      val declared = partitionSpecOf(m.meta, m.files)
+      require(partitionBy.isEmpty || partitionBy == declared,
+        s"$ctx: partitionBy (${partitionBy.mkString(", ")}) differs from " +
+          s"the table's partitioning (${declared.mkString(", ")}); change " +
+          "it with evolvePartitioning")
+      declared
+    }
+    val (filled, idMeta, pin) = withIdentityAssigned(
+      withGeneratedColumns(withDefaultColumns(df, meta), meta), meta, ctx)
+    try {
+      val batch = conform(filled)
+      enforceChecks(batch, checkConstraintsOf(meta), ctx)
+      val uniques = uniqueConstraintsOf(meta)
+      enforceUniqueWithin(batch, uniques, ctx)
+      commit(base match {
+        case None =>
+          val spec =
+            if (parts.isEmpty) Map.empty[String, String]
+            else Map(PartitionByKey -> parts.mkString(","))
+          AppendPlan(batch.schema.json, Seq.empty, 0L, extraMeta ++ spec,
+            writeStagedWithStats(batch, _, parts), batch.columns.toSeq, parts)
+        case Some((b, m)) =>
+          enforceUniqueAgainst(spark, tableDir, m, batch, uniques, ctx)
+          val old = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+          val oldEmpty = spark.createDataFrame(
+            spark.sparkContext.emptyRDD[Row], old)
+          val evolved = alignMapping(oldEmpty
+            .unionByName(batch.limit(0), allowMissingColumns = true).schema,
+            old, m.meta, b)
+          val aligned = toPhysical(
+            oldEmpty.unionByName(batch, allowMissingColumns = true), evolved)
+          AppendPlan(evolved.json, m.entries, b, m.meta ++ extraMeta ++ idMeta,
+            writeStagedWithStats(aligned, _, parts, bloomColsOf(m)),
+            evolved.fieldNames.toSeq, parts)
+      })
+    } finally pin.foreach(_.unpersist())
   }
 
   private def finishCommit(spark: SparkSession, lh: LakehouseProps,
@@ -3601,23 +3608,11 @@ object TableIO {
     * aborts before any file reaches its final location. At 100 TB,
     * maintenance rebases handle OPTIMIZE-vs-ingest races
     * ([[commitMaintenance]]); this is the complementary piece for
-    * DML-vs-DML and DML-vs-ingest. Bounded attempts, linear backoff,
-    * rethrows the final conflict loudly. */
-  def withConflictRetry[T](attempts: Int = 3)(body: => T): T = {
-    require(attempts >= 1, "need at least one attempt")
-    var last: Throwable = null
-    var i = 0
-    while (i < attempts) {
-      try return body
-      catch {
-        case e: Versioned.ConcurrentWriteException =>
-          last = e
-          i += 1
-          if (i < attempts) Thread.sleep(20L * i)
-      }
-    }
-    throw last
-  }
+    * DML-vs-DML and DML-vs-ingest. The policy is the one every commit
+    * loop shares ([[Versioned.retryOnConflict]]): bounded attempts,
+    * 20 ms × attempt backoff, the final conflict rethrown loudly. */
+  def withConflictRetry[T](attempts: Int = 3)(body: => T): T =
+    Versioned.retryOnConflict(attempts)(body)
 
   /** RESTORE TABLE ... TO TIMESTAMP AS OF: resolve the newest version a
     * reader could have seen at `tsMillis` — by IN-COMMIT timestamps, so
@@ -4431,7 +4426,9 @@ object TableIO {
     * evolve, and the change-feed flag did not flip. At 100 TB, OPTIMIZE
     * always races streaming ingest; under the strict check maintenance
     * would never land (Delta resolves the same append-vs-OPTIMIZE races
-    * logically, for the same reason).
+    * logically, for the same reason). The rebase runs between the
+    * attempts of [[Versioned.retryOnConflict]]; a refused rebase rethrows
+    * the conflict at once.
     *
     * `affected`: the input entries the op consumed (conflict-checked per
     * retry). `replaced`: entries the op contributes directly into the
@@ -4450,36 +4447,28 @@ object TableIO {
       beforeMarker: (Long, Seq[Versioned.FileEntry], String) => Unit =
         (_, _, _) => (),
       replaced: Seq[Versioned.FileEntry] = Seq.empty,
-      maxRetries: Int = 5,
       stage: String => Map[String, String] = _ => Map.empty)
       : Versioned.Commit = {
     val affectedSer = affected.map(_.serialized).toSet
     val affectedPaths = affected.map(_.path).toSet
     var b = firstBase
     var m = firstM
-    var attempt = 0
-    while (true) {
-      val inherit =
-        m.entries.filterNot(e => affectedPaths(e.path)) ++ replaced
-      try {
-        return Versioned.commitFiles(tableDir, m.schemaJson,
-          inherit = inherit, expectedBase = Some(b), meta = metaOf(m.meta),
-          beforeMarker = beforeMarker, op = op, stage = stage)
-      } catch {
-        case e: Versioned.ConcurrentWriteException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          val b2 = Versioned.latestVersion(tableDir).getOrElse(throw e)
-          val m2 = Versioned.readManifest(tableDir, b2).getOrElse(throw e)
-          val present = m2.entries.map(_.serialized).toSet
-          if (m2.schemaJson != m.schemaJson ||
-              cdfEnabled(m2.meta) != cdfEnabled(m.meta) ||
-              !affectedSer.forall(present)) throw e
-          b = b2
-          m = m2
-      }
+    def rebase(e: Versioned.ConcurrentWriteException): Unit = {
+      val b2 = Versioned.latestVersion(tableDir).getOrElse(throw e)
+      val m2 = Versioned.readManifest(tableDir, b2).getOrElse(throw e)
+      val present = m2.entries.map(_.serialized).toSet
+      if (m2.schemaJson != m.schemaJson ||
+          cdfEnabled(m2.meta) != cdfEnabled(m.meta) ||
+          !affectedSer.forall(present)) throw e
+      b = b2
+      m = m2
     }
-    throw new IllegalStateException("unreachable")
+    Versioned.retryOnConflict(Versioned.ConflictAttempts, rebase) {
+      Versioned.commitFiles(tableDir, m.schemaJson,
+        inherit = m.entries.filterNot(e => affectedPaths(e.path)) ++ replaced,
+        expectedBase = Some(b), meta = metaOf(m.meta),
+        beforeMarker = beforeMarker, op = op, stage = stage)
+    }
   }
 
   /** One auto-maintenance tick (the scheduler loop a lakehouse platform

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -77,8 +77,9 @@ object Txn {
   }
 
   /** Stage an append of `df` to `tableName` inside the transaction. The
-    * data and manifest commit NOW (CHECK constraints enforced, per-file
-    * stats collected, partitioning preserved) but stay invisible until
+    * data and manifest commit NOW (defaults, generated and identity
+    * columns filled, CHECK and UNIQUE constraints enforced, per-file stats
+    * collected, the declared partitioning kept) but stay invisible until
     * [[commit]]. Throws [[Versioned.ConcurrentWriteException]] if the
     * table advances between base read and claim — including another
     * transaction's pending write — in which case the whole transaction
@@ -147,58 +148,44 @@ object Txn {
   }
 
   /** Stage one table's append and return its pending version (does not
-    * touch the handle's registration state — callers do). */
+    * touch the handle's registration state — callers do). The batch goes
+    * through [[TableIO.stageAppend]] like any append: identity / generated
+    * / default columns fill from the BASE (last visible) manifest and the
+    * advanced watermark rides this commit's meta. Watermark atomicity falls
+    * out of the outcome protocol: while the version is pending the claim
+    * CAS blocks every other writer of this table, and an ABORTED version's
+    * meta is never a write base — the next writer re-reads the last
+    * VISIBLE watermark, so ids staged by an aborted transaction are
+    * reissued, never leaked. */
   private def stageOne(h: Handle, spark: SparkSession, tableName: String,
       tableDir: String, df: DataFrame): Long = {
-    val ref: (Long, Seq[Versioned.FileEntry], String) => Unit =
-      (v, _, cid) => writeRef(tableDir, v, cid, h.outcome)
-    val commit = TableIO.adopted(spark, tableDir) match {
-      case None =>
-        Versioned.commitFiles(tableDir, df.schema.json,
-          expectedBase = Some(0L),
-          // a reader that does not understand txn refs would see PENDING
-          // versions as committed — gate it through the features protocol
-          meta = Versioned.withFeature(
-            Map.empty[String, String], "multiTableTxn"),
-          beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id),
-          stage = TableIO.writeStagedWithStats(df, _))
-      case Some((b, m)) =>
-        require(!TableIO.cdfEnabled(m.meta),
-          s"$tableName has the change feed enabled — feed consumers read " +
-            "version-contiguous sidecars; not supported inside transactions")
-        // Identity / generated columns: assigned exactly as an ordinary
-        // append (values computed from the BASE manifest's watermark, the
-        // advanced watermark riding this commit's meta). Watermark
-        // atomicity falls out of the outcome protocol: while the version
-        // is pending the claim CAS blocks every other writer of this
-        // table, and an ABORTED version's meta is never a write base —
-        // the next writer re-reads the last VISIBLE watermark, so ids
-        // staged by an aborted transaction are reissued, never leaked.
-        val dfg = TableIO.withGeneratedColumns(
-          TableIO.withDefaultColumns(df, m.meta), m.meta)
-        val (dfi, idMeta, pin) =
-          TableIO.withIdentityAssigned(dfg, m.meta, s"$tableName: txn append")
-        try {
-          val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-          require(dfi.columns.toSet == schema.fieldNames.toSet,
-            s"$tableName: transactional append must match the table's " +
-              s"columns exactly (table: ${schema.fieldNames.mkString(",")}; " +
-              s"batch: ${dfi.columns.mkString(",")})")
-          val aligned = dfi.select(schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-          TableIO.enforceChecks(aligned, TableIO.checkConstraintsOf(m.meta),
-            s"$tableName: txn append")
-          val parts = TableIO.partitioningOfFiles(m.files)
-          Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-            expectedBase = Some(b),
-            meta = Versioned.withFeature(m.meta ++ idMeta, "multiTableTxn"),
-            beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id),
-            stage = t => TableIO.writeStagedWithStats(
-              TableIO.toPhysical(aligned, schema), t, parts,
-              TableIO.bloomColsOf(m)))
-        } finally pin.foreach(_.unpersist())
+    val base = TableIO.adopted(spark, tableDir)
+    val schema = base.map { case (_, m) =>
+      require(!TableIO.cdfEnabled(m.meta),
+        s"$tableName has the change feed enabled — feed consumers read " +
+          "version-contiguous sidecars; not supported inside transactions")
+      DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     }
-    commit.version
+    // a transaction never changes an existing table's schema: after the
+    // fill the batch must carry exactly its columns, cast to its types
+    def conform(filled: DataFrame): DataFrame = schema.fold(filled) { s =>
+      require(filled.columns.toSet == s.fieldNames.toSet,
+        s"$tableName: transactional append must match the table's " +
+          s"columns exactly (table: ${s.fieldNames.mkString(",")}; " +
+          s"batch: ${filled.columns.mkString(",")})")
+      filled.select(s.fields.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+    }
+    TableIO.stageAppend(spark, tableDir, s"$tableName: txn append", df, base,
+        conform = conform) { a =>
+      Versioned.commitFiles(tableDir, a.schemaJson, inherit = a.inherit,
+        expectedBase = Some(a.base),
+        // a reader that does not understand txn refs would see PENDING
+        // versions as committed — gate it through the features protocol
+        meta = Versioned.withFeature(a.meta, "multiTableTxn"),
+        beforeMarker = (v, _, cid) => writeRef(tableDir, v, cid, h.outcome),
+        op = "TXN APPEND", txn = Some(h.id), stage = a.stage).version
+    }
   }
 
   /** Refresh the transaction's liveness clock (every ref's mtime). Call

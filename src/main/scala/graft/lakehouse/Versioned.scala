@@ -190,6 +190,32 @@ object Versioned {
     * of the table is stale. Re-read and retry (Delta MERGE semantics). */
   final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
 
+  /** The conflict-retry policy every optimistic writer shares: run `body`
+    * up to `attempts` times while it loses the commit race, sleeping
+    * 20 ms × attempt between tries, and rethrow the last conflict. Each
+    * attempt must re-read its base, so a retry is a serial re-execution,
+    * never a repair. `rebase` runs between attempts with the lost
+    * conflict; it throws (typically that conflict) to stop retrying at
+    * once. Failures other than a lost race pass through unretried. */
+  def retryOnConflict[T](attempts: Int,
+      rebase: ConcurrentWriteException => Unit = _ => ())(body: => T): T = {
+    require(attempts >= 1, "need at least one attempt")
+    def run(attempt: Int): T =
+      try body
+      catch {
+        case e: ConcurrentWriteException if attempt < attempts =>
+          rebase(e)
+          Thread.sleep(20L * attempt)
+          run(attempt + 1)
+      }
+    run(1)
+  }
+
+  /** [[retryOnConflict]]'s budget for writers whose caller sets none (the
+    * streaming sink, maintenance commits): the first try and five
+    * retries. */
+  private[lakehouse] val ConflictAttempts = 6
+
   private def marker(tableDir: Path, v: Long): Path =
     tableDir.resolve(s"$MarkerPrefix$v")
   private def manifestPath(tableDir: Path, v: Long): Path =

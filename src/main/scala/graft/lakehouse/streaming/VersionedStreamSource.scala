@@ -1,6 +1,6 @@
 package graft.lakehouse.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext}
+import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.graftbridge.StreamBridge
@@ -127,69 +127,34 @@ class VersionedTableProvider extends StreamSourceProvider
   * Delta's txn-action idempotence, not best-effort dedup. Maintenance
   * commits (merge/compact/delete) carry manifest meta forward, so the
   * watermark survives them; a plain overwrite resets it (full-replace
-  * semantics). Concurrent batch writers retry through the optimistic
-  * protocol like any other append. */
+  * semantics).
+  *
+  * Each batch is staged by [[TableIO.stageAppend]], the append path
+  * `appendTable` and transactions share: defaults, generated and identity
+  * columns fill, CHECK and UNIQUE constraints hold, the schema evolves by
+  * name, and files land under the table's declared partition spec.
+  * `partitionBy` lays out a table the sink creates; on an existing table a
+  * different non-empty spec is refused. A lost commit race retries under
+  * [[Versioned.retryOnConflict]], the policy every writer shares. */
 class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
     tableDir: String, partitionColumns: Seq[String], appId: String)
     extends Sink {
 
   private val txnKey = s"txn:$appId"
-  private val maxRetries = 5
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val batch = StreamBridge.asBatch(spark, data)
-    var attempt = 0
-    while (true) {
-      val (base, m) = TableIO.adopted(spark, tableDir).unzip
+    Versioned.retryOnConflict(Versioned.ConflictAttempts) {
+      val base = TableIO.adopted(spark, tableDir)
       // exactly-once: a replayed (crash-recovered) batch is already in the
       // committed watermark — skip it
-      if (m.exists(_.meta.get(txnKey).exists(_.toLong >= batchId))) return
-      try {
-        m match {
-          case None =>
-            // pinned to base 0: a concurrent creator forces a retry as a
-            // normal append instead of silently superseding its commit
-            Versioned.commitFiles(tableDir, batch.schema.json,
-              expectedBase = Some(0L),
-              meta = Map(txnKey -> batchId.toString),
-              op = "STREAM APPEND",
-              stage = TableIO.writeStagedWithStats(batch, _))
-          case Some(man) =>
-            TableIO.enforceChecks(batch,
-              TableIO.checkConstraintsOf(man.meta), s"$tableDir: sink batch")
-            // align to the table schema by name (same evolution rule as
-            // TableIO.appendTable): old columns keep positions, new ones
-            // append nullable, pre-evolution files read them as null
-            val oldSchema =
-              DataType.fromJson(man.schemaJson).asInstanceOf[StructType]
-            val oldEmpty = spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], oldSchema)
-            val evolved = oldEmpty
-              .unionByName(batch.limit(0), allowMissingColumns = true).schema
-            // carry column-mapping metadata and tombstone remaps exactly
-            // like the batch append path — a renamed table's stream must
-            // keep writing the PHYSICAL names
-            val evolvedM = TableIO.alignMapping(evolved, oldSchema,
-              man.meta, base.getOrElse(0L))
-            val aligned =
-              oldEmpty.unionByName(batch, allowMissingColumns = true)
-            val parts =
-              if (partitionColumns.nonEmpty) partitionColumns
-              else TableIO.partitionSpecOf(man.meta, man.files)
-            Versioned.commitFiles(tableDir, evolvedM.json,
-              inherit = man.entries, expectedBase = base,
-              meta = man.meta + (txnKey -> batchId.toString),
-              op = "STREAM APPEND",
-              stage = t => TableIO.writeStagedWithStats(
-                TableIO.toPhysical(aligned, evolvedM), t, parts,
-                TableIO.bloomColsOf(man)))
+      if (!base.exists(_._2.meta.get(txnKey).exists(_.toLong >= batchId)))
+        TableIO.stageAppend(spark, tableDir, s"$tableDir: sink batch", batch,
+            base, Map(txnKey -> batchId.toString), partitionColumns) { a =>
+          Versioned.commitFiles(tableDir, a.schemaJson, inherit = a.inherit,
+            expectedBase = Some(a.base), meta = a.meta, op = "STREAM APPEND",
+            stage = a.stage)
         }
-        return
-      } catch {
-        case e: Versioned.ConcurrentWriteException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
     }
   }
 
@@ -298,7 +263,7 @@ class VersionedTableSource(spark: org.apache.spark.sql.SparkSession,
       case Some(s) =>
         TableIO.changeFeedAtPath(spark, tableDir, ver(s), Some(endV))
     }
-    // align to the pinned stream schema (unionByName output can reorder)
+    // align to the pinned stream schema (the feed's union can reorder)
     val aligned = batch.select(schema.fieldNames.map(col).toSeq: _*)
     StreamBridge.asStreaming(spark, aligned)
   }

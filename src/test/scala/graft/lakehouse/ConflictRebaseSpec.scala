@@ -95,4 +95,30 @@ class ConflictRebaseSpec extends SparkSuite {
     assert(TableIO.selectTable(spark, lh, "rb3").count() == 25)
     TableIO.dropTable(spark, lh, "rb3")
   }
+
+  test("conflicts are caught in three places only: the shared retry " +
+      "helper, adopt's CONVERT race, and ingest's ledger consolidation") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"sources not found under $root")
+    val catchSite =
+      """case\s+\w+\s*:\s*(Versioned\.)?ConcurrentWriteException\b""".r
+    val walk = Files.walk(root)
+    val sites =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toSeq.flatMap { f =>
+          val src = new String(Files.readAllBytes(f), "UTF-8")
+          catchSite.findAllMatchIn(src).map { hit =>
+            // the enclosing member: the last object-level def before it
+            val name = """\n  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+              .findAllMatchIn(src.substring(0, hit.start)).toSeq
+              .lastOption.map(_.group(1)).getOrElse("?")
+            s"${f.getFileName}:$name"
+          }
+        }
+      finally walk.close()
+    assert(sites.sorted == Seq("Ingest.scala:consolidate",
+      "TableIO.scala:adopted", "Versioned.scala:retryOnConflict"),
+      s"ConcurrentWriteException caught at: ${sites.sorted.mkString(", ")}")
+  }
 }

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+
 /** Multi-table transactions: all-or-nothing visibility across tables,
   * steal-abort of crashed transactions, conflict serialization, and the
   * protocol edges (dead-version allocation, restore guard, ref litter). */
@@ -330,5 +332,92 @@ class TxnSpec extends SparkSuite {
       .select("k", "k2").as[(Int, Int)].collect().toSet
     assert(got == Set((2, 4), (3, 9), (4, 16), (5, 25)))
     TableIO.dropTable(spark, lh, "tgen")
+  }
+
+  /** Spark jobs `body` starts, counted by job group (pool threads the body
+    * spawns inherit the group), after the listener bus has caught up. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsOf", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      Thread.sleep(300) // job-start events reach listeners asynchronously
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** One sink micro-batch into table `t`, as its next batch id. */
+  private def sinkBatch(t: String, batchId: Long, df: DataFrame): Unit =
+    new streaming.VersionedTableProvider().createSink(spark.sqlContext,
+      Map("path" -> Catalog.tablePath(lh, t)), Seq.empty,
+      org.apache.spark.sql.streaming.OutputMode.Append())
+      .addBatch(batchId, df)
+
+  test("appendTable, Txn.write and a sink micro-batch stage alike: the " +
+      "same filled values, the same UNIQUE rejections, the declared layout") {
+    var batchId = 0L
+    val writers: Seq[(String, (String, DataFrame) => Unit)] = Seq(
+      "append" -> { (t, df) => TableIO.appendTable(spark, lh, t, df); () },
+      "txn" -> { (t, df) =>
+        val h = Txn.begin(lh)
+        try Txn.write(h, spark, lh, t, df)
+        catch { case e: Throwable => Txn.abort(h); throw e }
+        Txn.commit(h)
+      },
+      "sink" -> { (t, df) => batchId += 1; sinkBatch(t, batchId, df) })
+    writers.foreach { case (name, write) =>
+      val t = s"same_$name"
+      TableIO.writeTable(spark, lh, t,
+        Seq((1L, 1, "a", 10)).toDF("id", "k", "s", "g"))
+      TableIO.setIdentityColumn(spark, lh, t, "id")
+      TableIO.setColumnDefault(spark, lh, t, "s", "'dflt'")
+      TableIO.setGeneratedColumn(spark, lh, t, "g", "k * 10")
+      TableIO.addUniqueConstraint(spark, lh, t, "uk", Seq("k"))
+      write(t, Seq(2, 3).toDF("k"))
+      // a key already in the table, then a key twice in one batch
+      Seq(Seq(3), Seq(7, 7)).foreach { keys =>
+        val e = intercept[IllegalArgumentException](write(t, keys.toDF("k")))
+        assert(e.getMessage.contains("UNIQUE"), s"$name: ${e.getMessage}")
+      }
+      TableIO.evolvePartitioning(spark, lh, t, Seq("s"))
+      val before = TableIO.currentFiles(lh, t).toSet
+      write(t, Seq(4).toDF("k"))
+      val added = TableIO.currentFiles(lh, t).filterNot(before)
+      assert(added.nonEmpty && added.forall(_.getParent.getFileName
+        .toString == "s=dflt"), s"$name wrote outside the spec: $added")
+      val got = TableIO.selectTable(spark, lh, t)
+        .select("id", "k", "s", "g").as[(Long, Int, String, Int)]
+        .collect().sortBy(_._2).toSeq
+      assert(got == Seq((1L, 1, "a", 10), (2L, 2, "dflt", 20),
+        (3L, 3, "dflt", 30), (4L, 4, "dflt", 40)), s"$name: $got")
+      TableIO.dropTable(spark, lh, t)
+    }
+  }
+
+  test("jobs per commit stay pinned: one sink micro-batch into a plain " +
+      "table, one Txn.writeAll of two plain tables") {
+    TableIO.writeTable(spark, lh, "jobs_s", Seq((1, "a")).toDF("k", "s"))
+    val sinkJobs = jobsOf(sinkBatch("jobs_s", 0L,
+      Seq((2, "b"), (3, "c")).toDF("k", "s")))
+    TableIO.writeTable(spark, lh, "jobs_a", Seq(1).toDF("k"))
+    TableIO.writeTable(spark, lh, "jobs_b", Seq(10).toDF("k"))
+    val h = Txn.begin(lh)
+    val txnJobs = jobsOf(Txn.writeAll(h, spark, lh,
+      Seq("jobs_a" -> Seq(2).toDF("k"), "jobs_b" -> Seq(20).toDF("k"))))
+    Txn.commit(h)
+    // the staged write job per table and nothing else
+    assert((sinkJobs, txnJobs) == (1, 2),
+      s"sink micro-batch ran $sinkJobs jobs, Txn.writeAll $txnJobs")
+    assert(rowsOf("jobs_a") == Set(1, 2) && rowsOf("jobs_b") == Set(10, 20))
+    Seq("jobs_s", "jobs_a", "jobs_b").foreach(TableIO.dropTable(spark, lh, _))
   }
 }

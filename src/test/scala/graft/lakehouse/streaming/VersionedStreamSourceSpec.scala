@@ -266,4 +266,31 @@ class VersionedStreamSourceSpec extends SparkSuite {
     assert(df.isStreaming && df.schema.fieldNames.sameElements(Array("k", "s")))
     TableIO.dropTable(spark, lh, "feed4")
   }
+
+  test("sink partitionBy lays out the table it creates and records the " +
+      "spec; a different spec on an existing table is refused") {
+    val provider = new VersionedTableProvider
+    val tdir = Catalog.tablePath(lh, "sunkp")
+    def sink(parts: Seq[String]) = provider.createSink(spark.sqlContext,
+      Map("path" -> tdir), parts,
+      org.apache.spark.sql.streaming.OutputMode.Append())
+    sink(Seq("s")).addBatch(0, Seq((1, "a"), (2, "b")).toDF("k", "s"))
+    val m = Versioned.readManifest(tdir, Versioned.latestVersion(tdir).get).get
+    assert(m.meta.get("graft.partitionBy").contains("s"), m.meta.toString)
+    assert(m.files.map(_.split('/').head).toSet == Set("s=a", "s=b"),
+      m.files.toString)
+    // the same spec, or none, keeps writing under the declared layout
+    sink(Seq("s")).addBatch(1, Seq((3, "c")).toDF("k", "s"))
+    sink(Seq.empty).addBatch(2, Seq((4, "a")).toDF("k", "s"))
+    val files = Versioned.readManifest(tdir,
+      Versioned.latestVersion(tdir).get).get.files
+    assert(files.forall(_.matches("s=[abc]/[^/]+")), files.toString)
+    intercept[IllegalArgumentException] {
+      sink(Seq("k")).addBatch(3, Seq((5, "d")).toDF("k", "s"))
+    }
+    val rows = TableIO.selectTable(spark, lh, "sunkp")
+      .select("k").collect().map(_.getInt(0)).toSeq.sorted
+    assert(rows == Seq(1, 2, 3, 4))
+    TableIO.dropTable(spark, lh, "sunkp")
+  }
 }
