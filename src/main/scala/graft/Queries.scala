@@ -21,13 +21,14 @@ object QFixtures {
   // never data: each spark.read.parquet call re-lists the path and
   // re-infers the schema from footers, which a 450-query bench pays
   // ~1800 times for the same immutable fixture files. Every action on
-  // the memoized frame still scans the parquet from disk. Keyed WEAKLY
-  // by the session OBJECT so a stopped-and-recreated session never
-  // hands out frames bound to a dead context (the test suites do
-  // exactly that) and dead sessions' entries stay collectable —
-  // identityHashCode alone could collide across sessions.
+  // the memoized frame still scans the parquet from disk. Keyed by the
+  // session OBJECT so a stopped-and-recreated session never hands out
+  // frames bound to a dead context (identityHashCode alone could collide
+  // across sessions). A memoized frame holds its session, so weak keys
+  // would never let an entry go: a new session's first lookup drops the
+  // entries of sessions whose context has stopped instead.
   private val frames = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
+    new java.util.HashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]])
 
   private def sessionFrames(spark: SparkSession)
@@ -38,6 +39,7 @@ object QFixtures {
       val again = frames.get(spark)
       if (again != null) again
       else {
+        frames.keySet.removeIf(_.sparkContext.isStopped)
         val fresh =
           new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
         frames.put(spark, fresh)
@@ -45,6 +47,9 @@ object QFixtures {
       }
     }
   }
+
+  /** How many sessions hold memoized frames. */
+  private[graft] def memoizedSessions: Int = frames.size
 
   /** Load a driver-generated fixture table (TESTDATA.md layout). */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =

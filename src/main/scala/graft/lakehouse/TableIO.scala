@@ -1044,15 +1044,11 @@ object TableIO {
       case _ => false
     })
 
-  /** Staging-relative paths of every parquet file under `stagingDir`. */
+  /** Staging-relative paths of the data files staged under `stagingDir`
+    * (change rows staged beside them excluded). */
   private def listStagedParquetRel(stagingDir: String): Seq[String] = {
     val root = Paths.get(stagingDir)
-    if (!Files.isDirectory(root)) return Seq.empty
-    val walk = Files.walk(root)
-    try walk.iterator.asScala.filter(p =>
-      Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map(p => root.relativize(p).toString).toSeq
-    finally walk.close()
+    Versioned.stagedDataFiles(root).map(p => root.relativize(p).toString)
   }
 
   /** Shared stats-JSON renderer: one staged file's raw numbers → the
@@ -2576,7 +2572,7 @@ object TableIO {
       // current row streams as a delete, every replacement row as an insert
       // (Delta CDF for INSERT OVERWRITE) — O(table), like the overwrite
       // itself. The old side pins the pre-commit committed files NOW; the
-      // insert side reads the STAGED files at sidecar time — never a
+      // insert side reads the STAGED files after the data write — never a
       // re-evaluation of the caller's plan, which could be nondeterministic
       // and record rows that were never committed
       val prevScanForCdf: Option[DataFrame] =
@@ -2609,18 +2605,16 @@ object TableIO {
         meta = carried ++ extraMeta ++ idMeta +
           (PartitionByKey -> partitionBy.mkString(",")),
         op = "WRITE",
-        beforeMarker = cdfSidecar(tableDir)(staged => prevScanForCdf.map { old =>
-          import org.apache.spark.sql.functions.lit
-          val inserts = scanSpec(spark, Versioned.ScanFiles(tableDir,
-            rows.schema.json, staged.map(_.path)))
-            .withColumn("_change_type", lit("insert"))
-          old.withColumn("_change_type", lit("delete"))
-            .unionByName(inserts, allowMissingColumns = true)
-        }),
         // manifest blooms skip whole FILES; parquet-native blooms on the
         // same columns skip row groups WITHIN the files that survive
-        stage = t => writeStagedWithStats(clustered, t, partitionBy,
-          bloomFilterFor, parquetBloomCols = bloomFilterFor))
+        stage = withChangeRows(spark, prevScanForCdf.map(old =>
+          FromStaged(rows.schema.json, staged => {
+            import org.apache.spark.sql.functions.lit
+            old.withColumn("_change_type", lit("delete")).unionByName(
+              staged.withColumn("_change_type", lit("insert")),
+              allowMissingColumns = true)
+          })))(t => writeStagedWithStats(clustered, t, partitionBy,
+          bloomFilterFor, parquetBloomCols = bloomFilterFor)))
       finishCommit(spark, lh, tableName, tableDir, commit,
         rows.columns.toSeq, partitionBy)
     } finally pin.foreach(_.unpersist())
@@ -2819,151 +2813,41 @@ object TableIO {
     *
     * Schema evolution: an update set carrying a NEW nullable column widens
     * the table schema (unionByName); untouched files read it as null.
-    * One shuffle on the key columns for the rewrite itself. */
+    * With the change feed on, matched rows stage update pre/post images and
+    * new keys stage inserts ([[replaceKeyedRows]]). */
   def mergeTable(spark: SparkSession, lh: LakehouseProps, tableName: String,
       updates: DataFrame, keyCols: Seq[String],
       checkDuplicateKeys: Boolean = true,
       extraMeta: Map[String, String] = Map.empty): TableInfo = {
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "mergeTable needs at least one key column")
-    val keyColumns = keyCols.map(org.apache.spark.sql.functions.col)
-    // whole-row upserts take every column from the SOURCE — on an identity
-    // table that means caller-fabricated ids for new keys, which the
-    // watermark would later hand out AGAIN (duplicate "unique" ids), or
-    // null ids if the source omits the column. Reject loudly BEFORE the
-    // O(updates) validation jobs below: mergeInto preserves target ids on
-    // update and engine-assigns them on insert.
-    val tableDir = Catalog.tablePath(lh, tableName)
-    val (b, m) = existing(spark, lh, tableName)
-    locally {
-      val idDecl = identityColsOf(m.meta)
-      require(idDecl.isEmpty,
-        s"$tableName has GENERATED ALWAYS AS IDENTITY column(s) " +
-          s"${idDecl.mkString(", ")} — whole-row mergeTable would take ids " +
-          "from the source; use mergeInto instead")
-    }
-    // ONE aggregation answers both preconditions AND supplies the distinct
-    // key set every later phase joins against (this used to be two jobs
-    // over the update set, plus a separate distinct): groups with
-    // count > 1 are duplicate keys (Delta MERGE errors on those — silently
-    // unioning both rows would corrupt key uniqueness), and a group with a
-    // NULL key component is an unjoinable update (null = null is never
-    // true: it could neither match existing rows nor be separated from
-    // kept rows for the change feed) — reject loudly rather than
-    // half-apply. The persisted group frame then doubles as updKeys, so
-    // `updates` is evaluated exactly once.
-    val groupedShared: Option[DataFrame] = {
-      import org.apache.spark.sql.functions.col
-      val nullKey = keyColumns.map(_.isNull).reduce(_ || _)
-      if (checkDuplicateKeys) {
-        val grouped = updates.groupBy(keyColumns: _*).count()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bad = try grouped.filter(nullKey || col("count") > 1)
-          .limit(1).collect()
-        catch { case e: Throwable => grouped.unpersist(); throw e }
-        bad.headOption.foreach { r =>
-          grouped.unpersist()
-          val isNull = keyCols.indices.exists(r.isNullAt)
-          require(!isNull,
-            s"mergeTable: updates contain a NULL merge key: $r")
-          require(false,
-            s"mergeTable: updates contain multiple rows for key $r")
-        }
-        Some(grouped)
-      } else {
-        // checkDuplicateKeys=false is the pre-deduped pipelines' escape
-        // hatch from the aggregation job — the null-key check stays a
-        // cheap early-terminating filter scan
-        val nullKeyed = updates.filter(nullKey).limit(1).collect()
-        require(nullKeyed.isEmpty,
-          s"mergeTable: updates contain a NULL merge key: " +
-            s"${nullKeyed.headOption.getOrElse("")}")
-        None
-      }
-    }
-    try {
-      if (!cdfEnabled(m.meta))
-        // without a change feed to stage, MERGE is exactly the generalized
-        // replace primitive with removal keys = update keys
-        // removal keys from the validated key frame when available: the
-        // internal distinct then folds a cached key set, not the raw
-        // updates plan
-        replaceKeyedRows(spark, lh, tableName,
-          groupedShared.map(_.select(keyColumns: _*)).getOrElse(updates),
-          updates, keyCols, extraMeta = extraMeta, op = "MERGE")
-      else {
-        enforceChecks(updates, checkConstraintsOf(m.meta), s"$tableName: merge")
-        val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        // the validation aggregation above already materialized the
-        // distinct key set — reuse it instead of re-aggregating `updates`
-        val updKeys = groupedShared.map(_.select(keyColumns: _*)).getOrElse(
-          updates.select(keyColumns: _*).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        try {
-          // 1. affected files: key-columns-only columnar scan + semi join —
-          // reads keyCols bytes of the table, not the table. (The empty-
-          // manifest scan has no _metadata column — and no files to match.)
-          import org.apache.spark.sql.functions.col
-          val affectedPaths =
-            if (m.entries.isEmpty) Set.empty[String]
-            else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
-              keepMeta = true)
-              .select(keyColumns :+ col(FpCol).as("__fp"): _*)
-              .join(updKeys, keyCols, "left_semi")
-              .select("__fp").distinct()
-              .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-          val baseP = Paths.get(tableDir)
-          val (affected, untouched) = m.entries.partition(e =>
-            affectedPaths.contains(baseP.resolve(e.path).toString))
-          // 2. rewrite ONLY the affected files; inherit the rest
-          val affectedDf =
-            if (affected.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
-            else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-          val kept = affectedDf.join(updKeys, keyCols, "left_anti")
-          val rewritten = kept.unionByName(updates, allowMissingColumns = true)
-          val parts = partitionSpecOf(m.meta, m.files)
-          // change data feed: matched rows emit pre+post images, new keys
-          // emit inserts; staged atomically with the commit (beforeMarker).
-          // Post/insert rows come from the STAGED (committed) files, never
-          // a re-evaluation of the caller's `updates` plan — staged rows
-          // whose key is in updKeys are exactly the update rows as written
-          // (kept rows were anti-joined out)
-          val writeCdf = cdfSidecar(tableDir) { staged =>
-            import org.apache.spark.sql.expressions.Window
-            import org.apache.spark.sql.functions.{coalesce, lit, max, when}
-            // pre-images: the affected files read again, filtered to the
-            // updated keys — nothing cached, O(updated rows) kept
-            val pre = affectedDf.join(updKeys, keyCols, "left_semi")
-              .withColumn("_change_type", lit("update_preimage"))
-            val newRows = scanSpec(spark, Versioned.ScanFiles(tableDir,
-              alignMapping(rewritten.schema, oldSchema, m.meta, b).json,
-              staged.map(_.path)))
-              .join(updKeys, keyCols, "left_semi")
-              .withColumn("_change_type", lit(null).cast(StringType))
-            // a staged update row is a post-image iff its key has a
-            // pre-image, else an insert: one window over the key on the
-            // union classifies it, so the pre-images are read once
-            val hasPre = max(col("_change_type").isNotNull)
-              .over(Window.partitionBy(keyColumns: _*))
-            Some(pre.unionByName(newRows, allowMissingColumns = true)
-              .withColumn("_change_type", coalesce(col("_change_type"),
-                when(hasPre, lit("update_postimage"))
-                  .otherwise(lit("insert")))))
-          }
-          val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
-          val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
-            inherit = untouched, expectedBase = Some(b),
-            // extraMeta rides the SAME manifest (streaming upsert txn
-            // watermarks need batch-id-and-data atomicity)
-            meta = m.meta ++ extraMeta,
-            beforeMarker = writeCdf, op = "MERGE",
-            stage = t => writeStagedWithStats(
-              toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
-          finishCommit(spark, lh, tableName, tableDir, commit,
-            rewritten.columns.toSeq, parts)
-        } finally updKeys.unpersist()
-      }
-    } finally groupedShared.foreach(_.unpersist())
+    val keyColumns = keyCols.map(col)
+    // One key set, the updates' key columns, serves every join of the
+    // keyed replace. It is not persisted: under AQE each query reading a
+    // cached frame pays a job to materialize the cache stage, more than
+    // re-reading the keys costs. With checkDuplicateKeys the per-key row
+    // count rejects duplicate keys (Delta MERGE errors on those — silently
+    // unioning both rows would corrupt key uniqueness) and NULL key
+    // components (null = null is never true: such a row could neither
+    // match existing rows nor be separated from kept rows for the change
+    // feed); without it (pre-deduped pipelines) only the NULL-key check
+    // runs, over the updates themselves. Either check rides the
+    // file-discovery job.
+    val nullKey = keyColumns.map(_.isNull).reduce(_ || _)
+    val refuse =
+      if (checkDuplicateKeys) updates.groupBy(keyColumns: _*).count()
+        .filter(nullKey || col("count") > 1)
+      else updates.filter(nullKey)
+    def refused(r: Row): Nothing = throw new IllegalArgumentException(
+      "requirement failed: mergeTable: updates contain " +
+        (if (!checkDuplicateKeys || keyCols.indices.exists(r.isNullAt))
+          s"a NULL merge key: $r"
+        else s"multiple rows for key $r"))
+    // MERGE is the keyed replace with removal keys = update keys; its
+    // change rows keep the table's column order
+    replaceKeyedRows(spark, lh, tableName, updates.select(keyColumns: _*),
+      updates, keyCols, extraMeta = extraMeta, op = "MERGE",
+      refuse = Some(refuse -> refused), keysLead = false)
   }
 
   // ---- conditional MERGE (full Delta MERGE INTO semantics) ----------------
@@ -3037,14 +2921,6 @@ object TableIO {
     }
     require(allSets.forall(s => keyCols.forall(!s.contains(_))),
       "merge keys are not updatable (rewrite the row via DELETE + INSERT)")
-    if (checkDuplicateKeys && matchedCs.nonEmpty) {
-      // >1 source row per key would fire a matched clause twice for one
-      // target row — nondeterministic under SQL MERGE; Delta errors too
-      val dups = source.groupBy(keyColumns: _*).count()
-        .filter(col("count") > 1).limit(1).collect()
-      require(dups.isEmpty,
-        s"mergeInto: source has multiple rows for key ${dups.headOption.getOrElse("")}")
-    }
     val tableDir = Catalog.tablePath(lh, tableName)
     val (b, m) = existing(spark, lh, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
@@ -3081,226 +2957,223 @@ object TableIO {
       conds.zipWithIndex.foldRight(lit(-1): Column) { case ((c, i), acc) =>
         when(c, lit(i)).otherwise(acc)
       }
-    val srcKeys = source.select(keyColumns: _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val metaScan = scanFiles(spark,
-        Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
-      // ---- affected-file discovery (key/condition columns only) ----
-      val matchFp: Seq[String] =
-        if (matchedCs.isEmpty || m.entries.isEmpty) Seq.empty
-        else metaScan.select(keyColumns :+ col(FpCol).as("__fp"): _*)
-          .join(srcKeys, keyCols, "left_semi")
-          .select("__fp").distinct().collect().map(_.getString(0)).toSeq
-      val nmbsFp: Seq[String] =
-        if (nmbsCs.isEmpty || m.entries.isEmpty) Seq.empty
-        else {
-          val anyNmbs = nmbsCs.map {
-            case NotMatchedBySourceDelete(c) => condOf(c)
-            case NotMatchedBySourceUpdate(_, c) => condOf(c)
-            case _ => lit(false)
-          }.reduce(_ || _)
-          metaScan.alias("t").join(srcKeys, keyCols, "left_anti")
-            .filter(anyNmbs)
-            .select(col(FpCol).as("__fp")).distinct()
-            .collect().map(_.getString(0)).toSeq
-        }
-      val affectedPaths = (matchFp ++ nmbsFp)
-        .map(fp => new java.net.URI(fp).getPath).toSet
-      val baseP = Paths.get(tableDir)
-      val (affected, untouched) = m.entries.partition(e =>
-        affectedPaths.contains(baseP.resolve(e.path).toString))
-      // ---- the clause cascade over affected rows (one projection) ----
-      // row-tracked tables: survivors of the rewrite keep their
-      // materialized ids (inserted rows take fresh spans from the commit)
-      val rowTracked = m.meta.contains(Versioned.RowTrackingKey)
-      val tgt =
-        (if (!rowTracked) scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-         else withRowIds(spark, tableDir, m, affected)
-           .withColumnRenamed(RowIdColName, PhysRowIdCol))
-        .alias("t")
-      val SPresent = "__graft_s_present"
-      val src = source.withColumn(SPresent, lit(true)).alias("s")
-      val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
-        .reduce(_ && _)
-      val mAct = firstMatch(matchedCs.map {
-        case MatchedUpdate(_, c) => condOf(c)
-        case MatchedDelete(c) => condOf(c)
-        case _ => lit(false)
-      })
-      val nAct = firstMatch(nmbsCs.map {
+    // the source key set, as mergeTable's: not persisted, not
+    // de-duplicated (semi and anti joins ignore repeated keys)
+    val srcKeys = source.select(keyColumns: _*)
+    val metaScan = scanFiles(spark,
+      Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
+    // ---- affected-file discovery (key/condition columns only) ----
+    val matchHits = Option.when(matchedCs.nonEmpty && m.entries.nonEmpty)(
+      metaScan.select(keyColumns :+ col(FpCol): _*)
+        .join(srcKeys, keyCols, "left_semi").select(FpCol))
+    val nmbsHits = Option.when(nmbsCs.nonEmpty && m.entries.nonEmpty) {
+      val anyNmbs = nmbsCs.map {
         case NotMatchedBySourceDelete(c) => condOf(c)
         case NotMatchedBySourceUpdate(_, c) => condOf(c)
         case _ => lit(false)
-      })
-      val withAct = tgt.join(src, joinCond, "left_outer")
-        .withColumn(MCol, col(s"s.$SPresent").isNotNull)
-        .withColumn(ACol, when(col(MCol), mAct).otherwise(nAct))
-      if (withCdf) withAct.persist()
-      val mDel = matchedCs.zipWithIndex.collect {
-        case (_: MatchedDelete, i) => i }
-      val nDel = nmbsCs.zipWithIndex.collect {
-        case (_: NotMatchedBySourceDelete, i) => i }
-      def deleted: Column =
-        (col(MCol) && mDel.foldLeft(lit(false): Column)(
-          (acc, i) => acc || col(ACol) === i)) ||
-        (!col(MCol) && nDel.foldLeft(lit(false): Column)(
-          (acc, i) => acc || col(ACol) === i))
-      def projected(rows: DataFrame): DataFrame = {
-        val keep = // id passthrough: MERGE updates content, not identity
-          if (rowTracked) Seq(col(s"t.$PhysRowIdCol").as(PhysRowIdCol))
-          else Seq.empty
-        rows.select(schema.fields.map { f =>
-          val base0 = col(s"t.${f.name}")
-          val cases =
-            matchedCs.zipWithIndex.collect {
-              case (MatchedUpdate(set, _), i) if set.contains(f.name) =>
-                (col(MCol) && col(ACol) === i) ->
-                  expr(set(f.name)).cast(f.dataType)
-            } ++ nmbsCs.zipWithIndex.collect {
-              case (NotMatchedBySourceUpdate(set, _), i)
-                  if set.contains(f.name) =>
-                (!col(MCol) && col(ACol) === i) ->
-                  expr(set(f.name)).cast(f.dataType)
+      }.reduce(_ || _)
+      metaScan.alias("t").join(srcKeys, keyCols, "left_anti")
+        .filter(anyNmbs).select(FpCol)
+    }
+    val (affected, untouched) = touchedFiles(tableDir, m.entries,
+      (matchHits ++ nmbsHits).reduceOption(_ union _),
+      // >1 source row per key would fire a matched clause twice for one
+      // target row — nondeterministic under SQL MERGE; Delta errors too.
+      // The check rides the discovery job.
+      Option.when(checkDuplicateKeys && matchedCs.nonEmpty)(
+        source.groupBy(keyColumns: _*).count().filter(col("count") > 1) -> {
+          (r: Row) => throw new IllegalArgumentException("requirement " +
+            s"failed: mergeInto: source has multiple rows for key $r")
+        }))
+    // ---- the clause cascade over affected rows (one projection) ----
+    // row-tracked tables: survivors of the rewrite keep their
+    // materialized ids (inserted rows take fresh spans from the commit)
+    val rowTracked = m.meta.contains(Versioned.RowTrackingKey)
+    val tgt =
+      (if (!rowTracked) scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
+       else withRowIds(spark, tableDir, m, affected)
+         .withColumnRenamed(RowIdColName, PhysRowIdCol))
+      .alias("t")
+    val SPresent = "__graft_s_present"
+    val src = source.withColumn(SPresent, lit(true)).alias("s")
+    val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
+      .reduce(_ && _)
+    val mAct = firstMatch(matchedCs.map {
+      case MatchedUpdate(_, c) => condOf(c)
+      case MatchedDelete(c) => condOf(c)
+      case _ => lit(false)
+    })
+    val nAct = firstMatch(nmbsCs.map {
+      case NotMatchedBySourceDelete(c) => condOf(c)
+      case NotMatchedBySourceUpdate(_, c) => condOf(c)
+      case _ => lit(false)
+    })
+    val withAct = tgt.join(src, joinCond, "left_outer")
+      .withColumn(MCol, col(s"s.$SPresent").isNotNull)
+      .withColumn(ACol, when(col(MCol), mAct).otherwise(nAct))
+    if (withCdf) withAct.persist()
+    val mDel = matchedCs.zipWithIndex.collect {
+      case (_: MatchedDelete, i) => i }
+    val nDel = nmbsCs.zipWithIndex.collect {
+      case (_: NotMatchedBySourceDelete, i) => i }
+    def deleted: Column =
+      (col(MCol) && mDel.foldLeft(lit(false): Column)(
+        (acc, i) => acc || col(ACol) === i)) ||
+      (!col(MCol) && nDel.foldLeft(lit(false): Column)(
+        (acc, i) => acc || col(ACol) === i))
+    def projected(rows: DataFrame): DataFrame = {
+      val keep = // id passthrough: MERGE updates content, not identity
+        if (rowTracked) Seq(col(s"t.$PhysRowIdCol").as(PhysRowIdCol))
+        else Seq.empty
+      rows.select(schema.fields.map { f =>
+        val base0 = col(s"t.${f.name}")
+        val cases =
+          matchedCs.zipWithIndex.collect {
+            case (MatchedUpdate(set, _), i) if set.contains(f.name) =>
+              (col(MCol) && col(ACol) === i) ->
+                expr(set(f.name)).cast(f.dataType)
+          } ++ nmbsCs.zipWithIndex.collect {
+            case (NotMatchedBySourceUpdate(set, _), i)
+                if set.contains(f.name) =>
+              (!col(MCol) && col(ACol) === i) ->
+                expr(set(f.name)).cast(f.dataType)
+          }
+        cases.headOption.fold(base0) { head =>
+          cases.tail.foldLeft(when(head._1, head._2)) {
+            (acc, cv) => acc.when(cv._1, cv._2)
+          }.otherwise(base0)
+        }.as(f.name)
+      }.toSeq ++ keep: _*)
+    }
+    val rewritten = projected(withAct.filter(!deleted))
+    // ---- inserts: source rows matching NO target key ----
+    val (inserts, insIdMeta, insPin): (Option[DataFrame],
+        Map[String, String], Option[DataFrame]) =
+      if (insertCs.isEmpty) (None, Map.empty[String, String], None)
+      else {
+        val tgtKeys =
+          if (m.entries.isEmpty)
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+              StructType(schema.fields.filter(f =>
+                keyCols.contains(f.name))))
+          else metaScan.select(keyColumns: _*)
+        val unmatched = source.alias("s")
+          .join(tgtKeys.distinct(), keyCols, "left_anti")
+          .withColumn(ACol, firstMatch(insertCs.map(c =>
+            condOf(c.condition))))
+          .filter(col(ACol) >= 0)
+        val genNames = genCols.map(_._1).toSet
+        // first projection: every non-identity field. A generated field
+        // the firing clause did not supply projects NULL here and is
+        // computed below FROM the projected row — its expression
+        // references TARGET column names, which only exist post-select
+        // (Delta computes generated columns on MERGE INSERT too).
+        val projectedIns = unmatched.select((schema.fields.filterNot(f =>
+          idCols.contains(f.name)).map { f =>
+          val cases = insertCs.zipWithIndex.map { case (c, i) =>
+            val e = c.values match {
+              case Some(vs) => vs.get(f.name)
+                .map(expr(_).cast(f.dataType))
+                .getOrElse(lit(null).cast(f.dataType))
+              case None =>
+                if (genNames.contains(f.name) &&
+                    !source.columns.contains(f.name))
+                  lit(null).cast(f.dataType)
+                else col(s"s.${f.name}").cast(f.dataType)
             }
-          cases.headOption.fold(base0) { head =>
-            cases.tail.foldLeft(when(head._1, head._2)) {
-              (acc, cv) => acc.when(cv._1, cv._2)
-            }.otherwise(base0)
-          }.as(f.name)
-        }.toSeq ++ keep: _*)
-      }
-      val rewritten = projected(withAct.filter(!deleted))
-      // ---- inserts: source rows matching NO target key ----
-      val (inserts, insIdMeta, insPin): (Option[DataFrame],
-          Map[String, String], Option[DataFrame]) =
-        if (insertCs.isEmpty) (None, Map.empty[String, String], None)
-        else {
-          val tgtKeys =
-            if (m.entries.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-                StructType(schema.fields.filter(f =>
-                  keyCols.contains(f.name))))
-            else metaScan.select(keyColumns: _*)
-          val unmatched = source.alias("s")
-            .join(tgtKeys.distinct(), keyCols, "left_anti")
-            .withColumn(ACol, firstMatch(insertCs.map(c =>
-              condOf(c.condition))))
-            .filter(col(ACol) >= 0)
-          val genNames = genCols.map(_._1).toSet
-          // first projection: every non-identity field. A generated field
-          // the firing clause did not supply projects NULL here and is
-          // computed below FROM the projected row — its expression
-          // references TARGET column names, which only exist post-select
-          // (Delta computes generated columns on MERGE INSERT too).
-          val projectedIns = unmatched.select((schema.fields.filterNot(f =>
-            idCols.contains(f.name)).map { f =>
-            val cases = insertCs.zipWithIndex.map { case (c, i) =>
-              val e = c.values match {
-                case Some(vs) => vs.get(f.name)
-                  .map(expr(_).cast(f.dataType))
-                  .getOrElse(lit(null).cast(f.dataType))
-                case None =>
-                  if (genNames.contains(f.name) &&
-                      !source.columns.contains(f.name))
-                    lit(null).cast(f.dataType)
-                  else col(s"s.${f.name}").cast(f.dataType)
-              }
-              (col(ACol) === i) -> e
-            }
-            cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
-              (acc, cv) => acc.when(cv._1, cv._2)
-            }.otherwise(lit(null).cast(f.dataType)).as(f.name)
-          } :+ col(ACol)).toSeq: _*)
-          // DEFAULT columns: an insert clause that omits the column gets
-          // the stored constant instead of the null the projection above
-          // just filled (Delta's MERGE INSERT default semantics; a clause
-          // that names the column keeps its value, explicit null included)
-          val defaulted = defaultColsOf(m.meta).toSeq.sortBy(_._1)
-            .foldLeft(projectedIns) { case (d, (c, de)) =>
-              if (!schema.fieldNames.contains(c)) d
-              else {
-                val supplied = insertCs.zipWithIndex.collect { case (cl, i)
-                    if cl.values.fold(source.columns.contains(c))(_.contains(c)) =>
-                  col(ACol) === i
-                }
-                d.withColumn(c, when(
-                  supplied.reduceOption(_ || _).getOrElse(lit(false)), col(c))
-                  .otherwise(expr(de).cast(schema(c).dataType)))
-              }
-            }
-          val computed = genCols.foldLeft(defaulted) { case (d, (g, ge)) =>
-            if (!schema.fieldNames.contains(g)) d
+            (col(ACol) === i) -> e
+          }
+          cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
+            (acc, cv) => acc.when(cv._1, cv._2)
+          }.otherwise(lit(null).cast(f.dataType)).as(f.name)
+        } :+ col(ACol)).toSeq: _*)
+        // DEFAULT columns: an insert clause that omits the column gets
+        // the stored constant instead of the null the projection above
+        // just filled (Delta's MERGE INSERT default semantics; a clause
+        // that names the column keeps its value, explicit null included)
+        val defaulted = defaultColsOf(m.meta).toSeq.sortBy(_._1)
+          .foldLeft(projectedIns) { case (d, (c, de)) =>
+            if (!schema.fieldNames.contains(c)) d
             else {
-              val supplied = insertCs.zipWithIndex.collect { case (c, i)
-                  if c.values.fold(source.columns.contains(g))(_.contains(g)) =>
+              val supplied = insertCs.zipWithIndex.collect { case (cl, i)
+                  if cl.values.fold(source.columns.contains(c))(_.contains(c)) =>
                 col(ACol) === i
               }
-              d.withColumn(g, when(
-                supplied.reduceOption(_ || _).getOrElse(lit(false)), col(g))
-                .otherwise(expr(ge).cast(schema(g).dataType)))
+              d.withColumn(c, when(
+                supplied.reduceOption(_ || _).getOrElse(lit(false)), col(c))
+                .otherwise(expr(de).cast(schema(c).dataType)))
             }
           }
-          // identity ids for the inserted rows, watermark advancing in
-          // THIS commit (expectedBase is already pinned below, so a raced
-          // watermark cannot be overwritten). An identity column declared
-          // but not yet materialized in the schema is skipped — it appears
-          // on the next append's schema evolution, as elsewhere.
-          val assignMeta = m.meta.filter { case (k, _) =>
-            !k.startsWith(IdentityPrefix) ||
-              schema.fieldNames.contains(k.drop(IdentityPrefix.length)) }
-          val (withIds, im, p) = withIdentityAssigned(computed.drop(ACol),
-            assignMeta, s"$tableName: merge insert")
-          (Some(withIds.select(schema.fields.map(f =>
-            col(f.name)): _*)), im, p)
+        val computed = genCols.foldLeft(defaulted) { case (d, (g, ge)) =>
+          if (!schema.fieldNames.contains(g)) d
+          else {
+            val supplied = insertCs.zipWithIndex.collect { case (c, i)
+                if c.values.fold(source.columns.contains(g))(_.contains(g)) =>
+              col(ACol) === i
+            }
+            d.withColumn(g, when(
+              supplied.reduceOption(_ || _).getOrElse(lit(false)), col(g))
+              .otherwise(expr(ge).cast(schema(g).dataType)))
+          }
         }
-      // from here on two persisted frames (withAct, insPin) may be live:
-      // everything up to the commit runs inside the try so a CHECK
-      // violation or CDF construction failure cannot leak them
-      try {
-      val payload = inserts.fold(rewritten)(ins =>
-        // inserts carry no physical row id (null) — they take fresh spans
-        // from this commit's watermark at read time
-        rewritten.unionByName(ins, allowMissingColumns = true))
-      enforceChecks(payload, checkConstraintsOf(m.meta), s"$tableName: merge")
-      // ---- row-level change events, staged atomically with the commit ----
-      val changes: Option[DataFrame] =
-        if (!withCdf) None
-        else {
-          import org.apache.spark.sql.functions.lit
-          val updRows = withAct.filter(!deleted && col(ACol) >= 0)
-          val pre = updRows.select(schema.fields.map(f =>
-              col(s"t.${f.name}").as(f.name)).toSeq: _*)
-            .withColumn("_change_type", lit("update_preimage"))
-          val post = projected(updRows).drop(PhysRowIdCol)
-            .withColumn("_change_type", lit("update_postimage"))
-          val del = withAct.filter(deleted)
-            .select(schema.fields.map(f =>
-              col(s"t.${f.name}").as(f.name)).toSeq: _*)
-            .withColumn("_change_type", lit("delete"))
-          val ins = inserts.map(_.withColumn("_change_type", lit("insert")))
-          Some(ins.foldLeft(pre.unionByName(post).unionByName(del))(
-            _ unionByName _))
-        }
-      val parts = partitionSpecOf(m.meta, m.files)
-      val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-        inherit = untouched, expectedBase = Some(b),
-        meta = m.meta ++ insIdMeta,
-        beforeMarker = cdfSidecar(tableDir)(_ => changes),
-        op = "MERGE",
-        // empty payloads still commit (a version whose only effect is
-        // inherited entries) — but Spark won't write an empty dir plan
-        stage = t =>
-          if (affected.isEmpty && inserts.isEmpty) Map.empty
-          else writeStagedWithStats(toPhysical(payload, schema), t, parts,
-            bloomColsOf(m)))
-      finishCommit(spark, lh, tableName, tableDir, commit,
-        schema.fieldNames.toSeq, parts)
-      } finally {
-        if (withCdf) withAct.unpersist()
-        insPin.foreach(_.unpersist())
+        // identity ids for the inserted rows, watermark advancing in
+        // THIS commit (expectedBase is already pinned below, so a raced
+        // watermark cannot be overwritten). An identity column declared
+        // but not yet materialized in the schema is skipped — it appears
+        // on the next append's schema evolution, as elsewhere.
+        val assignMeta = m.meta.filter { case (k, _) =>
+          !k.startsWith(IdentityPrefix) ||
+            schema.fieldNames.contains(k.drop(IdentityPrefix.length)) }
+        val (withIds, im, p) = withIdentityAssigned(computed.drop(ACol),
+          assignMeta, s"$tableName: merge insert")
+        (Some(withIds.select(schema.fields.map(f =>
+          col(f.name)): _*)), im, p)
       }
-    } finally srcKeys.unpersist()
+    // from here on two persisted frames (withAct, insPin) may be live:
+    // everything up to the commit runs inside the try so a CHECK
+    // violation or CDF construction failure cannot leak them
+    try {
+    val payload = inserts.fold(rewritten)(ins =>
+      // inserts carry no physical row id (null) — they take fresh spans
+      // from this commit's watermark at read time
+      rewritten.unionByName(ins, allowMissingColumns = true))
+    enforceChecks(payload, checkConstraintsOf(m.meta), s"$tableName: merge")
+    // ---- row-level change events, staged atomically with the commit ----
+    val changes: Option[DataFrame] =
+      if (!withCdf) None
+      else {
+        import org.apache.spark.sql.functions.lit
+        val updRows = withAct.filter(!deleted && col(ACol) >= 0)
+        val pre = updRows.select(schema.fields.map(f =>
+            col(s"t.${f.name}").as(f.name)).toSeq: _*)
+          .withColumn("_change_type", lit("update_preimage"))
+        val post = projected(updRows).drop(PhysRowIdCol)
+          .withColumn("_change_type", lit("update_postimage"))
+        val del = withAct.filter(deleted)
+          .select(schema.fields.map(f =>
+            col(s"t.${f.name}").as(f.name)).toSeq: _*)
+          .withColumn("_change_type", lit("delete"))
+        val ins = inserts.map(_.withColumn("_change_type", lit("insert")))
+        Some(ins.foldLeft(pre.unionByName(post).unionByName(del))(
+          _ unionByName _))
+      }
+    val parts = partitionSpecOf(m.meta, m.files)
+    val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+      inherit = untouched, expectedBase = Some(b),
+      meta = m.meta ++ insIdMeta,
+      op = "MERGE",
+      // empty payloads still commit (a version whose only effect is
+      // inherited entries) — but Spark won't write an empty dir plan
+      stage = withChangeRows(spark, changes.map(Beside))(t =>
+        if (affected.isEmpty && inserts.isEmpty) Map.empty
+        else writeStagedWithStats(toPhysical(payload, schema), t, parts,
+          bloomColsOf(m))))
+    finishCommit(spark, lh, tableName, tableDir, commit,
+      schema.fieldNames.toSeq, parts)
+    } finally {
+      if (withCdf) withAct.unpersist()
+      insPin.foreach(_.unpersist())
+    }
   }
 
   /** Generalized keyed replace: remove every current row whose key
@@ -3325,117 +3198,121 @@ object TableIO {
     * inserts for new ones) — so replicas maintained by [[applyChanges]]
     * are themselves change-feed sources and medallion tiers CHAIN.
     * Requires replacement keys ⊆ removal keys when the feed is on (the
-    * applyChanges and view-refresh contract; checked, loud). */
+    * applyChanges and view-refresh contract; checked, loud). The change
+    * rows list the key columns first unless `keysLead` is off (MERGE keeps
+    * the table's column order).
+    *
+    * `removalKeys` is joined as given by discovery, the rewrite and the
+    * change rows — pass a cheap frame. It is not de-duplicated here (a
+    * semi or anti join's result does not depend on repeated keys); a
+    * caller whose keys can repeat de-duplicates them once to keep the
+    * broadcast small. `refuse` (rows that must not exist, and the error
+    * naming the first) rides the file-discovery job in place of the
+    * replacement-key check. */
   private[lakehouse] def replaceKeyedRows(spark: SparkSession,
       lh: LakehouseProps, tableName: String, removalKeys: DataFrame,
       newRows: DataFrame, keyCols: Seq[String],
       extraMeta: Map[String, String] = Map.empty,
-      op: String = "REPLACE"): TableInfo = {
+      op: String = "REPLACE",
+      refuse: Option[(DataFrame, Row => Nothing)] = None,
+      keysLead: Boolean = true): TableInfo = {
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "replaceKeyedRows needs at least one key column")
-    val keyColumns = keyCols.map(org.apache.spark.sql.functions.col)
+    val keyColumns = keyCols.map(col)
     val tableDir = Catalog.tablePath(lh, tableName)
     val (b, m) = existing(spark, lh, tableName)
-    // same hazard as mergeTable: replacement rows carry caller-chosen
-    // values for EVERY column — on an identity table that forges ids
-    require(identityColsOf(m.meta).isEmpty,
-      s"$tableName has GENERATED ALWAYS AS IDENTITY column(s) — keyed " +
-        "replacement would take ids from the caller; use mergeInto")
+    // whole-row replacements take every column from the caller — on an
+    // identity table that means caller-fabricated ids for new keys, which
+    // the watermark would later hand out AGAIN (duplicate "unique" ids),
+    // or null ids if the caller omits the column. Rejected before any
+    // job runs: mergeInto preserves target ids on update and
+    // engine-assigns them on insert.
+    locally {
+      val idDecl = identityColsOf(m.meta)
+      require(idDecl.isEmpty,
+        s"$tableName has GENERATED ALWAYS AS IDENTITY column(s) " +
+          s"${idDecl.mkString(", ")} — a whole-row $op would take ids " +
+          "from the caller; use mergeInto instead")
+    }
     enforceChecks(newRows, checkConstraintsOf(m.meta), s"$tableName: replace")
+    val withCdf = cdfEnabled(m.meta)
     val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    val remKeys = removalKeys.select(keyColumns: _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      import org.apache.spark.sql.functions.col
-      val remA = remKeys.alias("__rk")
-      def nullSafeOnRemoval(left: DataFrame): Column =
-        keyCols.map(c => left(c) <=> col(s"__rk.$c")).reduce(_ && _)
-      val affectedPaths =
-        if (m.entries.isEmpty) Set.empty[String]
-        else {
-          val keyScan = scanFiles(spark,
-            Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
-            .select(keyColumns :+ col(FpCol).as("__fp"): _*)
-          keyScan.join(remA, nullSafeOnRemoval(keyScan), "left_semi")
-            .select("__fp").distinct()
-            .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-        }
-      val baseP = Paths.get(tableDir)
-      val (affected, untouched) = m.entries.partition(e =>
-        affectedPaths.contains(baseP.resolve(e.path).toString))
-      val affectedDf =
-        if (affected.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
-        else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-      val kept = affectedDf.join(remA,
-        nullSafeOnRemoval(affectedDf), "left_anti")
-      val rewritten = kept.unionByName(newRows, allowMissingColumns = true)
-      val parts = partitionSpecOf(m.meta, m.files)
-      val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
-      // CDF chaining: a keyed replace stages row-level change events
-      // like MERGE does, so replicas maintained by applyChanges are
-      // themselves change-feed SOURCES (multi-hop medallion
-      // pipelines). Staged rows whose key is in the removal set are
-      // exactly the replacement rows as written (kept rows were
-      // anti-joined out), so post-images never re-evaluate the
-      // caller's plan. Requires replacement keys ⊆ removal keys — the
-      // contract applyChanges and the MV refresh both satisfy; checked
-      // below only when the feed is on. Null-keyed replacements emit
-      // delete + insert rather than an update pair (null never equals
-      // null in the pairing join); consumers folding by key net the
-      // same state.
-      val writeCdf = cdfSidecar(tableDir) { staged =>
-        if (!cdfEnabled(m.meta)) None
-        else {
-          val escaped = newRows.select(keyColumns: _*).distinct()
-            .join(remA, keyCols.map(c =>
-              newRows(c) <=> col(s"__rk.$c")).reduce(_ && _), "left_anti")
-            .limit(1).collect()
-          require(escaped.isEmpty,
-            s"$tableName: CDF-enabled keyed replace requires every " +
-              "replacement key to appear in the removal set (otherwise " +
-              "new rows are indistinguishable from kept rows in the " +
-              s"staged files); offending key: ${escaped.headOption}")
-          import org.apache.spark.sql.expressions.Window
-          import org.apache.spark.sql.functions.{lit, max, when}
-          // removed rows: the affected files read again, filtered to
-          // the removal keys — nothing cached, O(removed rows) kept
-          val removed = affectedDf.join(remA,
-              nullSafeOnRemoval(affectedDf), "left_semi")
-            .withColumn("_change_type", lit("delete"))
-          val stagedNew = scanSpec(spark, Versioned.ScanFiles(tableDir,
-            rewrittenM.json, staged.map(_.path)))
-            .join(remKeys, keyCols, "left_semi")
-            .withColumn("_change_type", lit("insert"))
-          // both sides paired in ONE window over the key on their
-          // union: a removed row whose key was staged again is an
-          // update pre-image, else a delete; a staged row whose key
-          // was removed an update post-image, else an insert. Null
-          // keys never pair (null never equals null)
-          val paired = keyColumns.map(_.isNotNull).reduce(_ && _)
-          def keyHas(t: String): Column = paired &&
-            max(col("_change_type") === t)
-              .over(Window.partitionBy(keyColumns: _*))
-          val events = removed.unionByName(stagedNew,
-              allowMissingColumns = true)
-            .withColumn("_change_type",
-              when(col("_change_type") === "delete",
-                when(keyHas("insert"), lit("update_preimage"))
-                  .otherwise(lit("delete")))
-                .otherwise(when(keyHas("delete"),
-                  lit("update_postimage")).otherwise(lit("insert"))))
-          // key columns lead (the sidecar's column order)
-          Some(events.select((keyCols ++
-            events.columns.filterNot(keyCols.contains)).map(col): _*))
-        }
+    val remA = removalKeys.select(keyColumns: _*).alias("__rk")
+    def onRemoval(left: DataFrame): Column =
+      keyCols.map(c => left(c) <=> col(s"__rk.$c")).reduce(_ && _)
+    // CDF chaining needs replacement keys ⊆ removal keys: staged rows are
+    // told apart from kept rows by key. The check rides discovery;
+    // mergeTable's own `refuse` stands in for it (its removal keys ARE the
+    // replacement keys)
+    val escaped = refuse.orElse(Option.when(withCdf) {
+      val nk = newRows.select(keyColumns: _*)
+      nk.join(remA, onRemoval(nk), "left_anti") -> { (r: Row) =>
+        throw new IllegalArgumentException(s"requirement failed: " +
+          s"$tableName: CDF-enabled keyed replace requires every " +
+          "replacement key to appear in the removal set (otherwise " +
+          "new rows are indistinguishable from kept rows in the " +
+          s"staged files); offending key: ${Some(r)}")
       }
-      val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
-        inherit = untouched, expectedBase = Some(b),
-        meta = m.meta ++ extraMeta, beforeMarker = writeCdf, op = op,
-        stage = t => writeStagedWithStats(
-          toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m)))
-      finishCommit(spark, lh, tableName, tableDir, commit,
-        rewritten.columns.toSeq, parts)
-    } finally remKeys.unpersist()
+    })
+    val (affected, untouched) = touchedFiles(tableDir, m.entries,
+      Option.when(m.entries.nonEmpty) {
+        val keyScan = scanFiles(spark,
+          Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
+          .select(keyColumns :+ col(FpCol): _*)
+        keyScan.join(remA, onRemoval(keyScan), "left_semi")
+      }, escaped)
+    val affectedDf =
+      if (affected.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
+      else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
+    val kept = affectedDf.join(remA,
+      onRemoval(affectedDf), "left_anti")
+    val rewritten = kept.unionByName(newRows, allowMissingColumns = true)
+    val parts = partitionSpecOf(m.meta, m.files)
+    val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
+    // CDF chaining: a keyed replace stages row-level change events, so
+    // replicas maintained by applyChanges are themselves change-feed
+    // SOURCES (multi-hop medallion pipelines). Staged rows whose key is
+    // in the removal set are exactly the replacement rows as written
+    // (kept rows were anti-joined out), so post-images never re-evaluate
+    // the caller's plan. Removed rows are the affected files read again,
+    // filtered to the removal keys — nothing cached, O(removed rows)
+    // kept. Both sides take ONE null-safe semi-join against the removal
+    // keys on their union.
+    val changes = Option.when(withCdf)(FromStaged(rewrittenM.json, staged => {
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions.{lit, max, when}
+      val both = affectedDf.withColumn("_change_type", lit("delete"))
+        .unionByName(staged.withColumn("_change_type", lit("insert")),
+          allowMissingColumns = true)
+      val hit = both.join(remA, onRemoval(both), "left_semi")
+      // both sides paired in ONE window over the key: a removed row whose
+      // key was staged again is an update pre-image, else a delete; a
+      // staged row whose key was removed an update post-image, else an
+      // insert. Null keys never pair: a null-keyed replacement is a
+      // delete plus an insert, which a consumer folding by key nets to
+      // the same state
+      val paired = keyColumns.map(_.isNotNull).reduce(_ && _)
+      def keyHas(t: String): Column = paired &&
+        max(col("_change_type") === t)
+          .over(Window.partitionBy(keyColumns: _*))
+      val events = hit.withColumn("_change_type",
+        when(col("_change_type") === "delete",
+          when(keyHas("insert"), lit("update_preimage"))
+            .otherwise(lit("delete")))
+          .otherwise(when(keyHas("delete"),
+            lit("update_postimage")).otherwise(lit("insert"))))
+      if (!keysLead) events
+      else events.select((keyCols ++
+        events.columns.filterNot(keyCols.contains)).map(col): _*)
+    }))
+    val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
+      inherit = untouched, expectedBase = Some(b),
+      meta = m.meta ++ extraMeta, op = op,
+      stage = withChangeRows(spark, changes)(t => writeStagedWithStats(
+        toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m))))
+    finishCommit(spark, lh, tableName, tableDir, commit,
+      rewritten.columns.toSeq, parts)
   }
 
   /** Export the table's current snapshot as line-delimited JSON under the
@@ -4187,17 +4064,108 @@ object TableIO {
   private[lakehouse] def cdfEnabled(meta: Map[String, String]): Boolean =
     meta.get(CdfKey).contains("true")
 
-  /** The `beforeMarker` hook writing a commit's change-feed sidecar into
-    * its commit-owned [[Versioned.sidecarDir]] (a reclaimed writer's
-    * still-running sidecar job can never clobber the winning commit's
-    * feed): `changes` builds the change frame from the staged entries
-    * (None = no sidecar for this commit). */
-  private def cdfSidecar(tableDir: String)(
-      changes: Seq[Versioned.FileEntry] => Option[DataFrame])
-      : (Long, Seq[Versioned.FileEntry], String) => Unit =
-    (v, staged, cid) => changes(staged).foreach(
-      _.write.mode(SaveMode.Overwrite).parquet(
-        Versioned.sidecarDir(Paths.get(tableDir), v, cid).toString))
+  /** Affected-file discovery for the rewrite commits: splits `entries`
+    * into those whose files hold a row of `hits` (a [[scanFiles]] scan
+    * kept with [[FpCol]], filtered to the rows the commit touches; None =
+    * none can) and the untouched rest. One Spark job with no shuffle: the
+    * file paths are de-duplicated within each partition, then on the
+    * driver (a `distinct()` adds a shuffle stage, which AQE runs as a job
+    * of its own). `refuse` — rows that must not exist, and the error that
+    * names the first — rides the same job, so a caller's validation costs
+    * no action of its own. */
+  private def touchedFiles(tableDir: String,
+      entries: Seq[Versioned.FileEntry], hits: Option[DataFrame],
+      refuse: Option[(DataFrame, Row => Nothing)] = None)
+      : (Seq[Versioned.FileEntry], Seq[Versioned.FileEntry]) = {
+    import org.apache.spark.sql.functions.{col, lit, struct}
+    val fps = hits.map(_.select(col(FpCol).as("fp")))
+    val probe = refuse.fold(fps) { case (bad, _) =>
+      val refused = bad.select(lit(null).cast(StringType).as("fp"),
+        struct(col("*")).as("bad"))
+      Some(fps.fold(refused)(_.withColumn("bad",
+        lit(null).cast(refused.schema("bad").dataType)).unionByName(refused)))
+    }
+    val found = probe.fold(Array.empty[Row]) { p =>
+      p.mapPartitions { rows =>
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        var refusedOne = false
+        rows.filter(r =>
+          if (!r.isNullAt(0)) seen.add(r.getString(0))
+          else if (refusedOne) false
+          else { refusedOne = true; true })
+      }(Encoders.row(p.schema)).collect()
+    }
+    refuse.foreach { case (_, fail) =>
+      found.find(_.isNullAt(0)).foreach(r => fail(r.getStruct(1))) }
+    val paths = found.iterator.filterNot(_.isNullAt(0))
+      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val baseP = Paths.get(tableDir)
+    entries.partition(e => paths.contains(baseP.resolve(e.path).toString))
+  }
+
+  /** A commit's change rows, as [[withChangeRows]] stages them. */
+  private[lakehouse] sealed trait ChangeRows
+  /** Rows that do not read the commit's staged data files: written on a
+    * fresh driver thread while the data write runs. */
+  private[lakehouse] final case class Beside(rows: DataFrame)
+      extends ChangeRows
+  /** Rows derived from the staged data files — `rows` is handed their
+    * scan under `schemaJson` — written after the data write, so they are
+    * the rows as committed, never a re-evaluation of the caller's plan. */
+  private[lakehouse] final case class FromStaged(schemaJson: String,
+      rows: DataFrame => DataFrame) extends ChangeRows
+
+  /** The one writer of change-feed sidecars: `stage` extended to write the
+    * commit's change rows into the staging dir's
+    * [[Versioned.StagedChangesDir]], which [[Versioned.commitFiles]] moves
+    * to the commit's sidecar at the claim. None = no sidecar. A failure of
+    * either write fails the stage, so the commit aborts and takes both
+    * with its staging dir. */
+  private[lakehouse] def withChangeRows(spark: SparkSession,
+      changes: Option[ChangeRows])(
+      stage: String => Map[String, String]): String => Map[String, String] =
+    changes match {
+      case None => stage
+      case Some(c) => staging =>
+        val stagingP = Paths.get(staging)
+        def write(rows: DataFrame): Unit = rows.write
+          .parquet(stagingP.resolve(Versioned.StagedChangesDir).toString)
+        c match {
+          case Beside(rows) => alongside(spark)(write(rows))(stage(staging))
+          case FromStaged(schemaJson, rows) =>
+            val stats = stage(staging)
+            write(rows(scanSpec(spark, Versioned.ScanFiles(
+              staging, schemaJson, Versioned.stagedDataFiles(stagingP)
+                .map(p => stagingP.relativize(p).toString)))))
+            stats
+        }
+    }
+
+  /** Runs `side` on a fresh driver thread while `main` runs on this one,
+    * waits for both, and rethrows the first failure. The thread inherits
+    * this thread's job group and local properties except the SQL
+    * execution ids: a caller inside a query (a streaming `foreachBatch`)
+    * must not have the side write's jobs filed under its execution. */
+  private def alongside[T](spark: SparkSession)(side: => Unit)(
+      main: => T): T = {
+    import org.apache.spark.sql.execution.SQLExecution
+    val sc = spark.sparkContext
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val t = new Thread(() => {
+      sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, null)
+      sc.setLocalProperty(SQLExecution.EXECUTION_ROOT_ID_KEY, null)
+      try side
+      catch { case e: Throwable => failed.compareAndSet(null, e); () }
+    }, "graft-change-rows")
+    t.setDaemon(true)
+    t.start()
+    val out = try Some(main) catch {
+      case e: Throwable => failed.compareAndSet(null, e); None
+    }
+    t.join()
+    Option(failed.get).foreach(e => throw e)
+    out.get
+  }
 
   /** Reader-side resolution: a manifest resolves ONLY to the sidecar of
     * its own commit id — a sidecar of any other id at the same version was
@@ -4208,6 +4176,30 @@ object TableIO {
     Versioned.sidecarDir(Paths.get(tableDir), v,
       meta.getOrElse(Versioned.CommitIdKey, throw new IllegalStateException(
         s"$tableDir: manifest $v has no commit id — the table is corrupt")))
+
+  /** The Spark schema a sidecar's writer stored in its part files'
+    * footers (the key Spark's own schema inference reads), read from one
+    * footer on the driver — so opening a change feed runs no Spark job. */
+  private def sidecarSchema(spark: SparkSession, sidecar: Path): StructType = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    val part = {
+      val ls = Files.list(sidecar)
+      try ls.iterator.asScala.find(_.getFileName.toString.endsWith(".parquet"))
+      finally ls.close()
+    }.getOrElse(throw new IllegalStateException(
+      s"$sidecar: change-data sidecar holds no part file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(part.toUri),
+      spark.sparkContext.hadoopConfiguration))
+    val json = try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY))
+    finally reader.close()
+    json.map(DataType.fromJson(_).asInstanceOf[StructType]).getOrElse(
+      throw new IllegalStateException(s"$part: change-data sidecar footer " +
+        s"has no ${ParquetReadSupport.SPARK_METADATA_KEY} schema"))
+  }
 
   /** Row-level changes since `sinceVersion` (Delta `table_changes`): for
     * each later commit — appends yield their added files' rows as
@@ -4224,7 +4216,10 @@ object TableIO {
 
   /** Path-level change-feed core shared with the streaming source's CDF
     * mode: row-level events for committed versions in
-    * `(sinceVersion, untilVersion ?? latest]`. */
+    * `(sinceVersion, untilVersion ?? latest]`. Building the frame runs no
+    * Spark job: manifests are read on the driver, and each sidecar is read
+    * under the schema in one of its part files' footers
+    * ([[sidecarSchema]]) instead of Spark inferring it in a job. */
   private[lakehouse] def changeFeedAtPath(spark: SparkSession,
       tableDir: String, sinceVersion: Long,
       untilVersion: Option[Long]): DataFrame = {
@@ -4298,7 +4293,7 @@ object TableIO {
               "sidecar — the commit predates enableChangeFeed (or was a " +
               "RESTORE, the one write path the feed does not model); " +
               "re-baseline the consumer from a full snapshot")
-          Some(spark.read.parquet(d.toString)
+          Some(spark.read.schema(sidecarSchema(spark, d)).parquet(d.toString)
             .withColumn("_commit_version", lit(v)))
         }
     }.flatten.toSeq
@@ -4398,13 +4393,12 @@ object TableIO {
         (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder"))
     val commit = commitMaintenance(tableDir, b, m, affected,
       metaOf = metaOut,
-      beforeMarker = cdfSidecar(tableDir)(_ => emptyCdf),
       op = "OPTIMIZE",
-      stage = t =>
+      stage = withChangeRows(spark, emptyCdf.map(Beside))(t =>
         if (affected.isEmpty) Map.empty
         else writeStagedWithStats(toPhysical(arranged,
             DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
-          t, parts, blooms, parquetBloomCols = blooms))
+          t, parts, blooms, parquetBloomCols = blooms)))
     finishCommit(spark, lh, tableName, tableDir, commit,
       df.columns.toSeq, parts)
   }
@@ -4444,8 +4438,6 @@ object TableIO {
       firstM: Versioned.Manifest, affected: Seq[Versioned.FileEntry],
       metaOf: Map[String, String] => Map[String, String],
       op: String,
-      beforeMarker: (Long, Seq[Versioned.FileEntry], String) => Unit =
-        (_, _, _) => (),
       replaced: Seq[Versioned.FileEntry] = Seq.empty,
       stage: String => Map[String, String] = _ => Map.empty)
       : Versioned.Commit = {
@@ -4466,8 +4458,7 @@ object TableIO {
     Versioned.retryOnConflict(Versioned.ConflictAttempts, rebase) {
       Versioned.commitFiles(tableDir, m.schemaJson,
         inherit = m.entries.filterNot(e => affectedPaths(e.path)) ++ replaced,
-        expectedBase = Some(b), meta = metaOf(m.meta),
-        beforeMarker = beforeMarker, op = op, stage = stage)
+        expectedBase = Some(b), meta = metaOf(m.meta), op = op, stage = stage)
     }
   }
 
@@ -4585,13 +4576,12 @@ object TableIO {
     val commit = commitMaintenance(tableDir, b, m, affected,
       metaOf = mm => mm + (ClusterByKey -> zorderBy.mkString(",")) +
         (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder")),
-      beforeMarker = cdfSidecar(tableDir)(_ => emptyCdf),
       op = "OPTIMIZE",
-      stage = t =>
+      stage = withChangeRows(spark, emptyCdf.map(Beside))(t =>
         if (affected.isEmpty) Map.empty
         else writeStagedWithStats(toPhysical(arranged,
             DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
-          t, parts, blooms, parquetBloomCols = blooms))
+          t, parts, blooms, parquetBloomCols = blooms)))
     finishCommit(spark, lh, tableName, tableDir, commit,
       df.columns.toSeq, parts)
   }
@@ -4624,26 +4614,30 @@ object TableIO {
     // skipping): a pruned file holds no matching row, so it is untouched
     val candidates = minedSurvivors(spark, m, condition).getOrElse(m.entries)
     if (deletionVectors) {
-      import org.apache.spark.sql.functions.{collect_list, sort_array}
+      import spark.implicits._
       // matched LOGICAL rows (already-vectored rows can't re-match, so
       // CDF preimages and counts stay exact on repeated DV deletes)
       val matched = scanFiles(spark,
         Versioned.scanOf(tableDir, m, candidates), keepMeta = true)
         .filter(cond)
       val withCdf = cdfEnabled(m.meta)
-      if (withCdf) matched.persist()
-      // per-file sorted new-deletion positions; driver memory is
-      // O(matched rows) longs — the shape DV mode exists for is sparse,
-      // and a dense delete should use rewrite mode anyway
-      val perFile = matched
-        .groupBy(col(FpCol).as("__fp"))
-        .agg(sort_array(collect_list(col(RiCol))).as("__ris"))
-        .collect()
+      // per-file sorted new-deletion positions, grouped within each
+      // partition and merged on the driver: one job, no shuffle. Driver
+      // memory is O(matched rows) longs — the shape DV mode exists for is
+      // sparse, and a dense delete should use rewrite mode anyway
+      val perFile = matched.select(col(FpCol), col(RiCol)).as[(String, Long)]
+        .mapPartitions { rows =>
+          val byFile = scala.collection.mutable.HashMap
+            .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+          rows.foreach { case (fp, ri) =>
+            byFile.getOrElseUpdate(fp,
+              new scala.collection.mutable.ArrayBuilder.ofLong) += ri }
+          byFile.iterator.map { case (fp, ris) => fp -> ris.result() }
+        }.collect()
       val baseP = Paths.get(tableDir)
-      val newDeletes: Map[String, Array[Long]] = perFile.map { r =>
-        new java.net.URI(r.getString(0)).getPath ->
-          r.getSeq[Long](1).toArray
-      }.toMap
+      val newDeletes: Map[String, Array[Long]] = perFile.groupMapReduce(
+        p => new java.net.URI(p._1).getPath)(_._2)(_ ++ _)
+        .map { case (path, ris) => path -> ris.sorted }
       val entries2 = m.entries.map { e =>
         newDeletes.get(baseP.resolve(e.path).toString) match {
           case None => e
@@ -4660,29 +4654,25 @@ object TableIO {
               withDvStat(e.stats, sidecar, all.length.toLong)))
         }
       }
+      // the change rows scan the matched rows again rather than cache
+      // them: the same files under the same condition, so exactly the
+      // rows vectored
       val changes: Option[DataFrame] =
         if (!withCdf || perFile.isEmpty) None
         else Some(matched.drop(FpCol, RiCol)
           .withColumn("_change_type", lit("delete")))
-      try {
-        val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-          inherit = entries2, expectedBase = Some(b),
-          meta = Versioned.withFeature(m.meta, "deletionVectors"),
-          beforeMarker = cdfSidecar(tableDir)(_ => changes), op = "DELETE")
-        finishCommit(spark, lh, tableName, tableDir, commit,
-          schema.fieldNames.toSeq, parts)
-      } finally if (withCdf) matched.unpersist()
+      val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+        inherit = entries2, expectedBase = Some(b),
+        meta = Versioned.withFeature(m.meta, "deletionVectors"),
+        op = "DELETE",
+        stage = withChangeRows(spark, changes.map(Beside))(_ => Map.empty))
+      finishCommit(spark, lh, tableName, tableDir, commit,
+        schema.fieldNames.toSeq, parts)
     } else {
-      val affectedPaths =
-        if (candidates.isEmpty) Set.empty[String]
-        else scanFiles(spark, Versioned.scanOf(tableDir, m, candidates),
-          keepMeta = true)
-          .filter(cond)
-          .select(col(FpCol).as("__fp")).distinct()
-          .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-      val baseP = Paths.get(tableDir)
-      val (affected, untouched) = m.entries.partition(e =>
-        affectedPaths.contains(baseP.resolve(e.path).toString))
+      val (affected, untouched) = touchedFiles(tableDir, m.entries,
+        Option.when(candidates.nonEmpty)(scanFiles(spark,
+          Versioned.scanOf(tableDir, m, candidates), keepMeta = true)
+          .filter(cond)))
       // scanOf, NOT a raw file list: an affected file may carry a
       // deletion vector from an earlier DV delete, and scanning it raw
       // would re-emit delete events for (and below, RESURRECT) rows that
@@ -4700,9 +4690,8 @@ object TableIO {
       val commit = Versioned.commitFiles(tableDir, m.schemaJson,
         inherit = untouched, expectedBase = Some(b),
         meta = m.meta,
-        beforeMarker = cdfSidecar(tableDir)(_ => changes),
         op = "DELETE",
-        stage = t =>
+        stage = withChangeRows(spark, changes.map(Beside))(t =>
           if (affected.isEmpty) Map.empty
           else {
             // row-tracked tables: survivors carry their materialized
@@ -4716,7 +4705,7 @@ object TableIO {
               .filter(not(cond))
             writeStagedWithStats(toPhysical(survivors, schema),
               t, parts, bloomColsOf(m))
-          })
+          }))
       finishCommit(spark, lh, tableName, tableDir, commit,
         schema.fieldNames.toSeq, parts)
     }
@@ -4920,17 +4909,6 @@ object TableIO {
       throw new IllegalArgumentException(
         s"$tableName has no committed version"))
 
-  /** Apply another table's change feed to a replica (CDC apply — the
-    * consumer side of [[readChangeFeed]]): per key, the LATEST event wins
-    * (`_commit_version` order; a same-version delete+reinsert resolves to
-    * the reinsert), update_preimages are informational and skipped, and
-    * the net upserts + deletes land in ONE atomic file-level commit via
-    * the keyed-replace primitive — only replica files holding touched
-    * keys rewrite. Feeding the feed incrementally (from the replica's
-    * last-applied version) makes replication O(changes), never
-    * O(replica); the version high-water mark is the caller's cursor.
-    * CDF-enabled replicas are rejected (the replace primitive documents
-    * why: its delete half has no feed-staging path). */
   /** The net effect of a feed slice: each key's LATEST event (deletes
     * ordered after same-version upserts, update_preimage rows dropped). */
   private def cdcLatest(feed: DataFrame, keyCols: Seq[String]): DataFrame = {
@@ -4945,6 +4923,17 @@ object TableIO {
       .drop("__graft_rk")
   }
 
+  /** Apply another table's change feed to a replica (CDC apply — the
+    * consumer side of [[readChangeFeed]]): per key, the LATEST event wins
+    * (`_commit_version` order; a same-version delete+reinsert resolves to
+    * the reinsert), update_preimages are informational and skipped, and
+    * the net upserts + deletes land in ONE atomic file-level commit via
+    * the keyed-replace primitive — only replica files holding touched
+    * keys rewrite. Feeding the feed incrementally (from the replica's
+    * last-applied version) makes replication O(changes), never
+    * O(replica); the version high-water mark is the caller's cursor.
+    * A CDF-enabled replica records the apply's own change rows, so
+    * replicas chain. */
   def applyChanges(spark: SparkSession, lh: LakehouseProps,
       replicaName: String, feed: DataFrame, keyCols: Seq[String],
       extraMeta: Map[String, String] = Map.empty): TableInfo = {
@@ -4953,17 +4942,21 @@ object TableIO {
     require(feed.columns.contains("_change_type") &&
       feed.columns.contains("_commit_version"),
       "not a change feed: _change_type/_commit_version missing")
-    val latest = cdcLatest(feed, keyCols)
-    latest.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dataCols = feed.columns
-        .filterNot(c => c == "_change_type" || c == "_commit_version")
-      val removalKeys = latest.select(keyCols.map(col): _*).distinct()
-      val upserts = latest.filter(col("_change_type") =!= "delete")
-        .select(dataCols.map(col).toSeq: _*)
-      replaceKeyedRows(spark, lh, replicaName, removalKeys, upserts,
-        keyCols, extraMeta = extraMeta, op = "CDC APPLY")
-    } finally latest.unpersist()
+    val dataCols = feed.columns
+      .filterNot(c => c == "_change_type" || c == "_commit_version")
+    // every key the slice touches, read straight off the feed: the keys of
+    // cdcLatest's rows, with no window (an update's pre-image shares its
+    // key with its post-image) and no de-duplication (the replace's semi
+    // and anti joins ignore repeats). Nothing is cached: under AQE each
+    // query reading a cached frame pays a job to materialize it, more
+    // than re-reading an O(changes) feed costs.
+    val removalKeys = feed.filter(col("_change_type") =!= "update_preimage")
+      .select(keyCols.map(col): _*)
+    val upserts = cdcLatest(feed, keyCols)
+      .filter(col("_change_type") =!= "delete")
+      .select(dataCols.map(col).toSeq: _*)
+    replaceKeyedRows(spark, lh, replicaName, removalKeys, upserts,
+      keyCols, extraMeta = extraMeta, op = "CDC APPLY")
   }
 
   /** CONTINUOUS replication: follow `sourceName`'s change feed as a
@@ -5053,16 +5046,10 @@ object TableIO {
     // discovery scans only the files the condition may match (see
     // deleteFromTable)
     val candidates = minedSurvivors(spark, m, condition).getOrElse(m.entries)
-    val affectedPaths =
-      if (candidates.isEmpty) Set.empty[String]
-      else scanFiles(spark, Versioned.scanOf(tableDir, m, candidates),
-        keepMeta = true)
-        .filter(cond)
-        .select(col(FpCol).as("__fp")).distinct()
-        .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-    val baseP = Paths.get(tableDir)
-    val (affected, untouched) = m.entries.partition(e =>
-      affectedPaths.contains(baseP.resolve(e.path).toString))
+    val (affected, untouched) = touchedFiles(tableDir, m.entries,
+      Option.when(candidates.nonEmpty)(scanFiles(spark,
+        Versioned.scanOf(tableDir, m, candidates), keepMeta = true)
+        .filter(cond)))
     val parts = partitionSpecOf(m.meta, m.files)
     def applied(df: DataFrame): DataFrame = {
       // row-tracked rewrites carry the materialized id through the SET
@@ -5110,11 +5097,11 @@ object TableIO {
     val commit = Versioned.commitFiles(tableDir, m.schemaJson,
       inherit = untouched, expectedBase = Some(b),
       meta = m.meta,
-      beforeMarker = cdfSidecar(tableDir)(_ => changes),
       op = "UPDATE",
-      stage = t => rewritten.fold(Map.empty[String, String])(r =>
-        writeStagedWithStats(toPhysical(r, schema), t, parts,
-          bloomColsOf(m))))
+      stage = withChangeRows(spark, changes.map(Beside))(t =>
+        rewritten.fold(Map.empty[String, String])(r =>
+          writeStagedWithStats(toPhysical(r, schema), t, parts,
+            bloomColsOf(m)))))
     finishCommit(spark, lh, tableName, tableDir, commit,
       schema.fieldNames.toSeq, parts)
   }

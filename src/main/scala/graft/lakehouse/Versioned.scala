@@ -89,17 +89,15 @@ object Versioned {
   @volatile var RetainAgeMs: Long = 10 * 60 * 1000L
 
   /** How long an unmarked manifest claim may block the version number it
-    * sits on with NO signs of life. The claim→marker window is normally a
-    * few file renames, but a change-feed sidecar write inside it is a real
-    * Spark job — so "alive" is judged by the newest mtime across the claim
-    * AND its `_cdf_` sidecar (which an in-flight sidecar write keeps
-    * fresh), and the claim owner re-verifies ownership before AND right
-    * after its marker (isSameFile checks), retracting a marker that would
-    * have committed a reclaimer's manifest. A healthy commit idle longer
-    * than this window (e.g. a long pure-shuffle stage emitting no sidecar
-    * files) can still be spuriously reclaimed — it then ABORTS loudly
-    * with a conflict, never silently loses data; raise the grace for
-    * workloads with very long commit-critical sections. */
+    * sits on with NO signs of life. The claim→marker window is a few file
+    * renames (change rows are staged before the claim, and a transaction's
+    * `beforeMarker` writes one ref file), so "alive" is judged by the
+    * newest mtime across the claim AND its `_cdf_` sidecar, and the claim
+    * owner re-verifies ownership before AND right after its marker
+    * (isSameFile checks), retracting a marker that would have committed a
+    * reclaimer's manifest. A commit stalled longer than this window
+    * between claim and marker can still be spuriously reclaimed — it then
+    * ABORTS loudly with a conflict, never silently loses data. */
   @volatile var OrphanGraceMs: Long = 60 * 1000L
 
   /** One data file in a manifest: its path (relative to the table dir) and
@@ -566,11 +564,14 @@ object Versioned {
     case None => ScanDir(tableDir)
   }
 
-  private def listParquet(root: Path): Seq[Path] = {
-    if (!Files.isDirectory(root)) return Seq.empty
-    val s = Files.walk(root)
+  /** The data files a `stage` wrote under `staging`, sorted: every parquet
+    * file except the change rows staged in [[StagedChangesDir]]. */
+  private[lakehouse] def stagedDataFiles(staging: Path): Seq[Path] = {
+    if (!Files.isDirectory(staging)) return Seq.empty
+    val changes = staging.resolve(StagedChangesDir)
+    val s = Files.walk(staging)
     try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
+      .filter(p => Files.isRegularFile(p) && !p.startsWith(changes) &&
         p.getFileName.toString.endsWith(".parquet"))
       .toSeq.sortBy(_.toString)
     finally s.close()
@@ -582,6 +583,14 @@ object Versioned {
     * commit a manifest of `inherit ++ staged` and move the staged files to
     * their final root locations. The default stages nothing: a
     * metadata-only commit. A throwing `stage` aborts the commit.
+    *
+    * A change-feed commit's `stage` also writes the commit's change rows,
+    * into [[StagedChangesDir]] inside the staging dir. That directory is
+    * not listed as data; right after the claim it moves, in one rename,
+    * to the commit-owned [[sidecarDir]], and every failure deletes it with
+    * the staging dir. So no Spark job runs between claim and marker, and
+    * `beforeMarker` is left to protocol files written at the claimed
+    * version (a transaction's ref).
     * Inheriting callers MUST pin `expectedBase` — the version their
     * `inherit` list was read from — and get
     * [[ConcurrentWriteException]] if another writer committed in between
@@ -606,6 +615,12 @@ object Versioned {
   val CommitIdKey = "graft.commitId"
 
   private val SidecarPrefix = "_cdf_"
+
+  /** Where a commit's `stage` writes its change rows, relative to the
+    * staging dir. [[commitFiles]] moves it to [[sidecarDir]] at the claim;
+    * the `_cdf_` prefix keeps it out of Spark's listing of the staged data
+    * and names it as change data to whoever watches the writes. */
+  val StagedChangesDir: String = SidecarPrefix + "staged"
 
   /** Change-feed sidecar directory of the commit `commitId` at version
     * `v` — commit-owned, so an evicted writer's sidecar never clobbers the
@@ -688,10 +703,9 @@ object Versioned {
     // operation provenance: always drop a carried-forward op; record this
     // commit's own (when the caller names one).
     // Commit identity: a fresh id per commit, recorded in the manifest and
-    // handed to beforeMarker so version-keyed sidecars (the change feed)
-    // are written to COMMIT-OWNED paths — an evicted writer's in-flight
-    // sidecar job can then never clobber the winning commit's sidecar,
-    // before OR after its marker lands.
+    // naming the commit's change-feed sidecar, so sidecars live at
+    // COMMIT-OWNED paths — an evicted writer's sidecar can never clobber
+    // the winning commit's, before OR after its marker lands.
     val commitId = java.util.UUID.randomUUID().toString.take(8)
     // BasedOnKey describes one manifest file's ENCODING — never a table
     // property. Callers passing `meta = m.meta + ...` would otherwise
@@ -732,7 +746,7 @@ object Versioned {
       // relative destinations: a staged `col=value/part-x.parquet` lands at
       // the same relative path under the table root (Spark's part-file
       // names carry the write-job uuid, so cross-commit names never clash)
-      val stagedSrc = listParquet(staging)
+      val stagedSrc = stagedDataFiles(staging)
       val staged = stagedSrc.map { p =>
         val rel = staging.relativize(p).toString
         FileEntry(rel, stats.get(rel).filter(s => !s.contains("\n")))
@@ -844,7 +858,7 @@ object Versioned {
               // life is a crashed writer's orphan — clear it and retry the
               // same number so one crash can't wedge every base-pinned
               // writer until the retention sweep. A live writer's sidecar
-              // job keeps its _cdf_ mtimes fresh, and its pre-marker
+              // keeps its _cdf_ mtimes fresh, and its pre-marker
               // ownership re-check makes a mistaken reclaim loud, not a
               // lost update.
               val existing = manifestPath(dir, v)
@@ -927,13 +941,16 @@ object Versioned {
               ((schemaJson +: metaLines2) ++ contentLines).mkString("\n")
                 .getBytes(StandardCharsets.UTF_8))
           }
-        // move staged files into place — readers still resolve the old
-        // version until the marker lands, and never list the root (they
-        // scan manifest file lists), so a half-moved state is invisible.
-        // beforeMarker runs with the claimed version number but BEFORE the
-        // commit point (callers stage version-keyed sidecars, e.g. change-
-        // data files, atomically with the commit); its failure aborts.
+        // move the staged change rows and files into place — readers still
+        // resolve the old version until the marker lands, and never list
+        // the root (they scan manifest file lists), so a half-moved state
+        // is invisible. beforeMarker runs with the claimed version number
+        // but BEFORE the commit point; its failure aborts.
         try {
+          val changes = staging.resolve(StagedChangesDir)
+          if (Files.isDirectory(changes))
+            Files.move(changes, sidecarDir(dir, v, commitId),
+              StandardCopyOption.ATOMIC_MOVE)
           stagedSrc.foreach { p =>
             val dest = dir.resolve(staging.relativize(p).toString)
             if (dest.getParent != dir) Files.createDirectories(dest.getParent)
@@ -951,7 +968,7 @@ object Versioned {
         } catch {
           case e: Exception =>
             // abort cleanly: un-claim (no marker yet -> never committed)
-            // and clear this commit's partially-written sidecar. Only if
+            // and clear this commit's moved sidecar. Only if
             // the claim is still OURS — deleting a reclaimer's fresh
             // manifest would repeat the very race being aborted.
             val stillOurs = scala.util.Try(

@@ -146,15 +146,7 @@ class TableIOSpec extends SparkSuite {
       "files it already moved to the table root") {
     TableIO.writeTable(spark, lh, "tlitter", Seq((1, "a")).toDF("k", "s"))
     val tdir = Catalog.tablePath(lh, "tlitter")
-    val root = java.nio.file.Paths.get(tdir)
-    def parquetOnDisk: Set[String] = {
-      val w = Files.walk(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        w.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-          .map(p => root.relativize(p).toString).toSet
-      } finally w.close()
-    }
+    def parquetOnDisk: Set[String] = parquetUnder(tdir)
     def live: Set[String] = Versioned.readManifest(tdir,
       Versioned.latestVersion(tdir).get).get.entries.map(_.path).toSet
     val base = Versioned.latestVersion(tdir).get
@@ -610,5 +602,102 @@ class TableIOSpec extends SparkSuite {
       TableIO.importJsonl(spark, dir, schema).collect()
     }
     assert(e.getMessage != null)
+  }
+
+  /** Parquet files under `tdir` (sidecars included), table-relative. */
+  private def parquetUnder(tdir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(tdir)
+    val w = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      w.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(p => root.relativize(p).toString).toSet
+    } finally w.close()
+  }
+
+  /** `tdir` holds exactly version `base`: no staging dir, no sidecar, no
+    * claim past it, and no parquet its manifest does not name. */
+  private def leftAt(tdir: String, base: Long): Unit = {
+    val names = new java.io.File(tdir).list().toSeq
+    assert(!names.exists(_.startsWith(Versioned.StagingPrefix)), names)
+    assert(!names.exists(_.startsWith("_cdf_")), names)
+    assert(!names.contains(s"_manifest_${base + 1}"), names)
+    assert(Versioned.latestVersion(tdir).contains(base))
+    val live = Versioned.readManifest(tdir, base).get.entries.map(_.path).toSet
+    assert(parquetUnder(tdir) == live,
+      s"unreferenced parquet: ${parquetUnder(tdir) -- live}")
+  }
+
+  test("a change-row write that fails inside the stage aborts the commit, " +
+      "whether it runs beside the data write or after it") {
+    TableIO.writeTable(spark, lh, "tcrfail", Seq((1, "a")).toDF("k", "s"))
+    val tdir = Catalog.tablePath(lh, "tcrfail")
+    val base = Versioned.latestVersion(tdir).get
+    val m = Versioned.readManifest(tdir, base).get
+    def stageRow(t: String): Map[String, String] = {
+      Seq((2, "b")).toDF("k", "s").write.mode("append").parquet(t)
+      Map.empty
+    }
+    val failing = spark.range(3).selectExpr("cast(id AS int) k",
+      "cast(raise_error('no rows') AS string) s")
+    Seq(TableIO.Beside(failing),
+        TableIO.FromStaged(m.schemaJson, _ => failing)).foreach { rows =>
+      val e = intercept[Exception] {
+        Versioned.commitFiles(tdir, m.schemaJson, inherit = m.entries,
+          expectedBase = Some(base), meta = m.meta, op = "ABORTED",
+          stage = TableIO.withChangeRows(spark, Some(rows))(stageRow))
+      }
+      assert(e.getMessage.contains("no rows"), e)
+      leftAt(tdir, base)
+    }
+    assert(TableIO.selectTable(spark, lh, "tcrfail").count() == 1)
+    TableIO.dropTable(spark, lh, "tcrfail")
+  }
+
+  test("a commit that loses the race with its change rows staged aborts " +
+      "cleanly") {
+    TableIO.writeTable(spark, lh, "tcrrace", Seq((1, "a")).toDF("k", "s"))
+    val tdir = Catalog.tablePath(lh, "tcrrace")
+    val base = Versioned.latestVersion(tdir).get
+    val m = Versioned.readManifest(tdir, base).get
+    val changes = Seq((1, "a", "delete")).toDF("k", "s", "_change_type")
+    intercept[Versioned.ConcurrentWriteException] {
+      Versioned.commitFiles(tdir, m.schemaJson, inherit = m.entries,
+        expectedBase = Some(base), meta = m.meta, op = "ABORTED",
+        stage = { t =>
+          val stats = TableIO.withChangeRows(spark,
+              Some(TableIO.Beside(changes))) { t2 =>
+            Seq((2, "b")).toDF("k", "s").write.mode("append").parquet(t2)
+            Map.empty
+          }(t)
+          assert(Files.isDirectory(
+            java.nio.file.Paths.get(t, Versioned.StagedChangesDir)))
+          // another writer commits between this stage and its claim
+          TableIO.appendTable(spark, lh, "tcrrace",
+            Seq((3, "c")).toDF("k", "s"))
+          stats
+        })
+    }
+    leftAt(tdir, base + 1)
+    assert(TableIO.selectTable(spark, lh, "tcrrace").count() == 2)
+    TableIO.dropTable(spark, lh, "tcrrace")
+  }
+
+  test("vacuum's age rule sweeps a crashed writer's staging directory " +
+      "holding change rows") {
+    TableIO.writeTable(spark, lh, "tcrcrash", Seq((1, "a")).toDF("k", "s"))
+    val tdir = Catalog.tablePath(lh, "tcrcrash")
+    val base = Versioned.latestVersion(tdir).get
+    val staging = java.nio.file.Paths.get(tdir, Versioned.StagingPrefix + "crashed")
+    Seq((2, "b")).toDF("k", "s").write.parquet(staging.toString)
+    Seq((1, "a", "delete")).toDF("k", "s", "_change_type").write
+      .parquet(staging.resolve(Versioned.StagedChangesDir).toString)
+    // young: a live writer's scratch is kept
+    Versioned.vacuum(tdir)
+    assert(Files.isDirectory(staging.resolve(Versioned.StagedChangesDir)))
+    Versioned.vacuum(tdir, retainAgeMs = 0L)
+    leftAt(tdir, base)
+    assert(TableIO.selectTable(spark, lh, "tcrcrash").count() == 1)
+    TableIO.dropTable(spark, lh, "tcrcrash")
   }
 }

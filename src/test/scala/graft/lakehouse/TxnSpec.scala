@@ -334,27 +334,6 @@ class TxnSpec extends SparkSuite {
     TableIO.dropTable(spark, lh, "tgen")
   }
 
-  /** Spark jobs `body` starts, counted by job group (pool threads the body
-    * spawns inherit the group), after the listener bus has caught up. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "jobsOf", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      Thread.sleep(300) // job-start events reach listeners asynchronously
-      n.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** One sink micro-batch into table `t`, as its next batch id. */
   private def sinkBatch(t: String, batchId: Long, df: DataFrame): Unit =
     new streaming.VersionedTableProvider().createSink(spark.sqlContext,
