@@ -118,7 +118,7 @@ object Ingest {
         require(manifest.isDefined,
           s"copyInto: $source has no loadable files and table $tableName " +
             "does not exist")
-        CopyResult(currentInfo(lh, tableName, manifest.get),
+        CopyResult(TableIO.tableInfoOf(lh, tableDir, manifest.get),
           base.get, 0L, skipped.toLong, 0L)
       } else {
         val aligned = readAligned(spark, fresh, format, schema, options,
@@ -335,15 +335,6 @@ object Ingest {
         op = "INGEST_COMPACT")
       ()
     } catch { case _: Versioned.ConcurrentWriteException => () }
-  }
-
-  private def currentInfo(lh: LakehouseProps, tableName: String,
-      m: Versioned.Manifest): TableInfo = {
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    TableInfo(lh.lakehouseName, TableIO.rowsFromManifest(m).getOrElse(-1L),
-      schema.fields.length, schema.fieldNames.toSeq,
-      Catalog.tablePath(lh, tableName),
-      TableIO.partitioningOfFiles(m.files))
   }
 
   /** Expectation-gated ingestion (the DLT `expect_or_quarantine`

@@ -125,11 +125,9 @@ object MatView {
     val srcDir = Catalog.tablePath(lh, source)
     val targetV = Versioned.latestVersion(srcDir).getOrElse(throw
       new IllegalStateException(s"$source: source table has no versions"))
-    val mvDf = TableIO.selectTable(spark, lh, viewName)
     if (targetV == lastV) // already current: no commit, metadata answer
-      return TableInfo(lh.lakehouseName,
-        TableIO.tableRowCount(lh, viewName).getOrElse(-1L),
-        mvDf.columns.length, mvDf.columns.toSeq, mvDir)
+      return TableIO.tableInfoOf(lh, mvDir, m)
+    val mvDf = TableIO.selectTable(spark, lh, viewName)
     val feed = TableIO.changeFeedAtPath(spark, srcDir, lastV, Some(targetV))
     // signed delta propagation: post-images and inserts add, pre-images
     // and deletes subtract; null measure values contribute nothing to the

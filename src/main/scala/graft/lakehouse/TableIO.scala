@@ -2615,8 +2615,7 @@ object TableIO {
               allowMissingColumns = true)
           })))(t => writeStagedWithStats(clustered, t, partitionBy,
           bloomFilterFor, parquetBloomCols = bloomFilterFor)))
-      finishCommit(spark, lh, tableName, tableDir, commit,
-        rows.columns.toSeq, partitionBy)
+      finishCommit(spark, lh, tableName, tableDir, commit)
     } finally pin.foreach(_.unpersist())
   }
 
@@ -2655,20 +2654,17 @@ object TableIO {
         val commit = Versioned.commitFiles(tableDir, a.schemaJson,
           inherit = a.inherit, expectedBase = Some(a.base), meta = a.meta,
           op = "APPEND", stage = a.stage)
-        finishCommit(spark, lh, tableName, tableDir, commit, a.columns,
-          a.partitionBy)
+        finishCommit(spark, lh, tableName, tableDir, commit)
       }
     }
   }
 
   /** One staged append, ready for [[Versioned.commitFiles]]: the schema
     * to commit, the inherited entries, the base to pin (0 = new table),
-    * the commit meta and the staging step — plus the columns and the
-    * partition spec the catalog records. */
+    * the commit meta and the staging step. */
   private[lakehouse] final case class AppendPlan(schemaJson: String,
       inherit: Seq[Versioned.FileEntry], base: Long,
-      meta: Map[String, String], stage: String => Map[String, String],
-      columns: Seq[String], partitionBy: Seq[String])
+      meta: Map[String, String], stage: String => Map[String, String])
 
   /** The one append path: [[appendTable]], [[Txn.write]] and the streaming
     * sink stage every batch here against `base` — the table's current
@@ -2715,7 +2711,7 @@ object TableIO {
             if (parts.isEmpty) Map.empty[String, String]
             else Map(PartitionByKey -> parts.mkString(","))
           AppendPlan(batch.schema.json, Seq.empty, 0L, extraMeta ++ spec,
-            writeStagedWithStats(batch, _, parts), batch.columns.toSeq, parts)
+            writeStagedWithStats(batch, _, parts))
         case Some((b, m)) =>
           enforceUniqueAgainst(spark, tableDir, m, batch, uniques, ctx)
           val old = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
@@ -2727,26 +2723,36 @@ object TableIO {
           val aligned = toPhysical(
             oldEmpty.unionByName(batch, allowMissingColumns = true), evolved)
           AppendPlan(evolved.json, m.entries, b, m.meta ++ extraMeta ++ idMeta,
-            writeStagedWithStats(aligned, _, parts, bloomColsOf(m)),
-            evolved.fieldNames.toSeq, parts)
+            writeStagedWithStats(aligned, _, parts, bloomColsOf(m)))
       })
     } finally pin.foreach(_.unpersist())
   }
 
+  /** Records `tableName` in the catalog at the version `commit` made and
+    * returns its [[TableInfo]], both built from the manifest the commit
+    * returned: nothing is read back from disk. */
   private def finishCommit(spark: SparkSession, lh: LakehouseProps,
-      tableName: String, tableDir: String, commit: Versioned.Commit,
-      columns: Seq[String], partitionBy: Seq[String]): TableInfo = {
-    val written = scanSpec(spark, Versioned.specFor(tableDir, commit.version))
+      tableName: String, tableDir: String,
+      commit: Versioned.Commit): TableInfo = {
+    val m = commit.manifest
+    val written = scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries))
     // O(0) in the steady state: the manifest's per-file row counts sum to
     // the total — an O(files-in-table) count() per commit would make every
     // tiny append pay for the whole table's footers
-    val rowCount = Versioned.readManifest(tableDir, commit.version)
-      .flatMap(rowsFromManifest)
-      .getOrElse(written.count())
-    val info = TableInfo(lh.lakehouseName, rowCount, columns.length,
-      columns, tableDir, partitionBy)
+    val info = tableInfoOf(lh, tableDir, m, written.count())
     Catalog.recordTable(tableName, written, info)
     info
+  }
+
+  /** The catalog entry of the table at `tableDir` as of manifest `m`: its
+    * committed columns, its declared partition spec and the manifest's row
+    * count, else `uncounted`. */
+  private[lakehouse] def tableInfoOf(lh: LakehouseProps, tableDir: String,
+      m: Versioned.Manifest, uncounted: => Long = -1L): TableInfo = {
+    val columns =
+      DataType.fromJson(m.schemaJson).asInstanceOf[StructType].fieldNames.toSeq
+    TableInfo(lh.lakehouseName, rowsFromManifest(m).getOrElse(uncounted),
+      columns.length, columns, tableDir, partitionSpecOf(m.meta, m.files))
   }
 
   /** col1=v/col2=v/part-*.parquet -> Seq(col1, col2). A shallow clone's
@@ -3168,8 +3174,7 @@ object TableIO {
         if (affected.isEmpty && inserts.isEmpty) Map.empty
         else writeStagedWithStats(toPhysical(payload, schema), t, parts,
           bloomColsOf(m))))
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, parts)
+    finishCommit(spark, lh, tableName, tableDir, commit)
     } finally {
       if (withCdf) withAct.unpersist()
       insPin.foreach(_.unpersist())
@@ -3311,8 +3316,7 @@ object TableIO {
       meta = m.meta ++ extraMeta, op = op,
       stage = withChangeRows(spark, changes)(t => writeStagedWithStats(
         toPhysical(rewritten, rewrittenM), t, parts, bloomColsOf(m))))
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      rewritten.columns.toSeq, parts)
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** Export the table's current snapshot as line-delimited JSON under the
@@ -3470,9 +3474,7 @@ object TableIO {
     val commit = Versioned.commitFiles(tableDir, m.schemaJson,
       inherit = m.entries, expectedBase = base, meta = restoredMeta,
       op = "RESTORE")
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, partitionSpecOf(restoredMeta, m.files))
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** Serializable DML retry — the client-side loop every Delta writer
@@ -3551,9 +3553,7 @@ object TableIO {
       inherit = refs,
       expectedBase = Some(Versioned.latestVersion(dstDir).getOrElse(0L)),
       meta = cloneMeta(m, sourceName, srcVersion), op = "CLONE")
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    finishCommit(spark, lh, cloneName, dstDir, commit,
-      schema.fieldNames.toSeq, partitioningOfFiles(m.files))
+    finishCommit(spark, lh, cloneName, dstDir, commit)
   }
 
   /** A clone's commit meta. Constraints, CDF flag, the declared partition
@@ -3640,9 +3640,7 @@ object TableIO {
         }
         statsByRel
       })
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    finishCommit(spark, lh, cloneName, dstDir, commit,
-      schema.fieldNames.toSeq, partitioningOfFiles(m.files))
+    finishCommit(spark, lh, cloneName, dstDir, commit)
   }
 
   /** Partition EVOLUTION without rewrite — Iceberg-style spec change,
@@ -3673,8 +3671,7 @@ object TableIO {
         m.meta + (PartitionByKey -> partitionBy.mkString(",")),
         "partitionEvolution"),
       op = "SET PARTITIONING")
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, partitionBy)
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** One check constraint's SQL mentioning `colName` as an identifier —
@@ -3730,9 +3727,7 @@ object TableIO {
       s"$tableName has no column $colName")
     val f = schema(colName)
     if (f.dataType == to) // already there: nothing to commit
-      return TableInfo(lh.lakehouseName, rowsFromManifest(m).getOrElse(-1L),
-        schema.fields.length, schema.fieldNames.toSeq, tableDir,
-        partitioningOfFiles(m.files))
+      return tableInfoOf(lh, tableDir, m)
     require(Widenable.get(f.dataType).exists(_.contains(to)),
       s"$tableName.$colName: ${f.dataType.simpleString} → " +
         s"${to.simpleString} is not a supported widening (" +
@@ -3751,8 +3746,7 @@ object TableIO {
       inherit = entries, expectedBase = Some(base),
       meta = Versioned.withFeature(m.meta, "typeWidening"),
       op = "WIDEN")
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      newSchema.fieldNames.toSeq, partitionSpecOf(m.meta, m.files))
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   def renameColumn(spark: SparkSession, lh: LakehouseProps, tableName: String,
@@ -3794,8 +3788,7 @@ object TableIO {
       inherit = m.entries, expectedBase = Some(base),
       meta = Versioned.withFeature(reKeyed, "columnMapping"),
       op = "RENAME COLUMN")
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      renamed.fieldNames.toSeq, partitioningOfFiles(m.files))
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** Drop a column WITHOUT rewriting data (Delta DROP COLUMN semantics):
@@ -3835,8 +3828,7 @@ object TableIO {
       meta = Versioned.withFeature(
         m.meta + (TombstonePrefix + dropped -> "1"), "columnMapping"),
       op = "DROP COLUMN")
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      narrowed.fieldNames.toSeq, partitioningOfFiles(m.files))
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** Metadata-only row count of the current version (sum of the
@@ -4177,18 +4169,23 @@ object TableIO {
       meta.getOrElse(Versioned.CommitIdKey, throw new IllegalStateException(
         s"$tableDir: manifest $v has no commit id — the table is corrupt")))
 
-  /** The Spark schema a sidecar's writer stored in its part files'
-    * footers (the key Spark's own schema inference reads), read from one
-    * footer on the driver — so opening a change feed runs no Spark job. */
-  private def sidecarSchema(spark: SparkSession, sidecar: Path): StructType = {
+  /** A sidecar's change rows, read by their part files' names: handed the
+    * `_`-prefixed sidecar directory itself, Spark logs that it ignored the
+    * path (and reads it anyway). They are read under the Spark schema
+    * their writer stored in the footers (the key Spark's own schema
+    * inference reads), taken from one footer on the driver, so opening a
+    * change feed runs no Spark job. */
+  private def sidecarRows(spark: SparkSession, sidecar: Path): DataFrame = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-    val part = {
+    val parts = {
       val ls = Files.list(sidecar)
-      try ls.iterator.asScala.find(_.getFileName.toString.endsWith(".parquet"))
+      try ls.iterator.asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
       finally ls.close()
-    }.getOrElse(throw new IllegalStateException(
+    }
+    val part = parts.headOption.getOrElse(throw new IllegalStateException(
       s"$sidecar: change-data sidecar holds no part file"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(part.toUri),
@@ -4196,9 +4193,11 @@ object TableIO {
     val json = try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
       .get(ParquetReadSupport.SPARK_METADATA_KEY))
     finally reader.close()
-    json.map(DataType.fromJson(_).asInstanceOf[StructType]).getOrElse(
-      throw new IllegalStateException(s"$part: change-data sidecar footer " +
-        s"has no ${ParquetReadSupport.SPARK_METADATA_KEY} schema"))
+    val schema = json.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(s"$part: change-data " +
+        s"sidecar footer has no ${ParquetReadSupport.SPARK_METADATA_KEY} " +
+        "schema"))
+    spark.read.schema(schema).parquet(parts.map(_.toString): _*)
   }
 
   /** Row-level changes since `sinceVersion` (Delta `table_changes`): for
@@ -4219,7 +4218,7 @@ object TableIO {
     * `(sinceVersion, untilVersion ?? latest]`. Building the frame runs no
     * Spark job: manifests are read on the driver, and each sidecar is read
     * under the schema in one of its part files' footers
-    * ([[sidecarSchema]]) instead of Spark inferring it in a job. */
+    * ([[sidecarRows]]) instead of Spark inferring it in a job. */
   private[lakehouse] def changeFeedAtPath(spark: SparkSession,
       tableDir: String, sinceVersion: Long,
       untilVersion: Option[Long]): DataFrame = {
@@ -4293,8 +4292,7 @@ object TableIO {
               "sidecar — the commit predates enableChangeFeed (or was a " +
               "RESTORE, the one write path the feed does not model); " +
               "re-baseline the consumer from a full snapshot")
-          Some(spark.read.schema(sidecarSchema(spark, d)).parquet(d.toString)
-            .withColumn("_commit_version", lit(v)))
+          Some(sidecarRows(spark, d).withColumn("_commit_version", lit(v)))
         }
     }.flatten.toSeq
     frames match {
@@ -4399,8 +4397,7 @@ object TableIO {
         else writeStagedWithStats(toPhysical(arranged,
             DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
           t, parts, blooms, parquetBloomCols = blooms)))
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      df.columns.toSeq, parts)
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** Manifest meta keys remembering the table's declared clustering —
@@ -4582,8 +4579,7 @@ object TableIO {
         else writeStagedWithStats(toPhysical(arranged,
             DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
           t, parts, blooms, parquetBloomCols = blooms)))
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      df.columns.toSeq, parts)
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** DELETE WHERE (Delta row-delete, file-level): a pushed-down scan finds
@@ -4666,8 +4662,7 @@ object TableIO {
         meta = Versioned.withFeature(m.meta, "deletionVectors"),
         op = "DELETE",
         stage = withChangeRows(spark, changes.map(Beside))(_ => Map.empty))
-      finishCommit(spark, lh, tableName, tableDir, commit,
-        schema.fieldNames.toSeq, parts)
+      finishCommit(spark, lh, tableName, tableDir, commit)
     } else {
       val (affected, untouched) = touchedFiles(tableDir, m.entries,
         Option.when(candidates.nonEmpty)(scanFiles(spark,
@@ -4706,8 +4701,7 @@ object TableIO {
             writeStagedWithStats(toPhysical(survivors, schema),
               t, parts, bloomColsOf(m))
           }))
-      finishCommit(spark, lh, tableName, tableDir, commit,
-        schema.fieldNames.toSeq, parts)
+      finishCommit(spark, lh, tableName, tableDir, commit)
     }
   }
 
@@ -4766,8 +4760,7 @@ object TableIO {
     val commit = commitMaintenance(tableDir, base, m,
       affected = m.entries, metaOf = identity, op = "ANALYZE",
       replaced = entries)
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, partitionSpecOf(m.meta, m.files))
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** Per-file stats JSON over an arbitrary keepMeta scan, keyed by the
@@ -4839,15 +4832,12 @@ object TableIO {
   def convertToVersioned(spark: SparkSession, lh: LakehouseProps,
       tableName: String): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val (commit, columns) = convertDir(spark, tableDir)
-    finishCommit(spark, lh, tableName, tableDir, commit, columns,
-      partitioningOfFiles(commit.files))
+    finishCommit(spark, lh, tableName, tableDir, convertDir(spark, tableDir))
   }
 
-  /** The CONVERT commit of [[convertToVersioned]], by path; returns the
-    * commit and the adopted table's columns. */
+  /** The CONVERT commit of [[convertToVersioned]], by path. */
   private def convertDir(spark: SparkSession,
-      tableDir: String): (Versioned.Commit, Seq[String]) = {
+      tableDir: String): Versioned.Commit = {
     require(Versioned.isPreProtocol(tableDir),
       s"$tableDir already has committed versions — nothing to convert")
     require(Files.isDirectory(Paths.get(tableDir)),
@@ -4861,9 +4851,8 @@ object TableIO {
     // like a staged write)
     val stats = collectFileStats(spark)(tableDir)
     val entries = files.map(f => Versioned.FileEntry(f, stats.get(f)))
-    (Versioned.commitFiles(tableDir, df.schema.json,
-      inherit = entries, expectedBase = Some(0L), op = "CONVERT"),
-      df.columns.toSeq)
+    Versioned.commitFiles(tableDir, df.schema.json,
+      inherit = entries, expectedBase = Some(0L), op = "CONVERT")
   }
 
   /** The parquet data files under a pre-protocol directory, relative to it
@@ -4896,9 +4885,12 @@ object TableIO {
           preProtocolFiles(tableDir).nonEmpty =>
         // losing the CONVERT race to a concurrent writer is fine: it
         // adopted the same files
-        try convertDir(spark, tableDir)
-        catch { case _: Versioned.ConcurrentWriteException => () }
-        adopted(spark, tableDir)
+        try {
+          val c = convertDir(spark, tableDir)
+          Some(c.version -> c.manifest)
+        } catch {
+          case _: Versioned.ConcurrentWriteException => adopted(spark, tableDir)
+        }
       case None => None
     }
 
@@ -5102,8 +5094,7 @@ object TableIO {
         rewritten.fold(Map.empty[String, String])(r =>
           writeStagedWithStats(toPhysical(r, schema), t, parts,
             bloomColsOf(m)))))
-    finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, parts)
+    finishCommit(spark, lh, tableName, tableDir, commit)
   }
 
   /** Views write path — the reference defines `viewPath` (common.py:392) and

@@ -177,12 +177,14 @@ object Versioned {
       entries: Seq[FileEntry]): ScanFiles =
     ScanFiles(tableDir, m.schemaJson, entries.map(_.path), dvOf(entries))
 
-  /** Result of a commit: the version number, the files this commit ADDED,
-    * and the full file list of the new version. */
-  final case class Commit(version: Long, added: Seq[FileEntry],
-      entries: Seq[FileEntry]) {
-    def files: Seq[String] = entries.map(_.path)
-  }
+  /** Result of a commit: its version and manifest, exactly as
+    * [[readManifest]] returns it — entries in resolved order, meta as
+    * stamped (re-clamped commit time, features), no [[BasedOnKey]]. */
+  final case class Commit(version: Long, manifest: Manifest)
+
+  /** Sees (table dir, result) of every landed commit; tests observe. */
+  @volatile private[lakehouse] var onCommit: (String, Commit) => Unit =
+    (_, _) => ()
 
   /** A read-modify-write commit lost the race for base+1: the caller's view
     * of the table is stale. Re-read and retry (Delta MERGE semantics). */
@@ -565,43 +567,22 @@ object Versioned {
   }
 
   /** The data files a `stage` wrote under `staging`, sorted: every parquet
-    * file except the change rows staged in [[StagedChangesDir]]. */
+    * file except the change rows staged in [[StagedChangesDir]]. The walk
+    * never enters that directory: a second thread may still be writing
+    * the change rows there, its task files coming and going. */
   private[lakehouse] def stagedDataFiles(staging: Path): Seq[Path] = {
     if (!Files.isDirectory(staging)) return Seq.empty
     val changes = staging.resolve(StagedChangesDir)
-    val s = Files.walk(staging)
-    try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) && !p.startsWith(changes) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.toString)
-    finally s.close()
+    val top = Files.list(staging)
+    try top.iterator().asScala.filterNot(_ == changes).toSeq.flatMap { r =>
+      val s = Files.walk(r)
+      try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.endsWith(".parquet")).toSeq
+      finally s.close()
+    }.sortBy(_.toString)
+    finally top.close()
   }
 
-  /** Stage new files via `stage` (handed a fresh hidden `.staging-<uuid>`
-    * scratch dir inside the table dir; it returns the per-file stats of
-    * what it staged, keyed by staging-relative path), then atomically
-    * commit a manifest of `inherit ++ staged` and move the staged files to
-    * their final root locations. The default stages nothing: a
-    * metadata-only commit. A throwing `stage` aborts the commit.
-    *
-    * A change-feed commit's `stage` also writes the commit's change rows,
-    * into [[StagedChangesDir]] inside the staging dir. That directory is
-    * not listed as data; right after the claim it moves, in one rename,
-    * to the commit-owned [[sidecarDir]], and every failure deletes it with
-    * the staging dir. So no Spark job runs between claim and marker, and
-    * `beforeMarker` is left to protocol files written at the claimed
-    * version (a transaction's ref).
-    * Inheriting callers MUST pin `expectedBase` — the version their
-    * `inherit` list was read from — and get
-    * [[ConcurrentWriteException]] if another writer committed in between
-    * (their inherit list would silently drop that writer's changes
-    * otherwise). Plain overwrites (inherit = Nil) never conflict; they
-    * retry at the next free number.
-    *
-    * Ordering: claim manifest → move files → marker. A conflict aborts
-    * before any file reaches its final location; a crash after the claim
-    * leaves an uncommitted orphan (no marker) that age-based sweep clears.
-    */
   /** Manifest-meta key recording what operation produced a version —
     * surfaced by DESCRIBE HISTORY (Delta's operation column). Set via
     * [[commitFiles]]'s `op`; a carried-forward stale value is always
@@ -684,6 +665,33 @@ object Versioned {
     }
   }
 
+  /** Stage new files via `stage` (handed a fresh hidden `.staging-<uuid>`
+    * scratch dir inside the table dir; it returns the per-file stats of
+    * what it staged, keyed by staging-relative path), then atomically
+    * commit a manifest of `inherit ++ staged` and move the staged files to
+    * their final root locations. The default stages nothing: a
+    * metadata-only commit. A throwing `stage` aborts the commit.
+    *
+    * A change-feed commit's `stage` also writes the commit's change rows,
+    * into [[StagedChangesDir]] inside the staging dir. That directory is
+    * not listed as data; right after the claim it moves, in one rename,
+    * to the commit-owned [[sidecarDir]], and every failure deletes it with
+    * the staging dir. So no Spark job runs between claim and marker, and
+    * `beforeMarker` is left to protocol files written at the claimed
+    * version (a transaction's ref).
+    * Inheriting callers MUST pin `expectedBase` — the version their
+    * `inherit` list was read from — and get
+    * [[ConcurrentWriteException]] if another writer committed in between
+    * (their inherit list would silently drop that writer's changes
+    * otherwise). Plain overwrites (inherit = Nil) never conflict; they
+    * retry at the next free number.
+    *
+    * Ordering: claim manifest → move files → marker. A conflict aborts
+    * before any file reaches its final location; a crash after the claim
+    * leaves an uncommitted orphan (no marker) that age-based sweep clears.
+    * Returns the version with the manifest committed at it, built from
+    * what was written, never read back.
+    */
   def commitFiles(tableDir: String, schemaJson: String,
       inherit: Seq[FileEntry] = Seq.empty,
       expectedBase: Option[Long] = None,
@@ -794,8 +802,8 @@ object Versioned {
       // stats-changed inherited path (DV added, ANALYZE) encodes as
       // remove + re-add. Full manifests every CheckpointInterval versions
       // bound the resolution chain.
-      val deltaParts: Option[(Seq[String], Long)] = expectedBase.flatMap {
-        base =>
+      val deltaParts: Option[(Seq[String], Seq[FileEntry], Long)] =
+        expectedBase.flatMap { base =>
           if ((base + 1) % CheckpointInterval == 0) None
           else scala.util.Try(readManifest(tableDir, base)).toOption.flatten
             .flatMap { bm =>
@@ -808,15 +816,16 @@ object Versioned {
                 be.path }
             val added = files.filterNot(e =>
               baseByPath.get(e.path).contains(e.serialized))
-            if ((removed.size + added.size) * 2 <= files.size)
-              Some((removed.map(RmPrefix + _) ++ added.map(_.serialized), base))
-            else None
+            val rm = removed.toSet // resolved as readManifest replays it
+            Option.when((removed.size + added.size) * 2 <= files.size)((
+              removed.map(RmPrefix + _) ++ added.map(_.serialized),
+              bm.entries.filterNot(e => rm(e.path)) ++ added, base))
           }
-      }
-      val (contentLines, metaFinal) = deltaParts match {
-        case Some((dl, b0)) => (dl, withFeature(metaRt, "deltaManifests")
-          + (BasedOnKey -> b0.toString))
-        case None => (files.map(_.serialized), metaRt)
+        }
+      val (contentLines, entries, metaFinal) = deltaParts match {
+        case Some((dl, resolved, b0)) => (dl, resolved,
+          withFeature(metaRt, "deltaManifests") + (BasedOnKey -> b0.toString))
+        case None => (files.map(_.serialized), files, metaRt)
       }
       // writer gate: refuse to commit meta that requires features this
       // implementation does not understand (it could not honor them)
@@ -930,16 +939,18 @@ object Versioned {
         // predecessor; the claimed manifest is writer-owned until the
         // marker lands, making the in-place rewrite safe (concurrent
         // claimers only probe existence, readers only trust markers).
-        latestVersion(tableDir)
+        val metaCommitted = latestVersion(tableDir)
           .flatMap(pv => manifestMetaOnly(tableDir, pv))
           .flatMap(_.get(CommitTsKey))
           .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .filter(_ >= commitTs).foreach { prevTs =>
-            val metaLines2 = (metaFinal + (CommitTsKey -> (prevTs + 1).toString))
-              .toSeq.sortBy(_._1).map { case (k, mv) => s"#$k=$mv" }
+          .filter(_ >= commitTs).fold(metaFinal) { prevTs =>
+            val meta2 = metaFinal + (CommitTsKey -> (prevTs + 1).toString)
+            val metaLines2 = meta2.toSeq.sortBy(_._1)
+              .map { case (k, mv) => s"#$k=$mv" }
             Files.write(manifestPath(dir, v),
               ((schemaJson +: metaLines2) ++ contentLines).mkString("\n")
                 .getBytes(StandardCharsets.UTF_8))
+            meta2
           }
         // move the staged change rows and files into place — readers still
         // resolve the old version until the marker lands, and never list
@@ -1026,7 +1037,10 @@ object Versioned {
               RetainAgeMs).getOrElse(false))
           if (droppable || v % 16 == 0) sweep(dir, RetainAgeMs)
         } catch { case _: Exception => () }
-        Commit(v, staged, files)
+        val c = Commit(v,
+          Manifest(schemaJson, entries, metaCommitted - BasedOnKey))
+        onCommit(tableDir, c)
+        c
       } finally Files.deleteIfExists(tmp)
     } catch {
       case e: Throwable =>

@@ -68,6 +68,46 @@ class ChangeFeedCommitSpec extends SparkSuite {
     Seq("jobs_cdf", "jobs_rep").foreach(TableIO.dropTable(spark, lh, _))
   }
 
+  test("reading a change feed over four sidecars logs no ignored-path " +
+      "warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    cdfTable("quiet_cdf", (1 to 40).map(k => (k, k * 1.0)))
+    val since = latest("quiet_cdf")
+    TableIO.deleteFromTable(spark, lh, "quiet_cdf", "k BETWEEN 3 AND 5")
+    TableIO.deleteFromTable(spark, lh, "quiet_cdf", "k BETWEEN 6 AND 7",
+      deletionVectors = true)
+    TableIO.updateTable(spark, lh, "quiet_cdf", "k BETWEEN 10 AND 12",
+      Map("v" -> "v + 100"))
+    TableIO.mergeTable(spark, lh, "quiet_cdf",
+      Seq((1, 10.0), (99, 99.0)).toDF("k", "v"), Seq("k"))
+    val sidecars = new java.io.File(Catalog.tablePath(lh, "quiet_cdf"))
+      .list().count(_.startsWith("_cdf_"))
+    assert(sidecars == 4, s"$sidecars sidecars")
+    val messages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("quiet-cdf", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        messages.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    val feed =
+      try TableIO.readChangeFeed(spark, lh, "quiet_cdf", since)
+      finally { logger.removeAppender(appender); appender.stop() }
+    val ignored = messages.asScala.filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+    // delete 3 + DV delete 2 + update 3×2 + merge (1 update, 1 insert) 3
+    assert(feed.count() == 14)
+    TableIO.dropTable(spark, lh, "quiet_cdf")
+  }
+
   test("the feed of every rewrite kind is unchanged: rewrite and DV " +
       "deletes, update, merges (one adding a column), mergeInto, " +
       "compaction, clustering, a CDC apply into a feed-enabled replica, " +

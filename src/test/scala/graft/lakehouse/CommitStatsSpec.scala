@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions.col
 /** Every commit path stages its files and their stats in one step: each
   * manifest entry a commit adds must carry exactly the stats the read-back
   * aggregation ([[TableIO.collectFileStats]]) derives from that file, and a
-  * commit that stages nothing must add no entries. */
+  * commit that stages nothing must add no entries. Every commit also hands
+  * back the manifest it committed: schema, entries in order and meta equal
+  * what [[Versioned.readManifest]] resolves at its version. */
 class CommitStatsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -21,15 +23,36 @@ class CommitStatsSpec extends SparkSuite {
     Versioned.latestVersion(dir).flatMap(Versioned.readManifest(dir, _))
   }
 
+  /** Runs `body` and returns the commits it made to `tables`, each after
+    * checking that the manifest it returned is the one committed. */
+  private def commitsOf(tables: String*)(body: => Unit)
+      : Seq[Versioned.Commit] = {
+    def key(dir: String) = Paths.get(dir).toAbsolutePath.normalize
+    val dirs = tables.map(t => key(Catalog.tablePath(lh, t))).toSet
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Versioned.Commit)]()
+    Versioned.onCommit = (dir, c) => if (dirs(key(dir))) seen.add(dir -> c)
+    try body finally Versioned.onCommit = (_, _) => ()
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.map { case (dir, c) =>
+      val m = Versioned.readManifest(dir, c.version).get
+      assert(c.manifest.schemaJson == m.schemaJson, s"$dir@${c.version}: schema")
+      assert(c.manifest.entries == m.entries, s"$dir@${c.version}: entries")
+      assert(c.manifest.meta == m.meta, s"$dir@${c.version}: meta")
+      c
+    }
+  }
+
   /** Runs `commit` and returns, per table, the entries it added (paths
     * absent from the table's previous version), after checking each one's
     * stats against a read-back over a copy of the file at its relative
-    * path (so partition stats still come from the path segments). */
+    * path (so partition stats still come from the path segments), and
+    * that every commit it made returned its committed manifest. */
   private def addedBy(tables: String*)(commit: => Unit)
       : Map[String, Seq[Versioned.FileEntry]] = {
     val before = tables.map(t =>
       t -> manifest(t).map(_.files.toSet).getOrElse(Set.empty)).toMap
-    commit
+    assert(commitsOf(tables: _*)(commit).nonEmpty, "no commit observed")
     tables.map { t =>
       val m = manifest(t).get
       val added = m.entries.filterNot(e => before(t)(e.path))
@@ -143,5 +166,85 @@ class CommitStatsSpec extends SparkSuite {
     assert(TableIO.selectTable(spark, lh, "cs4")
       .select(col("k")).as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
     TableIO.dropTable(spark, lh, "cs4")
+  }
+
+  test("a delta-encoded DV delete returns its manifest: the stats-changed " +
+      "entry re-added after the inherited ones") {
+    TableIO.writeTable(spark, lh, "cs5", rows(60).repartition(6))
+    val dir = Catalog.tablePath(lh, "cs5")
+    val before = manifest("cs5").get
+    val Seq(c) = commitsOf("cs5") {
+      TableIO.deleteFromTable(spark, lh, "cs5", "k = 5",
+        deletionVectors = true)
+    }
+    assert(Versioned.manifestMetaOnly(dir, c.version).get
+      .contains(Versioned.BasedOnKey), "the DV delete was not delta-encoded")
+    val vectored = c.manifest.entries.last
+    assert(Versioned.dvRefOf(vectored).isDefined)
+    assert(c.manifest.entries.init ==
+      before.entries.filterNot(_.path == vectored.path))
+    assert(TableIO.selectTable(spark, lh, "cs5").count() == 59)
+    TableIO.dropTable(spark, lh, "cs5")
+  }
+
+  test("a row-tracked append returns its manifest with the added files' " +
+      "base row ids") {
+    TableIO.writeTable(spark, lh, "cs6", rows(20).repartition(2))
+    assert(commitsOf("cs6")(TableIO.enableRowTracking(spark, lh, "cs6"))
+      .size == 1)
+    val before = manifest("cs6").get.files.toSet
+    val Seq(c) = commitsOf("cs6") {
+      TableIO.appendTable(spark, lh, "cs6", rows(5, from = 100))
+    }
+    val added = c.manifest.entries.filterNot(e => before(e.path))
+    assert(added.nonEmpty && added.forall(e => Versioned.statsField(
+      e.stats, Versioned.BaseRowIdStatKey).isDefined))
+    TableIO.dropTable(spark, lh, "cs6")
+  }
+
+  test("a commit whose in-commit timestamp is re-clamped after the claim " +
+      "returns the re-clamped stamp") {
+    // writer B runs a whole commit while writer A stages (nested inside
+    // A's stage): B's stamp is at least A's pre-claim stamp, so A
+    // re-clamps above it once it has claimed the next version
+    TableIO.writeTable(spark, lh, "cs7", rows(3))
+    val dir = Catalog.tablePath(lh, "cs7")
+    val schema = rows(1).schema.json
+    def stageRows(n: Int, from: Int)(target: String): Map[String, String] = {
+      rows(n, from).write.mode("append").parquet(target)
+      Map.empty
+    }
+    val Seq(inner, outer) = commitsOf("cs7") {
+      Versioned.commitFiles(dir, schema, stage = { target =>
+        Versioned.commitFiles(dir, schema, stage = stageRows(1, 10))
+        stageRows(1, 20)(target)
+      })
+    }
+    assert(outer.version == inner.version + 1)
+    def ts(c: Versioned.Commit) = c.manifest.meta(Versioned.CommitTsKey).toLong
+    assert(ts(outer) == ts(inner) + 1, "the outer commit was not re-clamped")
+    TableIO.dropTable(spark, lh, "cs7")
+  }
+
+  test("TableInfo is built in one place") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"sources not found under $root")
+    val built = """(?<!class )\bTableInfo\(""".r
+    val walk = Files.walk(root)
+    val sites =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toSeq.flatMap { f =>
+          val src = new String(Files.readAllBytes(f), "UTF-8")
+          built.findAllMatchIn(src).map { hit =>
+            val name = """\n  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+              .findAllMatchIn(src.substring(0, hit.start)).toSeq
+              .lastOption.map(_.group(1)).getOrElse("?")
+            s"${f.getFileName}:$name"
+          }
+        }
+      finally walk.close()
+    assert(sites == Seq("TableIO.scala:tableInfoOf"),
+      s"TableInfo built at: ${sites.sorted.mkString(", ")}")
   }
 }

@@ -101,4 +101,40 @@ class PartitionEvolutionSpec extends SparkSuite {
       TableIO.renameColumn(spark, lh, "pe5", "s", "t")
     }
   }
+
+  test("after an evolution, column DDL, clones and a no-op copyInto report " +
+      "the declared spec, as the next append does") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val base = (1 to 20).map(i =>
+      (i, if (i % 2 == 0) "a" else "b", i, i)).toDF("k", "s", "x", "y")
+    val src = Files.createTempDirectory("pevo_src").resolve("in").toString
+    base.write.parquet(src)
+    val cases: Seq[(String, String => TableInfo)] = Seq(
+      "renameColumn" -> (t => TableIO.renameColumn(spark, lh, t, "x", "x2")),
+      "dropColumn" -> (t => TableIO.dropColumn(spark, lh, t, "y")),
+      "widenColumnType" ->
+        (t => TableIO.widenColumnType(spark, lh, t, "x", LongType)),
+      "widenColumnType, no-op" ->
+        (t => TableIO.widenColumnType(spark, lh, t, "x", IntegerType)),
+      "shallow cloneTable" ->
+        (t => TableIO.cloneTable(spark, lh, t, s"${t}_clone")),
+      "deep cloneTable" ->
+        (t => TableIO.cloneTable(spark, lh, t, s"${t}_clone", deep = true)),
+      "no-op copyInto" -> { t =>
+        Ingest.copyInto(spark, lh, t, src, format = "parquet")
+        Ingest.copyInto(spark, lh, t, src, format = "parquet").table
+      })
+    val reported = cases.zipWithIndex.map { case ((op, run), i) =>
+      val t = s"pe6_$i"
+      TableIO.writeTable(spark, lh, t, base)
+      TableIO.evolvePartitioning(spark, lh, t, Seq("s"))
+      val info = run(t)
+      val name = Paths.get(info.path).getFileName.toString
+      val next = TableIO.appendTable(spark, lh, name,
+        TableIO.selectTable(spark, lh, name).limit(1))
+      (op, info.partitionBy, next.partitionBy)
+    }
+    assert(reported == cases.map(c => (c._1, Seq("s"), Seq("s"))),
+      reported.mkString("\n"))
+  }
 }

@@ -700,4 +700,29 @@ class TableIOSpec extends SparkSuite {
     assert(TableIO.selectTable(spark, lh, "tcrcrash").count() == 1)
     TableIO.dropTable(spark, lh, "tcrcrash")
   }
+
+  test("listing a stage's data files never enters the change rows a " +
+      "second thread is still writing beside them") {
+    val staging = Files.createTempDirectory("staged_walk")
+    val data = staging.resolve("g=1/part-0.parquet")
+    Files.createDirectories(data.getParent)
+    Files.write(data, Array[Byte](1))
+    val temp = staging.resolve(Versioned.StagedChangesDir).resolve("_temporary")
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // task files appearing and vanishing, as a Spark write commits them
+    val writer = new Thread(() => {
+      var i = 0
+      while (!stop.get) {
+        val task = temp.resolve(s"0/task_$i")
+        Files.createDirectories(task)
+        Files.write(task.resolve("part-0.parquet"), Array[Byte](1))
+        Versioned.deleteRecursively(temp)
+        i += 1
+      }
+    })
+    writer.start()
+    try (1 to 2000).foreach(_ =>
+      assert(Versioned.stagedDataFiles(staging) == Seq(data)))
+    finally { stop.set(true); writer.join() }
+  }
 }
