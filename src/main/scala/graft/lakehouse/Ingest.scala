@@ -131,11 +131,13 @@ object Ingest {
         // our commit is the first version ABOVE the pinned base carrying
         // this batch's ledger key — not necessarily base+1: the claim
         // loop allocates past decided-aborted transaction versions, whose
-        // manifests must never be mistaken for ours
+        // manifests must never be mistaken for ours. Meta is complete in
+        // every manifest file, so header probes find it and only the
+        // matched version's content is resolved
         val v = Versioned.committedVersions(tableDir)
-          .filter(_ > base.getOrElse(0L)).sorted
-          .find(cv => Versioned.readManifest(tableDir, cv)
-            .exists(_.meta.contains(KeyPrefix + cid)))
+          .filter(_ > base.getOrElse(0L))
+          .find(cv => Versioned.manifestMetaOnly(tableDir, cv)
+            .exists(_.contains(KeyPrefix + cid)))
           .getOrElse(throw new IllegalStateException(
             s"copyInto($tableName): committed batch $cid not found above " +
               s"base $base"))

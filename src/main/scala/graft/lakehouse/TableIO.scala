@@ -934,9 +934,11 @@ object TableIO {
     }.take(MaxStatsCols)
 
   /** Collect per-file min/max stats (and, for `bloomCols`, per-file Bloom
-    * bitsets) over a staged write — ONE aggregation over the NEW files only,
-    * O(batch); Delta computes the same stats inline during its write.
-    * Returns staging-relative path → single-line JSON
+    * bitsets) by re-reading the parquet files under a directory — ONE
+    * aggregation. CONVERT stats files already on disk this way; staged
+    * writes get the same stats from their write tasks
+    * ([[writeStagedWithStats]]), and the specs hold the two equal.
+    * Returns dir-relative path → single-line JSON
     * `{"col":[min,max],...,"__bloom_col":"<base64>"}` (json4s-rendered:
     * control characters are escaped, so the manifest's line/tab format is
     * safe). */
@@ -966,7 +968,9 @@ object TableIO {
       finally walk.close()
     }
     val cols = statsColumns(df.schema, exclude = pathPartCols)
-    val blooms = bloomCols.filter(df.columns.contains)
+    // no Bloom on a partition column, as in a staged write
+    val blooms = bloomCols.filter(c =>
+      df.columns.contains(c) && !pathPartCols(c))
     val bloomAgg = udaf(new Bloom.Agg(Bloom.DefaultBits), Encoders.scalaLong)
     // count(*) always rides along: per-file row counts (Delta's numRecords)
     // let later commits derive the table's total WITHOUT re-reading it;
@@ -1054,7 +1058,7 @@ object TableIO {
   /** Shared stats-JSON renderer: one staged file's raw numbers → the
     * single-line manifest stats doc. Used by BOTH the read-back
     * aggregation ([[collectFileStats]]) and the write-task tracker
-    * ([[writeTracked]]) so the two paths render byte-identically.
+    * ([[writeStagedWithStats]]) so the two paths render byte-identically.
     * Partition-column stats come from the file's OWN path segments:
     * min = max = the segment value (one value per file by construction),
     * __HIVE_DEFAULT_PARTITION__ = the all-null file shape. Long-string
@@ -1132,44 +1136,24 @@ object TableIO {
     }
   }
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Staged parquet write that returns the per-file stats of what it
     * staged — the staging step every data-writing commit hands
     * [[Versioned.commitFiles]]. The stats come from the write tasks
-    * themselves ([[writeTracked]]; guide §1.2: don't pay a second Spark job
-    * to recompute what the write tasks already saw). When the tracker
-    * cannot serve them, this is the one place that re-reads the staged
-    * files with [[collectFileStats]] instead — the two render identical
-    * stats, and every fallback logs a WARN so it cannot hide a defect. */
+    * themselves through a [[WriteStats.Tracker]] (guide §1.2: don't pay a
+    * second Spark job to recompute what the write tasks already saw), the
+    * same writer machinery as `df.write.parquet`. A Bloom column that is
+    * also a partition column records no Bloom: its path-derived
+    * min = max stats prune it exactly. A tracker error fails the write,
+    * and a tracker that did not see exactly the staged files fails the
+    * commit; no file commits with stats from anywhere else. */
   private[lakehouse] def writeStagedWithStats(df: DataFrame, target: String,
       partitionBy: Seq[String] = Seq.empty,
       bloomStatCols: Seq[String] = Seq.empty,
-      parquetBloomCols: Seq[String] = Seq.empty): Map[String, String] =
-    writeTracked(df, target, partitionBy, bloomStatCols,
-        parquetBloomCols) match {
-      case Right(stats) => stats
-      case Left(reason) =>
-        log.warn(s"staged write $target: $reason; re-reading the staged " +
-          "files for stats")
-        try collectFileStats(df.sparkSession, bloomStatCols)(target)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            log.warn(s"staged write $target: stats read-back failed; its " +
-              "files commit without stats", e)
-            Map.empty
-        }
-    }
-
-  /** The write-task half of [[writeStagedWithStats]]: the same writer
-    * machinery as `df.write.parquet`, plus a [[WriteStats.Tracker]].
-    * Returns the rendered stats map, or why the tracker cannot serve it. */
-  private[lakehouse] def writeTracked(df: DataFrame, target: String,
-      partitionBy: Seq[String], bloomStatCols: Seq[String],
-      parquetBloomCols: Seq[String]): Either[String, Map[String, String]] = {
+      parquetBloomCols: Seq[String] = Seq.empty): Map[String, String] = {
     import org.apache.spark.sql.graftbridge.StatsWriteBridge
     val cols = statsColumns(df.schema, exclude = partitionBy.toSet)
-    val blooms = bloomStatCols.filter(df.columns.contains)
+    val blooms = bloomStatCols.filter(c =>
+      df.columns.contains(c) && !partitionBy.contains(c))
     val sumCols = sumStatsCols(cols)
     val options = parquetBloomCols
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
@@ -1178,28 +1162,20 @@ object TableIO {
     // so ordinals bind against the schema minus partition columns
     val dataSchema = StructType(
       df.schema.fields.filterNot(f => partitionBy.contains(f.name)))
-    // a bloom column that is also a partition column can't be tracked from
-    // the data row — write untracked
-    val trackable = blooms.forall(c => dataSchema.fieldNames.contains(c))
-    val tracker =
-      if (!trackable) None
-      else Some(new WriteStats.Tracker(dataSchema, cols.map(_.name), blooms,
-        StatsWriteBridge.sessionZoneId(df),
-        new WriteStats.SerializableConf(
-          StatsWriteBridge.hadoopConfWithOptions(df, options))))
+    val tracker = new WriteStats.Tracker(dataSchema, cols.map(_.name), blooms,
+      StatsWriteBridge.sessionZoneId(df),
+      new WriteStats.SerializableConf(
+        StatsWriteBridge.hadoopConfWithOptions(df, options)))
     StatsWriteBridge.writeParquet(df, target, partitionBy, options,
-      tracker.toSeq)
-    tracker.map(_.result) match {
-      case None => Left("a Bloom column is also a partition column, so the " +
-        "write tasks cannot track it")
-      case Some(None) => Left("the stats tracker poisoned")
-      case Some(Some(raw)) =>
-        val staged = listStagedParquetRel(target).toSet
-        if (staged != raw.keySet) Left(s"the tracker saw ${raw.size} " +
-          s"file(s) but ${staged.size} were staged")
-        else Right(raw.map { case (rel, r) =>
-          rel -> renderFileStats(rel, cols, blooms, sumCols, r)
-        })
+      Seq(tracker))
+    val raw = tracker.result
+    val staged = listStagedParquetRel(target).toSet
+    if (staged != raw.keySet) throw new IllegalStateException(
+      s"staged write $target: the stats tracker saw " +
+        s"${(raw.keySet -- staged).toSeq.sorted.mkString(", ")} but not " +
+        s"the staged ${(staged -- raw.keySet).toSeq.sorted.mkString(", ")}")
+    raw.map { case (rel, r) =>
+      rel -> renderFileStats(rel, cols, blooms, sumCols, r)
     }
   }
 
@@ -2536,8 +2512,7 @@ object TableIO {
       "sortBy (1-D clustering) and zorderBy (Z-curve) are exclusive")
     require(bloomFilterFor.intersect(partitionBy).isEmpty,
       "bloom filters on partition columns are pointless (hive directory " +
-        "pruning is already exact there) and unreliable (the staged " +
-        "read-back infers partition types, which can change the hash)")
+        "pruning is already exact there)")
     val tableDir = Catalog.tablePath(lh, tableName)
     // table PROPERTIES (CHECK constraints, the change-feed flag) survive
     // overwrites — Delta semantics; txn watermarks intentionally reset
@@ -4543,11 +4518,12 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     val (b, m) = existing(spark, lh, tableName)
     // baseline = the file set of the newest OPTIMIZE commit: everything in
-    // it was clustered (or deliberately left) by that run
+    // it was clustered (or deliberately left) by that run. Header probes
+    // find it; only that one version's content is resolved
     val baseline: Set[String] = Versioned.committedVersions(tableDir)
-      .filter(_ < b + 1).sorted.reverse
-      .find(v => Versioned.readManifest(tableDir, v)
-        .exists(_.meta.get(Versioned.OpKey).contains("OPTIMIZE")))
+      .filter(_ <= b).reverse
+      .find(v => Versioned.manifestMetaOnly(tableDir, v)
+        .flatMap(_.get(Versioned.OpKey)).contains("OPTIMIZE"))
       .flatMap(v => Versioned.readManifest(tableDir, v))
       .map(_.files.toSet).getOrElse(Set.empty)
     val affected = m.entries.filterNot(e => baseline(e.path))

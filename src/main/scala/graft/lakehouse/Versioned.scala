@@ -640,7 +640,7 @@ object Versioned {
   val RowTrackingKey = "graft.rowTracking"
   val RowIdMaxKey = "graft.rowIdMax"
   val BaseRowIdStatKey = "__baseRowId"
-  private val RowsStatKey = "__rows" // written by TableIO.collectFileStats
+  private val RowsStatKey = "__rows" // written by TableIO.renderFileStats
 
   /** Top-level string field of a stats-JSON doc, if present. */
   private[lakehouse] def statsField(stats: Option[String],

@@ -3,7 +3,6 @@ package graft.lakehouse
 import java.io.{ObjectInputStream, ObjectOutputStream}
 
 import scala.collection.mutable
-import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -14,10 +13,12 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Write-task-side per-file statistics (Delta's WriteJobStatsTracker shape):
-  * the same per-file min/max/nullCount/rowCount/byte-size/exact-SUM/Bloom
-  * numbers [[TableIO.collectFileStats]] derives by RE-READING a staged
-  * write, accumulated here inside the write tasks themselves — one Spark
-  * job per commit instead of two.
+  * per-file min/max/nullCount/rowCount/byte-size/exact-SUM/Bloom numbers,
+  * accumulated inside the write tasks themselves. This is the one stats
+  * source of every staged commit ([[TableIO.writeStagedWithStats]]); the
+  * read-back aggregation [[TableIO.collectFileStats]] derives the same
+  * numbers from files already on disk (CONVERT) and is the reference the
+  * specs compare this tracker against.
   *
   * Equivalence to the read-back aggregation (the stats are
   * correctness-bearing — manifest-answerable queries hash their values):
@@ -39,9 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * and timestamp types, double and UTF8String min/max); Float, Boolean and
   * Decimal compare boxed values.
   *
-  * Any per-row/per-file failure POISONS the tracker instead of failing the
-  * write: the caller then falls back to the read-back job, so this path can
-  * only ever remove work, never change results. */
+  * The tracker is total: an error in it fails the write task, so the
+  * commit aborts and removes its staging directory; no file ever commits
+  * with stats from another source or without stats. */
 private[lakehouse] object WriteStats {
 
   /** Serializable Hadoop Configuration carrier (Spark's own wrapper is
@@ -71,8 +72,8 @@ private[lakehouse] object WriteStats {
       bytes: Long,
       sums: Array[String])
 
-  private final case class TaskStats(files: Seq[(String, FileStatsRaw)],
-      poisoned: Boolean) extends WriteTaskStats
+  private final case class TaskStats(files: Seq[(String, FileStatsRaw)])
+      extends WriteTaskStats
 
   /** One stats column's per-file accumulator: null count and min/max in
     * SQL comparison semantics (NaN greater than everything, -0.0 == 0.0,
@@ -222,11 +223,12 @@ private[lakehouse] object WriteStats {
   /** The staged file's path relative to the staging root: everything after
     * the commit protocol's task-attempt directory
     * (`.../_temporary/<app>/_temporary/<attempt>/<rel>`). */
-  private def relOf(path: String): Option[String] = {
+  private def relOf(path: String): String = {
     val segs = path.split('/')
     val i = segs.lastIndexWhere(_ == "_temporary")
-    if (i < 0 || i + 2 >= segs.length) None
-    else Some(segs.drop(i + 2).mkString("/"))
+    if (i < 0 || i + 2 >= segs.length) throw new IllegalStateException(
+      s"staged file $path is not under a task-attempt directory")
+    segs.drop(i + 2).mkString("/")
   }
 
   final class Tracker(
@@ -237,27 +239,25 @@ private[lakehouse] object WriteStats {
       conf: SerializableConf) extends WriteJobStatsTracker {
 
     @volatile private var collected: Map[String, FileStatsRaw] = null
-    @volatile private var anyPoisoned = false
 
-    /** None when any task poisoned (caller falls back to the read-back
-      * stats job); Some(per-rel raw stats) otherwise. */
-    def result: Option[Map[String, FileStatsRaw]] =
-      if (anyPoisoned || collected == null) None else Some(collected)
+    /** Per staging-relative path, the raw stats of every file the write
+      * tasks wrote. */
+    def result: Map[String, FileStatsRaw] = {
+      if (collected == null) throw new IllegalStateException(
+        "the write job committed no task stats")
+      collected
+    }
 
     override def newTaskInstance(): WriteTaskStatsTracker =
       new TaskTracker(schema, statsColNames, bloomColNames, zoneId, conf)
 
     override def processStats(stats: Seq[WriteTaskStats],
-        jobCommitTime: Long): Unit = {
-      val m = Map.newBuilder[String, FileStatsRaw]
-      var poisoned = false
-      stats.foreach {
-        case TaskStats(files, p) => if (p) poisoned = true else m ++= files
-        case _ => poisoned = true
-      }
-      anyPoisoned = poisoned
-      collected = m.result()
-    }
+        jobCommitTime: Long): Unit =
+      collected = stats.flatMap {
+        case TaskStats(files) => files
+        case other => throw new IllegalStateException(
+          s"unexpected write task stats $other")
+      }.toMap
   }
 
   private final class TaskTracker(
@@ -278,12 +278,11 @@ private[lakehouse] object WriteStats {
     })
     // every Bloom column's xxhash64 in one generated projection; seed 42 =
     // the xxhash64() SQL function's seed (what the read-back aggregation
-    // hashes with). Built by the first newFile, so a failure poisons the
-    // tracker instead of failing the task
+    // hashes with)
     private val nBlooms = bloomColNames.length
-    private var bloomHashes: UnsafeProjection = null
-    private def newBloomHashes(): UnsafeProjection =
-      UnsafeProjection.create(bloomColNames.map { name =>
+    private val bloomHashes: UnsafeProjection =
+      if (nBlooms == 0) null
+      else UnsafeProjection.create(bloomColNames.map { name =>
         val ord = schema.fieldIndex(name)
         XxHash64(Seq(BoundReference(ord, schema(ord).dataType,
           nullable = schema(ord).nullable)), 42L)
@@ -301,55 +300,44 @@ private[lakehouse] object WriteStats {
     private val files = mutable.LinkedHashMap.empty[String, FileAcc]
     private var currentPath: String = null
     private var current: FileAcc = null
-    private var poisoned = false
 
     override def newPartition(partitionValues: InternalRow): Unit = ()
 
     override def newFile(filePath: String): Unit = {
-      if (poisoned) return
-      try {
-        if (bloomHashes == null && nBlooms > 0) bloomHashes = newBloomHashes()
-        current = new FileAcc
-        currentPath = filePath
-        files.put(filePath, current)
-        ()
-      } catch { case NonFatal(_) => poisoned = true }
+      current = new FileAcc
+      currentPath = filePath
+      files.put(filePath, current)
     }
 
+    private def accOf(filePath: String): FileAcc =
+      if (filePath == currentPath) current
+      else files.getOrElse(filePath, throw new IllegalStateException(
+        s"stats tracker: $filePath was never opened"))
+
     override def closeFile(filePath: String): Unit = {
-      if (poisoned) return
-      try {
-        val acc = files.getOrElse(filePath, null)
-        if (acc == null) { poisoned = true; return }
-        val p = new Path(filePath)
-        acc.bytes = p.getFileSystem(conf.value).getFileStatus(p).getLen
-      } catch { case NonFatal(_) => poisoned = true }
+      val p = new Path(filePath)
+      accOf(filePath).bytes =
+        p.getFileSystem(conf.value).getFileStatus(p).getLen
     }
 
     override def newRow(filePath: String, row: InternalRow): Unit = {
-      if (poisoned) return
-      try {
-        val acc =
-          if (filePath == currentPath) current
-          else files.getOrElse(filePath, null)
-        if (acc == null) { poisoned = true; return }
-        acc.rows += 1
-        var i = 0
-        while (i < n) {
-          val ord = ords(i)
-          val c = acc.cols(i)
-          if (row.isNullAt(ord)) c.nulls += 1 else c.add(row, ord)
-          i += 1
+      val acc = accOf(filePath)
+      acc.rows += 1
+      var i = 0
+      while (i < n) {
+        val ord = ords(i)
+        val c = acc.cols(i)
+        if (row.isNullAt(ord)) c.nulls += 1 else c.add(row, ord)
+        i += 1
+      }
+      if (nBlooms > 0) {
+        val hashes = bloomHashes(row)
+        var b = 0
+        while (b < nBlooms) {
+          Bloom.add(acc.bloomWords(b), hashes.getLong(b))
+          b += 1
         }
-        if (nBlooms > 0) {
-          val hashes = bloomHashes(row)
-          var b = 0
-          while (b < nBlooms) {
-            Bloom.add(acc.bloomWords(b), hashes.getLong(b))
-            b += 1
-          }
-        }
-      } catch { case NonFatal(_) => poisoned = true }
+      }
     }
 
     /** Render an internal value with Spark's own string cast — identical to
@@ -359,30 +347,19 @@ private[lakehouse] object WriteStats {
       else Cast(Literal(v, dt), StringType, Option(zoneId), EvalMode.LEGACY)
         .eval(null).asInstanceOf[UTF8String].toString
 
-    override def getFinalStats(taskCommitTime: Long): WriteTaskStats = {
-      if (poisoned) return TaskStats(Nil, poisoned = true)
-      try {
-        val entries = files.toSeq.map { case (path, acc) =>
-          (relOf(path), acc)
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      TaskStats(files.toSeq.map { case (path, acc) =>
+        val mins = Array.tabulate(n)(i => renderString(acc.cols(i).min, dts(i)))
+        val maxs = Array.tabulate(n)(i => renderString(acc.cols(i).max, dts(i)))
+        val nulls = acc.cols.map(_.nulls)
+        val sums = summed.map(acc.cols(_).sum).toArray
+        val blooms: Array[Array[Byte]] = acc.bloomWords.map { words =>
+          val bb = java.nio.ByteBuffer.allocate(words.length * 8)
+          words.foreach(bb.putLong)
+          bb.array()
         }
-        if (entries.exists(_._1.isEmpty))
-          return TaskStats(Nil, poisoned = true)
-        val out = entries.map { case (relOpt, acc) =>
-          val rel = relOpt.get
-          val mins = Array.tabulate(n)(i => renderString(acc.cols(i).min, dts(i)))
-          val maxs = Array.tabulate(n)(i => renderString(acc.cols(i).max, dts(i)))
-          val nulls = acc.cols.map(_.nulls)
-          val sums = summed.map(acc.cols(_).sum).toArray
-          val blooms: Array[Array[Byte]] = acc.bloomWords.map { words =>
-            val bb = java.nio.ByteBuffer.allocate(words.length * 8)
-            words.foreach(bb.putLong)
-            bb.array()
-          }
-          rel -> FileStatsRaw(acc.rows, mins, maxs, nulls, blooms,
-            acc.bytes, sums)
-        }
-        TaskStats(out, poisoned = false)
-      } catch { case NonFatal(_) => TaskStats(Nil, poisoned = true) }
-    }
+        relOf(path) -> FileStatsRaw(acc.rows, mins, maxs, nulls, blooms,
+          acc.bytes, sums)
+      })
   }
 }

@@ -101,6 +101,22 @@ class CommitStatsSpec extends SparkSuite {
     TableIO.dropTable(spark, lh, "cs1")
   }
 
+  test("an append and a compaction after a Bloom column became a " +
+      "partition column commit their files' stats") {
+    TableIO.writeTable(spark, lh, "cs8", rows(40).repartition(2),
+      bloomFilterFor = Seq("g"))
+    TableIO.evolvePartitioning(spark, lh, "cs8", Seq("g"))
+    assert(addedBy("cs8") {
+      TableIO.appendTable(spark, lh, "cs8", rows(5, from = 100))
+    }("cs8").nonEmpty)
+    val compacted = addedBy("cs8")(TableIO.compactTable(spark, lh, "cs8"))
+    assert(compacted("cs8").nonEmpty && compacted("cs8").forall(e =>
+      e.path.startsWith("g=") &&
+        !e.stats.exists(_.contains(Bloom.StatsPrefix + "g"))))
+    assert(TableIO.selectTable(spark, lh, "cs8").count() == 45)
+    TableIO.dropTable(spark, lh, "cs8")
+  }
+
   test("commits that stage nothing add no entries: a DV delete and a " +
       "compaction with nothing to rewrite") {
     TableIO.writeTable(spark, lh, "cs2", rows(30).repartition(2))

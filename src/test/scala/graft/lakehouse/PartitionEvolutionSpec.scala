@@ -84,6 +84,28 @@ class PartitionEvolutionSpec extends SparkSuite {
     assert(TableIO.selectTable(spark, lh, "pe3").count() == 200)
   }
 
+  test("a Bloom column that becomes a partition column still prunes in " +
+      "its declared type") {
+    // g is a long; files partitioned by g record no Bloom for it (their
+    // path-derived min = max stats prune it exactly), so an Eq probe
+    // hashing the declared type cannot drop the appended file
+    val base = (1 to 100).map(i => (i.toLong, (i % 4).toLong, i * 1.0))
+      .toDF("k", "g", "v")
+    TableIO.writeTable(spark, lh, "pe7", base.repartition(2),
+      bloomFilterFor = Seq("g"))
+    TableIO.evolvePartitioning(spark, lh, "pe7", Seq("g"))
+    TableIO.appendTable(spark, lh, "pe7",
+      Seq((1000L, 1L, 5.0)).toDF("k", "g", "v"))
+    assert(TableIO.selectTable(spark, lh, "pe7").filter($"g" === 1L)
+      .count() == 26)
+    assert(TableIO.readTable(spark, lh, "pe7", condition = "g = 1")
+      .count() == 26)
+    assert(TableIO.prunedScanEq(spark, lh, "pe7", "g", 1L).count() == 26)
+    val added = TableIO.currentFiles(lh, "pe7").map(_.toString)
+      .filter(_.contains("/g="))
+    assert(added.nonEmpty, "the append ignored the evolved spec")
+  }
+
   test("evolution rejects unknown and renamed columns") {
     val base = (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "s")
     TableIO.writeTable(spark, lh, "pe4", base)

@@ -14,12 +14,14 @@ import org.scalacheck.rng.Seed
 /** Property check for the write-task stats tracker: for random rows over
   * every stats type — nulls, NaN, ±0.0, ±Inf, multi-byte and over-long
   * strings, integral sums that overflow a long — the stats
-  * [[TableIO.writeTracked]] renders must equal, byte for byte, what
-  * [[TableIO.collectFileStats]] re-derives from the same staged files.
-  * Each write is partitioned and spread over two tasks, so every task
-  * writes several files, and carries three Bloom columns. Only the first
-  * [[TableIO.MaxStatsCols]] eligible columns get stats, so the property
-  * runs over two column orders that between them cover all eleven types.
+  * [[TableIO.writeStagedWithStats]] renders must equal, byte for byte,
+  * what [[TableIO.collectFileStats]] re-derives from the same staged
+  * files. Each write is partitioned and spread over two tasks, so every
+  * task writes several files, and asks for four Bloom columns, one of them
+  * the partition column (which neither path records a Bloom for). Only
+  * the first [[TableIO.MaxStatsCols]] eligible columns get stats, so the
+  * property runs over two column orders that between them cover all
+  * eleven types.
   * Fixed seeds: a failure reproduces. */
 class WriteStatsPropertySpec extends SparkSuite {
 
@@ -82,7 +84,7 @@ class WriteStatsPropertySpec extends SparkSuite {
   private val partition: (StructField, Gen[Any]) =
     StructField("p", StringType) -> nullable(Gen.oneOf("x", "y", "z"))
 
-  private val blooms = Seq("l", "s", "d")
+  private val blooms = Seq("l", "s", "d", "p")
 
   /** A case's rows over `cols` (partition column first), in a random
     * double mode. */
@@ -100,9 +102,9 @@ class WriteStatsPropertySpec extends SparkSuite {
     val df = spark.createDataFrame(rows.asJava, schema).repartition(2)
     val dir = Files.createTempDirectory("write_stats_prop")
       .resolve("stage").toString
-    val got = TableIO.writeTracked(df, dir, Seq("p"), blooms, Seq.empty)
+    val got = TableIO.writeStagedWithStats(df, dir, Seq("p"), blooms)
     val expected = TableIO.collectFileStats(spark, blooms)(dir)
-    Prop(got == Right(expected)) :|
+    Prop(got == expected) :|
       s"${rows.size} rows, tracker $got != read-back $expected"
   }
 

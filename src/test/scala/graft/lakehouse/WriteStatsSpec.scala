@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** Write-task-side stats tracker vs the read-back aggregation: the two
   * paths must render BYTE-IDENTICAL stats JSON for every file of every
   * staged write (stats are correctness-bearing — manifest-answerable
-  * queries hash their values). Each case writes through the tracker half
-  * of [[TableIO.writeStagedWithStats]] and re-derives the stats from the
+  * queries hash their values). Each case writes through
+  * [[TableIO.writeStagedWithStats]] and re-derives the stats from the
   * written files with [[TableIO.collectFileStats]]. */
 class WriteStatsSpec extends SparkSuite {
   import spark.implicits._
@@ -19,9 +19,8 @@ class WriteStatsSpec extends SparkSuite {
       parquetBlooms: Seq[String] = Seq.empty): Map[String, String] = {
     val dir = Files.createTempDirectory("write_stats")
       .resolve("stage").toString
-    val got = TableIO.writeTracked(df, dir, partitionBy, blooms,
-      parquetBlooms).fold(why => fail(s"tracker cannot serve stats: $why"),
-      identity)
+    val got = TableIO.writeStagedWithStats(df, dir, partitionBy, blooms,
+      parquetBlooms)
     val expected = TableIO.collectFileStats(spark, blooms)(dir)
     assert(got.keySet == expected.keySet)
     for (k <- expected.keySet)
@@ -105,18 +104,14 @@ class WriteStatsSpec extends SparkSuite {
     check(df.coalesce(1))
   }
 
-  test("an untrackable write falls back to read-back stats, identically") {
-    // a Bloom column that is also a partition column never reaches the
-    // write tasks' data row, so only the read-back can serve its stats
+  test("a Bloom column that is also a partition column records no Bloom " +
+      "stat on either path") {
+    // the path-derived min = max stats prune a partition column exactly
     val df = spark.range(40).select(col("id"), (col("id") % 2).as("p"))
-    val dir = Files.createTempDirectory("write_stats")
-      .resolve("stage").toString
-    assert(TableIO.writeTracked(df, dir, Seq("p"), Seq("p"), Seq.empty)
-      .isLeft)
-    val dir2 = Files.createTempDirectory("write_stats")
-      .resolve("stage").toString
-    val got = TableIO.writeStagedWithStats(df, dir2, Seq("p"), Seq("p"))
-    assert(got.nonEmpty)
-    assert(got == TableIO.collectFileStats(spark, Seq("p"))(dir2))
+    val got = check(df.repartition(2), partitionBy = Seq("p"),
+      blooms = Seq("p", "id"))
+    assert(got.size >= 2 && got.values.forall(s =>
+      !s.contains(Bloom.StatsPrefix + "p") &&
+        s.contains(Bloom.StatsPrefix + "id")))
   }
 }
